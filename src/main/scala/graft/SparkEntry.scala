@@ -59,27 +59,40 @@ object SparkEntry {
     val root =
       if (shm.isDirectory && shm.getUsableSpace > (1L << 30)) "/dev/shm"
       else System.getProperty("java.io.tmpdir")
-    // prune DEAD runs' scratch (the Bench detail-file discipline): the
-    // pid key prevents concurrent clobbering but leaks a dir per
-    // process on tmpfs otherwise. Only dirs older than a day go — a
-    // live or just-finished run's scratch (re-read later by the lazy
-    // plan) is never raced.
+    if (prunedRoots.add(s"$root/$prefix"))
+      pruneStaleScratch(new java.io.File(root), prefix,
+        System.currentTimeMillis())
+    s"$root/${prefix}_${safe}_$pid"
+  }
+
+  /** `root/prefix` pairs this JVM has already pruned. */
+  private val prunedRoots =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Delete DEAD runs' `prefix_*_<pid>` scratch under `root` (the Bench
+    * detail-file discipline): the pid key prevents concurrent
+    * clobbering but leaks a dir per process on tmpfs otherwise. A dir
+    * goes only when it is older than a day AND its trailing pid is no
+    * live process, so a long-running owner's scratch (re-read later by
+    * its lazy plan) is never deleted from under it. Best-effort. */
+  private[graft] def pruneStaleScratch(root: java.io.File, prefix: String,
+      nowMs: Long): Unit = {
+    def ownerAlive(name: String): Boolean =
+      name.substring(name.lastIndexOf('_') + 1).toLongOption
+        .exists(pid => ProcessHandle.of(pid).isPresent)
+    def rm(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(rm)
+      f.delete()
+    }
     try {
-      val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-      val stale = new java.io.File(root).listFiles()
+      val cutoff = nowMs - 24L * 3600 * 1000
+      val stale = root.listFiles()
       if (stale != null) stale
         .filter(f => f.getName.startsWith(prefix + "_") &&
-          f.lastModified() < cutoff)
-        .foreach { d =>
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles()
-            if (kids != null) kids.foreach(rm)
-            f.delete()
-          }
-          rm(d)
-        }
+          f.lastModified() < cutoff && !ownerAlive(f.getName))
+        .foreach(rm)
     } catch { case _: Throwable => () }
-    s"$root/${prefix}_${safe}_$pid"
   }
 
   /** Double-array view of a float-vector column (keeps the dot product

@@ -39,29 +39,13 @@ object GraftBoost {
     val obj = Objectives.resolve(params)
     val data = materialize(df, spec, params, numWorkers,
       distributedCallbacks)
-    val evalRdds = evals.map { case (n, e) =>
-      // the xgboost evals=[(dtrain, "train")] idiom: when an eval set
-      // IS the training frame (same object), reuse the binned train
-      // RDD instead of preparing+binning a duplicate copy — halves the
-      // cached footprint and the prep passes for the most common eval
-      // config (the reference benchmark trains exactly this way,
-      // benchmark_cpu_gpu.py:96-100)
-      if (e eq df) (n, data.blocks)
-      // other eval rows tolerate unseen category codes (they bin to
-      // the spare non-matching bin and route like predict); train rows
-      // keep the fail-fast
-      else (n, toBinned(prepare(e, spec, obj, numWorkers), data.bins,
-        obj, params.baseScore, tolerateUnseenCats = true))
-    }
-    val p2 = params.copy(featureWeights =
-      params.featureWeights.orElse(spec.featureWeights))
+    val evalRdds = bindEvals(evals, df, data.blocks, data.bins, spec, obj,
+      params.baseScore, numWorkers)
     // one-shot training owns its caches: boost releases the blocks as
     // the margin chain advances past them, exactly the pre-BinnedMatrix
     // lifecycle
-    val res = Trainer.boost(data.blocks, evalRdds, data.bins, p2,
-      callbacks, initModel, Some(df.sparkSession), distributedCallbacks,
-      knownRows = data.knownRows)
-    attachNames(res, data.featureNames)
+    boostMatrix(data, params, evalRdds, callbacks, initModel,
+      distributedCallbacks, releaseInputs = true)
   }
 
   /**
@@ -127,14 +111,9 @@ object GraftBoost {
    * spec, fit the binner, bin+pack into cached TrainBlocks. The
    * binning-relevant params (objective, baseScore, maxBins, seed,
    * storageLevel) are captured; later train() calls must match them.
-   *
-   * The fast (uncached) path evaluates the input lineage more than
-   * once (count, binner fit, pack) and assumes those evaluations see
-   * the same rows; a plan containing non-deterministic expressions
-   * (rand(), unseeded shuffle-order dependence) is detected and takes
-   * the cached path instead. A table MUTATED between the scans is
-   * outside what any engine-side check can see — snapshot such inputs
-   * first.
+   * Validation, the cache-or-rescan choice, the row count and the
+   * binner fit are the shared [[load]] step (see it for when the
+   * prepared rows are cached instead of re-scanned).
    *
    * `distributedCallbacks` passed HERE get the full lifecycle: their
    * before/afterDataLoading hooks fire as the matrix materializes
@@ -152,80 +131,21 @@ object GraftBoost {
     // (matrix.py:333-343): label_lower_bound stands in as the label
     val boundsOnly = obj.needsBounds && spec.labelCol.isEmpty &&
       spec.labelLowerCol.isDefined
-    spec.validate(df, requireLabel = !boundsOnly)
     require(spec.labelCol.size == 1 || boundsOnly,
       "trainer supports a single label column (multi-label loading is a " +
         "data-layer feature; see DMatrixSpec)")
-    val catFlags = spec.categoricalFlags(df)
-    checkMonotoneCats(params, catFlags)
-
-    // Round-1 strategy. DEFAULT (two-pass, r13): the fat per-row
-    // prepared rows are not cached — Binner.fit and toBinned each
-    // evaluate the narrow prepare lineage straight off the columnar
-    // scan. MEASURED in r15 (BENCHLARGE.md): on local storage this
-    // beats the "obvious" fusion below by 1.7–2.7× at 1e8 rows,
-    // because a vectorized parquet re-scan is cheaper than writing and
-    // re-reading a transient deserialized float copy of the dataset
-    // (plus its GC pressure). Three cases still cache the prepared
-    // rows once: distributed data-loading callbacks (before/after
-    // DataLoading fires once, not once per pass), ranking (sortByQid's
-    // reduce-side sort would re-run per pass), and non-deterministic
-    // input plans (rand() projections, or Sample — seeded but
-    // order-dependent over an unpinned shuffle), where re-evaluations
-    // could keep different ROWS and make the count / binner-fit / pack
-    // scans disagree.
-    //
-    // FUSED (params.fuseRound1): ONE evaluation of the prepare lineage
-    // packs transient FloatBlocks; the binner fits from the cache and
-    // the binned blocks convert block-locally. The right trade only
-    // when the input scan itself dominates — cold remote object
-    // storage at 100 TB — and the transient ~4 B/feature/row fits.
-    // Bit-identical results either way (FusedRound1Spec pins it).
-    if (params.fuseRound1) {
-      val prepared = prepare(df, spec, obj, numWorkers,
-        distributedCallbacks)
-      val fblocks = packFloat(prepared, obj, params.baseScore)
-        .persist(params.storageLevel)
-      val totalRows = fblocks.map(_.n.toLong).fold(0L)(_ + _)
-      val bins = Binner.fit(
-        fblocks.flatMap(fb => (0 until fb.n).iterator.map(fb.featureRow)),
-        totalRows, params.maxBins,
-        seed = params.seed + 42, catFeatures = catFlags,
-        knownWidth = spec.featureWidth(df))
-      val blocks = fromFloat(fblocks, bins, obj)
-        .persist(params.storageLevel)
-      blocks.foreachPartition(_ => ()) // materialize bytes, drop floats
-      fblocks.unpersist(blocking = false)
-      val names = attachableNames(spec, df, bins.numFeatures)
-      return new BinnedMatrix(blocks, bins, catFlags, names,
-        spec.featureWeights, df.sparkSession, obj.name, obj.numOutputs,
-        params.baseScore, params.maxBins, params.seed,
-        forTraining = true, loadCallbacks = distributedCallbacks,
-        knownRows = totalRows)
-    }
-    val nondetPlan = df.queryExecution.analyzed.exists {
-      case _: org.apache.spark.sql.catalyst.plans.logical.Sample => true
-      case p => p.expressions.exists(!_.deterministic)
-    }
-    val cachePrepared = distributedCallbacks.nonEmpty ||
-      obj.needsGroups || nondetPlan
-    val prepared0 = prepare(df, spec, obj, numWorkers, distributedCallbacks)
-    val prepared =
-      if (cachePrepared) prepared0.persist(params.storageLevel)
-      else prepared0
-    val totalRows = if (cachePrepared) prepared.count() else df.count()
-    val bins = Binner.fit(prepared.map(_._1), totalRows, params.maxBins,
-      seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    val blocks = toBinned(prepared, bins, obj, params.baseScore)
+    val in = load(df, spec, params, obj, requireLabel = !boundsOnly,
+      distributedCallbacks)(
+      prepare(df, spec, obj, numWorkers, distributedCallbacks))(_._1)
+    val blocks = toBinned(in.rows, in.bins, obj, params.baseScore)
       .persist(params.storageLevel)
     blocks.foreachPartition(_ => ()) // materialize bytes, drop floats
-    if (cachePrepared) prepared.unpersist(blocking = false)
-    val names = attachableNames(spec, df, bins.numFeatures)
-    new BinnedMatrix(blocks, bins, catFlags, names, spec.featureWeights,
-      df.sparkSession, obj.name, obj.numOutputs, params.baseScore,
-      params.maxBins, params.seed, forTraining = true,
-      loadCallbacks = distributedCallbacks, knownRows = totalRows)
+    in.release()
+    val names = attachableNames(spec, df, in.bins.numFeatures)
+    new BinnedMatrix(blocks, in.bins, in.catFlags, names,
+      spec.featureWeights, df.sparkSession, obj.name, obj.numOutputs,
+      params.baseScore, params.maxBins, params.seed, forTraining = true,
+      loadCallbacks = distributedCallbacks, knownRows = in.totalRows)
   }
 
   /** Materialize an EVAL set against an existing training matrix's
@@ -246,9 +166,8 @@ object GraftBoost {
         s"objective/baseScore ('${train.objName}' ×${train.numOutputs}, " +
         s"${train.baseScore}); " +
         s"got '${obj.name}' ×${obj.numOutputs}, ${params.baseScore}")
-    val ev = toBinned(prepare(df, spec, obj, numWorkers), train.bins,
-      obj, params.baseScore, tolerateUnseenCats = true)
-      .persist(params.storageLevel)
+    val ev = bindEval(df, spec, obj, params.baseScore, numWorkers,
+      train.bins).persist(params.storageLevel)
     ev.foreachPartition(_ => ())
     new BinnedMatrix(ev, train.bins, train.catFlags, Nil, None,
       df.sparkSession, train.objName, train.numOutputs, train.baseScore,
@@ -304,13 +223,53 @@ object GraftBoost {
         (n, ev.blocks)
       }
     }
+    boostMatrix(data, params, evalRdds, callbacks, initModel,
+      distributedCallbacks, releaseInputs = false)
+  }
+
+  /** The boosting tail [[train]] and [[BinnedMatrix.train]] share:
+    * spec feature weights fill in for unset params, then boost and
+    * name the model's features. `releaseInputs` is the one difference
+    * — one-shot training frees the blocks as it goes, a reusable
+    * matrix keeps them. */
+  private def boostMatrix(data: BinnedMatrix, params: TrainParams,
+      evals: Seq[(String, RDD[TrainBlock])],
+      callbacks: Seq[TrainingCallback], initModel: Option[GraftModel],
+      distributedCallbacks: Seq[DistributedCallback],
+      releaseInputs: Boolean): TrainResult = {
     val p2 = params.copy(featureWeights =
       params.featureWeights.orElse(data.specFeatureWeights))
-    val res = Trainer.boost(data.blocks, evalRdds, data.bins, p2,
+    val res = Trainer.boost(data.blocks, evals, data.bins, p2,
       callbacks, initModel, Some(data.session), distributedCallbacks,
-      releaseInputs = false, knownRows = data.knownRows)
+      releaseInputs = releaseInputs, knownRows = data.knownRows)
     attachNames(res, data.featureNames)
   }
+
+  /** Bin an eval frame under trained cuts. Eval rows tolerate unseen
+    * category codes (they bin to the spare non-matching bin and route
+    * like predict); train rows keep the fail-fast. Lazy: the caller
+    * decides whether to persist and force it. */
+  private def bindEval(e: DataFrame, spec: DMatrixSpec, obj: Objective,
+      baseScore: Double, numWorkers: Int, bins: Binner.Bins)
+      : RDD[TrainBlock] =
+    toBinned(prepare(e, spec, obj, numWorkers), bins, obj, baseScore,
+      tolerateUnseenCats = true)
+
+  /** Named eval sets for a trainer over `trainBlocks`. The xgboost
+    * evals=[(dtrain, "train")] idiom: when an eval set IS the training
+    * frame (same object), reuse the binned train RDD instead of
+    * preparing+binning a duplicate copy — halves the cached footprint
+    * and the prep passes for the most common eval config (the
+    * reference benchmark trains exactly this way,
+    * benchmark_cpu_gpu.py:96-100). */
+  private def bindEvals(evals: Seq[(String, DataFrame)], df: DataFrame,
+      trainBlocks: RDD[TrainBlock], bins: Binner.Bins, spec: DMatrixSpec,
+      obj: Objective, baseScore: Double, numWorkers: Int)
+      : Seq[(String, RDD[TrainBlock])] =
+    evals.map { case (n, e) =>
+      if (e eq df) (n, trainBlocks)
+      else (n, bindEval(e, spec, obj, baseScore, numWorkers, bins))
+    }
 
   private def attachNames(res: TrainResult,
       names: Seq[String]): TrainResult =
@@ -409,18 +368,54 @@ object GraftBoost {
     // serializes its own full byte copy for the duration of that
     // label's training — the 2-scan saving stands, the memory
     // saving does not.
-    spec.validate(df, requireLabel = true)
-    val catFlags = spec.categoricalFlags(df)
-    checkMonotoneCats(params, catFlags)
+    val in = loadMulti(df, spec, params, obj, numWorkers)
+    val bins = in.bins
+    val composite = packMultiLabel(in.rows, bins, obj, params.baseScore,
+      spec.labelCol.size).persist(params.storageLevel)
+    composite.foreachPartition(_ => ())
+    in.release()
+    val names = attachableNames(spec, df, bins.numFeatures)
+    try {
+      MultiLabelResult(spec.labelCol.zipWithIndex.map { case (l, j) =>
+        val blocks =
+          if (j == 0) composite.map(_._1)
+          else composite.map { case (b, others) =>
+            new TrainBlock(b.n, b.nf, b.k, b.bins, others(j - 1),
+              b.weights, null, null, b.margins)
+          }
+        val evalRdds = bindEvals(evals, df, blocks, bins,
+          singleLabelSpec(spec, l), obj, params.baseScore, numWorkers)
+        val p2 = params.copy(featureWeights =
+          params.featureWeights.orElse(spec.featureWeights))
+        val res = Trainer.boost(blocks, evalRdds, bins, p2,
+          Nil, None, Some(df.sparkSession), Nil,
+          knownRows = in.totalRows)
+        (l, attachNames(res, names))
+      })
+    } finally composite.unpersist(blocking = false)
+  }
+
+  /** One-pass multi-label row: (features, all L labels, weight,
+    * baseMargin). */
+  private[api] type MultiRow = (Array[Float], Array[Float], Float, Float)
+
+  /** [[load]] over the label-invariant [[prepareMulti]] projection —
+    * the input step of both multi-target fast paths. */
+  private[api] def loadMulti(df: DataFrame, spec: DMatrixSpec,
+      params: TrainParams, obj: Objective, numWorkers: Int)
+      : Loaded[MultiRow] =
+    load(df, spec, params, obj, requireLabel = true, Nil)(
+      prepareMulti(df, spec, numWorkers))(_._1)
+
+  /** [[trainMultiLabel]]'s packer: each block carries the FIRST label
+    * in its TrainBlock and the other L−1 label columns beside it, so a
+    * per-label view swaps in one column and shares the rest. */
+  private[api] def packMultiLabel(rows: RDD[MultiRow], bins: Binner.Bins,
+      obj: Objective, baseScore: Double, nLabels: Int)
+      : RDD[(TrainBlock, Array[Array[Float]])] = {
     val k = obj.numOutputs
-    val init = obj.initMargin(params.baseScore)
-    val nLabels = spec.labelCol.size
-    val multiRows = prepareMulti(df, spec, numWorkers)
-    val totalRows = df.count()
-    val bins = Binner.fit(multiRows.map(_._1), totalRows, params.maxBins,
-      seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    val composite = multiRows.mapPartitions({ it0 =>
+    val init = obj.initMargin(baseScore)
+    rows.mapPartitions({ it0 =>
       val it = it0.buffered
       val nf = bins.numFeatures
       val cap = graft.learner.TrainBlock.capacity(nf, k)
@@ -453,39 +448,13 @@ object GraftBoost {
         }
       }
     }, preservesPartitioning = true)
-      .persist(params.storageLevel)
-    composite.foreachPartition(_ => ())
-    val names = attachableNames(spec, df, bins.numFeatures)
-    try {
-      MultiLabelResult(spec.labelCol.zipWithIndex.map { case (l, j) =>
-        val lSpec = singleLabelSpec(spec, l)
-        val blocks =
-          if (j == 0) composite.map(_._1)
-          else composite.map { case (b, others) =>
-            new TrainBlock(b.n, b.nf, b.k, b.bins, others(j - 1),
-              b.weights, null, null, b.margins)
-          }
-        val evalRdds = evals.map { case (n, e) =>
-          if (e eq df) (n, blocks)
-          else (n, toBinned(prepare(e, lSpec, obj, numWorkers), bins,
-            obj, params.baseScore, tolerateUnseenCats = true))
-        }
-        val p2 = params.copy(featureWeights =
-          params.featureWeights.orElse(spec.featureWeights))
-        val res = Trainer.boost(blocks, evalRdds, bins, p2,
-          Nil, None, Some(df.sparkSession), Nil,
-          knownRows = totalRows)
-        (l, attachNames(res, names))
-      })
-    } finally composite.unpersist(blocking = false)
   }
 
-  /** One-pass multi-label row view: (features, all L labels, weight,
-    * baseMargin) — the label-invariant twin of [[prepare]] for the
-    * pointwise [[trainMultiLabel]] fast path. */
+  /** The label-invariant twin of [[prepare]] for the pointwise
+    * multi-target fast paths: one pass projects every label column
+    * ([[MultiRow]]). */
   private def prepareMulti(df: DataFrame, spec: DMatrixSpec,
-      numWorkers: Int)
-      : RDD[(Array[Float], Array[Float], Float, Float)] = {
+      numWorkers: Int): RDD[MultiRow] = {
     val base = if (numWorkers > 0) df.repartition(numWorkers) else df
     val assembled = spec.assemble(base)
     val cols = assembled.columns
@@ -543,16 +512,26 @@ object GraftBoost {
     // an unsupported booster/subsample must not cost prepare+bin+pack
     // of the whole input first
     MultiOutput.checkParams(params, obj)
-    spec.validate(df, requireLabel = true)
-    val catFlags = spec.categoricalFlags(df)
     val kOut = spec.labelCol.size
-    val init = obj.initMargin(params.baseScore)
-    val multiRows = prepareMulti(df, spec, numWorkers)
-    val totalRows = df.count()
-    val bins = Binner.fit(multiRows.map(_._1), totalRows,
-      params.maxBins, seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    val blocks = multiRows.mapPartitions({ it0 =>
+    val in = loadMulti(df, spec, params, obj, numWorkers)
+    val blocks = packMultiOutput(in.rows, in.bins, obj, params.baseScore,
+      kOut).persist(params.storageLevel)
+    blocks.foreachPartition(_ => ())
+    in.release()
+    try {
+      val trees = MultiOutput.boost(blocks, in.bins, params, kOut)
+      MultiOutput.MultiOutputModel(trees, kOut, obj.name,
+        params.baseScore, in.bins.numFeatures, spec.labelCol)
+    } finally blocks.unpersist(blocking = false)
+  }
+
+  /** [[trainMultiOutput]]'s packer: all `kOut` targets row-major in one
+    * [[MultiOutput.MoBlock]], margins at stride `kOut`. */
+  private[api] def packMultiOutput(rows: RDD[MultiRow], bins: Binner.Bins,
+      obj: Objective, baseScore: Double, kOut: Int)
+      : RDD[MultiOutput.MoBlock] = {
+    val init = obj.initMargin(baseScore)
+    rows.mapPartitions({ it0 =>
       val it = it0.buffered
       val nf = bins.numFeatures
       val cap = graft.learner.TrainBlock.capacity(nf, kOut)
@@ -583,13 +562,6 @@ object GraftBoost {
         }
       }
     }, preservesPartitioning = true)
-      .persist(params.storageLevel)
-    blocks.foreachPartition(_ => ())
-    try {
-      val trees = MultiOutput.boost(blocks, bins, params, kOut)
-      MultiOutput.MultiOutputModel(trees, kOut, obj.name,
-        params.baseScore, bins.numFeatures, spec.labelCol)
-    } finally blocks.unpersist(blocking = false)
   }
 
   /** Append one `prediction_<label>` column per target of a
@@ -788,6 +760,60 @@ object GraftBoost {
     spec.featuresArray(df)
   }
 
+  /** Projected training rows plus what every packer needs from them:
+    * the exact row count and the fitted cuts. */
+  private[api] final class Loaded[R](val rows: RDD[R], val cached: Boolean,
+      val totalRows: Long, val bins: Binner.Bins,
+      val catFlags: Array[Boolean]) {
+    /** Drop the cached rows once the caller's packed blocks are
+      * materialized (no-op on the re-scan path). */
+    def release(): Unit = if (cached) rows.unpersist(blocking = false)
+  }
+
+  /**
+   * The one training-input step: validate the spec, resolve the
+   * categorical flags (and reject monotone constraints on them), choose
+   * cache-or-rescan, count the rows and fit the binner. Each trainer
+   * brings only its row projection (`project`, built after validation)
+   * and packs the returned rows with its own block packer.
+   *
+   * Round-1 strategy (two-pass, r13): the fat per-row projected rows
+   * are not cached — Binner.fit and the packer each evaluate the
+   * narrow projection lineage straight off the columnar scan. MEASURED
+   * in r15 (BENCHLARGE.md): on local storage this beats caching a
+   * transient float copy by 1.7–2.7× at 1e8 rows, because a vectorized
+   * parquet re-scan is cheaper than writing and re-reading a
+   * deserialized copy of the dataset (plus its GC pressure). Three
+   * cases still cache the projected rows once: distributed
+   * data-loading callbacks (before/afterDataLoading fires once, not
+   * once per pass), ranking (sortByQid's reduce-side sort would re-run
+   * per pass), and non-deterministic input plans (rand() projections,
+   * or Sample — seeded but order-dependent over an unpinned shuffle),
+   * where re-evaluations could keep different ROWS and make the count
+   * / binner-fit / pack scans disagree. A table MUTATED between the
+   * scans is outside what any engine-side check can see — snapshot
+   * such inputs first.
+   */
+  private[api] def load[R](df: DataFrame, spec: DMatrixSpec,
+      params: TrainParams, obj: Objective, requireLabel: Boolean,
+      dcbs: Seq[DistributedCallback])(project: => RDD[R])(
+      features: R => Array[Float]): Loaded[R] = {
+    spec.validate(df, requireLabel = requireLabel)
+    val catFlags = spec.categoricalFlags(df)
+    checkMonotoneCats(params, catFlags)
+    val nondetPlan = df.queryExecution.analyzed.exists {
+      case _: org.apache.spark.sql.catalyst.plans.logical.Sample => true
+      case p => p.expressions.exists(!_.deterministic)
+    }
+    val cached = dcbs.nonEmpty || obj.needsGroups || nondetPlan
+    val rows = if (cached) project.persist(params.storageLevel) else project
+    val totalRows = if (cached) rows.count() else df.count()
+    val bins = Binner.fit(rows.map(features), totalRows, params.maxBins,
+      seed = params.seed + 42, catFeatures = catFlags,
+      knownWidth = spec.featureWidth(df))
+    new Loaded(rows, cached, totalRows, bins, catFlags)
+  }
+
   /** (features, label, weight, baseMargin, qid, upperBound) rows; label
     * doubles as the survival lower bound, upperBound is NaN unless the
     * spec declares survival bounds. */
@@ -838,44 +864,31 @@ object GraftBoost {
     }, preservesPartitioning = true)
   }
 
-  /** Per-block feature-storage strategy for [[packBlocks]] — the ONLY
-    * thing that differs between the byte-binned [[toBinned]] pack and
-    * the fused path's raw-float pack. Everything else (capacity rule,
-    * qid-group extension, anyQid/anyBound, NaN-margin init) lives once
-    * in [[packBlocks]], so the two representations can never drift —
-    * the fused path's bit-identity guarantee is structural, not a
-    * discipline (the r12→r13 packing migration precedent). A fresh
-    * sink is created per block (mutable feature buffer inside). */
-  private trait FeatSink[B] {
-    /** Feature width (from the binner for the binned sink — width
-      * mismatches then fail the per-row check; from the first row for
-      * the float sink). */
-    def featWidth(firstRow: Array[Float]): Int
-    def alloc(cells: Int): Unit
-    def growTo(cells: Int): Unit
-    def write(f: Array[Float], rowIdx: Int, nf: Int): Unit
-    def result(n: Int, nf: Int, k: Int, labels: Array[Float],
-        weights: Array[Float], qids: Array[Long], uppers: Array[Float],
-        margins: Array[Float]): B
-  }
-
-  /** The one block packer: prepared rows → blocks of `sinkFor`'s
-    * representation. Row order within a partition is the prepared
-    * order and block boundaries are the capacity rule + qid-group
-    * extension — the RepresentationGoldenSpec bit-identity contract. */
-  private def packBlocks[B: scala.reflect.ClassTag](rows: Prepared,
-      k: Int, init: Float, keepGroups: Boolean,
-      sinkFor: () => FeatSink[B]): RDD[B] =
+  /** Bin prepared rows into packed primitive [[TrainBlock]]s (the r12
+    * cached representation — see TrainBlock.scala for the layout and
+    * the footprint rationale). Row order within each partition is the
+    * prepared order, so every downstream per-row pass (gradients,
+    * histograms, metrics) sees the exact sequence the r11 per-row
+    * tuples produced — the RepresentationGoldenSpec bit-identity
+    * contract. `keepGroups` (ranking) extends a block past its
+    * capacity until the current qid run ends, so qid groups never
+    * straddle blocks. */
+  private[api] def toBinned(rows: Prepared, bins: Binner.Bins, obj: Objective,
+      baseScore: Double, tolerateUnseenCats: Boolean = false)
+      : RDD[TrainBlock] = {
+    val k = obj.numOutputs
+    val init = obj.initMargin(baseScore)
+    val keepGroups = obj.needsGroups
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
-      new Iterator[B] {
+      new Iterator[TrainBlock] {
         def hasNext: Boolean = it.hasNext
-        def next(): B = {
-          val sink = sinkFor()
-          val nf = sink.featWidth(it.head._1)
+        def next(): TrainBlock = {
+          // width from the binner: a mismatched row fails the check below
+          val nf = bins.numFeatures
           val cap0 = TrainBlock.capacity(nf, k)
           var cap = cap0
-          sink.alloc(cap * nf)
+          var binsArr = new Array[Byte](cap * nf)
           var labels = new Array[Float](cap)
           var weights = new Array[Float](cap)
           var qids = new Array[Long](cap)
@@ -886,7 +899,7 @@ object GraftBoost {
           var anyBound = false
           def grow(): Unit = {
             cap *= 2
-            sink.growTo(cap * nf)
+            binsArr = java.util.Arrays.copyOf(binsArr, cap * nf)
             labels = java.util.Arrays.copyOf(labels, cap)
             weights = java.util.Arrays.copyOf(weights, cap)
             qids = java.util.Arrays.copyOf(qids, cap)
@@ -900,7 +913,8 @@ object GraftBoost {
                 s"expected $nf (inconsistent pre-assembled feature " +
                 "widths?)")
             if (n == cap) grow()
-            sink.write(f, n, nf)
+            val rb = bins.binRow(f, tolerateUnseenCats)
+            System.arraycopy(rb, 0, binsArr, n * nf, nf)
             labels(n) = y; weights(n) = w; qids(n) = q; uppers(n) = u
             if (q != 0L) anyQid = true
             // NaN upper (right-censored) compares unequal to y, so the
@@ -913,7 +927,8 @@ object GraftBoost {
           add()
           while (it.hasNext && (n < cap0 ||
               (keepGroups && it.head._5 == qids(n - 1)))) add()
-          sink.result(n, nf, k,
+          new TrainBlock(n, nf, k,
+            java.util.Arrays.copyOf(binsArr, n * nf),
             java.util.Arrays.copyOf(labels, n),
             java.util.Arrays.copyOf(weights, n),
             if (anyQid) java.util.Arrays.copyOf(qids, n) else null,
@@ -922,85 +937,5 @@ object GraftBoost {
         }
       }
     }, preservesPartitioning = true)
-
-  /** Fused round-1 pack (r15): prepared rows → [[FloatBlock]]s with
-    * EXACTLY the block boundaries [[toBinned]] produces (the shared
-    * [[packBlocks]] core guarantees it) so the later block-local
-    * conversion is 1:1. See [[FloatBlock]] for why this exists. */
-  private[api] def packFloat(rows: Prepared, obj: Objective,
-      baseScore: Double): RDD[FloatBlock] =
-    packBlocks(rows, obj.numOutputs, obj.initMargin(baseScore),
-      obj.needsGroups, () => new FeatSink[FloatBlock] {
-        private var feats: Array[Float] = _
-        def featWidth(firstRow: Array[Float]): Int = firstRow.length
-        def alloc(cells: Int): Unit = feats = new Array[Float](cells)
-        def growTo(cells: Int): Unit =
-          feats = java.util.Arrays.copyOf(feats, cells)
-        def write(f: Array[Float], rowIdx: Int, nf: Int): Unit =
-          System.arraycopy(f, 0, feats, rowIdx * nf, nf)
-        def result(n: Int, nf: Int, k: Int, labels: Array[Float],
-            weights: Array[Float], qids: Array[Long],
-            uppers: Array[Float], margins: Array[Float]): FloatBlock =
-          new FloatBlock(n, nf, k,
-            java.util.Arrays.copyOf(feats, n * nf),
-            labels, weights, qids, uppers, margins)
-      })
-
-  /** Block-local conversion of cached [[FloatBlock]]s into byte-binned
-    * [[TrainBlock]]s — the second half of the fused round-1. Allocates
-    * only the bins; every other column passes through by reference. */
-  private[api] def fromFloat(blocks: RDD[FloatBlock], bins: Binner.Bins,
-      obj: Objective, tolerateUnseenCats: Boolean = false)
-      : RDD[TrainBlock] = {
-    val k = obj.numOutputs
-    blocks.map { fb =>
-      val nf = fb.nf
-      require(nf == bins.numFeatures,
-        s"graft: packed rows have $nf feature(s) but the binner fit " +
-          s"${bins.numFeatures} (inconsistent feature widths across " +
-          "partitions?)")
-      val binsArr = new Array[Byte](fb.n * nf)
-      val row = new Array[Float](nf)
-      var i = 0
-      while (i < fb.n) {
-        System.arraycopy(fb.feats, i * nf, row, 0, nf)
-        val rb = bins.binRow(row, tolerateUnseenCats)
-        System.arraycopy(rb, 0, binsArr, i * nf, nf)
-        i += 1
-      }
-      new TrainBlock(fb.n, nf, k, binsArr, fb.labels, fb.weights,
-        fb.qids, fb.uppers, fb.margins)
-    }
   }
-
-  /** Bin prepared rows into packed primitive [[TrainBlock]]s (the r12
-    * cached representation — see TrainBlock.scala for the layout and
-    * the footprint rationale). Row order within each partition is the
-    * prepared order, so every downstream per-row pass (gradients,
-    * histograms, metrics) sees the exact sequence the r11 per-row
-    * tuples produced — the RepresentationGoldenSpec bit-identity
-    * contract. `keepGroups` (ranking) extends a block past its
-    * capacity until the current qid run ends, so qid groups never
-    * straddle blocks. */
-  private[api] def toBinned(rows: Prepared, bins: Binner.Bins, obj: Objective,
-      baseScore: Double, tolerateUnseenCats: Boolean = false)
-      : RDD[TrainBlock] =
-    packBlocks(rows, obj.numOutputs, obj.initMargin(baseScore),
-      obj.needsGroups, () => new FeatSink[TrainBlock] {
-        private var binsArr: Array[Byte] = _
-        def featWidth(firstRow: Array[Float]): Int = bins.numFeatures
-        def alloc(cells: Int): Unit = binsArr = new Array[Byte](cells)
-        def growTo(cells: Int): Unit =
-          binsArr = java.util.Arrays.copyOf(binsArr, cells)
-        def write(f: Array[Float], rowIdx: Int, nf: Int): Unit = {
-          val rb = bins.binRow(f, tolerateUnseenCats)
-          System.arraycopy(rb, 0, binsArr, rowIdx * nf, nf)
-        }
-        def result(n: Int, nf: Int, k: Int, labels: Array[Float],
-            weights: Array[Float], qids: Array[Long],
-            uppers: Array[Float], margins: Array[Float]): TrainBlock =
-          new TrainBlock(n, nf, k,
-            java.util.Arrays.copyOf(binsArr, n * nf),
-            labels, weights, qids, uppers, margins)
-      })
 }

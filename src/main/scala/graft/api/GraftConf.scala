@@ -79,7 +79,6 @@ object GraftConf {
     get("updater").foreach(v => p = p.copy(updater = v))
     get("maxLeaves").foreach(v => p = p.copy(maxLeaves = v.toInt))
     get("cacheLevel").foreach(v => p = p.copy(cacheLevel = v))
-    get("fuseRound1").foreach(v => p = p.copy(fuseRound1 = v.toBoolean))
     get("maxCatToOnehot").foreach(v =>
       p = p.copy(maxCatToOnehot = v.toInt))
     // xgboost string forms: "(1,0,-1)" and "[[0,1],[2,3]]"

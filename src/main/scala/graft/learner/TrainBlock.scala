@@ -53,39 +53,6 @@ final class TrainBlock(
     java.util.Arrays.copyOfRange(margins, i * k, i * k + k)
 }
 
-/**
- * Pre-binning sibling of [[TrainBlock]]: the same packed layout with
- * RAW float features instead of byte bins. The fused materialize pass
- * (r15) caches these so the prepare lineage — columnar scan + assemble
- * + per-row projection, the expensive half of round 1 at scale — is
- * evaluated exactly ONCE: the binner fits its cuts from the cached
- * blocks, and the byte-binned [[TrainBlock]]s convert from them
- * block-locally instead of re-running the full input scan. Dropped
- * (unpersist) as soon as the binned blocks materialize. Row order and
- * block boundaries are exactly what [[TrainBlock]] packing has always
- * produced (same capacity rule, same qid-group extension), so the
- * conversion is 1:1 and the representation bit-identity goldens are
- * unaffected; the label/weight/qid/upper/margin arrays are passed by
- * reference into the converted block, so the conversion allocates only
- * the byte bins.
- */
-final class FloatBlock(
-    val n: Int,
-    val nf: Int,
-    val k: Int,
-    val feats: Array[Float],
-    val labels: Array[Float],
-    val weights: Array[Float],
-    val qids: Array[Long],
-    val uppers: Array[Float],
-    val margins: Array[Float]) extends Serializable {
-
-  /** Row `i`'s features as a fresh array (binner sample/fit row view —
-    * identical floats to the prepared row that packed it). */
-  def featureRow(i: Int): Array[Float] =
-    java.util.Arrays.copyOfRange(feats, i * nf, i * nf + nf)
-}
-
 object TrainBlock {
   /** Rows per block: bounded so one block's bins stay ≤ 8 MB and its
     * margins ≤ 16 MB however wide the feature/output shape — small

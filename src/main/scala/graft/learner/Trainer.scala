@@ -194,18 +194,7 @@ final case class TrainParams(
       * serialized cache trades per-round deserialization CPU for a
       * several-× smaller cached footprint. The reference exposes the
       * same lever as Ray object-store spilling. */
-    cacheLevel: String = "MEMORY_AND_DISK",
-    /** Round-1 strategy: `false` (default) evaluates the prepare
-      * lineage twice (binner-fit pass + bin/pack pass) — MEASURED
-      * faster on local storage, where the vectorized columnar re-scan
-      * is cheaper than writing and re-reading a transient float copy
-      * of the dataset (BENCHLARGE.md r15: 38–42 s vs 66–113 s at 1e8
-      * rows). `true` packs raw-float blocks in ONE lineage pass and
-      * bins from the cache — the right trade only when the input scan
-      * itself is the bottleneck (cold remote object storage) AND the
-      * transient ~4 B/feature/row fits comfortably; results are
-      * bit-identical either way (spec-pinned). */
-    fuseRound1: Boolean = false) {
+    cacheLevel: String = "MEMORY_AND_DISK") {
   /** Parsed [[cacheLevel]] (validated at param construction, so a typo
     * fails before any training work starts). */
   val storageLevel: StorageLevel = StorageLevel.fromString(cacheLevel)

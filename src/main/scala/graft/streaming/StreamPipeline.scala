@@ -930,13 +930,16 @@ object StreamPipeline {
     * and append-mode window/session finals are the union of emissions
     * across batches, which is invariant to which batch advanced the
     * watermark. The REAL data still arrives in `numBatches` groups —
-    * state crosses the same boundaries as before. */
-  private def feedBatches[T](rows: Array[T], numBatches: Int,
+    * state crosses the same boundaries as before. With no rows there is
+    * no last group, so `extraInLast` goes out as its own batch and the
+    * flush sentinels still arrive. */
+  private[streaming] def feedBatches[T](rows: Array[T], numBatches: Int,
       extraInLast: Seq[T] = Nil)(send: Seq[T] => Unit): Unit = {
     val per = math.max(1,
       math.ceil(rows.length.toDouble / numBatches).toInt)
     val groups = rows.grouped(per).map(_.toSeq).toIndexedSeq
-    groups.zipWithIndex.foreach { case (b, i) =>
+    if (groups.isEmpty) { if (extraInLast.nonEmpty) send(extraInLast) }
+    else groups.zipWithIndex.foreach { case (b, i) =>
       if (i == groups.length - 1) send(b ++ extraInLast)
       else send(b)
     }

@@ -1,0 +1,53 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.Files
+
+/**
+ * The round-trip scratch prune deletes only DEAD runs' stale dirs: a
+ * dir older than a day whose trailing `_<pid>` is a live process stays
+ * (its owner may still re-read it lazily), one whose pid has exited
+ * goes, and fresh or foreign dirs are never touched.
+ */
+class ScratchPruneSpec extends AnyFunSuite {
+
+  private def mkdir(root: java.io.File, name: String,
+      ageMs: Long, now: Long): java.io.File = {
+    val d = new java.io.File(root, name)
+    assert(d.mkdir())
+    Files.writeString(new java.io.File(d, "part-0").toPath, "x")
+    assert(d.setLastModified(now - ageMs))
+    d
+  }
+
+  test("a stale dir with a live pid is kept; one with a dead pid is " +
+      "pruned") {
+    val root = Files.createTempDirectory("graft-prune-spec").toFile
+    val now = System.currentTimeMillis()
+    val day = 24L * 3600 * 1000
+    val live = ProcessHandle.current().pid()
+    // one short-lived child, reaped before use: its pid is no longer live
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    val dead = child.pid()
+    assert(!ProcessHandle.of(dead).isPresent)
+    val staleLive = mkdir(root, s"graft_csv__tmp_out_$live", 2 * day, now)
+    val staleDead = mkdir(root, s"graft_csv__tmp_out_$dead", 2 * day, now)
+    val freshDead = mkdir(root, s"graft_csv__tmp_new_$dead", 60000L, now)
+    val foreign = mkdir(root, s"graft_orc__tmp_out_$dead", 2 * day, now)
+    try {
+      SparkEntry.pruneStaleScratch(root, "graft_csv", now)
+      assert(staleLive.isDirectory, "a live owner's scratch was deleted")
+      assert(!staleDead.exists(), "a dead run's stale scratch survived")
+      assert(freshDead.isDirectory, "scratch younger than a day was deleted")
+      assert(foreign.isDirectory, "another prefix's scratch was deleted")
+    } finally {
+      Seq(staleLive, freshDead, foreign).foreach { d =>
+        Option(d.listFiles()).foreach(_.foreach(_.delete()))
+        d.delete()
+      }
+      root.delete()
+    }
+  }
+}

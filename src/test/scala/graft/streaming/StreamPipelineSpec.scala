@@ -220,6 +220,26 @@ class StreamPipelineSpec extends SparkTestBase {
       Set(86400L, 86415L, 86430L, 86445L))
   }
 
+  test("feedBatches: with no rows the flush sentinels still go out as " +
+      "their own batch") {
+    val sent = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    StreamPipeline.feedBatches(Array.empty[Int], 3, Seq(-1, -2))(sent += _)
+    assert(sent.toSeq === Seq(Seq(-1, -2)))
+    sent.clear()
+    StreamPipeline.feedBatches(Array(1, 2, 3, 4), 2, Seq(-1))(sent += _)
+    assert(sent.toSeq === Seq(Seq(1, 2), Seq(3, 4, -1)))
+  }
+
+  test("replayQualityWindow: an empty-input replay terminates and emits " +
+      "no windows") {
+    val docs = spark.read
+      .parquet(sf("sf0.001") + "/documents.parquet")
+      .select("doc_id", "text").where(lit(false))
+    val streamed = StreamPipeline
+      .replayQualityWindow(docs, "doc_id", "text").collect()
+    assert(streamed.isEmpty, s"windows from no input: ${streamed.toSeq}")
+  }
+
   test("replayNearDup: distinct streamed pairs equal the batch simhash " +
       "pair set on real documents") {
     val docs = spark.read

@@ -5,6 +5,7 @@
 #
 #   tools/precommit-check.sh          # compile main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
+#                                     # and the benchmark's unit tests
 #
 # Exit 0 = safe to commit/snapshot. Anything else: fix or `git stash`
 # the in-flight hunk before snapshotting.
@@ -27,5 +28,13 @@ if [[ "${1:-}" == "--test" ]]; then
     exit 1
   fi
   grep -E "Tests: succeeded" /tmp/precommit-test.log | tail -1 || true
+  echo "[precommit] perfbench unit tests ..."
+  if ! python3 -m unittest discover -s perfbench/tests \
+      >/tmp/precommit-perfbench.log 2>&1; then
+    echo "[precommit] PERFBENCH TESTS FAILED:"
+    tail -30 /tmp/precommit-perfbench.log
+    exit 1
+  fi
+  tail -3 /tmp/precommit-perfbench.log
   echo "[precommit] tests green."
 fi
