@@ -341,7 +341,9 @@ object MultiOutput {
           thresholdBin.toArray, defaultLeft.toArray, left.toArray,
           right.toArray, slotOf))
         val histSize = chunk.length * nf * b * 2 * k
-        val seqOp = (acc: Array[Double], blk: GradBlock) => {
+        // buffer allocated in the task (see Trainer.mergeHist)
+        val seqOp = (acc0: Array[Double], blk: GradBlock) => {
+          val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
           val pt = bc.value
           val rb = blk.bins
           val gh = blk.gh
@@ -368,17 +370,13 @@ object MultiOutput {
           }
           acc
         }
-        val combOp = (a: Array[Double], c: Array[Double]) => {
-          var i = 0
-          while (i < a.length) { a(i) += c(i); i += 1 }
-          a
-        }
         val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
-        val hist =
+        val merged =
           if (mergeBytes < (64L << 20))
-            grads.aggregate(new Array[Double](histSize))(seqOp, combOp)
-          else grads.treeAggregate(new Array[Double](histSize))(
-            seqOp, combOp, depth = 2)
+            grads.aggregate(null: Array[Double])(seqOp, Trainer.mergeHist)
+          else grads.treeAggregate(null: Array[Double])(
+            seqOp, Trainer.mergeHist, depth = 2)
+        val hist = if (merged != null) merged else new Array[Double](histSize)
         bc.destroy()
 
         chunk.zipWithIndex.foreach { case (nid, s) =>

@@ -79,7 +79,9 @@ final case class TrainParams(
       * alongside `evalMetric` each round. */
     customMetrics: Seq[CustomMetric] = Nil,
     /** Cap one histogram aggregation buffer; wide feature sets are
-      * processed in node chunks per level to stay under it. */
+      * processed in node chunks per level to stay under it. The
+      * histograms a round keeps on the driver for sibling subtraction
+      * stay under it too (past it, children are built directly). */
     maxHistBytes: Long = 64L << 20,
     /** Per-feature monotone constraints (xgboost monotone_constraints):
       * +1 prediction non-decreasing in the feature, −1 non-increasing,
@@ -270,7 +272,22 @@ final case class TrainResult(
  *    4 bytes/row vs 16 for floats; the per-round working set is margins
  *    (K floats) only.
  *  - per level, ONE job aggregates histograms for ALL active nodes
- *    (chunked if the buffer would exceed maxHistBytes).
+ *    (chunked if the buffer would exceed maxHistBytes). Each task
+ *    allocates its buffer on first use, so no zero buffer rides the
+ *    task binary.
+ *  - histogram subtraction (xgboost/LightGBM hist): the driver keeps
+ *    each evaluated node's histogram. When both children of a split
+ *    are evaluated together, the job builds only the child with the
+ *    smaller hessian sum (the left child on a tie); the driver derives
+ *    its sibling as parent − built, per feature and bin. Below the root
+ *    this halves the histogram bytes each level returns. A child is
+ *    built directly instead when the parent's histogram was not kept
+ *    (the kept total is held within maxHistBytes; depthwise keeps none
+ *    for its last level), when its sampled features are not covered by
+ *    both the parent's and its sibling's (colsample_bylevel/bynode,
+ *    interaction constraints), or when it samples an optimal-partition
+ *    categorical feature, whose present-codes test must never see a
+ *    subtraction residue.
  *  - driver work is O(nodes × features × bins) per level — independent
  *    of row count; executors never see the model except via broadcast.
  */
@@ -288,6 +305,23 @@ object Trainer {
       left: Array[Int],
       right: Array[Int],
       slotOf: Array[Int])         // nodeId → global histogram slot or -1
+
+  /** An evaluated node's histogram, kept on the driver for deriving a
+    * child: (G, H) per (feature of `feats`, bin), the missing bin last. */
+  private final class NodeHist(val feats: Array[Int], val h: Array[Double])
+
+  /** combOp of the histogram aggregates: element-wise sum into `a`.
+    * `null` is the zero — the buffer is allocated in the task on first
+    * use, so a partition without rows returns none. */
+  private[learner] def mergeHist(a: Array[Double],
+      c: Array[Double]): Array[Double] =
+    if (a == null) c
+    else if (c == null) a
+    else {
+      var i = 0
+      while (i < a.length) { a(i) += c(i); i += 1 }
+      a
+    }
 
   /** One level chunk covering (tree, node) pairs across ALL trees of a
     * round — the unit of a single fused histogram job. */
@@ -353,16 +387,17 @@ object Trainer {
     val upper = ArrayBuffer[Double]()
     // features on the path from the root (interaction constraints)
     val path = ArrayBuffer[List[Int]]()
+    val parent = ArrayBuffer[Int]()   // -1 at the root
 
     def newNode(g: Double, h: Double,
         lo: Double = Double.NegativeInfinity,
         up: Double = Double.PositiveInfinity,
-        pf: List[Int] = Nil): Int = {
+        pf: List[Int] = Nil, par: Int = -1): Int = {
       feature += -2; thresholdBin += -1; threshold += 0f
       catSplit += false; catBits += null
       defaultLeft += false; left += -1; right += -1; value += 0f
       sumG += g; sumH += h; gain += 0.0
-      lower += lo; upper += up; path += pf
+      lower += lo; upper += up; path += pf; parent += par
       feature.length - 1
     }
 
@@ -598,6 +633,8 @@ object Trainer {
     val treeFeats: Array[Int] = sampleFeatures(Array.range(0, nf),
       p.colsampleByTree, p.featureWeights, rng)
     var active: Array[Int] = Array(tb.newNode(Double.NaN, Double.NaN))
+    // kept histograms of evaluated nodes, by node id
+    val hists = scala.collection.mutable.HashMap[Int, NodeHist]()
   }
 
   /**
@@ -643,28 +680,268 @@ object Trainer {
         defLeft: Boolean, gL: Double, hL: Double,
         catSet: Array[Int] = null)
 
+    /** An optimal-partition categorical feature: its present-codes test
+      * (`hist != 0.0`) must only ever see a directly built histogram. */
+    def partitionCat(f: Int): Boolean =
+      bins.isCat(f) && bins.numBins(f) >= p.maxCatToOnehot
+
+    /** `sub ⊆ sup` for ascending feature lists (sampleFeatures sorts). */
+    def covers(sup: Array[Int], sub: Array[Int]): Boolean =
+      sub.forall(java.util.Arrays.binarySearch(sup, _) >= 0)
+
+    var keptBytes = 0L
+    def keepHist(t: Int, nid: Int, nh: NodeHist): Unit =
+      if (keptBytes + nh.h.length * 8L <= p.maxHistBytes) {
+        states(t).hists(nid) = nh; keptBytes += nh.h.length * 8L
+      }
+    def dropHist(t: Int, nid: Int): Unit =
+      states(t).hists.remove(nid).foreach(keptBytes -= _.h.length * 8L)
+
+    /** Sibling histogram over `fl`: parent − built, per feature and bin.
+      * The built child's histogram starts at `off` of `built`. */
+    def derive(par: NodeHist, builtFeats: Array[Int],
+        built: Array[Double], off: Int, fl: Array[Int]): Array[Double] = {
+      val w = b * 2
+      val out = new Array[Double](fl.length * w)
+      var j = 0
+      while (j < fl.length) {
+        val pb = java.util.Arrays.binarySearch(par.feats, fl(j)) * w
+        val bb = off + java.util.Arrays.binarySearch(builtFeats, fl(j)) * w
+        var x = 0
+        while (x < w) { out(j * w + x) = par.h(pb + x) - built(bb + x); x += 1 }
+        j += 1
+      }
+      out
+    }
+
+    /** Best split of node `nid` of tree `t` over its features `fl`, from
+      * the histogram at `off` of `hist` (feature j's bins at
+      * `off + j·b·2`); sets a root's stats; null = no admissible split. */
+    def findSplit(t: Int, nid: Int, fl: Array[Int], hist: Array[Double],
+        off: Int): SplitDesc = {
+      val tb = states(t).tb
+      // node totals from feature 0's column (all bins + missing)
+      if (tb.sumG(nid).isNaN) {
+        var g = 0.0; var h = 0.0
+        var bi = 0
+        while (bi < b) {
+          g += hist(off + bi * 2); h += hist(off + bi * 2 + 1); bi += 1
+        }
+        tb.sumG(nid) = g; tb.sumH(nid) = h
+      }
+      val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
+      val parentScore = score(gTot, hTot, p)
+      var bestGain = 0.0
+      var bestF = -1; var bestBin = -1; var bestDefLeft = false
+      var bestGL = 0.0; var bestHL = 0.0; var bestCat = false
+      var bestCatSet: Array[Int] = null
+      val mc = p.monotoneConstraints
+      // a candidate split on a constrained feature must order its
+      // child weights in the constraint's direction
+      def monotoneOk(f: Int, gL: Double, hL: Double): Boolean = {
+        val c = if (f < mc.length) mc(f) else 0
+        if (c == 0) true
+        else {
+          val wl = leafWeight(gL, hL, p)
+          val wr = leafWeight(gTot - gL, hTot - hL, p)
+          if (c > 0) wl <= wr else wl >= wr
+        }
+      }
+      var j = 0
+      while (j < fl.length) {
+        val f = fl(j)
+        val base = off + j * b * 2
+        val gMiss = hist(base + (b - 1) * 2)
+        val hMiss = hist(base + (b - 1) * 2 + 1)
+        val nb = bins.numBins(f)
+        if (bins.isCat(f) && nb < p.maxCatToOnehot) {
+          // one-hot categorical candidates: left = {code c}
+          // (matrix.py:142,159,800 enable_categorical), missing
+          // riding left or right like the numeric scan. Same
+          // O(bins) cost — gl/hl read one bin instead of a prefix.
+          var c = 0
+          while (c < nb) {
+            val gl = hist(base + c * 2)
+            val hl = hist(base + c * 2 + 1)
+            // missing → left
+            val glA = gl + gMiss; val hlA = hl + hMiss
+            if (hlA >= p.minChildWeight &&
+                hTot - hlA >= p.minChildWeight) {
+              val gain = 0.5 * (score(glA, hlA, p) +
+                score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
+              if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
+                bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                bestDefLeft = true; bestGL = glA; bestHL = hlA
+                bestCatSet = null
+              }
+            }
+            // missing → right
+            if (hl >= p.minChildWeight &&
+                hTot - hl >= p.minChildWeight) {
+              val gain = 0.5 * (score(gl, hl, p) +
+                score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
+              if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
+                bestGain = gain; bestF = f; bestBin = c; bestCat = true
+                bestDefLeft = false; bestGL = gl; bestHL = hl
+                bestCatSet = null
+              }
+            }
+            c += 1
+          }
+        } else if (bins.isCat(f)) {
+          // optimal-partition categorical (xgboost max_cat_to_onehot
+          // overflow): categories present at this node sorted by
+          // gradient ratio G_c/H_c (Fisher's exact grouping for
+          // second-order losses), then a prefix scan identical in
+          // shape to the numeric one — candidate left set = first
+          // j sorted categories, missing rides left or right.
+          // Deterministic: ties sort by code. Codes absent here
+          // (empty bins) join NEITHER side and route right at
+          // inference, like unseen categories.
+          val codes = (0 until nb).filter { c =>
+            hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
+          }.toArray
+          if (codes.length >= 2) {
+            val sorted = codes.sortBy { c =>
+              val g = hist(base + c * 2)
+              val h = hist(base + c * 2 + 1)
+              (g / math.max(h, 1e-16), c)
+            }
+            var gl = 0.0; var hl = 0.0
+            var ci = 0
+            while (ci < sorted.length - 1) {
+              val c = sorted(ci)
+              gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
+              // missing → left
+              val glA = gl + gMiss; val hlA = hl + hMiss
+              if (hlA >= p.minChildWeight &&
+                  hTot - hlA >= p.minChildWeight) {
+                val gain = 0.5 * (score(glA, hlA, p) +
+                  score(gTot - glA, hTot - hlA, p) - parentScore) -
+                  p.gamma
+                if (gain > bestGain + 1e-12 &&
+                    monotoneOk(f, glA, hlA)) {
+                  bestGain = gain; bestF = f; bestBin = -1
+                  bestCat = true; bestDefLeft = true
+                  bestGL = glA; bestHL = hlA
+                  bestCatSet = sorted.take(ci + 1).sorted
+                }
+              }
+              // missing → right
+              if (hl >= p.minChildWeight &&
+                  hTot - hl >= p.minChildWeight) {
+                val gain = 0.5 * (score(gl, hl, p) +
+                  score(gTot - gl, hTot - hl, p) - parentScore) -
+                  p.gamma
+                if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
+                  bestGain = gain; bestF = f; bestBin = -1
+                  bestCat = true; bestDefLeft = false
+                  bestGL = gl; bestHL = hl
+                  bestCatSet = sorted.take(ci + 1).sorted
+                }
+              }
+              ci += 1
+            }
+          }
+        } else {
+        var gl = 0.0; var hl = 0.0
+        var bi = 0
+        while (bi < nb - 1) {
+          gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
+          // missing → left
+          val glA = gl + gMiss; val hlA = hl + hMiss
+          if (hlA >= p.minChildWeight &&
+              hTot - hlA >= p.minChildWeight) {
+            val gain = 0.5 * (score(glA, hlA, p) +
+              score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
+            if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
+              bestGain = gain; bestF = f; bestBin = bi
+              bestDefLeft = true; bestGL = glA; bestHL = hlA
+              bestCat = false; bestCatSet = null
+            }
+          }
+          // missing → right
+          if (hl >= p.minChildWeight && hTot - hl >= p.minChildWeight) {
+            val gain = 0.5 * (score(gl, hl, p) +
+              score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
+            if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
+              bestGain = gain; bestF = f; bestBin = bi
+              bestDefLeft = false; bestGL = gl; bestHL = hl
+              bestCat = false; bestCatSet = null
+            }
+          }
+          bi += 1
+        }
+        }
+        j += 1
+      }
+      if (bestF < 0) null
+      else SplitDesc(bestGain, bestF, bestBin, bestCat, bestDefLeft,
+        bestGL, bestHL, bestCatSet)
+    }
+
     /** Evaluate a batch of frontier nodes — (tree, nid, sampled feats) —
       * with fused chunked histogram jobs; sets node stats; returns the
       * best split per item (null = no admissible split). Deferring the
       * application is arithmetic-identical to the old apply-mid-batch
       * flow: items of one batch are never ancestors of each other, so
-      * splitting one cannot change a sibling's routing or histogram. */
-    def evaluateWork(work: ArrayBuffer[(Int, Int, Array[Int])])
-        : Array[SplitDesc] = {
+      * splitting one cannot change a sibling's routing or histogram.
+      *
+      * Histogram subtraction: when both children of a split are in the
+      * batch, only the one with the smaller hessian sum (the left on a
+      * tie) is histogrammed; the other is parent − built on the driver.
+      * A pair falls back to two direct builds when the parent's
+      * histogram was not kept, when the derived child's features are
+      * not covered by both the parent's and the built child's, or when
+      * it samples a partition-categorical feature. With `keepHists`,
+      * each node that found a split keeps its histogram for its
+      * children, while the kept total stays within maxHistBytes. */
+    def evaluateWork(work: ArrayBuffer[(Int, Int, Array[Int])],
+        keepHists: Boolean): Array[SplitDesc] = {
       val out = new Array[SplitDesc](work.length)
       if (work.isEmpty) return out
-      val fPerNode = work.map(_._3.length).max
+      // a kept histogram serves a node still waiting to split (a queued
+      // lossguide candidate) or the pending children of a split node
+      states.indices.foreach { t =>
+        val tb = states(t).tb
+        states(t).hists.keys.toList.foreach { n =>
+          val live = tb.feature(n) == -2 || (tb.feature(n) >= 0 &&
+            (tb.feature(tb.left(n)) == -2 || tb.feature(tb.right(n)) == -2))
+          if (!live) dropHist(t, n)
+        }
+      }
+      // built item → the sibling item derived from it
+      val derivedFrom = Array.fill(work.length)(-1)
+      val derived = new Array[Boolean](work.length)
+      val itemOf = work.indices.map(i => (work(i)._1, work(i)._2) -> i).toMap
+      work.indices.foreach { i =>
+        val (t, l, _) = work(i)
+        val tb = states(t).tb
+        val par = tb.parent(l)
+        if (par >= 0 && tb.left(par) == l) {
+          val r = tb.right(par)
+          for (j <- itemOf.get((t, r)); ph <- states(t).hists.get(par)) {
+            val (bi, di) = if (tb.sumH(r) < tb.sumH(l)) (j, i) else (i, j)
+            val df = work(di)._3
+            if (covers(ph.feats, df) && covers(work(bi)._3, df) &&
+                !df.exists(partitionCat)) {
+              derivedFrom(bi) = di; derived(di) = true
+            }
+          }
+        }
+      }
+      val build = work.indices.filterNot(derived)
+      val fPerNode = build.map(work(_)._3.length).max
       val bytesPerNode = fPerNode.toLong * b * 2 * 8
       val chunkSize = math.max(1, (p.maxHistBytes / bytesPerNode).toInt)
-      var done = 0
-      work.grouped(chunkSize).foreach { chunk =>
+      build.grouped(chunkSize).foreach { chunk =>
         // per-tree node→global-slot maps for this chunk
         val slotOf = states.map(st => Array.fill(st.tb.feature.length)(-1))
-        chunk.zipWithIndex.foreach { case ((t, nid, _), s) =>
-          slotOf(t)(nid) = s
+        chunk.zipWithIndex.foreach { case (i, s) =>
+          slotOf(work(i)._1)(work(i)._2) = s
         }
         val chunkTrees = states.indices.map { t =>
-          if (chunk.exists(_._1 == t)) {
+          if (chunk.exists(work(_)._1 == t)) {
             val tb = states(t).tb
             PartialTree(tb.feature.toArray, tb.thresholdBin.toArray,
               tb.catSplit.toArray, tb.catBits.toArray,
@@ -673,9 +950,12 @@ object Trainer {
           } else null
         }.toArray
         val bc = sc.broadcast(LevelChunk(chunkTrees, treeCls, treeSalts,
-          chunk.map(_._3).toArray))
+          chunk.map(work(_)._3).toArray))
         val histSize = chunk.length * fPerNode * b * 2
-        val seqOp = (acc: Array[Double], blk: GradBlock) => {
+        // the buffer is allocated in the task on first use: a zero value
+        // would ride every task binary
+        val seqOp = (acc0: Array[Double], blk: GradBlock) => {
+          val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
           val ch = bc.value
           val nf2 = blk.nf
           val k2 = blk.k
@@ -714,185 +994,39 @@ object Trainer {
           }
           acc
         }
-        val combOp = (a: Array[Double], c: Array[Double]) => {
-          var i = 0
-          while (i < a.length) { a(i) += c(i); i += 1 }
-          a
-        }
         // small total merge volume → single-stage aggregate (driver
         // merges the partials); big volume → tree merge so the driver
         // never receives numPartitions × histogram at once. The extra
         // treeAggregate stage is pure latency when histograms are KBs.
         val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
-        val hist =
+        val merged =
           if (mergeBytes < (64L << 20))
-            grads.aggregate(new Array[Double](histSize))(seqOp, combOp)
-          else grads.treeAggregate(new Array[Double](histSize))(
-            seqOp, combOp, depth = 2)
+            grads.aggregate(null: Array[Double])(seqOp, mergeHist)
+          else grads.treeAggregate(null: Array[Double])(
+            seqOp, mergeHist, depth = 2)
+        val hist = if (merged != null) merged else new Array[Double](histSize)
         bc.destroy()
 
-        // driver-side split finding per (tree, node) in this chunk
-        chunk.zipWithIndex.foreach { case ((t, nid, fl), s) =>
-          val tb = states(t).tb
-          // node totals from feature 0's column (all bins + missing)
-          if (tb.sumG(nid).isNaN) {
-            var g = 0.0; var h = 0.0
-            val base = (s * fPerNode) * b * 2
-            var bi = 0
-            while (bi < b) { g += hist(base + bi * 2); h += hist(base + bi * 2 + 1); bi += 1 }
-            tb.sumG(nid) = g; tb.sumH(nid) = h
+        // driver-side split finding per built node, then per sibling
+        // derived from it
+        chunk.zipWithIndex.foreach { case (i, s) =>
+          val (t, nid, fl) = work(i)
+          val off = s * fPerNode * b * 2
+          out(i) = findSplit(t, nid, fl, hist, off)
+          val d = derivedFrom(i)
+          if (d >= 0) {
+            val (_, sib, sfl) = work(d)
+            val par = states(t).tb.parent(nid)
+            val dh = derive(states(t).hists(par), fl, hist, off, sfl)
+            dropHist(t, par)
+            out(d) = findSplit(t, sib, sfl, dh, 0)
+            if (keepHists && out(d) != null)
+              keepHist(t, sib, new NodeHist(sfl, dh))
           }
-          val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
-          val parentScore = score(gTot, hTot, p)
-          var bestGain = 0.0
-          var bestF = -1; var bestBin = -1; var bestDefLeft = false
-          var bestGL = 0.0; var bestHL = 0.0; var bestCat = false
-          var bestCatSet: Array[Int] = null
-          val mc = p.monotoneConstraints
-          // a candidate split on a constrained feature must order its
-          // child weights in the constraint's direction
-          def monotoneOk(f: Int, gL: Double, hL: Double): Boolean = {
-            val c = if (f < mc.length) mc(f) else 0
-            if (c == 0) true
-            else {
-              val wl = leafWeight(gL, hL, p)
-              val wr = leafWeight(gTot - gL, hTot - hL, p)
-              if (c > 0) wl <= wr else wl >= wr
-            }
-          }
-          var j = 0
-          while (j < fl.length) {
-            val f = fl(j)
-            val base = ((s * fPerNode + j) * b) * 2
-            val gMiss = hist(base + (b - 1) * 2)
-            val hMiss = hist(base + (b - 1) * 2 + 1)
-            val nb = bins.numBins(f)
-            if (bins.isCat(f) && nb < p.maxCatToOnehot) {
-              // one-hot categorical candidates: left = {code c}
-              // (matrix.py:142,159,800 enable_categorical), missing
-              // riding left or right like the numeric scan. Same
-              // O(bins) cost — gl/hl read one bin instead of a prefix.
-              var c = 0
-              while (c < nb) {
-                val gl = hist(base + c * 2)
-                val hl = hist(base + c * 2 + 1)
-                // missing → left
-                val glA = gl + gMiss; val hlA = hl + hMiss
-                if (hlA >= p.minChildWeight &&
-                    hTot - hlA >= p.minChildWeight) {
-                  val gain = 0.5 * (score(glA, hlA, p) +
-                    score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
-                  if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-                    bestGain = gain; bestF = f; bestBin = c; bestCat = true
-                    bestDefLeft = true; bestGL = glA; bestHL = hlA
-                    bestCatSet = null
-                  }
-                }
-                // missing → right
-                if (hl >= p.minChildWeight &&
-                    hTot - hl >= p.minChildWeight) {
-                  val gain = 0.5 * (score(gl, hl, p) +
-                    score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
-                  if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                    bestGain = gain; bestF = f; bestBin = c; bestCat = true
-                    bestDefLeft = false; bestGL = gl; bestHL = hl
-                    bestCatSet = null
-                  }
-                }
-                c += 1
-              }
-            } else if (bins.isCat(f)) {
-              // optimal-partition categorical (xgboost max_cat_to_onehot
-              // overflow): categories present at this node sorted by
-              // gradient ratio G_c/H_c (Fisher's exact grouping for
-              // second-order losses), then a prefix scan identical in
-              // shape to the numeric one — candidate left set = first
-              // j sorted categories, missing rides left or right.
-              // Deterministic: ties sort by code. Codes absent here
-              // (empty bins) join NEITHER side and route right at
-              // inference, like unseen categories.
-              val codes = (0 until nb).filter { c =>
-                hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
-              }.toArray
-              if (codes.length >= 2) {
-                val sorted = codes.sortBy { c =>
-                  val g = hist(base + c * 2)
-                  val h = hist(base + c * 2 + 1)
-                  (g / math.max(h, 1e-16), c)
-                }
-                var gl = 0.0; var hl = 0.0
-                var ci = 0
-                while (ci < sorted.length - 1) {
-                  val c = sorted(ci)
-                  gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
-                  // missing → left
-                  val glA = gl + gMiss; val hlA = hl + hMiss
-                  if (hlA >= p.minChildWeight &&
-                      hTot - hlA >= p.minChildWeight) {
-                    val gain = 0.5 * (score(glA, hlA, p) +
-                      score(gTot - glA, hTot - hlA, p) - parentScore) -
-                      p.gamma
-                    if (gain > bestGain + 1e-12 &&
-                        monotoneOk(f, glA, hlA)) {
-                      bestGain = gain; bestF = f; bestBin = -1
-                      bestCat = true; bestDefLeft = true
-                      bestGL = glA; bestHL = hlA
-                      bestCatSet = sorted.take(ci + 1).sorted
-                    }
-                  }
-                  // missing → right
-                  if (hl >= p.minChildWeight &&
-                      hTot - hl >= p.minChildWeight) {
-                    val gain = 0.5 * (score(gl, hl, p) +
-                      score(gTot - gl, hTot - hl, p) - parentScore) -
-                      p.gamma
-                    if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                      bestGain = gain; bestF = f; bestBin = -1
-                      bestCat = true; bestDefLeft = false
-                      bestGL = gl; bestHL = hl
-                      bestCatSet = sorted.take(ci + 1).sorted
-                    }
-                  }
-                  ci += 1
-                }
-              }
-            } else {
-            var gl = 0.0; var hl = 0.0
-            var bi = 0
-            while (bi < nb - 1) {
-              gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
-              // missing → left
-              val glA = gl + gMiss; val hlA = hl + hMiss
-              if (hlA >= p.minChildWeight &&
-                  hTot - hlA >= p.minChildWeight) {
-                val gain = 0.5 * (score(glA, hlA, p) +
-                  score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = true; bestGL = glA; bestHL = hlA
-                  bestCat = false; bestCatSet = null
-                }
-              }
-              // missing → right
-              if (hl >= p.minChildWeight && hTot - hl >= p.minChildWeight) {
-                val gain = 0.5 * (score(gl, hl, p) +
-                  score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = false; bestGL = gl; bestHL = hl
-                  bestCat = false; bestCatSet = null
-                }
-              }
-              bi += 1
-            }
-            }
-            j += 1
-          }
-          if (bestF >= 0)
-            out(done + s) = SplitDesc(bestGain, bestF, bestBin, bestCat,
-              bestDefLeft, bestGL, bestHL, bestCatSet)
+          if (keepHists && out(i) != null)
+            keepHist(t, nid, new NodeHist(fl,
+              java.util.Arrays.copyOfRange(hist, off, off + fl.length * b * 2)))
         }
-        done += chunk.length
       }
       out
     }
@@ -924,8 +1058,8 @@ object Trainer {
       val childPath =
         if (p.interactionConstraints.isEmpty) Nil
         else d.f :: tb.path(nid)
-      val l = tb.newNode(d.gL, d.hL, lLo, lUp, childPath)
-      val r = tb.newNode(gTot - d.gL, hTot - d.hL, rLo, rUp, childPath)
+      val l = tb.newNode(d.gL, d.hL, lLo, lUp, childPath, nid)
+      val r = tb.newNode(gTot - d.gL, hTot - d.hL, rLo, rUp, childPath, nid)
       tb.gain(nid) = d.gain
       tb.feature(nid) = d.f
       tb.thresholdBin(nid) = d.bin
@@ -984,7 +1118,8 @@ object Trainer {
         if (work.isEmpty) {
           states.foreach(_.active = Array.empty)
         } else {
-          val descs = evaluateWork(work)
+          // the last level's children are leaves: keep no histograms
+          val descs = evaluateWork(work, keepHists = depth + 1 < p.maxDepth)
           val nextActive = Array.fill(states.length)(ArrayBuffer[Int]())
           if (p.maxLeaves == 0) {
             var i = 0
@@ -1074,7 +1209,7 @@ object Trainer {
           if (feats.isEmpty) st.tb.finalizeLeaf(nid, p)
           else work += ((t, nid, feats))
         }
-        val descs = evaluateWork(work)
+        val descs = evaluateWork(work, keepHists = true)
         var i = 0
         while (i < work.length) {
           val (t, nid, _) = work(i)
@@ -2109,8 +2244,11 @@ object Trainer {
         ti += 1
       }
       val bcTrees = sc.broadcast(roundTrees)
-      val agg = grads.aggregate(new Array[Double](offsets.last * 2))(
-        (acc, blk) => {
+      val aggSize = offsets.last * 2
+      // buffer allocated in the task (see mergeHist)
+      val merged = grads.aggregate(null: Array[Double])(
+        (acc0, blk) => {
+          val acc = if (acc0 != null) acc0 else new Array[Double](aggSize)
           val ts = bcTrees.value
           val kb = blk.k; val nf = blk.nf
           val rowBins = blk.bins; val gh = blk.gh
@@ -2146,11 +2284,8 @@ object Trainer {
           }
           acc
         },
-        (a, c) => {
-          var i = 0
-          while (i < a.length) { a(i) += c(i); i += 1 }
-          a
-        })
+        mergeHist)
+      val agg = if (merged != null) merged else new Array[Double](aggSize)
       bcTrees.destroy()
       ti = 0
       while (ti < roundTrees.length) {

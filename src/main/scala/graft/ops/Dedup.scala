@@ -964,10 +964,17 @@ object Dedup {
     // lists...) is far too expensive to execute twice. EXCEPT when the
     // caller hands a plan that is already a materialized RDD (the
     // ngramJaccard/simhashDups outputs are eager localCheckpoints —
-    // their analyzed plan is a bare LogicalRDD): re-reading those is
-    // free, so the extra persist + count job would only duplicate them.
-    val preMat = pairs.queryExecution.analyzed
-      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    // their analyzed plan is a bare LogicalRDD over a checkpointed,
+    // cached RDD): re-reading those is free, so the extra persist +
+    // count job would only duplicate them. A LogicalRDD over a plain
+    // RDD (`createDataFrame(rdd)`) recomputes its lineage on every read
+    // and is persisted like any other plan.
+    val preMat = pairs.queryExecution.analyzed match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.isCheckpointed ||
+          r.rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE
+      case _ => false
+    }
     val p = if (preMat) pairs else pairs.persist(lvl)
     if (!preMat) p.count()
     val sess = pairs.sparkSession

@@ -6,6 +6,9 @@
 #   tools/precommit-check.sh          # compile main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
+#   tools/precommit-check.sh --bench  # additionally run one short
+#                                     # boost_wide benchmark pass and
+#                                     # require its outputs correct
 #
 # Exit 0 = safe to commit/snapshot. Anything else: fix or `git stash`
 # the in-flight hunk before snapshotting.
@@ -37,4 +40,21 @@ if [[ "${1:-}" == "--test" ]]; then
   fi
   tail -3 /tmp/precommit-perfbench.log
   echo "[precommit] tests green."
+fi
+
+if [[ "${1:-}" == "--bench" ]]; then
+  echo "[precommit] perfbench boost_wide smoke ..."
+  if ! python3 perfbench/run.py --workload boost_wide --seed 1 \
+      --seconds 1 --trace 0 >/tmp/precommit-bench.log 2>&1; then
+    echo "[precommit] BENCHMARK RUN FAILED:"
+    tail -30 /tmp/precommit-bench.log
+    exit 1
+  fi
+  if ! tail -n 1 /tmp/precommit-bench.log | python3 -c \
+      'import json, sys; sys.exit(0 if json.loads(sys.stdin.read()).get("correct") is True else 1)'; then
+    echo "[precommit] BENCHMARK OUTPUTS INCORRECT:"
+    tail -5 /tmp/precommit-bench.log
+    exit 1
+  fi
+  echo "[precommit] benchmark outputs correct."
 fi
