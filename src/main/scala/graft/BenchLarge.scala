@@ -50,147 +50,143 @@ object BenchLarge {
     val cacheLevel = args.lift(5).getOrElse("MEMORY_AND_DISK")
 
     val initStart = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("graft-benchlarge")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val initTaken = (System.nanoTime() - initStart) / 1e9
+    DevHarness.run(DevHarness.session(s"local[$threads]", threads,
+        "graft-benchlarge")) { spark =>
+      val initTaken = (System.nanoTime() - initStart) / 1e9
 
-    // v2: the fixture grew the label_clean column (r20 accuracy gate)
-    val path =
-      if (mode == "random") s"$baseDir/parted_v2_$rows.parquet"
-      else s"$baseDir/parted_learnable_v2_$rows.parquet"
-    if (!new java.io.File(path).exists()) {
-      val g0 = System.nanoTime()
-      generate(spark, path, rows, mode)
-      println(f"[benchlarge] generated $rows rows in " +
-        f"${(System.nanoTime() - g0) / 1e9}%.1f s -> $path")
-    }
-
-    // peak-heap sampler (10 Hz) — heap only grows in the sample view,
-    // so the max over samples bounds the true peak from below
-    @volatile var peakHeap = 0L
-    @volatile var sampling = true
-    val sampler = new Thread(() => {
-      val rt = Runtime.getRuntime
-      while (sampling) {
-        val used = rt.totalMemory() - rt.freeMemory()
-        if (used > peakHeap) peakHeap = used
-        Thread.sleep(100)
+      // v2: the fixture grew the label_clean column (r20 accuracy gate)
+      val path =
+        if (mode == "random") s"$baseDir/parted_v2_$rows.parquet"
+        else s"$baseDir/parted_learnable_v2_$rows.parquet"
+      if (!new java.io.File(path).exists()) {
+        val g0 = System.nanoTime()
+        generateDF(spark, rows, 100, mode).write.mode("overwrite").parquet(path)
+        println(f"[benchlarge] generated $rows rows in " +
+          f"${(System.nanoTime() - g0) / 1e9}%.1f s -> $path")
       }
-    })
-    sampler.setDaemon(true)
-    sampler.start()
 
-    val roundTimes = ArrayBuffer[Double]()
-    @volatile var lastMark = 0L
-    val timer = new TrainingCallback {
-      override def afterIteration(round: Int,
-          metrics: Map[String, Double]): Boolean = {
-        val now = System.nanoTime()
-        roundTimes += (now - lastMark) / 1e9
-        lastMark = now
-        false
+      // peak-heap sampler (10 Hz) — heap only grows in the sample view,
+      // so the max over samples bounds the true peak from below
+      @volatile var peakHeap = 0L
+      @volatile var sampling = true
+      val sampler = new Thread(() => {
+        val rt = Runtime.getRuntime
+        while (sampling) {
+          val used = rt.totalMemory() - rt.freeMemory()
+          if (used > peakHeap) peakHeap = used
+          Thread.sleep(100)
+        }
+      })
+      sampler.setDaemon(true)
+      sampler.start()
+
+      val roundTimes = ArrayBuffer[Double]()
+      @volatile var lastMark = 0L
+      val timer = new TrainingCallback {
+        override def afterIteration(round: Int,
+            metrics: Map[String, Double]): Boolean = {
+          val now = System.nanoTime()
+          roundTimes += (now - lastMark) / 1e9
+          lastMark = now
+          false
+        }
       }
+
+      val fullStart = System.nanoTime()
+      val df = spark.read.parquet(path)
+      val spec = DMatrixSpec(labelCol = Seq("labels"),
+        ignore = Seq("partition", "label_clean"))
+      val trainStart = System.nanoTime()
+      lastMark = trainStart
+      val res = GraftBoost.train(df, spec,
+        TrainParams(objective = "binary:logistic", numRounds = rounds,
+          maxDepth = 6, eta = 0.3, evalMetric = Seq("logloss", "error"),
+          seed = 1234, cacheLevel = cacheLevel),
+        evals = Seq(("train", df)), numWorkers = threads,
+        callbacks = Seq(timer))
+      val end = System.nanoTime()
+      val trainTaken = (end - trainStart) / 1e9
+      val fullTaken = (end - fullStart) / 1e9
+      // stop the sampler HERE: peak_heap_gb has always meant the
+      // TRAINING peak (all BENCHLARGE.md history compares on that), and
+      // the predict pass below must not widen the window
+      sampling = false
+
+      // batch predict over the full dataset — the other half of the
+      // reference's API (main.py predict path): a fresh parquet scan
+      // scored through the codegen EnsembleScore expression, reduced to
+      // one checksum so every row is computed but none are collected
+      val predStart = System.nanoTime()
+      import org.apache.spark.sql.functions.{avg, col, sum, when}
+      // one scoring pass yields BOTH the throughput checksum and the
+      // clean-boundary error (accuracy vs the PRE-FLIP planted class):
+      // flip noise puts a hard 0.2 floor under the labeled error, but a
+      // model that learned the boundary scores ~0 against label_clean —
+      // the sharp gate a silent gain-formula regression cannot pass
+      val predRow = GraftBoost.predict(res.model,
+          spark.read.parquet(path), spec)
+        .agg(sum("prediction"),
+          avg(when((col("prediction") > 0.5).cast("int") =!=
+            col("label_clean").cast("int"), 1.0).otherwise(0.0)))
+        .head()
+      val predSum = predRow.getDouble(0)
+      val cleanErr = predRow.getDouble(1)
+      val predTaken = (System.nanoTime() - predStart) / 1e9
+
+      val err = res.evalsResult("train")("error")
+      val ll = res.evalsResult("train")("logloss")
+      if (mode == "learnable") {
+        // the r19-verdict accuracy gate: the reference's learnable
+        // benchmark targets accuracy 0.8 via flip_y = 0.2
+        // (create_learnable_data.py:39-68), so a healthy trainer's
+        // labeled train error converges TO the 0.2 Bayes floor — it
+        // cannot go measurably below it without memorizing noise
+        // (observed: 0.201 at 1e6..1e7 rows; the realized flip
+        // fraction itself is 0.2 ± binomial noise). Gate at floor +
+        // 0.005 slack, paired with the noise-free clean-boundary gate:
+        // a broken split/gain path lands ≥ 0.3 on both and dies here.
+        require(err.last <= 0.205,
+          f"learnable gate FAILED: error_last ${err.last}%.4f > 0.205 " +
+            "(target accuracy 0.8 + Bayes-floor slack) — the trainer " +
+            "no longer finds the planted signal")
+        require(cleanErr <= 0.05,
+          f"learnable gate FAILED: clean-boundary error $cleanErr%.4f " +
+            "> 0.05 — the model did not recover the planted class " +
+            "boundary")
+      }
+      val rts = roundTimes.toSeq
+      val sortedRts = rts.sorted
+      def j(d: Double) = f"$d%.3f"
+      // first round pays binning+materialization warmup inside the timer
+      // window only if rounds deferred it; flatness compares the LAST
+      // round to the first steady-state round, which needs >= 2 samples
+      // AFTER the warmup drop (rounds >= 3) — fewer makes last/first a
+      // degenerate self-ratio, so the field reports null instead
+      val steady = if (rts.length > 2) rts.drop(1) else Nil
+      val flatness =
+        if (steady.length >= 2) j(rts.last / steady.head) else "null"
+      println("BENCHLARGE_JSON " +
+        s"""{"rows":$rows,"rounds":$rounds,"threads":$threads,""" +
+        s""""mode":"$mode","cache":"$cacheLevel",""" +
+        s""""total_n":${res.totalN},""" +
+        s""""init_sec":${j(initTaken)},"full_sec":${j(fullTaken)},""" +
+        s""""train_sec":${j(trainTaken)},""" +
+        s""""round_first_sec":${j(rts.head)},""" +
+        s""""round_median_sec":${j(sortedRts(sortedRts.length / 2))},""" +
+        s""""round_last_sec":${j(rts.last)},""" +
+        s""""round_max_sec":${j(rts.max)},""" +
+        s""""flatness_last_over_steadyfirst":$flatness,""" +
+        s""""predict_sec":${j(predTaken)},""" +
+        s""""predict_rows_per_sec":${(rows / predTaken).toLong},""" +
+        s""""predict_mean":${j(predSum / rows)},""" +
+        s""""peak_heap_gb":${j(peakHeap / 1e9)},""" +
+        s""""logloss_first":${j(ll.head)},"logloss_last":${j(ll.last)},""" +
+        s""""error_last":${j(err.last)},""" +
+        s""""clean_error":${j(cleanErr)},""" +
+        s""""gate":"${if (mode == "learnable")
+          "error_last<=0.205,clean_error<=0.05 PASS" else "n/a"}"}""")
+      0
     }
-
-    val fullStart = System.nanoTime()
-    val df = spark.read.parquet(path)
-    val spec = DMatrixSpec(labelCol = Seq("labels"),
-      ignore = Seq("partition", "label_clean"))
-    val trainStart = System.nanoTime()
-    lastMark = trainStart
-    val res = GraftBoost.train(df, spec,
-      TrainParams(objective = "binary:logistic", numRounds = rounds,
-        maxDepth = 6, eta = 0.3, evalMetric = Seq("logloss", "error"),
-        seed = 1234, cacheLevel = cacheLevel),
-      evals = Seq(("train", df)), numWorkers = threads,
-      callbacks = Seq(timer))
-    val end = System.nanoTime()
-    val trainTaken = (end - trainStart) / 1e9
-    val fullTaken = (end - fullStart) / 1e9
-    // stop the sampler HERE: peak_heap_gb has always meant the
-    // TRAINING peak (all BENCHLARGE.md history compares on that), and
-    // the predict pass below must not widen the window
-    sampling = false
-
-    // batch predict over the full dataset — the other half of the
-    // reference's API (main.py predict path): a fresh parquet scan
-    // scored through the codegen EnsembleScore expression, reduced to
-    // one checksum so every row is computed but none are collected
-    val predStart = System.nanoTime()
-    import org.apache.spark.sql.functions.{avg, col, sum, when}
-    // one scoring pass yields BOTH the throughput checksum and the
-    // clean-boundary error (accuracy vs the PRE-FLIP planted class):
-    // flip noise puts a hard 0.2 floor under the labeled error, but a
-    // model that learned the boundary scores ~0 against label_clean —
-    // the sharp gate a silent gain-formula regression cannot pass
-    val predRow = GraftBoost.predict(res.model,
-        spark.read.parquet(path), spec)
-      .agg(sum("prediction"),
-        avg(when((col("prediction") > 0.5).cast("int") =!=
-          col("label_clean").cast("int"), 1.0).otherwise(0.0)))
-      .head()
-    val predSum = predRow.getDouble(0)
-    val cleanErr = predRow.getDouble(1)
-    val predTaken = (System.nanoTime() - predStart) / 1e9
-
-    val err = res.evalsResult("train")("error")
-    val ll = res.evalsResult("train")("logloss")
-    if (mode == "learnable") {
-      // the r19-verdict accuracy gate: the reference's learnable
-      // benchmark targets accuracy 0.8 via flip_y = 0.2
-      // (create_learnable_data.py:39-68), so a healthy trainer's
-      // labeled train error converges TO the 0.2 Bayes floor — it
-      // cannot go measurably below it without memorizing noise
-      // (observed: 0.201 at 1e6..1e7 rows; the realized flip
-      // fraction itself is 0.2 ± binomial noise). Gate at floor +
-      // 0.005 slack, paired with the noise-free clean-boundary gate:
-      // a broken split/gain path lands ≥ 0.3 on both and dies here.
-      require(err.last <= 0.205,
-        f"learnable gate FAILED: error_last ${err.last}%.4f > 0.205 " +
-          "(target accuracy 0.8 + Bayes-floor slack) — the trainer " +
-          "no longer finds the planted signal")
-      require(cleanErr <= 0.05,
-        f"learnable gate FAILED: clean-boundary error $cleanErr%.4f " +
-          "> 0.05 — the model did not recover the planted class " +
-          "boundary")
-    }
-    val rts = roundTimes.toSeq
-    val sortedRts = rts.sorted
-    def j(d: Double) = f"$d%.3f"
-    // first round pays binning+materialization warmup inside the timer
-    // window only if rounds deferred it; flatness compares the LAST
-    // round to the first steady-state round, which needs >= 2 samples
-    // AFTER the warmup drop (rounds >= 3) — fewer makes last/first a
-    // degenerate self-ratio, so the field reports null instead
-    val steady = if (rts.length > 2) rts.drop(1) else Nil
-    val flatness =
-      if (steady.length >= 2) j(rts.last / steady.head) else "null"
-    println("BENCHLARGE_JSON " +
-      s"""{"rows":$rows,"rounds":$rounds,"threads":$threads,""" +
-      s""""mode":"$mode","cache":"$cacheLevel",""" +
-      s""""total_n":${res.totalN},""" +
-      s""""init_sec":${j(initTaken)},"full_sec":${j(fullTaken)},""" +
-      s""""train_sec":${j(trainTaken)},""" +
-      s""""round_first_sec":${j(rts.head)},""" +
-      s""""round_median_sec":${j(sortedRts(sortedRts.length / 2))},""" +
-      s""""round_last_sec":${j(rts.last)},""" +
-      s""""round_max_sec":${j(rts.max)},""" +
-      s""""flatness_last_over_steadyfirst":$flatness,""" +
-      s""""predict_sec":${j(predTaken)},""" +
-      s""""predict_rows_per_sec":${(rows / predTaken).toLong},""" +
-      s""""predict_mean":${j(predSum / rows)},""" +
-      s""""peak_heap_gb":${j(peakHeap / 1e9)},""" +
-      s""""logloss_first":${j(ll.head)},"logloss_last":${j(ll.last)},""" +
-      s""""error_last":${j(err.last)},""" +
-      s""""clean_error":${j(cleanErr)},""" +
-      s""""gate":"${if (mode == "learnable")
-        "error_last<=0.205,clean_error<=0.05 PASS" else "n/a"}"}""")
-    spark.stop()
   }
 
   /** Distributed deterministic generator for the reference shape:
@@ -236,9 +232,4 @@ object BenchLarge {
       .toDF("feature_0", "feature_1", "feature_2", "feature_3",
         "labels", "label_clean", "partition")
   }
-
-  private def generate(spark: SparkSession, path: String,
-      rows: Long, mode: String): Unit =
-    generateDF(spark, rows, 100, mode)
-      .write.mode("overwrite").parquet(path)
 }

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /**
@@ -38,51 +37,32 @@ object BenchProfile {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val b = if (sys.env.contains("GRAFT_AQE_SIZE"))
-      b0.config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          "false")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
-    else b0
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val log = new JobLog
-    spark.sparkContext.addSparkListener(log)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // same warmup discipline as Bench
-    val warmDir = "/root/testdata/sf0.001"
-    queries.foreach { case (_, fn) =>
-      try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => }
+    val env = DevHarness.env()
+    DevHarness.run(env.session("graft-benchprofile")) { spark =>
+      val log = new JobLog
+      spark.sparkContext.addSparkListener(log)
+      val queries = env.queries
+      // same warmup discipline as Bench
+      val warmDir = "/root/testdata/sf0.001"
+      queries.foreach { case (_, fn) =>
+        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => }
+      }
+      DevHarness.dropState(spark)
+      println(f"${"query"}%-24s ${"wall_s"}%8s ${"jobs"}%5s " +
+        f"${"job_s"}%8s ${"gap_s"}%8s ${"stages"}%6s ${"tasks"}%6s")
+      queries.foreach { case (name, fn) =>
+        log.reset()
+        val t0 = System.nanoTime()
+        try fn(spark, env.sfDir).write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable => System.err.println(s"FAIL $name: $e") }
+        val wall = (System.nanoTime() - t0) / 1e9
+        val (nJobs, jobS, nStages, nTasks) = log.summary()
+        println(f"$name%-24s $wall%8.2f $nJobs%5d $jobS%8.2f " +
+          f"${wall - jobS}%8.2f $nStages%6d $nTasks%6d")
+        DevHarness.dropState(spark)
+      }
+      0
     }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
-    println(f"${"query"}%-24s ${"wall_s"}%8s ${"jobs"}%5s " +
-      f"${"job_s"}%8s ${"gap_s"}%8s ${"stages"}%6s ${"tasks"}%6s")
-    queries.foreach { case (name, fn) =>
-      log.reset()
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"FAIL $name: $e") }
-      val wall = (System.nanoTime() - t0) / 1e9
-      val (nJobs, jobS, nStages, nTasks) = log.summary()
-      println(f"$name%-24s $wall%8.2f $nJobs%5d $jobS%8.2f " +
-        f"${wall - jobS}%8.2f $nStages%6d $nTasks%6d")
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    spark.stop()
   }
 }

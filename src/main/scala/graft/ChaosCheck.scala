@@ -3,7 +3,6 @@ package graft
 import graft.api.GraftBoost
 import graft.data.DMatrixSpec
 import graft.learner.{Objective, TrainParams}
-import org.apache.spark.sql.SparkSession
 
 /**
  * Fault-tolerance golden check — the Spark analog of the reference's
@@ -19,7 +18,8 @@ import org.apache.spark.sql.SparkSession
  *
  * Runs as a main (not ScalaTest) because the shared test session is
  * `local[4]`, where task retries are off and any failure is fatal.
- * Invoke: `sbt "runMain graft.ChaosCheck"` — prints CHAOS PASS/FAIL.
+ * Invoke: `sbt "runMain graft.ChaosCheck"` — prints CHAOS PASS/FAIL
+ * and exits 0 on PASS, 1 on FAIL, 2 when the fault never fired.
  */
 object ChaosCheck {
 
@@ -35,25 +35,18 @@ object ChaosCheck {
     val numOutputs = 1
     def initMargin(b: Double): Float = b.toFloat
     def transform(m: Array[Float]): Array[Float] = m
-    private var calls = 0
     def gradHess(m: Array[Float], y: Float, g: Array[Float],
         h: Array[Float]): Unit = {
       if (fail && Fault.armed.compareAndSet(true, false))
         throw new RuntimeException(
           "CHAOS: injected task failure in gradient computation")
-      calls += 1
       g(0) = m(0) - y; h(0) = 1.0f
     }
   }
 
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4,3]") // 4 threads, 3 task attempts
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-chaos")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = DevHarness.run(
+      // 4 threads, 3 task attempts
+      DevHarness.session("local[4,3]", 4, "graft-chaos", "ERROR")) { spark =>
     import spark.implicits._
 
     val rng = new scala.util.Random(97)
@@ -83,14 +76,14 @@ object ChaosCheck {
 
     if (Fault.armed.get()) {
       println("CHAOS INCONCLUSIVE: fault never fired")
-      sys.exit(2)
+      2
+    } else {
+      val v = new DevHarness.Verdicts
+      val ok = clean == chaotic
+      println(s"CHAOS ${v(ok)}: " + (if (ok) "model identical after " +
+        "injected task failure + retry"
+        else "models diverge after failure recovery"))
+      v.exitCode
     }
-    if (clean == chaotic) println("CHAOS PASS: model identical after " +
-      "injected task failure + retry")
-    else {
-      println("CHAOS FAIL: models diverge after failure recovery")
-      sys.exit(1)
-    }
-    spark.stop()
   }
 }

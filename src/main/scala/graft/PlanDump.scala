@@ -1,10 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /**
  * Dumps `.explain("formatted")` for declared queries to files — the
  * optimization rounds' plan-evidence deliverable (`plans/r<N>/...`).
  * Usage: PlanDump <outDir> [suffix] with the usual SPARK_GRAFT_* env.
+ * A query whose plan cannot be built prints `PLAN FAIL <name>` on
+ * stderr and makes the exit status 1.
  * Plans are captured WITHOUT executing the query (planning only), so
  * AQE-final shapes are not included — the committed files show the
  * static plan the optimizer chose (Exchange count, join strategy,
@@ -19,36 +20,28 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <outDir> [suffix]")
+    val env = DevHarness.env()
     val outDir = java.nio.file.Paths.get(args(0))
     val suffix = if (args.length > 1) args(1) else "before"
     java.nio.file.Files.createDirectories(outDir)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    queries.foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
-          plan.getBytes("UTF-8"))
-        println(s"dumped $name")
-      } catch {
-        case e: Throwable => System.err.println(s"PLAN FAIL $name: $e")
+    DevHarness.run(env.session("graft-plandump")) { spark =>
+      val v = new DevHarness.Verdicts
+      env.queries.foreach { case (name, fn) =>
+        try {
+          val df = fn(spark, env.sfDir)
+          val plan = df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode)
+          java.nio.file.Files.write(outDir.resolve(s"${name}_$suffix.txt"),
+            plan.getBytes("UTF-8"))
+          println(s"dumped $name")
+        } catch {
+          case e: Throwable =>
+            v(ok = false)
+            System.err.println(s"PLAN FAIL $name: $e")
+        }
+        DevHarness.dropState(spark)
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      v.exitCode
     }
-    spark.stop()
   }
 }

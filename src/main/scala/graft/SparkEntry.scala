@@ -38,62 +38,12 @@ object SparkEntry {
     s.read.schema(sch).parquet(path)
   }
 
-  /** Scratch dir for a round-trip query's intermediate write, keyed on
-    * the FULL sanitized input path plus this JVM's pid: abs(hashCode)
-    * is still negative for Int.MinValue and collides across concurrent
-    * harness processes, racing one process's overwrite against the
-    * other's read. */
-  private def scratchDir(prefix: String, dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val pid = ProcessHandle.current().pid()
-    // Round-trip scratch is written and re-read within one query and
-    // never kept — put it on tmpfs when the box has one (guide §6:
-    // scratch belongs on the fastest local medium; the sink code path
-    // under test is identical) AND it has real headroom (advisor r21:
-    // containers commonly mount a 64 MB /dev/shm, and this scratch is
-    // data-sized — an ENOSPC mid-query is strictly worse than the
-    // slower tmpdir). 1 GiB covers the harness SFs by orders of
-    // magnitude; a deployment writes round-trips to explicit durable
-    // paths, never here.
-    val shm = new java.io.File("/dev/shm")
-    val root =
-      if (shm.isDirectory && shm.getUsableSpace > (1L << 30)) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    if (prunedRoots.add(s"$root/$prefix"))
-      pruneStaleScratch(new java.io.File(root), prefix,
-        System.currentTimeMillis())
-    s"$root/${prefix}_${safe}_$pid"
-  }
-
-  /** `root/prefix` pairs this JVM has already pruned. */
-  private val prunedRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Delete DEAD runs' `prefix_*_<pid>` scratch under `root` (the Bench
-    * detail-file discipline): the pid key prevents concurrent
-    * clobbering but leaks a dir per process on tmpfs otherwise. A dir
-    * goes only when it is older than a day AND its trailing pid is no
-    * live process, so a long-running owner's scratch (re-read later by
-    * its lazy plan) is never deleted from under it. Best-effort. */
-  private[graft] def pruneStaleScratch(root: java.io.File, prefix: String,
-      nowMs: Long): Unit = {
-    def ownerAlive(name: String): Boolean =
-      name.substring(name.lastIndexOf('_') + 1).toLongOption
-        .exists(pid => ProcessHandle.of(pid).isPresent)
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete()
-    }
-    try {
-      val cutoff = nowMs - 24L * 3600 * 1000
-      val stale = root.listFiles()
-      if (stale != null) stale
-        .filter(f => f.getName.startsWith(prefix + "_") &&
-          f.lastModified() < cutoff && !ownerAlive(f.getName))
-        .foreach(rm)
-    } catch { case _: Throwable => () }
-  }
+  /** Round-trip scratch, keyed on the full sanitized input path (a
+    * hashCode collides across harness processes). Data-sized, so
+    * tmpfs needs 1 GiB of headroom, far above the harness SFs. */
+  private def scratchDir(prefix: String, dir: String): String =
+    Scratch.dir(prefix, dir.replaceAll("[^A-Za-z0-9._-]", "_"), 1L << 30)
+      .getPath
 
   /** Double-array view of a float-vector column (keeps the dot product
     * in double on both engines for oracle parity). */

@@ -194,9 +194,7 @@ object Profiler {
       // (two primitive fields) and never retained, so Spark's row reuse
       // is safe; values are identical, only the boxing is gone.
       val rdd = qdf.queryExecution.toRdd
-      val dbg = sys.env.contains("GRAFT_PROF_DEBUG")
       while (states.nonEmpty) {
-        val tPass = System.nanoTime()
         val st = states.toArray
         // Adaptive bucket budget (guide §1.2 "per-task work"): a fixed
         // 2¹⁶ grid needs 3 passes once a range exceeds 2³², which the
@@ -249,9 +247,6 @@ object Profiler {
           else rdd.treeAggregate(new Array[Long](histSize))(
             seqOp, combOp, depth = 2)
         bc.destroy()
-        if (dbg) System.err.println(
-          f"PROFQ pass open=${st.length} per=$per hist=$histSize " +
-            f"t=${(System.nanoTime() - tPass) / 1e9}%.3f s")
         states = st.zipWithIndex.flatMap { case (s, k) =>
           var rank = s.rank
           var b = -1L

@@ -8,7 +8,8 @@ import java.nio.file.Files
  * The round-trip scratch prune deletes only DEAD runs' stale dirs: a
  * dir older than a day whose trailing `_<pid>` is a live process stays
  * (its owner may still re-read it lazily), one whose pid has exited
- * goes, and fresh or foreign dirs are never touched.
+ * goes, and fresh or foreign dirs are never touched. Replay
+ * checkpoints (`graft_ck_<sink>_<pid>`) follow the same rule.
  */
 class ScratchPruneSpec extends AnyFunSuite {
 
@@ -37,7 +38,7 @@ class ScratchPruneSpec extends AnyFunSuite {
     val freshDead = mkdir(root, s"graft_csv__tmp_new_$dead", 60000L, now)
     val foreign = mkdir(root, s"graft_orc__tmp_out_$dead", 2 * day, now)
     try {
-      SparkEntry.pruneStaleScratch(root, "graft_csv", now)
+      Scratch.prune(root, "graft_csv", now)
       assert(staleLive.isDirectory, "a live owner's scratch was deleted")
       assert(!staleDead.exists(), "a dead run's stale scratch survived")
       assert(freshDead.isDirectory, "scratch younger than a day was deleted")
@@ -49,5 +50,25 @@ class ScratchPruneSpec extends AnyFunSuite {
       }
       root.delete()
     }
+  }
+
+  test("a day-old replay checkpoint of a dead pid is pruned; the same " +
+      "name with the live pid is kept") {
+    val root = Files.createTempDirectory("graft-prune-spec").toFile
+    val now = System.currentTimeMillis()
+    val dayOld = 24L * 3600 * 1000 + 60000L
+    val child = new ProcessBuilder("true").start()
+    child.waitFor()
+    assert(!ProcessHandle.of(child.pid()).isPresent)
+    val sink = "st_window_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+    val live = ProcessHandle.current().pid()
+    val kept = mkdir(root, s"graft_ck_${sink}_$live", dayOld, now)
+    val gone = mkdir(root, s"graft_ck_${sink}_${child.pid()}", dayOld, now)
+    try {
+      Scratch.prune(root, "graft_ck", now)
+      assert(kept.isDirectory, "a live replay's checkpoint was deleted")
+      assert(!gone.exists(), "a dead replay's checkpoint survived")
+    } finally Scratch.delete(root)
   }
 }

@@ -240,6 +240,30 @@ class StreamPipelineSpec extends SparkTestBase {
     assert(streamed.isEmpty, s"windows from no input: ${streamed.toSeq}")
   }
 
+  test("withReplaySink: the pid-keyed checkpoint a replay wrote is gone " +
+      "soon after the replay returns") {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[Int]
+    var ck: Seq[java.io.File] = Nil
+    val out = StreamPipeline.withReplaySink(spark, "spec_ck_", in.toDF()) {
+      q =>
+        in.addData(1, 2, 3)
+        q.processAllAvailable()
+    } { sink =>
+      ck = Option(graft.Scratch.root(256L << 20).listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(s"graft_ck_${sink}_"))
+      spark.table(sink).localCheckpoint(true)
+    }
+    assert(out.as[Int].collect().sorted.toSeq === Seq(1, 2, 3))
+    val pid = ProcessHandle.current().pid()
+    assert(ck.size == 1 && ck.head.getName.endsWith(s"_$pid"),
+      s"expected one checkpoint keyed on this pid, found $ck")
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (ck.head.exists() && System.nanoTime() < deadline)
+      Thread.sleep(50)
+    assert(!ck.head.exists(), s"${ck.head} outlived its replay by 30 s")
+  }
+
   test("replayNearDup: distinct streamed pairs equal the batch simhash " +
       "pair set on real documents") {
     val docs = spark.read

@@ -9,6 +9,10 @@
 #   tools/precommit-check.sh --bench  # additionally run one short
 #                                     # boost_wide benchmark pass and
 #                                     # require its outputs correct
+#   tools/precommit-check.sh --dev    # additionally run the ChaosCheck
+#                                     # and SkewCheck goldens and one
+#                                     # PlanDump at sf0.001; each must
+#                                     # exit 0
 #
 # Exit 0 = safe to commit/snapshot. Anything else: fix or `git stash`
 # the in-flight hunk before snapshotting.
@@ -57,4 +61,26 @@ if [[ "${1:-}" == "--bench" ]]; then
     exit 1
   fi
   echo "[precommit] benchmark outputs correct."
+fi
+
+if [[ "${1:-}" == "--dev" ]]; then
+  plans="$(mktemp -d)"
+  trap 'rm -rf "$plans"' EXIT
+  dev_step() {
+    local name="$1"; shift
+    echo "[precommit] $name ..."
+    if ! "$@" >/tmp/precommit-dev.log 2>&1; then
+      echo "[precommit] $name FAILED:"
+      grep -E "CHAOS|SKEW|PLAN FAIL|Exception|\[error\] \(" \
+        /tmp/precommit-dev.log | head -20
+      exit 1
+    fi
+    grep -E "^(CHAOS|SKEW|dumped) " /tmp/precommit-dev.log || true
+  }
+  dev_step ChaosCheck sbt -batch "runMain graft.ChaosCheck"
+  dev_step "SkewCheck lines" sbt -batch "runMain graft.SkewCheck lines 20000"
+  dev_step PlanDump env SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
+    SPARK_GRAFT_ONLY=s1_csv_roundtrip \
+    sbt -batch "runMain graft.PlanDump $plans"
+  echo "[precommit] dev goldens green."
 fi
