@@ -18,10 +18,13 @@ import scala.collection.mutable.ArrayBuffer
  * is K× smaller, at the price of shared split structure.
  *
  * Scale shape: identical to [[Trainer]] — per level, ONE
- * treeAggregate of per-partition histograms over cached binned
- * blocks; the histogram is 2K doubles per (node, feature, bin), so
- * the allreduce volume grows K× but the DATA passes do not. No
- * shuffle of rows, ever; margins advance block-locally.
+ * histogram aggregate ([[Trainer.aggregateHist]]) of per-partition
+ * histograms over cached binned blocks; the histogram is 2K doubles
+ * per (node, feature, bin), so the allreduce volume grows K× but the
+ * DATA passes do not. No shuffle of rows, ever; margins advance
+ * block-locally. Rows move down a tree only through the one
+ * [[RegTree]] binned walk: the level router walks a [[RegTree]] view
+ * of the growing tree, the margin advance [[MoTree.leafOf]].
  *
  * Formula parity with [[Trainer]] (pinned by the closed-form
  * `ml_stump_multiout` oracle): per target j, leaf_j =
@@ -99,20 +102,15 @@ object MultiOutput {
         left, right, v, gain, cover)
     }
 
-    /** Leaf node id for a binned row (the margin-advance router —
-      * same bin semantics as [[Trainer]]'s PartialTree route). */
-    def leafOf(rb: Array[Byte], off: Int): Int = {
-      var nid = 0
-      while (feature(nid) >= 0) {
-        val b = rb(off + feature(nid)) & 0xFF
-        nid =
-          if (b == MissingBin) {
-            if (defaultLeft(nid)) left(nid) else right(nid)
-          } else if (b <= thresholdBin(nid)) left(nid)
-          else right(nid)
-      }
-      nid
-    }
+    /** The split structure every [[slice]] shares, as a [[RegTree]]. */
+    private val shape = new RegTree(feature, thresholdBin, threshold,
+      defaultLeft, left, right, Array.emptyFloatArray)
+
+    /** Leaf node id for a binned row (the margin-advance router): the
+      * one binned walk, [[RegTree.leafBinned]], over the shared
+      * structure. */
+    def leafOf(rb: Array[Byte], off: Int): Int =
+      shape.leafBinned(rb, off, MissingBin)
   }
 
   /**
@@ -145,22 +143,10 @@ object MultiOutput {
   private def score(g: Double, h: Double, p: TrainParams): Double =
     Trainer.score(g, h, p)
 
-  /** Broadcastable in-progress tree (structure only). */
-  private final case class MoPartial(feature: Array[Int],
-      thresholdBin: Array[Int], defaultLeft: Array[Boolean],
-      left: Array[Int], right: Array[Int], slotOf: Array[Int])
-
-  private def route(pt: MoPartial, rb: Array[Byte], off: Int): Int = {
-    var nid = 0
-    while (pt.feature(nid) >= 0) {
-      val b = rb(off + pt.feature(nid)) & 0xFF
-      nid =
-        if (b == MissingBin) {
-          if (pt.defaultLeft(nid)) pt.left(nid) else pt.right(nid)
-        } else if (b <= pt.thresholdBin(nid)) pt.left(nid)
-        else pt.right(nid)
-    }
-    nid
+  /** The best vector split of one node so far (`f` = −1: none). */
+  private final class BestSplit {
+    var gain = 0.0; var f = -1; var bin = -1; var defLeft = false
+    var gL: Array[Double] = null; var hL: Array[Double] = null
   }
 
   /** Param-only validation — callable BEFORE any data scan, so an
@@ -186,6 +172,9 @@ object MultiOutput {
     no(p.monotoneConstraints.forall(_ == 0), "monotone_constraints")
     no(p.interactionConstraints.isEmpty, "interaction_constraints")
     no(p.quantileAlphas.isEmpty, "vector quantile_alpha")
+    no(p.scalePosWeight == 1.0 || !obj.name.startsWith("binary:"),
+      "scale_pos_weight")
+    no(p.etaSchedule.isEmpty, "eta_schedule")
     require(p.maxDepth >= 1,
       s"multi_output_tree: maxDepth must be >= 1, got ${p.maxDepth}")
   }
@@ -337,20 +326,22 @@ object MultiOutput {
       frontier.grouped(chunkSize).foreach { chunk =>
         val slotOf = Array.fill(feature.length)(-1)
         chunk.zipWithIndex.foreach { case (nid, s) => slotOf(nid) = s }
-        val bc = sc.broadcast(MoPartial(feature.toArray,
-          thresholdBin.toArray, defaultLeft.toArray, left.toArray,
-          right.toArray, slotOf))
+        // routing view of the tree grown so far: pending nodes keep
+        // feature −2, so the binned walk stops at them
+        val bc = sc.broadcast((new RegTree(feature.toArray,
+          thresholdBin.toArray, threshold.toArray, defaultLeft.toArray,
+          left.toArray, right.toArray, Array.emptyFloatArray), slotOf))
         val histSize = chunk.length * nf * b * 2 * k
-        // buffer allocated in the task (see Trainer.mergeHist)
+        // buffer allocated in the task (see Trainer.aggregateHist)
         val seqOp = (acc0: Array[Double], blk: GradBlock) => {
           val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
-          val pt = bc.value
+          val (pt, slots) = bc.value
           val rb = blk.bins
           val gh = blk.gh
           var i = 0
           while (i < blk.n) {
             val off = i * nf
-            val slot = pt.slotOf(route(pt, rb, off))
+            val slot = slots(pt.leafBinned(rb, off, MissingBin))
             if (slot >= 0) {
               var f = 0
               while (f < nf) {
@@ -370,13 +361,7 @@ object MultiOutput {
           }
           acc
         }
-        val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
-        val merged =
-          if (mergeBytes < (64L << 20))
-            grads.aggregate(null: Array[Double])(seqOp, Trainer.mergeHist)
-          else grads.treeAggregate(null: Array[Double])(
-            seqOp, Trainer.mergeHist, depth = 2)
-        val hist = if (merged != null) merged else new Array[Double](histSize)
+        val hist = Trainer.aggregateHist(grads, histSize)(seqOp)
         bc.destroy()
 
         chunk.zipWithIndex.foreach { case (nid, s) =>
@@ -397,98 +382,91 @@ object MultiOutput {
             sumG(nid) = g; sumH(nid) = h
           }
           val gT = sumG(nid); val hT = sumH(nid)
-          var parentScore = 0.0
-          var hTot = 0.0
-          var j = 0
-          while (j < k) {
-            parentScore += score(gT(j), hT(j), p); hTot += hT(j)
-            j += 1
+          val (parentScore, hMean) = {
+            var ps = 0.0; var hTot = 0.0
+            var j = 0
+            while (j < k) {
+              ps += score(gT(j), hT(j), p); hTot += hT(j); j += 1
+            }
+            (ps, hTot / k)
           }
-          val hMean = hTot / k
-
-          var bestGain = 0.0
-          var bestF = -1; var bestBin = -1; var bestDefLeft = false
-          var bestGL: Array[Double] = null
-          var bestHL: Array[Double] = null
-
+          val best = new BestSplit
           val gl = new Array[Double](k)
           val hl = new Array[Double](k)
           val glA = new Array[Double](k)
           val hlA = new Array[Double](k)
+          // the one candidate test, vector form: left child (gL, hL) per
+          // target, the missing bin on the `defLeft` side
+          def consider(f: Int, bin: Int, gL: Array[Double],
+              hL: Array[Double], defLeft: Boolean): Unit = {
+            var hlSum = 0.0
+            var jj = 0
+            while (jj < k) { hlSum += hL(jj); jj += 1 }
+            if (hlSum / k >= p.minChildWeight &&
+                hMean - hlSum / k >= p.minChildWeight) {
+              var sL = 0.0; var sR = 0.0
+              jj = 0
+              while (jj < k) {
+                sL += score(gL(jj), hL(jj), p)
+                sR += score(gT(jj) - gL(jj), hT(jj) - hL(jj), p)
+                jj += 1
+              }
+              val gain = 0.5 * (sL + sR - parentScore) - p.gamma
+              if (gain > best.gain + 1e-12) {
+                best.gain = gain; best.f = f; best.bin = bin
+                best.defLeft = defLeft
+                best.gL = gL.clone(); best.hL = hL.clone()
+              }
+            }
+          }
+          // left child (gl, hl) without the missing bin at `miss`: the
+          // missing bin rides left, then right
+          def offer(f: Int, bin: Int, miss: Int): Unit = {
+            var jj = 0
+            while (jj < k) {
+              glA(jj) = gl(jj) + hist(miss + 2 * jj)
+              hlA(jj) = hl(jj) + hist(miss + 2 * jj + 1)
+              jj += 1
+            }
+            consider(f, bin, glA, hlA, defLeft = true)
+            consider(f, bin, gl, hl, defLeft = false)
+          }
           var f = 0
           while (f < nf) {
             val base = ((s * nf + f) * b) * 2 * k
-            val missBase = base + (b - 1) * 2 * k
             java.util.Arrays.fill(gl, 0.0)
             java.util.Arrays.fill(hl, 0.0)
             val nb = bins.numBins(f)
             var bi = 0
             while (bi < nb - 1) {
-              var hlSum = 0.0; var hlASum = 0.0
               var jj = 0
               while (jj < k) {
                 gl(jj) += hist(base + bi * 2 * k + 2 * jj)
                 hl(jj) += hist(base + bi * 2 * k + 2 * jj + 1)
-                glA(jj) = gl(jj) + hist(missBase + 2 * jj)
-                hlA(jj) = hl(jj) + hist(missBase + 2 * jj + 1)
-                hlSum += hl(jj); hlASum += hlA(jj)
                 jj += 1
               }
-              // missing → left
-              if (hlASum / k >= p.minChildWeight &&
-                  hMean - hlASum / k >= p.minChildWeight) {
-                var sL = 0.0; var sR = 0.0
-                jj = 0
-                while (jj < k) {
-                  sL += score(glA(jj), hlA(jj), p)
-                  sR += score(gT(jj) - glA(jj), hT(jj) - hlA(jj), p)
-                  jj += 1
-                }
-                val gain = 0.5 * (sL + sR - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = true
-                  bestGL = glA.clone(); bestHL = hlA.clone()
-                }
-              }
-              // missing → right
-              if (hlSum / k >= p.minChildWeight &&
-                  hMean - hlSum / k >= p.minChildWeight) {
-                var sL = 0.0; var sR = 0.0
-                jj = 0
-                while (jj < k) {
-                  sL += score(gl(jj), hl(jj), p)
-                  sR += score(gT(jj) - gl(jj), hT(jj) - hl(jj), p)
-                  jj += 1
-                }
-                val gain = 0.5 * (sL + sR - parentScore) - p.gamma
-                if (gain > bestGain + 1e-12) {
-                  bestGain = gain; bestF = f; bestBin = bi
-                  bestDefLeft = false
-                  bestGL = gl.clone(); bestHL = hl.clone()
-                }
-              }
+              offer(f, bi, base + (b - 1) * 2 * k)
               bi += 1
             }
             f += 1
           }
 
-          if (bestF >= 0) {
+          if (best.f >= 0) {
             val gR = new Array[Double](k); val hR = new Array[Double](k)
             var jj = 0
             while (jj < k) {
-              gR(jj) = gT(jj) - bestGL(jj)
-              hR(jj) = hT(jj) - bestHL(jj)
+              gR(jj) = gT(jj) - best.gL(jj)
+              hR(jj) = hT(jj) - best.hL(jj)
               jj += 1
             }
-            val l = newNode(bestGL, bestHL)
+            val l = newNode(best.gL, best.hL)
             val r = newNode(gR, hR)
-            feature(nid) = bestF
-            thresholdBin(nid) = bestBin
-            threshold(nid) = bins.cuts(bestF)(bestBin)
-            defaultLeft(nid) = bestDefLeft
+            feature(nid) = best.f
+            thresholdBin(nid) = best.bin
+            threshold(nid) = bins.cuts(best.f)(best.bin)
+            defaultLeft(nid) = best.defLeft
             left(nid) = l; right(nid) = r
-            gainArr(nid) = bestGain
+            gainArr(nid) = best.gain
             next += l; next += r
           } else feature(nid) = -1 // no admissible split: leaf
         }

@@ -290,30 +290,34 @@ final case class TrainResult(
  *    subtraction residue.
  *  - driver work is O(nodes × features × bins) per level — independent
  *    of row count; executors never see the model except via broadcast.
+ *  - one tree walk: rows move down a tree only through
+ *    [[RegTree.nextBinned]]. The level router walks a [[RegTree]]
+ *    snapshot of each growing tree (a pending node stops the walk);
+ *    the leaf refresh, `process_type=update` and the margin advance
+ *    walk finished trees. Split finding has one candidate test
+ *    (`findSplit`'s `consider`).
  */
 object Trainer {
 
   private val MissingBin = Binner.MissingBin
 
-  /** Snapshot of one partially-built tree, broadcast per level chunk. */
-  private final case class PartialTree(
-      feature: Array[Int],        // -1 leaf, -2 pending (active frontier)
-      thresholdBin: Array[Int],
-      catSplit: Array[Boolean],   // categorical node marker
-      catBits: Array[Array[Long]], // partition node bitmap (null=one-hot)
-      defaultLeft: Array[Boolean],
-      left: Array[Int],
-      right: Array[Int],
-      slotOf: Array[Int])         // nodeId → global histogram slot or -1
-
   /** An evaluated node's histogram, kept on the driver for deriving a
     * child: (G, H) per (feature of `feats`, bin), the missing bin last. */
   private final class NodeHist(val feats: Array[Int], val h: Array[Double])
 
+  /** The best split of one node found so far (`f` = −1: none). For an
+    * optimal-partition split `codes` holds the feature's categories in
+    * scan order and `bin` the last index of the left prefix. */
+  private final class BestSplit {
+    var gain = 0.0; var f = -1; var bin = -1
+    var codes: Array[Int] = null
+    var defLeft = false; var gL = 0.0; var hL = 0.0
+  }
+
   /** combOp of the histogram aggregates: element-wise sum into `a`.
     * `null` is the zero — the buffer is allocated in the task on first
     * use, so a partition without rows returns none. */
-  private[learner] def mergeHist(a: Array[Double],
+  private def mergeHist(a: Array[Double],
       c: Array[Double]): Array[Double] =
     if (a == null) c
     else if (c == null) a
@@ -326,45 +330,26 @@ object Trainer {
   /** One level chunk covering (tree, node) pairs across ALL trees of a
     * round — the unit of a single fused histogram job. */
   private final case class LevelChunk(
-      trees: Array[PartialTree],  // per round-tree; null = no work here
+      trees: Array[RegTree],      // per round-tree; null = no work here
+      slotOf: Array[Array[Int]],  // per round-tree: node → slot or -1
       treeCls: Array[Int],        // tree → output class (gh index)
       treeSalts: Array[Int],      // tree → subsample salt
       featLists: Array[Array[Int]]) // global slot → sampled feature ids
 
-  /** Route the binned row at byte offset `off` through a FINISHED
-    * tree; returns the leaf's slot from the given node→slot map
-    * (leaf-refresh traversal). */
-  private def routeSlot(t: RegTree, slots: Array[Int],
-      bins: Array[Byte], off: Int): Int = {
-    var i = 0
-    while (t.feature(i) >= 0) {
-      val b = bins(off + t.feature(i)) & 0xFF
-      i = if (b == MissingBin) {
-        if (t.defaultLeft(i)) t.left(i) else t.right(i)
-      } else if (if (t.isPartitionNode(i))
-          ((t.catBits(i)(b >> 6) >>> (b & 63)) & 1L) == 1L
-        else if (t.isCatNode(i)) b == t.thresholdBin(i)
-        else b <= t.thresholdBin(i)) t.left(i)
-      else t.right(i)
-    }
-    slots(i)
-  }
-
-  /** Traverse the partial tree for the binned row at byte offset
-    * `off`; returns nodeId (pending or leaf). */
-  private def route(pt: PartialTree, bins: Array[Byte], off: Int): Int = {
-    var i = 0
-    while (pt.feature(i) >= 0) {
-      val b = bins(off + pt.feature(i)) & 0xFF
-      i = if (b == MissingBin) { if (pt.defaultLeft(i)) pt.left(i) else pt.right(i) }
-      else if (if (pt.catSplit(i)) {
-          val bits = pt.catBits(i)
-          if (bits != null) ((bits(b >> 6) >>> (b & 63)) & 1L) == 1L
-          else b == pt.thresholdBin(i)
-        } else b <= pt.thresholdBin(i)) pt.left(i)
-      else pt.right(i)
-    }
-    i
+  /** Sum per-partition histograms of `histSize` doubles built by
+    * `seqOp`. A small total merge volume takes a single-stage aggregate
+    * (the driver merges the partials); a big one a depth-2 tree merge,
+    * so the driver never receives numPartitions × histogram at once —
+    * the extra stage is pure latency when histograms are KBs. */
+  private[learner] def aggregateHist(grads: RDD[GradBlock], histSize: Int)(
+      seqOp: (Array[Double], GradBlock) => Array[Double]): Array[Double] = {
+    val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
+    val merged =
+      if (mergeBytes < (64L << 20))
+        grads.aggregate(null: Array[Double])(seqOp, mergeHist)
+      else grads.treeAggregate(null: Array[Double])(
+        seqOp, mergeHist, depth = 2)
+    if (merged != null) merged else new Array[Double](histSize)
   }
 
   // ---- growable node storage while building one tree ----
@@ -422,13 +407,18 @@ object Trainer {
             clamp(leafWeight(sumG(i), sumH(i), p), i).toFloat
         i += 1
       }
+      snapshot()
+    }
+
+    /** The tree as grown so far; pending nodes keep feature −2, so a
+      * binned walk stops at the pending node a row reaches. */
+    def snapshot(): RegTree =
       new RegTree(feature.toArray, thresholdBin.toArray,
         threshold.toArray, defaultLeft.toArray, left.toArray,
         right.toArray, value.toArray, gain.toArray.map(_.toFloat),
         sumH.toArray.map(_.toFloat), // cover = hessian sum through node
         if (catSplit.contains(true)) catSplit.toArray else Array.empty,
         if (catBits.exists(_ != null)) catBits.toArray else Array.empty)
-    }
   }
 
   /** xgboost leaf weight with L1/L2 regularization and shrinkage;
@@ -731,10 +721,7 @@ object Trainer {
       }
       val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
       val parentScore = score(gTot, hTot, p)
-      var bestGain = 0.0
-      var bestF = -1; var bestBin = -1; var bestDefLeft = false
-      var bestGL = 0.0; var bestHL = 0.0; var bestCat = false
-      var bestCatSet: Array[Int] = null
+      val best = new BestSplit
       val mc = p.monotoneConstraints
       // a candidate split on a constrained feature must order its
       // child weights in the constraint's direction
@@ -747,6 +734,25 @@ object Trainer {
           if (c > 0) wl <= wr else wl >= wr
         }
       }
+      // the one candidate test: left child (gL, hL), the missing bin on
+      // the `defLeft` side
+      def consider(f: Int, bin: Int, codes: Array[Int], gL: Double,
+          hL: Double, defLeft: Boolean): Unit =
+        if (hL >= p.minChildWeight && hTot - hL >= p.minChildWeight) {
+          val gain = 0.5 * (score(gL, hL, p) +
+            score(gTot - gL, hTot - hL, p) - parentScore) - p.gamma
+          if (gain > best.gain + 1e-12 && monotoneOk(f, gL, hL)) {
+            best.gain = gain; best.f = f; best.bin = bin; best.codes = codes
+            best.defLeft = defLeft; best.gL = gL; best.hL = hL
+          }
+        }
+      // left child (gl, hl) without the missing bin: missing rides
+      // left, then right
+      def offer(f: Int, bin: Int, codes: Array[Int], gl: Double,
+          hl: Double, gMiss: Double, hMiss: Double): Unit = {
+        consider(f, bin, codes, gl + gMiss, hl + hMiss, defLeft = true)
+        consider(f, bin, codes, gl, hl, defLeft = false)
+      }
       var j = 0
       while (j < fl.length) {
         val f = fl(j)
@@ -756,36 +762,12 @@ object Trainer {
         val nb = bins.numBins(f)
         if (bins.isCat(f) && nb < p.maxCatToOnehot) {
           // one-hot categorical candidates: left = {code c}
-          // (matrix.py:142,159,800 enable_categorical), missing
-          // riding left or right like the numeric scan. Same
-          // O(bins) cost — gl/hl read one bin instead of a prefix.
+          // (matrix.py:142,159,800 enable_categorical). Same O(bins)
+          // cost as the numeric scan — gl/hl read one bin, not a prefix.
           var c = 0
           while (c < nb) {
-            val gl = hist(base + c * 2)
-            val hl = hist(base + c * 2 + 1)
-            // missing → left
-            val glA = gl + gMiss; val hlA = hl + hMiss
-            if (hlA >= p.minChildWeight &&
-                hTot - hlA >= p.minChildWeight) {
-              val gain = 0.5 * (score(glA, hlA, p) +
-                score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
-              if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-                bestGain = gain; bestF = f; bestBin = c; bestCat = true
-                bestDefLeft = true; bestGL = glA; bestHL = hlA
-                bestCatSet = null
-              }
-            }
-            // missing → right
-            if (hl >= p.minChildWeight &&
-                hTot - hl >= p.minChildWeight) {
-              val gain = 0.5 * (score(gl, hl, p) +
-                score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
-              if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                bestGain = gain; bestF = f; bestBin = c; bestCat = true
-                bestDefLeft = false; bestGL = gl; bestHL = hl
-                bestCatSet = null
-              }
-            }
+            offer(f, c, null, hist(base + c * 2), hist(base + c * 2 + 1),
+              gMiss, hMiss)
             c += 1
           }
         } else if (bins.isCat(f)) {
@@ -793,11 +775,10 @@ object Trainer {
           // overflow): categories present at this node sorted by
           // gradient ratio G_c/H_c (Fisher's exact grouping for
           // second-order losses), then a prefix scan identical in
-          // shape to the numeric one — candidate left set = first
-          // j sorted categories, missing rides left or right.
-          // Deterministic: ties sort by code. Codes absent here
-          // (empty bins) join NEITHER side and route right at
-          // inference, like unseen categories.
+          // shape to the numeric one — candidate left set = the first
+          // ci+1 sorted categories. Deterministic: ties sort by code.
+          // Codes absent here (empty bins) join NEITHER side and route
+          // right at inference, like unseen categories.
           val codes = (0 until nb).filter { c =>
             hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
           }.toArray
@@ -812,72 +793,27 @@ object Trainer {
             while (ci < sorted.length - 1) {
               val c = sorted(ci)
               gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
-              // missing → left
-              val glA = gl + gMiss; val hlA = hl + hMiss
-              if (hlA >= p.minChildWeight &&
-                  hTot - hlA >= p.minChildWeight) {
-                val gain = 0.5 * (score(glA, hlA, p) +
-                  score(gTot - glA, hTot - hlA, p) - parentScore) -
-                  p.gamma
-                if (gain > bestGain + 1e-12 &&
-                    monotoneOk(f, glA, hlA)) {
-                  bestGain = gain; bestF = f; bestBin = -1
-                  bestCat = true; bestDefLeft = true
-                  bestGL = glA; bestHL = hlA
-                  bestCatSet = sorted.take(ci + 1).sorted
-                }
-              }
-              // missing → right
-              if (hl >= p.minChildWeight &&
-                  hTot - hl >= p.minChildWeight) {
-                val gain = 0.5 * (score(gl, hl, p) +
-                  score(gTot - gl, hTot - hl, p) - parentScore) -
-                  p.gamma
-                if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-                  bestGain = gain; bestF = f; bestBin = -1
-                  bestCat = true; bestDefLeft = false
-                  bestGL = gl; bestHL = hl
-                  bestCatSet = sorted.take(ci + 1).sorted
-                }
-              }
+              offer(f, ci, sorted, gl, hl, gMiss, hMiss)
               ci += 1
             }
           }
         } else {
-        var gl = 0.0; var hl = 0.0
-        var bi = 0
-        while (bi < nb - 1) {
-          gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
-          // missing → left
-          val glA = gl + gMiss; val hlA = hl + hMiss
-          if (hlA >= p.minChildWeight &&
-              hTot - hlA >= p.minChildWeight) {
-            val gain = 0.5 * (score(glA, hlA, p) +
-              score(gTot - glA, hTot - hlA, p) - parentScore) - p.gamma
-            if (gain > bestGain + 1e-12 && monotoneOk(f, glA, hlA)) {
-              bestGain = gain; bestF = f; bestBin = bi
-              bestDefLeft = true; bestGL = glA; bestHL = hlA
-              bestCat = false; bestCatSet = null
-            }
+          var gl = 0.0; var hl = 0.0
+          var bi = 0
+          while (bi < nb - 1) {
+            gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
+            offer(f, bi, null, gl, hl, gMiss, hMiss)
+            bi += 1
           }
-          // missing → right
-          if (hl >= p.minChildWeight && hTot - hl >= p.minChildWeight) {
-            val gain = 0.5 * (score(gl, hl, p) +
-              score(gTot - gl, hTot - hl, p) - parentScore) - p.gamma
-            if (gain > bestGain + 1e-12 && monotoneOk(f, gl, hl)) {
-              bestGain = gain; bestF = f; bestBin = bi
-              bestDefLeft = false; bestGL = gl; bestHL = hl
-              bestCat = false; bestCatSet = null
-            }
-          }
-          bi += 1
-        }
         }
         j += 1
       }
-      if (bestF < 0) null
-      else SplitDesc(bestGain, bestF, bestBin, bestCat, bestDefLeft,
-        bestGL, bestHL, bestCatSet)
+      if (best.f < 0) null
+      else if (best.codes == null)
+        SplitDesc(best.gain, best.f, best.bin, bins.isCat(best.f),
+          best.defLeft, best.gL, best.hL)
+      else SplitDesc(best.gain, best.f, -1, cat = true, best.defLeft,
+        best.gL, best.hL, best.codes.take(best.bin + 1).sorted)
     }
 
     /** Evaluate a batch of frontier nodes — (tree, nid, sampled feats) —
@@ -941,16 +877,11 @@ object Trainer {
           slotOf(work(i)._1)(work(i)._2) = s
         }
         val chunkTrees = states.indices.map { t =>
-          if (chunk.exists(work(_)._1 == t)) {
-            val tb = states(t).tb
-            PartialTree(tb.feature.toArray, tb.thresholdBin.toArray,
-              tb.catSplit.toArray, tb.catBits.toArray,
-              tb.defaultLeft.toArray, tb.left.toArray, tb.right.toArray,
-              slotOf(t))
-          } else null
+          if (chunk.exists(work(_)._1 == t)) states(t).tb.snapshot()
+          else null
         }.toArray
-        val bc = sc.broadcast(LevelChunk(chunkTrees, treeCls, treeSalts,
-          chunk.map(work(_)._3).toArray))
+        val bc = sc.broadcast(LevelChunk(chunkTrees, slotOf, treeCls,
+          treeSalts, chunk.map(work(_)._3).toArray))
         val histSize = chunk.length * fPerNode * b * 2
         // the buffer is allocated in the task on first use: a zero value
         // would ride every task binary
@@ -971,8 +902,9 @@ object Trainer {
               if (pt != null) {
                 val keep = subsampleCut == Int.MaxValue ||
                   mixInt(salt, ch.treeSalts(t)) < subsampleCut
-                val node = if (keep) route(pt, rb, off) else -1
-                val slot = if (node >= 0) pt.slotOf(node) else -1
+                val slot =
+                  if (keep) ch.slotOf(t)(pt.leafBinned(rb, off, MissingBin))
+                  else -1
                 if (slot >= 0) {
                   val cls = ch.treeCls(t)
                   val g = gh(i * 2 * k2 + 2 * cls)
@@ -994,17 +926,7 @@ object Trainer {
           }
           acc
         }
-        // small total merge volume → single-stage aggregate (driver
-        // merges the partials); big volume → tree merge so the driver
-        // never receives numPartitions × histogram at once. The extra
-        // treeAggregate stage is pure latency when histograms are KBs.
-        val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
-        val merged =
-          if (mergeBytes < (64L << 20))
-            grads.aggregate(null: Array[Double])(seqOp, mergeHist)
-          else grads.treeAggregate(null: Array[Double])(
-            seqOp, mergeHist, depth = 2)
-        val hist = if (merged != null) merged else new Array[Double](histSize)
+        val hist = aggregateHist(grads, histSize)(seqOp)
         bc.destroy()
 
         // driver-side split finding per built node, then per sibling
@@ -1069,9 +991,7 @@ object Trainer {
       // upper cut, as before
       tb.catSplit(nid) = d.cat
       if (d.catSet != null) {
-        val bits = new Array[Long](4)
-        d.catSet.foreach(c => bits(c >> 6) |= 1L << (c & 63))
-        tb.catBits(nid) = bits
+        tb.catBits(nid) = RegTree.catBitmap(d.catSet)
         tb.threshold(nid) = -1f
       } else {
         tb.threshold(nid) =
@@ -1330,7 +1250,7 @@ object Trainer {
             // multi-quantile (one tree per α) slot t%k trees see m(cls)
             val r: Double =
               (blk.labels(i) - blk.margins(i * kb + treeCls(t))).toDouble
-            val slot = routeSlot(ts(t), ls(t), blk.bins, off)
+            val slot = ls(t)(ts(t).leafBinned(blk.bins, off, MissingBin))
             acc(slot * 3) += w
             if (r < acc(slot * 3 + 1)) acc(slot * 3 + 1) = r
             if (r > acc(slot * 3 + 2)) acc(slot * 3 + 2) = r
@@ -1411,7 +1331,7 @@ object Trainer {
             while (t < ts.length) {
               val r: Double =
                 (blk.labels(i) - blk.margins(i * kb + treeCls(t))).toDouble
-              val slot = routeSlot(ts(t), ls(t), blk.bins, off)
+              val slot = ls(t)(ts(t).leafBinned(blk.bins, off, MissingBin))
               val pi = pos(slot)
               if (pi >= 0 && r > bcLo.value(pi) && r <= bcHi.value(pi)) {
                 val e = bcEdges.value(pi)
@@ -1613,7 +1533,7 @@ object Trainer {
       // init model in via BINNED traversal, which would misroute — an
       // imported model is inference-only. Optimal-partition categorical
       // nodes ALSO store thresholdBin = -1 but route via catBits over
-      // bin codes (routeSlot above), so they are resumable and exempt.
+      // bin codes (the same binned walk), so they are resumable and exempt.
       require(m.trees.forall(t => (0 until t.numNodes)
           .forall(i => t.feature(i) < 0 || t.isPartitionNode(i) ||
             t.thresholdBin(i) >= 0)),
@@ -1623,10 +1543,10 @@ object Trainer {
           "parquet-saved graft model")
     }
     initModel.filter(_.trees.nonEmpty).filter(_ => !dart).foreach { m =>
-      val bcInit = data.sparkContext.broadcast(m.trees)
+      val bcInit = data.sparkContext.broadcast(byClass(m.trees, k))
       broadcasts += bcInit
       val base = data
-      val upd = applyTrees(base, bcInit, k)
+      val upd = applyTrees(base, bcInit)
         .persist(p.storageLevel)
       upd.foreachPartition(_ => ())
       evalData = evalData.map { case (n, r) =>
@@ -1635,7 +1555,7 @@ object Trainer {
         // unpersisted base through a duplicate chain
         if (r eq base) (n, upd)
         else {
-          val u = applyTrees(r, bcInit, k)
+          val u = applyTrees(r, bcInit)
             .persist(p.storageLevel)
           u.foreachPartition(_ => ())
           release(r)
@@ -1752,7 +1672,7 @@ object Trainer {
                                  // the init margins — no copy needed
           else {
             dartBcKept = sc.broadcast(kept.map(i => (i % k, trees(i))))
-            val rd = addTreePreds(data, dartBcKept)
+            val rd = applyTrees(data, dartBcKept)
               .persist(p.storageLevel)
             dartRoundData = rd
             rd.foreachPartition(_ => ())
@@ -1797,9 +1717,9 @@ object Trainer {
       if (!dart) {
         trees ++= roundTrees
 
-        val bcTrees = data.sparkContext.broadcast(roundTrees)
+        val bcTrees = data.sparkContext.broadcast(byClass(roundTrees, k))
         broadcasts += bcTrees
-        val newData = applyTrees(data, bcTrees, k)
+        val newData = applyTrees(data, bcTrees)
           .persist(p.storageLevel)
         if ((round + 1) % 50 == 0) {
           newData.localCheckpoint()
@@ -1819,7 +1739,7 @@ object Trainer {
           // full lineage recompute of the training data at round+1).
           if (prevData.exists(_ eq r)) (n, data)
           else {
-            val updated = applyTrees(r, bcTrees, k)
+            val updated = applyTrees(r, bcTrees)
               .persist(p.storageLevel)
             if ((round + 1) % 50 == 0) updated.localCheckpoint()
             updated.foreachPartition(_ => ())
@@ -1870,10 +1790,9 @@ object Trainer {
       val evalView =
         if (!dart || trees.isEmpty || evalData.isEmpty) evalData
         else {
-          dartBcAll = sc.broadcast(
-            Array.tabulate(trees.length)(i => (i % k, trees(i))))
+          dartBcAll = sc.broadcast(byClass(trees.toArray, k))
           val v = evalData.map { case (n, r) =>
-            (n, addTreePreds(r, dartBcAll)
+            (n, applyTrees(r, dartBcAll)
               .persist(p.storageLevel))
           }
           dartEvalView = v.map(_._2)
@@ -2007,42 +1926,19 @@ object Trainer {
       bestScore = if (p.earlyStoppingRounds > 0) bestScore else Double.NaN)
   }
 
-  /** Add each tree's contribution to the carried margins (class =
-    * t % k). Emits a new margin generation per block; the static
-    * columns (bins/labels/weights/qids/uppers) are shared by reference
-    * with the input block ([[TrainBlock.withMargins]]). */
+  /** Add each (class, tree) pair's leaf value to the carried margin of
+    * its class. gbtree passes [[byClass]] pairs; DART passes a kept
+    * subset with gaps, whose trees still reach their original class
+    * slots. Emits a new margin generation per block; the static columns
+    * (bins/labels/weights/qids/uppers) are shared by reference with the
+    * input block ([[TrainBlock.withMargins]]). */
   private def applyTrees(
-      rdd: RDD[TrainBlock],
-      bcTrees: org.apache.spark.broadcast.Broadcast[Array[RegTree]],
-      k: Int): RDD[TrainBlock] =
-    rdd.mapPartitions({ it =>
-      val ts = bcTrees.value
-      it.map { b =>
-        val m2 = b.margins.clone()
-        val nf = b.nf
-        var i = 0
-        while (i < b.n) {
-          val off = i * nf
-          var t = 0
-          while (t < ts.length) {
-            m2(i * k + t % k) += ts(t).predictBinned(b.bins, off, MissingBin)
-            t += 1
-          }
-          i += 1
-        }
-        b.withMargins(m2)
-      }
-    }, preservesPartitioning = true)
-
-  /** DART variant of [[applyTrees]]: each pair is (classIdx, tree), so a
-    * kept-subset of the ensemble (with gaps) still routes every tree to
-    * its original class slot — `t % k` over a filtered array would not. */
-  private def addTreePreds(
       rdd: RDD[TrainBlock],
       bcTrees: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]])
       : RDD[TrainBlock] =
     rdd.mapPartitions({ it =>
-      val ts = bcTrees.value
+      val cls = bcTrees.value.map(_._1)
+      val ts = bcTrees.value.map(_._2)
       it.map { b =>
         val m2 = b.margins.clone()
         val nf = b.nf; val k = b.k
@@ -2051,8 +1947,7 @@ object Trainer {
           val off = i * nf
           var t = 0
           while (t < ts.length) {
-            m2(i * k + ts(t)._1) +=
-              ts(t)._2.predictBinned(b.bins, off, MissingBin)
+            m2(i * k + cls(t)) += ts(t).predictBinned(b.bins, off, MissingBin)
             t += 1
           }
           i += 1
@@ -2060,6 +1955,10 @@ object Trainer {
         b.withMargins(m2)
       }
     }, preservesPartitioning = true)
+
+  /** (t % k, tree) pairs of a round-major, class-inner tree array. */
+  private def byClass(trees: Array[RegTree], k: Int): Array[(Int, RegTree)] =
+    Array.tabulate(trees.length)(t => (t % k, trees(t)))
 
   /** Copy of `t` with every node value × `s` (leaf values are what
     * predict reads; internal entries scale harmlessly). Split structure
@@ -2261,22 +2160,13 @@ object Trainer {
               // class-inner layout: tree j of a round owns output j % k
               val g = gh(r * 2 * kb + 2 * (t % k)).toDouble
               val h = gh(r * 2 * kb + 2 * (t % k) + 1).toDouble
+              // every node on the row's path accumulates (g, h)
               var i = 0
-              var walking = true
-              while (walking) {
+              while (i >= 0) {
                 val base = (offsets(t) + i) * 2
                 acc(base) += g; acc(base + 1) += h
-                if (tree.feature(i) < 0) walking = false
-                else {
-                  val b = rowBins(off + tree.feature(i)) & 0xFF
-                  i = if (b == MissingBin) {
-                    if (tree.defaultLeft(i)) tree.left(i) else tree.right(i)
-                  } else if (if (tree.isPartitionNode(i))
-                      ((tree.catBits(i)(b >> 6) >>> (b & 63)) & 1L) == 1L
-                    else if (tree.isCatNode(i)) b == tree.thresholdBin(i)
-                    else b <= tree.thresholdBin(i)) tree.left(i)
-                  else tree.right(i)
-                }
+                i = if (tree.feature(i) < 0) -1
+                  else tree.nextBinned(i, rowBins, off, MissingBin)
               }
               t += 1
             }
@@ -2355,10 +2245,10 @@ object Trainer {
       }
       } // refreshPass
       // margins advance with the REFRESHED trees (xgboost update order)
-      val bcNew =
-        sc.broadcast(outTrees.slice(round * tpr, round * tpr + tpr))
+      val bcNew = sc.broadcast(
+        byClass(outTrees.slice(round * tpr, round * tpr + tpr), k))
       liveBc += bcNew
-      val nd = applyTrees(data, bcNew, k)
+      val nd = applyTrees(data, bcNew)
         .persist(p.storageLevel)
       nd.foreachPartition(_ => ())
       prevData.foreach(release)

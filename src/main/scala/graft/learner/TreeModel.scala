@@ -60,60 +60,61 @@ final class RegTree(
   @inline def isPartitionNode(i: Int): Boolean =
     catBits.length > 0 && catBits(i) != null
 
-  /** Left-branch predicate on a category code (identity bin). */
-  @inline private def codeGoesLeft(i: Int, c: Int): Boolean =
-    if (isPartitionNode(i))
-      c < 256 && ((catBits(i)(c >> 6) >>> (c & 63)) & 1L) == 1L
-    else c == thresholdBin(i)
+  /** Is category code `c` in node `i`'s partition bitmap? */
+  @inline private[learner] def inCatSet(i: Int, c: Int): Boolean =
+    c >= 0 && c < 256 && ((catBits(i)(c >> 6) >>> (c & 63)) & 1L) == 1L
 
-  /** Left-branch predicate on a raw feature value (non-NaN). */
-  @inline private def goesLeftRaw(i: Int, v: Float): Boolean =
-    if (isPartitionNode(i)) {
-      val c = v.toInt
-      v == c && c >= 0 && c < 256 &&
-        ((catBits(i)(c >> 6) >>> (c & 63)) & 1L) == 1L
-    } else if (isCatNode(i)) v == threshold(i)
+  /** Left-branch predicate on a non-missing bin: partition bitmap,
+    * one-hot `==` or numeric `<=`. */
+  @inline private def binGoesLeft(i: Int, b: Int): Boolean =
+    if (isPartitionNode(i)) inCatSet(i, b)
+    else if (isCatNode(i)) b == thresholdBin(i)
+    else b <= thresholdBin(i)
+
+  /** Left-branch predicate on a raw feature value; NaN takes the
+    * default direction. Partition nodes send non-integral values (and
+    * codes outside the bitmap) right. */
+  @inline private[learner] def goesLeft(i: Int, v: Float): Boolean =
+    if (v.isNaN) defaultLeft(i)
+    else if (isPartitionNode(i)) v == v.toInt && inCatSet(i, v.toInt)
+    else if (isCatNode(i)) v == threshold(i)
     else v <= threshold(i)
 
-  /** Traverse with pre-binned features; bin `missingBin` = NaN. */
-  def predictBinned(bins: Array[Byte], missingBin: Int): Float =
-    predictBinned(bins, 0, missingBin)
-
-  /** [[predictBinned]] over one row of a packed row-major bin block
-    * (the r12 [[TrainBlock]] layout): the row's bins start at `off`. */
-  def predictBinned(bins: Array[Byte], off: Int, missingBin: Int): Float = {
-    var i = 0
-    while (feature(i) >= 0) {
-      val b = bins(off + feature(i)) & 0xFF
-      i = if (b == missingBin) { if (defaultLeft(i)) left(i) else right(i) }
-      else if (if (isCatNode(i)) codeGoesLeft(i, b)
-        else b <= thresholdBin(i)) left(i)
-      else right(i)
-    }
-    value(i)
+  /** Child of internal node `i` for the binned row at byte offset `off`
+    * of `bins`; bin `missingBin` takes the default direction. The one
+    * bin-space routing step: training's histogram router, the leaf
+    * refresh and the margin advance all walk with it. */
+  @inline private[learner] def nextBinned(i: Int, bins: Array[Byte],
+      off: Int, missingBin: Int): Int = {
+    val b = bins(off + feature(i)) & 0xFF
+    if (if (b == missingBin) defaultLeft(i) else binGoesLeft(i, b)) left(i)
+    else right(i)
   }
+
+  /** Child of internal node `i` for the raw row `x`. */
+  @inline private[learner] def nextRaw(i: Int, x: Array[Float]): Int =
+    if (goesLeft(i, x(feature(i)))) left(i) else right(i)
+
+  /** Node the binned row at `off` stops at: a leaf, or — on a tree
+    * still being grown — a pending node (feature −2). */
+  def leafBinned(bins: Array[Byte], off: Int, missingBin: Int): Int = {
+    var i = 0
+    while (feature(i) >= 0) i = nextBinned(i, bins, off, missingBin)
+    i
+  }
+
+  /** Leaf value for one row of a packed row-major bin block (the r12
+    * [[TrainBlock]] layout): the row's bins start at `off`. */
+  def predictBinned(bins: Array[Byte], off: Int, missingBin: Int): Float =
+    value(leafBinned(bins, off, missingBin))
 
   /** Traverse with raw float features; NaN takes the default direction. */
-  def predictRaw(x: Array[Float]): Float = {
-    var i = 0
-    while (feature(i) >= 0) {
-      val v = x(feature(i))
-      i = if (v.isNaN) { if (defaultLeft(i)) left(i) else right(i) }
-      else if (goesLeftRaw(i, v)) left(i)
-      else right(i)
-    }
-    value(i)
-  }
+  def predictRaw(x: Array[Float]): Float = value(leafIndex(x))
 
   /** Node id of the leaf a row lands in (xgboost `pred_leaf` analog). */
   def leafIndex(x: Array[Float]): Int = {
     var i = 0
-    while (feature(i) >= 0) {
-      val v = x(feature(i))
-      i = if (v.isNaN) { if (defaultLeft(i)) left(i) else right(i) }
-      else if (goesLeftRaw(i, v)) left(i)
-      else right(i)
-    }
+    while (feature(i) >= 0) i = nextRaw(i, x)
     i
   }
 
@@ -126,10 +127,7 @@ final class RegTree(
   def contribWalk(x: Array[Float], acc: Array[Double]): Double = {
     var i = 0
     while (feature(i) >= 0) {
-      val v = x(feature(i))
-      val nxt = if (v.isNaN) { if (defaultLeft(i)) left(i) else right(i) }
-        else if (goesLeftRaw(i, v)) left(i)
-        else right(i)
+      val nxt = nextRaw(i, x)
       acc(feature(i)) += value(nxt).toDouble - value(i).toDouble
       i = nxt
     }
@@ -169,10 +167,7 @@ final class RegTree(
     var i = 0
     while (feature(i) >= 0) {
       val f = feature(i)
-      val v = x(f)
-      val nxt = if (v.isNaN) { if (defaultLeft(i)) left(i) else right(i) }
-        else if (goesLeftRaw(i, v)) left(i)
-        else right(i)
+      val nxt = nextRaw(i, x)
       val delta = value(nxt).toDouble - value(i).toDouble
       // distinct ancestors excluding f (depth ≤ 64 ⇒ linear scan wins)
       var na = 0
@@ -361,9 +356,7 @@ final class RegTree(
         }
       } else {
         val f = feature(node)
-        val v = x(f)
-        val goLeft =
-          if (v.isNaN) defaultLeft(node) else goesLeftRaw(node, v)
+        val goLeft = goesLeft(node, x(f))
         val hot = if (goLeft) left(node) else right(node)
         val cold = if (goLeft) right(node) else left(node)
         var iz = 1.0; var io = 1.0
@@ -423,11 +416,8 @@ final class RegTree(
   private[learner] def condExpect(x: Array[Float], f: Int): Double = {
     def rec(i: Int): Double =
       if (feature(i) < 0) value(i).toDouble
-      else if (feature(i) == f) {
-        val v = x(f)
-        val goLeft = if (v.isNaN) defaultLeft(i) else goesLeftRaw(i, v)
-        rec(if (goLeft) left(i) else right(i))
-      } else (cover(left(i)) * rec(left(i)) +
+      else if (feature(i) == f) rec(nextRaw(i, x))
+      else (cover(left(i)) * rec(left(i)) +
         cover(right(i)) * rec(right(i))) / cover(i)
     rec(0)
   }
@@ -449,9 +439,7 @@ final class RegTree(
       else {
         val cond =
           if (isPartitionNode(i)) {
-            val cs = (0 until 256)
-              .filter(c => ((catBits(i)(c >> 6) >>> (c & 63)) & 1L) == 1L)
-            s"in{${cs.mkString(",")}}"
+            s"in{${(0 until 256).filter(inCatSet(i, _)).mkString(",")}}"
           } else if (isCatNode(i)) s"==${threshold(i)}"
           else s"<=${threshold(i)}"
         sb.append(s"$i:[f${feature(i)}$cond] " +
@@ -463,6 +451,15 @@ final class RegTree(
     }
     rec(0, 0)
     s"booster[$treeIdx]:\n" + sb.result()
+  }
+}
+
+object RegTree {
+  /** The partition bitmap whose left-routing set is `codes`. */
+  private[learner] def catBitmap(codes: Array[Int]): Array[Long] = {
+    val bits = new Array[Long](4)
+    codes.foreach(c => bits(c >> 6) |= 1L << (c & 63))
+    bits
   }
 }
 
@@ -826,9 +823,7 @@ final class GraftModel(
           else if (t.hasStats) t.gain(n).toDouble else null,
           if (t.hasStats) t.cover(n).toDouble else null,
           if (!leaf && t.isPartitionNode(n))
-            (0 until 256).filter(c =>
-              ((t.catBits(n)(c >> 6) >>> (c & 63)) & 1L) == 1L)
-              .mkString(",")
+            (0 until 256).filter(t.inCatSet(n, _)).mkString(",")
           else if (!leaf && t.isCatNode(n)) t.threshold(n).toInt.toString
           else null))
         n += 1

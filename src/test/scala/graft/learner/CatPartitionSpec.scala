@@ -223,4 +223,48 @@ class CatPartitionSpec extends SparkTestBase {
     assert(!xgb.fit(df).graftModel.trees.head.isPartitionNode(0),
       "MLlib facade must forward maxCatToOnehot")
   }
+
+  test("binned walk over the fitted bins lands on the raw walk's leaf " +
+      "(numeric, one-hot and partition nodes; NaN and seen codes)") {
+    // bin(x) <= thresholdBin  <=>  x <= threshold, per node kind: the
+    // trainer walks bins, predict walks raw floats
+    val rng = new scala.util.Random(29)
+    def miss(v: Float) = if (rng.nextInt(10) == 0) Float.NaN else v
+    val rows = (0 until 1500).map { _ =>
+      val x = rng.nextFloat() * 4
+      val c3 = rng.nextInt(3); val c9 = rng.nextInt(9)
+      val y = x + (if (c3 == 1) 2.0 else 0.0) +
+        (if (c9 == 2 || c9 == 5 || c9 == 7) 3.0 else 0.0) +
+        0.2 * rng.nextGaussian()
+      (Array(miss(x), miss(c3.toFloat), miss(c9.toFloat)), y)
+    }
+    val df = rows.map { case (f, y) =>
+      (f(0).toDouble, f(1).toDouble, f(2).toDouble, y)
+    }.toDF("x", "c3", "c9", "y").repartition(3)
+    val m = GraftBoost.train(df, DMatrixSpec(labelCol = Seq("y"),
+      categoricalCols = Seq("c3", "c9")), TrainParams(numRounds = 4,
+      maxDepth = 4, maxCatToOnehot = 4, seed = 29)).model
+    // the training binner's exact path: the same cuts from the same rows
+    val bins = Binner.fit(spark.sparkContext.parallelize(rows.map(_._1)),
+      rows.length, catFeatures = Array(false, true, true))
+    val nodes = m.trees.toSeq.flatMap(t =>
+      (0 until t.numNodes).filter(t.feature(_) >= 0).map((t, _)))
+    nodes.foreach { case (t, i) =>
+      if (!t.isCatNode(i))
+        assert(bins.cuts(t.feature(i))(t.thresholdBin(i)) === t.threshold(i),
+          "model thresholds must come from these bins")
+    }
+    assert(nodes.exists { case (t, i) => !t.isCatNode(i) })
+    assert(nodes.exists { case (t, i) =>
+      t.isCatNode(i) && !t.isPartitionNode(i) })
+    assert(nodes.exists { case (t, i) => t.isPartitionNode(i) })
+    assert(rows.exists(_._1.exists(_.isNaN)))
+    rows.foreach { case (x, _) =>
+      val binned = Array.tabulate(x.length)(f => bins.bin(f, x(f)).toByte)
+      m.trees.foreach { t =>
+        assert(t.leafBinned(binned, 0, Binner.MissingBin) === t.leafIndex(x),
+          s"row ${x.mkString(",")}")
+      }
+    }
+  }
 }

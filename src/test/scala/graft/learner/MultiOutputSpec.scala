@@ -209,5 +209,16 @@ class MultiOutputSpec extends SparkTestBase {
         TrainParams(numRounds = 1, booster = "dart", seed = 1))
     }
     assert(e2.getMessage.contains("not supported"))
+    val e3 = intercept[IllegalArgumentException] {
+      GraftBoost.trainMultiOutput(df, spec,
+        TrainParams(objective = "binary:logistic", numRounds = 1,
+          scalePosWeight = 3.0, seed = 1))
+    }
+    assert(e3.getMessage.contains("scale_pos_weight"))
+    val e4 = intercept[IllegalArgumentException] {
+      GraftBoost.trainMultiOutput(df, spec,
+        TrainParams(numRounds = 1, etaSchedule = Some(_ => 0.1), seed = 1))
+    }
+    assert(e4.getMessage.contains("eta_schedule"))
   }
 }

@@ -284,4 +284,106 @@ class RepresentationGoldenSpec extends SparkTestBase {
       evals = Seq(("train", df)))
     assert(fingerprint(res) === "5955e1fb1fc8e9431d9055a7bdf1ca3a")
   }
+
+  // ---- tree-walk pins: every binned walk the trainer takes ----
+  // The pins below reach the walks no earlier absolute golden reaches:
+  // the refresh accumulation over categorical nodes, the adaptive-leaf
+  // slot lookup on partition bitmaps, the init-model fold-in over
+  // partition nodes, and the vector-leaf trainer's router. Captured
+  // from the code before those walks were merged into one, so they
+  // pin that merge bit for bit.
+
+  /** Numeric `a` plus a 3-code feature (one-hot at maxCatToOnehot = 4)
+    * and a 9-code feature (optimal partition); ~8% missing per
+    * column, so every node kind also routes the missing bin. */
+  private def catDf(n: Int, seed: Int) = {
+    val rng = new scala.util.Random(seed)
+    def miss(v: Double) = if (rng.nextInt(12) == 0) Double.NaN else v
+    (1 to n).map { _ =>
+      val a = rng.nextDouble() * 4
+      val c3 = rng.nextInt(3); val c9 = rng.nextInt(9)
+      val y = a + (if (c3 == 1) 2.0 else 0.0) +
+        (if (c9 == 2 || c9 == 5 || c9 == 7) 3.0 else 0.0) +
+        0.2 * rng.nextGaussian()
+      (miss(a), miss(c3.toDouble), miss(c9.toDouble), y)
+    }.toDF("a", "c3", "c9", "y").repartition(3)
+  }
+  private val catSpec = DMatrixSpec(labelCol = Seq("y"),
+    categoricalCols = Seq("c3", "c9"))
+
+  private def hasNodes(m: GraftModel): (Boolean, Boolean) = {
+    val internal = m.trees.flatMap(t =>
+      (0 until t.numNodes).filter(t.feature(_) >= 0).map(i => (t, i)))
+    (internal.exists { case (t, i) =>
+      t.isCatNode(i) && !t.isPartitionNode(i) },
+      internal.exists { case (t, i) => t.isPartitionNode(i) })
+  }
+
+  test("process_type=update refresh over one-hot and partition " +
+      "categorical splits (walk fingerprint)") {
+    val p = TrainParams(numRounds = 4, maxDepth = 4, maxCatToOnehot = 4,
+      seed = 1161)
+    val base = GraftBoost.train(catDf(400, 161), catSpec, p)
+    assert(hasNodes(base.model) === ((true, true)))
+    val res = GraftBoost.train(catDf(400, 162), catSpec,
+      p.copy(numRounds = 3, processType = "update", updater = "refresh"),
+      initModel = Some(base.model))
+    assert(fingerprint(res) === "4a30ebed23ae3f9328de00c9631b893a")
+  }
+
+  test("reg:absoluteerror adaptive refresh over partition splits " +
+      "(walk fingerprint)") {
+    val res = GraftBoost.train(catDf(400, 171), catSpec,
+      TrainParams(objective = "reg:absoluteerror", numRounds = 4,
+        maxDepth = 3, maxCatToOnehot = 4, seed = 1171))
+    assert(hasNodes(res.model)._2)
+    assert(fingerprint(res) === "720d5ec5d0d09b8fd5769fea673bfcef")
+  }
+
+  test("continued training from an init model with partition splits " +
+      "(walk fingerprint)") {
+    val df = catDf(400, 181)
+    val p = TrainParams(numRounds = 3, maxDepth = 3, maxCatToOnehot = 4,
+      seed = 1181)
+    val first = GraftBoost.train(df, catSpec, p)
+    assert(hasNodes(first.model)._2)
+    val res = GraftBoost.train(df, catSpec, p,
+      initModel = Some(first.model))
+    assert(fingerprint(res) === "c07469d4de5d297b3ece583f50ebd7c6")
+  }
+
+  test("multi_output_tree k=3 depth 4 vector-leaf trees (walk " +
+      "fingerprint)") {
+    val rng = new scala.util.Random(191)
+    val df = (1 to 500).map { _ =>
+      val a = rng.nextDouble() * 4; val b = rng.nextDouble() * 4
+      val c = rng.nextDouble()
+      (if (rng.nextInt(10) == 0) Double.NaN else a, b, c,
+        2 * a - b + 0.1 * rng.nextGaussian(),
+        a * b + 0.1 * rng.nextGaussian(),
+        c - a + 0.1 * rng.nextGaussian())
+    }.toDF("a", "b", "c", "u", "v", "w").repartition(3)
+    val m = GraftBoost.trainMultiOutput(df,
+      DMatrixSpec(labelCol = Seq("u", "v", "w")),
+      TrainParams(numRounds = 5, maxDepth = 4, seed = 1191))
+    assert(m.k === 3)
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(
+        java.io.OutputStream.nullOutputStream(), md))
+    m.trees.foreach { t =>
+      buf.writeInt(t.k)
+      t.feature.foreach(buf.writeInt)
+      t.thresholdBin.foreach(buf.writeInt)
+      t.threshold.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.defaultLeft.foreach(buf.writeBoolean)
+      t.left.foreach(buf.writeInt); t.right.foreach(buf.writeInt)
+      t.values.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.gain.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.cover.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+    }
+    buf.flush()
+    assert(md.digest().map("%02x".format(_)).mkString.take(32) ===
+      "797443459d5a1814dfb203104b2d1631")
+  }
 }

@@ -14,10 +14,27 @@
 #                                     # PlanDump at sf0.001; each must
 #                                     # exit 0
 #
+# Flags combine (`--test --bench --dev` in any order); the steps always
+# run in the order above. An unknown argument prints this usage and
+# exits 2 before anything runs.
+#
 # Exit 0 = safe to commit/snapshot. Anything else: fix or `git stash`
 # the in-flight hunk before snapshotting.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+run_test=0 run_bench=0 run_dev=0
+for arg in "$@"; do
+  case "$arg" in
+    --test) run_test=1 ;;
+    --bench) run_bench=1 ;;
+    --dev) run_dev=1 ;;
+    *)
+      echo "[precommit] unknown argument: $arg" >&2
+      echo "usage: tools/precommit-check.sh [--test] [--bench] [--dev]" >&2
+      exit 2 ;;
+  esac
+done
 
 echo "[precommit] sbt Test/compile ..."
 if ! sbt -batch "Test/compile" >/tmp/precommit-compile.log 2>&1; then
@@ -27,7 +44,7 @@ if ! sbt -batch "Test/compile" >/tmp/precommit-compile.log 2>&1; then
 fi
 echo "[precommit] compile green."
 
-if [[ "${1:-}" == "--test" ]]; then
+if (( run_test )); then
   echo "[precommit] sbt test ..."
   if ! sbt -batch test >/tmp/precommit-test.log 2>&1; then
     echo "[precommit] TESTS FAILED:"
@@ -46,7 +63,7 @@ if [[ "${1:-}" == "--test" ]]; then
   echo "[precommit] tests green."
 fi
 
-if [[ "${1:-}" == "--bench" ]]; then
+if (( run_bench )); then
   echo "[precommit] perfbench boost_wide smoke ..."
   if ! python3 perfbench/run.py --workload boost_wide --seed 1 \
       --seconds 1 --trace 0 >/tmp/precommit-bench.log 2>&1; then
@@ -63,7 +80,7 @@ if [[ "${1:-}" == "--bench" ]]; then
   echo "[precommit] benchmark outputs correct."
 fi
 
-if [[ "${1:-}" == "--dev" ]]; then
+if (( run_dev )); then
   plans="$(mktemp -d)"
   trap 'rm -rf "$plans"' EXIT
   dev_step() {
