@@ -3,7 +3,8 @@ package graft.api
 import graft.data.{DMatrixSpec, Sharding}
 import graft.learner._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /**
@@ -415,8 +416,10 @@ object GraftBoost {
       : RDD[(TrainBlock, Array[Array[Float]])] = {
     val k = obj.numOutputs
     val init = obj.initMargin(baseScore)
+    val bcBins = rows.sparkContext.broadcast(bins)
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
+      val bins = bcBins.value
       val nf = bins.numFeatures
       val cap = graft.learner.TrainBlock.capacity(nf, k)
       new Iterator[(TrainBlock, Array[Array[Float]])] {
@@ -461,9 +464,9 @@ object GraftBoost {
     val lis = spec.labelCol.map(cols.indexOf(_)).toArray
     val wi = spec.weightCol.map(cols.indexOf(_)).getOrElse(-1)
     val mi = spec.baseMarginCol.map(cols.indexOf(_)).getOrElse(-1)
-    assembled.rdd.mapPartitions({ it =>
-      it.map { row: Row =>
-        val f = row.getSeq[Float](0).toArray
+    assembled.queryExecution.toRdd.mapPartitions({ it =>
+      it.map { row: InternalRow =>
+        val f = row.getArray(0).toFloatArray()
         val ys = lis.map(li =>
           if (li >= 0 && !row.isNullAt(li)) row.getFloat(li) else 0f)
         val w = if (wi >= 0 && !row.isNullAt(wi)) row.getFloat(wi) else 1f
@@ -531,8 +534,10 @@ object GraftBoost {
       obj: Objective, baseScore: Double, kOut: Int)
       : RDD[MultiOutput.MoBlock] = {
     val init = obj.initMargin(baseScore)
+    val bcBins = rows.sparkContext.broadcast(bins)
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
+      val bins = bcBins.value
       val nf = bins.numFeatures
       val cap = graft.learner.TrainBlock.capacity(nf, kOut)
       new Iterator[MultiOutput.MoBlock] {
@@ -820,6 +825,10 @@ object GraftBoost {
   private[api] type Prepared =
     RDD[(Array[Float], Float, Float, Float, Long, Float)]
 
+  /** The training rows of `df`, read off `queryExecution.toRdd` with
+    * primitive getters: the same rows in the same order as
+    * `Dataset.rdd`, without the row deserializer riding every later
+    * task binary of the training run. */
   private[api] def prepare(df: DataFrame, spec: DMatrixSpec, obj: Objective,
       numWorkers: Int,
       dcbs: Seq[DistributedCallback] = Nil): Prepared = {
@@ -847,10 +856,10 @@ object GraftBoost {
     val mi = spec.baseMarginCol.map(cols.indexOf(_)).getOrElse(-1)
     val qi = spec.qidCol.map(cols.indexOf(_)).getOrElse(-1)
     val ui = spec.labelUpperCol.map(cols.indexOf(_)).getOrElse(-1)
-    assembled.rdd.mapPartitions({ it0 =>
+    assembled.queryExecution.toRdd.mapPartitions({ it0 =>
       val it = DistributedCallback.wrapLoading(dcbs, init = true)(it0)
-      it.map { row: Row =>
-        val f = row.getSeq[Float](0).toArray
+      it.map { row: InternalRow =>
+        val f = row.getArray(0).toFloatArray()
         val y = if (li >= 0 && !row.isNullAt(li)) row.getFloat(li) else 0f
         val w = if (wi >= 0 && !row.isNullAt(wi)) row.getFloat(wi) else 1f
         val m = if (mi >= 0 && !row.isNullAt(mi)) row.getFloat(mi)
@@ -872,15 +881,24 @@ object GraftBoost {
     * tuples produced — the RepresentationGoldenSpec bit-identity
     * contract. `keepGroups` (ranking) extends a block past its
     * capacity until the current qid run ends, so qid groups never
-    * straddle blocks. */
+    * straddle blocks.
+    *
+    * Like the other two packers, it reads the cuts through a broadcast,
+    * not a captured [[Binner.Bins]]: the blocks' lineage rides every
+    * later task binary of the training run, histogram levels included.
+    * The broadcast is never destroyed explicitly — a lost block
+    * recomputes through it — and ContextCleaner reclaims it with the
+    * RDD. */
   private[api] def toBinned(rows: Prepared, bins: Binner.Bins, obj: Objective,
       baseScore: Double, tolerateUnseenCats: Boolean = false)
       : RDD[TrainBlock] = {
     val k = obj.numOutputs
     val init = obj.initMargin(baseScore)
     val keepGroups = obj.needsGroups
+    val bcBins = rows.sparkContext.broadcast(bins)
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
+      val bins = bcBins.value
       new Iterator[TrainBlock] {
         def hasNext: Boolean = it.hasNext
         def next(): TrainBlock = {

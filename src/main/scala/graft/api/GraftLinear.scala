@@ -387,20 +387,20 @@ object GraftLinear {
                 (evalMargins(blk, i, init, w, b, k), blk.ys(i),
                   blk.ws(i)))
             }, preservesPartitioning = true)
-            // each Metrics.compute is its own reduce job; with several
-            // metrics, persist the scored margins for the round so the
-            // margin map runs ONCE and the extra metrics pay only a
-            // cache read (a single metric — the common case — skips
-            // the persist entirely)
+            // computeAll runs one job for all (loss, weight) metrics and
+            // one per whole-set metric (auc, aucpr); when that is more
+            // than one job, persist the scored margins for the round so
+            // the margin map runs ONCE and the extra jobs pay only a
+            // cache read
             val cached =
-              if (metricNames.size > 1)
+              if (Metrics.jobs(metricNames, customByName) > 1)
                 Some(scored.persist(params.storageLevel))
               else None
             try {
               val src = cached.getOrElse(scored)
-              metricNames.foreach { mn =>
-                evalsResult(n)(mn) +=
-                  Metrics.compute(mn, obj, src, customByName)
+              metricNames.zip(Metrics.computeAll(metricNames, obj, src,
+                customByName)).foreach { case (mn, v) =>
+                evalsResult(n)(mn) += v
               }
             } finally cached.foreach(_.unpersist(blocking = false))
           }

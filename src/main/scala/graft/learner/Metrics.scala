@@ -6,8 +6,9 @@ import org.apache.spark.rdd.RDD
  * Distributed evaluation metrics — analog of the reference's eval-metric
  * aggregation (xgboost computes metrics with a weighted allreduce; the
  * driver reads rank-0's result, reference: xgboost_ray/main.py:704-708,
- * 745-752, 1323-1328). Here each metric is one partial-aggregate job
- * (seqOp/combOp), i.e. the same partial+final shape as the allreduce.
+ * 745-752, 1323-1328). Here all (loss, weight) metrics of one eval set
+ * share one job: each task returns its partition's partial sums and the
+ * driver adds them up, the same partial+final shape as the allreduce.
  *
  * AUC is computed from a fixed 4096-bucket score histogram (rank-sum
  * formula over buckets) — single pass, deterministic, no global sort;
@@ -41,42 +42,73 @@ object Metrics {
     }
   }
 
-  /** rows: (raw margins, label, weight). Custom metrics (E7) win over
-    * built-in names. */
-  def compute(name: String, obj: Objective,
-      rows: RDD[(Array[Float], Float, Float)],
-      custom: Map[String, CustomMetric] = Map.empty): Double =
+  /** One (loss, weight) metric's per-row term: adds the row's weighted
+    * loss at `acc(at)` and its weight at `acc(at + 1)`. `m` is the row's
+    * raw margins, `p` its transformed prediction (null when no term of
+    * the pass reads it). */
+  private[learner] abstract class RowTerm extends Serializable {
+    def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
+        acc: Array[Double], at: Int): Unit
+  }
+
+  /** A built-in term: `loss` is the row's weighted loss, the row weight
+    * its weight. */
+  private abstract class Weighted extends RowTerm {
+    def loss(m: Array[Float], p: Array[Float], y: Float, wt: Float): Double
+    final def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
+        acc: Array[Double], at: Int): Unit = {
+      acc(at) += loss(m, p, y, wt); acc(at + 1) += wt.toDouble
+    }
+  }
+
+  /** A (loss, weight) metric: its row term, whether the term reads the
+    * transformed prediction, and the finisher of (Σ loss, Σ weight). */
+  private final class Pointwise(val term: RowTerm, val readsPred: Boolean,
+      val finish: (Double, Double) => Double)
+
+  private def mean(term: Weighted, readsPred: Boolean = true): Pointwise =
+    new Pointwise(term, readsPred, _ / _)
+
+  private def rootMean(term: Weighted): Pointwise =
+    new Pointwise(term, true, (se, w) => math.sqrt(se / w))
+
+  /** Metrics computed from the whole eval set at once, each its own job:
+    * the bucketed-histogram AUCs and Cox's partial likelihood. */
+  private val WholeSet = Set("auc", "aucpr", "cox-nloglik")
+
+  /** The (loss, weight) metric `name`, or None for a [[WholeSet]] one.
+    * Custom metrics (E7) win over built-in names. */
+  private def pointwise(name: String, obj: Objective,
+      custom: Map[String, CustomMetric]): Option[Pointwise] =
     custom.get(name) match {
       case Some(cm) =>
         val fn = cm.fn
-        val (loss, w) = rows.map { case (m, y, wt) => fn(m, y, wt) }
-          .detSum2
-        loss / w
-      case None => computeBuiltin(name, obj, rows)
+        Some(new Pointwise(new RowTerm {
+          def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
+              acc: Array[Double], at: Int): Unit = {
+            val (loss, w) = fn(m, y, wt)
+            acc(at) += loss; acc(at + 1) += w
+          }
+        }, false, _ / _))
+      case None if WholeSet(name) => None
+      case None => Some(builtin(name, obj))
     }
 
-  private def computeBuiltin(name: String, obj: Objective,
-      rows: RDD[(Array[Float], Float, Float)]): Double = name match {
+  /** The table of built-in (loss, weight) metrics. */
+  private def builtin(name: String, obj: Objective): Pointwise = name match {
     case "rmse" =>
-      val (se, w) = rows.map { case (m, y, wt) =>
-        val d = obj.transform(m)(0) - y; (d.toDouble * d * wt, wt.toDouble)
-      }.detSum2
-      math.sqrt(se / w)
+      rootMean((_, p, y, wt) => { val d = p(0) - y; d.toDouble * d * wt })
     case "mae" =>
-      val (ae, w) = rows.map { case (m, y, wt) =>
-        (math.abs(obj.transform(m)(0) - y).toDouble * wt, wt.toDouble)
-      }.detSum2
-      ae / w
+      mean((_, p, y, wt) => math.abs(p(0) - y).toDouble * wt)
     case "logloss" =>
-      val (ll, w) = rows.map { case (m, y, wt) =>
-        val p = clamp(obj.transform(m)(0))
-        (-(y * math.log(p) + (1 - y) * math.log(1 - p)) * wt, wt.toDouble)
-      }.detSum2
-      ll / w
+      mean((_, pr, y, wt) => {
+        val p = clamp(pr(0))
+        -(y * math.log(p) + (1 - y) * math.log(1 - p)) * wt
+      })
     case "mlogloss" =>
       // softmax over RAW margins — obj.transform would argmax to a
       // length-1 array under multi:softmax (advisor r1: AIOOBE)
-      val (ll, w) = rows.map { case (m, y, wt) =>
+      mean((m, _, y, wt) => {
         var mx = Float.NegativeInfinity
         var i = 0
         while (i < m.length) { if (m(i) > mx) mx = m(i); i += 1 }
@@ -85,82 +117,58 @@ object Metrics {
         i = 0
         while (i < m.length) { e(i) = math.exp(m(i) - mx); s += e(i); i += 1 }
         val p = math.min(math.max(e(y.toInt) / s, 1e-15), 1.0 - 1e-15)
-        (-math.log(p) * wt, wt.toDouble)
-      }.detSum2
-      ll / w
+        -math.log(p) * wt
+      }, readsPred = false)
     case "error" => // binary misclassification at p=0.5
-      val (e, w) = rows.map { case (m, y, wt) =>
-        val p = obj.transform(m)(0)
-        (if ((if (p > 0.5f) 1f else 0f) != y) wt.toDouble else 0.0,
-          wt.toDouble)
-      }.detSum2
-      e / w
+      mean((_, p, y, wt) =>
+        if ((if (p(0) > 0.5f) 1f else 0f) != y) wt.toDouble else 0.0)
     case t if t.startsWith("error@") => // binary error at threshold t
       // (xgboost error@t: classify positive when prediction > t)
       val th = t.stripPrefix("error@").toDouble
-      val (e, w) = rows.map { case (m, y, wt) =>
-        val p = obj.transform(m)(0)
-        (if ((if (p > th) 1f else 0f) != y) wt.toDouble else 0.0,
-          wt.toDouble)
-      }.detSum2
-      e / w
+      mean((_, p, y, wt) =>
+        if ((if (p(0) > th) 1f else 0f) != y) wt.toDouble else 0.0)
     case "gamma-deviance" => // 2·mean(ln(p/y) + y/p − 1), xgboost's
       // epsilon-guarded form (labels and predictions floored at 1e-16)
-      val (d, w) = rows.map { case (m, y, wt) =>
-        val p = obj.transform(m)(0).toDouble + 1e-16
+      val deviance: Weighted = (_, pr, y, wt) => {
+        val p = pr(0).toDouble + 1e-16
         val yy = y.toDouble + 1e-16
-        ((math.log(p / yy) + yy / p - 1.0) * wt, wt.toDouble)
-      }.detSum2
-      2.0 * d / w
+        (math.log(p / yy) + yy / p - 1.0) * wt
+      }
+      new Pointwise(deviance, true, (d, w) => 2.0 * d / w)
     case "merror" => // multiclass: argmax != label
-      val (e, w) = rows.map { case (m, y, wt) =>
-        val p = obj.transform(m)
+      mean((_, p, y, wt) => {
         var best = 0; var i = 1
         while (i < p.length) { if (p(i) > p(best)) best = i; i += 1 }
         // softmax objective already argmaxes to length-1
         val cls = if (p.length == 1) p(0) else best.toFloat
-        (if (cls != y) wt.toDouble else 0.0, wt.toDouble)
-      }.detSum2
-      e / w
-    case "auc" => auc(rows, obj)
-    case "aucpr" => aucpr(rows, obj)
-    case "cox-nloglik" => // Breslow partial NLL (survival:cox default)
-      obj match {
-        case cox: Objectives.CoxPh => cox.nloglik(rows)
-        case other => throw new IllegalArgumentException(
-          s"cox-nloglik needs the survival:cox objective, got " +
-            other.name)
-      }
+        if (cls != y) wt.toDouble else 0.0
+      })
     case "rmsle" => // √(Σw·(ln1p(ŷ)−ln1p(y))²/Σw); preds below −1
       // floor just above it (xgboost validates labels ≥ −1 but lets an
       // unbounded regressor's prediction produce NaN — floor instead)
-      val (se, w) = rows.map { case (m, y, wt) =>
+      rootMean((_, pr, y, wt) => {
         require(y >= -1f, s"rmsle needs labels >= -1, got $y")
-        val p = math.max(obj.transform(m)(0).toDouble, -1.0 + 1e-15)
+        val p = math.max(pr(0).toDouble, -1.0 + 1e-15)
         val d = math.log1p(p) - math.log1p(y.toDouble)
-        (d * d * wt, wt.toDouble)
-      }.detSum2
-      math.sqrt(se / w)
+        d * d * wt
+      })
     case "mape" => // mean absolute percentage error (zero-safe floor)
-      val (ape, w) = rows.map { case (m, y, wt) =>
-        val d = math.abs(obj.transform(m)(0) - y).toDouble /
+      mean((_, p, y, wt) => {
+        val d = math.abs(p(0) - y).toDouble /
           math.max(math.abs(y.toDouble), 1e-10)
-        (d * wt, wt.toDouble)
-      }.detSum2
-      ape / w
+        d * wt
+      })
     case "poisson-nloglik" => // lnΓ(y+1) + p − y·ln p (p = predicted rate)
-      val (ll, w) = rows.map { case (m, y, wt) =>
-        val p = math.max(obj.transform(m)(0).toDouble, 1e-16)
-        ((org.apache.commons.math3.special.Gamma.logGamma(y + 1.0)
-          + p - math.log(p) * y) * wt, wt.toDouble)
-      }.detSum2
-      ll / w
+      mean((_, pr, y, wt) => {
+        val p = math.max(pr(0).toDouble, 1e-16)
+        (org.apache.commons.math3.special.Gamma.logGamma(y + 1.0)
+          + p - math.log(p) * y) * wt
+      })
     case "gamma-nloglik" => // unit-shape gamma NLL: y/p + ln p
-      val (ll, w) = rows.map { case (m, y, wt) =>
-        val p = math.max(obj.transform(m)(0).toDouble, 1e-16)
-        ((y / p + math.log(p)) * wt, wt.toDouble)
-      }.detSum2
-      ll / w
+      mean((_, pr, y, wt) => {
+        val p = math.max(pr(0).toDouble, 1e-16)
+        (y / p + math.log(p)) * wt
+      })
     case t if t.startsWith("tweedie-nloglik") =>
       // −y·p^{1−ρ}/(1−ρ) + p^{2−ρ}/(2−ρ); ρ from "tweedie-nloglik@1.5"
       val rho = t.split('@') match {
@@ -168,13 +176,12 @@ object Metrics {
         case _ => 1.5
       }
       require(rho > 1.0 && rho < 2.0, s"tweedie power out of (1,2): $rho")
-      val (ll, w) = rows.map { case (m, y, wt) =>
-        val p = math.max(obj.transform(m)(0).toDouble, 1e-16)
+      mean((_, pr, y, wt) => {
+        val p = math.max(pr(0).toDouble, 1e-16)
         val a = y * math.exp((1.0 - rho) * math.log(p)) / (1.0 - rho)
         val b = math.exp((2.0 - rho) * math.log(p)) / (2.0 - rho)
-        ((-a + b) * wt, wt.toDouble)
-      }.detSum2
-      ll / w
+        (-a + b) * wt
+      })
     case t if t.startsWith("mphe") =>
       // mean pseudo-Huber error δ²(√(1+(z/δ)²) − 1); δ from "mphe@0.5"
       val d = t.split('@') match {
@@ -182,12 +189,10 @@ object Metrics {
         case _ => 1.0
       }
       require(d > 0, s"mphe slope must be positive: $d")
-      val (e, w) = rows.map { case (m, y, wt) =>
-        val z = (obj.transform(m)(0) - y).toDouble
-        (d * d * (math.sqrt(1.0 + (z / d) * (z / d)) - 1.0) * wt,
-          wt.toDouble)
-      }.detSum2
-      e / w
+      mean((_, p, y, wt) => {
+        val z = (p(0) - y).toDouble
+        d * d * (math.sqrt(1.0 + (z / d) * (z / d)) - 1.0) * wt
+      })
     case t if t.startsWith("quantile") =>
       // mean pinball loss: α·(y−p)⁺ + (1−α)·(p−y)⁺; α from "quantile@0.9".
       // VECTOR form "quantile@0.1,0.9" (xgboost 2.x quantile_alpha list):
@@ -208,8 +213,7 @@ object Metrics {
           s"objective ${obj.name} produces " +
           s"${math.max(obj.numOutputs, 1)} output(s) — list one alpha " +
           "per output, in output order")
-      val (e, w) = rows.map { case (m, y, wt) =>
-        val p = obj.transform(m)
+      mean((_, p, y, wt) => {
         var pin = 0.0
         var c = 0
         val k = math.min(alphas.length, p.length)
@@ -218,10 +222,61 @@ object Metrics {
           pin += (if (err >= 0) alphas(c) * err else (alphas(c) - 1.0) * err)
           c += 1
         }
-        (pin / k * wt, wt.toDouble)
-      }.detSum2
-      e / w
+        pin / k * wt
+      })
     case other => throw new IllegalArgumentException(s"unknown metric $other")
+  }
+
+  /** rows: (raw margins, label, weight). One metric of [[computeAll]]. */
+  def compute(name: String, obj: Objective,
+      rows: RDD[(Array[Float], Float, Float)],
+      custom: Map[String, CustomMetric] = Map.empty): Double =
+    computeAll(Seq(name), obj, rows, custom).head
+
+  /** The value of each metric of `names` over one eval set's rows, in
+    * `names` order. Every (loss, weight) metric accumulates in ONE job:
+    * each task sums each metric's row terms in row order, and the driver
+    * sums the partition partials in partition-index order, so the values
+    * are bit-reproducible whatever order the tasks finish in. Each
+    * [[WholeSet]] metric runs a job of its own. */
+  def computeAll(names: Seq[String], obj: Objective,
+      rows: RDD[(Array[Float], Float, Float)],
+      custom: Map[String, CustomMetric] = Map.empty): Seq[Double] = {
+    val plan = names.map(pointwise(_, obj, custom))
+    val terms = plan.flatten.toArray
+    val sums = new Array[Double](terms.length * 2)
+    if (terms.nonEmpty) {
+      val parts = new Array[Array[Double]](rows.getNumPartitions)
+      rows.sparkContext.runJob(rows,
+        TaskFns.metricPass(obj, terms.map(_.term), terms.exists(_.readsPred)),
+        (i: Int, part: Array[Double]) => parts(i) = part)
+      parts.foreach { part =>
+        var j = 0
+        while (j < sums.length) { sums(j) += part(j); j += 1 }
+      }
+    }
+    var next = 0
+    names.zip(plan).map {
+      case (_, Some(pw)) =>
+        next += 1
+        pw.finish(sums(2 * next - 2), sums(2 * next - 1))
+      case ("auc", None) => auc(rows, obj)
+      case ("aucpr", None) => aucpr(rows, obj)
+      case (_, None) => obj match { // cox-nloglik: Breslow partial NLL
+        case cox: Objectives.CoxPh => cox.nloglik(rows)
+        case other => throw new IllegalArgumentException(
+          s"cox-nloglik needs the survival:cox objective, got " +
+            other.name)
+      }
+    }
+  }
+
+  /** Jobs [[computeAll]] runs for `names`: one for all (loss, weight)
+    * metrics, plus one per [[WholeSet]] metric. */
+  def jobs(names: Seq[String],
+      custom: Map[String, CustomMetric] = Map.empty): Int = {
+    val whole = names.count(n => !custom.contains(n) && WholeSet(n))
+    whole + (if (whole < names.length) 1 else 0)
   }
 
   def defaultMetric(objective: String): String = objective match {

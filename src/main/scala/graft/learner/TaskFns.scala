@@ -1,0 +1,257 @@
+package graft.learner
+
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+
+/**
+ * The task-side functions of a boosting round: the histogram `seqOp`
+ * and merge, the gradient map, the margin advance, the eval row view
+ * and the one-pass metric accumulation.
+ *
+ * They live here, not in [[Trainer]] or [[Metrics]], for a fixed cost:
+ * on every RDD call Spark's ClosureCleaner parses the class file that
+ * declares the closure it cleans. A closure declared in `Trainer` costs
+ * a parse of a class of about 165 KB per histogram level, gradient map,
+ * margin advance and metric job; one declared here costs a parse of
+ * this small class. Keep it small: closure builders only, their loops
+ * calling into the model and objective classes. A closure built here
+ * captures only the values its task reads.
+ */
+private[learner] object TaskFns {
+
+  private val MissingBin = Binner.MissingBin
+
+  /** One level chunk covering (tree, node) pairs across ALL trees of a
+    * round — the unit of a single fused histogram job. */
+  final case class LevelChunk(
+      trees: Array[RegTree],      // per round-tree; null = no work here
+      slotOf: Array[Array[Int]],  // per round-tree: node → slot or -1
+      treeCls: Array[Int],        // tree → output class (gh index)
+      treeSalts: Array[Int],      // tree → subsample salt
+      featLists: Array[Array[Int]]) // global slot → sampled feature ids
+
+  private def mixInt(a: Int, b: Int): Int = {
+    var z = a * 0x9e3779b9 + b
+    z ^= z >>> 16; z *= 0x85ebca6b; z ^= z >>> 13; z *= 0xc2b2ae35
+    z ^ (z >>> 16)
+  }
+
+  def mix(seed: Long, round: Int, pid: Int): Long = {
+    var z = seed + 0x9e3779b97f4a7c15L * (round * 1048573L + pid + 1)
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
+  /** combOp of the histogram aggregates: element-wise sum into `a`.
+    * `null` is the zero — the buffer is allocated in the task on first
+    * use, so a partition without rows returns none. */
+  val mergeHist: (Array[Double], Array[Double]) => Array[Double] = (a, c) =>
+    if (a == null) c
+    else if (c == null) a
+    else {
+      var i = 0
+      while (i < a.length) { a(i) += c(i); i += 1 }
+      a
+    }
+
+  /** A task's histogram tagged with its partition index, for a merge in
+    * partition-index order on the driver; empty for a partition without
+    * rows. */
+  type Partials = Vector[(Int, Array[Double])]
+
+  def tagged(seqOp: (Array[Double], GradBlock) => Array[Double])
+      : (Partials, GradBlock) => Partials = (acc, blk) =>
+    Vector((TaskContext.getPartitionId(),
+      seqOp(if (acc.isEmpty) null else acc.head._2, blk)))
+
+  val concatPartials: (Partials, Partials) => Partials = _ ++ _
+
+  /** The histogram `seqOp` of one level chunk: each kept row routes down
+    * each chunk tree to its slot and adds its (g, h) to the slot's bins
+    * of the slot's sampled features. The buffer is allocated in the
+    * task on first use: a zero value would ride every task binary. */
+  def histSeqOp(bc: Broadcast[LevelChunk], histSize: Int,
+      subsampleCut: Int, b: Int, fPerNode: Int)
+      : (Array[Double], GradBlock) => Array[Double] = (acc0, blk) => {
+    val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
+    val ch = bc.value
+    val nf2 = blk.nf
+    val k2 = blk.k
+    val rb = blk.bins
+    val gh = blk.gh
+    var i = 0
+    while (i < blk.n) {
+      val off = i * nf2
+      val salt = blk.salts(i)
+      var t = 0
+      while (t < ch.trees.length) {
+        val pt = ch.trees(t)
+        if (pt != null) {
+          val keep = subsampleCut == Int.MaxValue ||
+            mixInt(salt, ch.treeSalts(t)) < subsampleCut
+          val slot =
+            if (keep) ch.slotOf(t)(pt.leafBinned(rb, off, MissingBin))
+            else -1
+          if (slot >= 0) {
+            val cls = ch.treeCls(t)
+            val g = gh(i * 2 * k2 + 2 * cls)
+            val h = gh(i * 2 * k2 + 2 * cls + 1)
+            val fl = ch.featLists(slot)
+            var j = 0
+            while (j < fl.length) {
+              val bi = rb(off + fl(j)) & 0xFF
+              val slotBin = if (bi == MissingBin) b - 1 else bi
+              val idx = ((slot * fPerNode + j) * b + slotBin) * 2
+              acc(idx) += g; acc(idx + 1) += h
+              j += 1
+            }
+          }
+        }
+        t += 1
+      }
+      i += 1
+    }
+    acc
+  }
+
+  /** Pointwise gradients of a round: gh = [g0,h0,...] interleaved
+    * (stride 2k) and one salt per row, drawn in row order from a
+    * (seed, round, partition) stream. `aux` is a global-pass objective's
+    * driver-reduced state, else null; `spw` scales positive-row weights. */
+  def pointwiseGradients(obj: Objective, k: Int, seed: Long, round: Int,
+      spw: Float, aux: Serializable)
+      : (Int, Iterator[TrainBlock]) => Iterator[GradBlock] = (pid, it) => {
+    val rng = new java.util.Random(mix(seed, round, pid))
+    it.map { b =>
+      val n = b.n
+      val gh = new Array[Float](n * 2 * k)
+      val salts = new Array[Int](n)
+      val g = new Array[Float](k); val h = new Array[Float](k)
+      val m = new Array[Float](k)
+      var i = 0
+      while (i < n) {
+        var c = 0
+        while (c < k) { m(c) = b.margins(i * k + c); c += 1 }
+        val y = b.labels(i)
+        if (aux != null) obj.gradHessGlobal(aux, m, y, g, h)
+        else if (obj.needsBounds)
+          obj.gradHessBounds(m, y, b.upper(i), g, h)
+        else obj.gradHess(m, y, g, h)
+        val w =
+          if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
+          else b.weights(i)
+        c = 0
+        while (c < k) {
+          gh(i * 2 * k + 2 * c) = g(c) * w
+          gh(i * 2 * k + 2 * c + 1) = h(c) * w
+          c += 1
+        }
+        salts(i) = rng.nextInt()
+        i += 1
+      }
+      new GradBlock(n, b.nf, k, b.bins, gh, salts)
+    }
+  }
+
+  /** Ranking gradients: walk contiguous qid runs within each block
+    * (blocks never split a group — GraftBoost.toBinned keepGroups), so
+    * memory is O(one group's scratch) however big a partition grows at
+    * scale. Qid groups never straddle partitions (sortByQid). */
+  def rankGradients(obj: Objective, seed: Long, round: Int, pairCap: Int)
+      : (Int, Iterator[TrainBlock]) => Iterator[GradBlock] = (pid, it) => {
+    val rng = new java.util.Random(mix(seed, round, pid))
+    it.map { b =>
+      val n = b.n
+      val gh = new Array[Float](n * 2)
+      val salts = new Array[Int](n)
+      var i = 0
+      while (i < n) {
+        val q = b.qid(i)
+        var j = i + 1
+        while (j < n && b.qid(j) == q) j += 1
+        val gn = j - i
+        val margins = new Array[Float](gn)
+        val labels = new Array[Float](gn)
+        val weights = new Array[Float](gn)
+        var x = 0
+        while (x < gn) {
+          margins(x) = b.margins(i + x); labels(x) = b.labels(i + x)
+          weights(x) = b.weights(i + x); x += 1
+        }
+        val grad = new Array[Float](gn)
+        val hess = new Array[Float](gn)
+        // pair-sampling seed is (seed, round, qid)-deterministic —
+        // NOT partition-derived — so capped gradients survive
+        // repartitioning and task retries unchanged
+        val pairSeed =
+          if (pairCap > 0)
+            mix(seed ^ java.lang.Long.rotateLeft(q, 21), round,
+              (q ^ (q >>> 32)).toInt)
+          else 0L
+        obj.groupGradients(margins, labels, weights, grad, hess,
+          0, gn, pairCap, pairSeed)
+        // rng draw per row in row order — identical to the r11
+        // per-row emission sequence
+        x = 0
+        while (x < gn) {
+          gh((i + x) * 2) = grad(x); gh((i + x) * 2 + 1) = hess(x)
+          salts(i + x) = rng.nextInt()
+          x += 1
+        }
+        i = j
+      }
+      new GradBlock(n, b.nf, 1, b.bins, gh, salts)
+    }
+  }
+
+  /** The margin advance: each (class, tree) pair's leaf value added to
+    * the carried margin of its class, in a new margin generation per
+    * block that shares the static columns with its input. */
+  def advance(bcTrees: Broadcast[Array[(Int, RegTree)]])
+      : Iterator[TrainBlock] => Iterator[TrainBlock] = it => {
+    val cls = bcTrees.value.map(_._1)
+    val ts = bcTrees.value.map(_._2)
+    it.map { b =>
+      val m2 = b.margins.clone()
+      val nf = b.nf; val k = b.k
+      var i = 0
+      while (i < b.n) {
+        val off = i * nf
+        var t = 0
+        while (t < ts.length) {
+          m2(i * k + cls(t)) += ts(t).predictBinned(b.bins, off, MissingBin)
+          t += 1
+        }
+        i += 1
+      }
+      b.withMargins(m2)
+    }
+  }
+
+  /** Per-row (margins, label, weight) view of blocks. */
+  val rowView: Iterator[TrainBlock] => Iterator[(Array[Float], Float, Float)] =
+    _.flatMap { b =>
+      Iterator.tabulate(b.n)(i => (b.marginRow(i), b.labels(i), b.weights(i)))
+    }
+
+  /** One partition's (Σ loss, Σ weight) of every metric term, summed in
+    * row order: term `j` at (2j, 2j+1). `transform` computes each row's
+    * prediction once for the terms that read it. */
+  def metricPass(obj: Objective, terms: Array[Metrics.RowTerm],
+      transform: Boolean)
+      : (TaskContext, Iterator[(Array[Float], Float, Float)]) => Array[Double] =
+    (_, it) => {
+      val acc = new Array[Double](terms.length * 2)
+      while (it.hasNext) {
+        val (m, y, wt) = it.next()
+        val p = if (transform) obj.transform(m) else null
+        var j = 0
+        while (j < terms.length) {
+          terms(j).add(m, p, y, wt, acc, 2 * j)
+          j += 1
+        }
+      }
+      acc
+    }
+}

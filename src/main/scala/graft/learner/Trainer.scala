@@ -261,20 +261,54 @@ final case class TrainResult(
  * (xgboost_ray/main.py:292-324, 672-793): there, every actor builds a
  * local gradient histogram and Rabit allreduces it so all workers see the
  * global histogram. Here the identical global histogram is produced by
- * `RDD.treeAggregate` (partial per-partition histograms, tree-merged),
- * and the (tiny) split-finding step runs once on the driver — the MLlib
- * GBT pattern. Same learned model, simpler failure model: a lost task is
- * recomputed by Spark (spark.task.maxFailures) instead of the reference's
- * actor-restart machinery (main.py:1606-1713).
+ * one `RDD.aggregate` per level (partial per-partition histograms,
+ * summed on the driver), and the (tiny) split-finding step runs once on
+ * the driver — the MLlib GBT pattern. Same learned model, simpler
+ * failure model: a lost task is recomputed by Spark
+ * (spark.task.maxFailures) instead of the reference's actor-restart
+ * machinery (main.py:1606-1713).
+ *
+ * A round is a handful of jobs: one histogram job per level and one
+ * metric job per eval set for all its (loss, weight) metrics; the
+ * training blocks' margin advance runs inside the next round's first
+ * histogram job, and an eval set other than the training frame adds
+ * its own advance job. Each job pays a fixed cost besides its rows, and
+ * on small and mid-size inputs that cost is most of the round (on the
+ * 20k-row `boost_wide` benchmark a level task computes for 1–5 ms
+ * inside a stage of 23–54 ms, interquartile ranges on a 4-core VM):
+ *  - task-binary deserialization. Every task deserializes the stage's
+ *    RDD lineage and closure. The lineage reaches back through the
+ *    margin advances, the block packer and the input projection to the
+ *    scan, so whatever any of them captures is paid per task per level.
+ *  - closure cleaning. On every RDD call Spark's ClosureCleaner parses
+ *    the class file that declares the closure, on the driver.
+ *  - task results above `spark.task.maxDirectResultSize` (1 MiB by
+ *    default) travel through the block manager: stored by the task,
+ *    fetched by the driver and removed, instead of riding the status
+ *    update.
+ * The rules that keep jobs lean:
+ *  - nothing large is captured by a task closure: the cuts, trees and
+ *    level chunks ride broadcasts, and the input projection reads
+ *    `queryExecution.toRdd` rather than `Dataset.rdd` (no row
+ *    deserializer in the lineage);
+ *  - the closures cleaned every round (histogram `seqOp` and merge,
+ *    gradient map, margin advance, eval row view, metric pass) are built
+ *    in [[TaskFns]], a small class, never in this object;
+ *  - one job per level and one metric job per eval set: a new per-round
+ *    job must earn its fixed cost;
+ *  - a histogram buffer is allocated in the task on first use, so no
+ *    zero buffer rides the task binary, and subtraction below halves
+ *    the bytes a level returns.
  *
  * Scale design:
  *  - rows are binned once into bytes (≤256 bins/feature): 4 features =
  *    4 bytes/row vs 16 for floats; the per-round working set is margins
  *    (K floats) only.
  *  - per level, ONE job aggregates histograms for ALL active nodes
- *    (chunked if the buffer would exceed maxHistBytes). Each task
- *    allocates its buffer on first use, so no zero buffer rides the
- *    task binary.
+ *    (chunked if the buffer would exceed maxHistBytes). The driver
+ *    merges the partials in partition-index order, so a histogram is
+ *    bit-reproducible however the tasks finish (the > 64 MiB tree merge
+ *    keeps completion order).
  *  - histogram subtraction (xgboost/LightGBM hist): the driver keeps
  *    each evaluated node's histogram. When both children of a split
  *    are evaluated together, the job builds only the child with the
@@ -314,41 +348,26 @@ object Trainer {
     var defLeft = false; var gL = 0.0; var hL = 0.0
   }
 
-  /** combOp of the histogram aggregates: element-wise sum into `a`.
-    * `null` is the zero — the buffer is allocated in the task on first
-    * use, so a partition without rows returns none. */
-  private def mergeHist(a: Array[Double],
-      c: Array[Double]): Array[Double] =
-    if (a == null) c
-    else if (c == null) a
-    else {
-      var i = 0
-      while (i < a.length) { a(i) += c(i); i += 1 }
-      a
-    }
-
-  /** One level chunk covering (tree, node) pairs across ALL trees of a
-    * round — the unit of a single fused histogram job. */
-  private final case class LevelChunk(
-      trees: Array[RegTree],      // per round-tree; null = no work here
-      slotOf: Array[Array[Int]],  // per round-tree: node → slot or -1
-      treeCls: Array[Int],        // tree → output class (gh index)
-      treeSalts: Array[Int],      // tree → subsample salt
-      featLists: Array[Array[Int]]) // global slot → sampled feature ids
-
   /** Sum per-partition histograms of `histSize` doubles built by
-    * `seqOp`. A small total merge volume takes a single-stage aggregate
-    * (the driver merges the partials); a big one a depth-2 tree merge,
-    * so the driver never receives numPartitions × histogram at once —
-    * the extra stage is pure latency when histograms are KBs. */
+    * `seqOp`, in partition-index order. A small total merge volume takes
+    * a single-stage aggregate: each task tags its histogram with its
+    * partition index and the driver sums them in index order, so the
+    * float additions happen in one order however the tasks finish. A
+    * big one takes a depth-2 tree merge, so the driver never receives
+    * numPartitions × histogram at once (the extra stage is pure latency
+    * when histograms are KBs). That branch merges in task completion
+    * order, which can move a sum by its last ulp between runs. */
   private[learner] def aggregateHist(grads: RDD[GradBlock], histSize: Int)(
       seqOp: (Array[Double], GradBlock) => Array[Double]): Array[Double] = {
     val mergeBytes = histSize.toLong * 8L * grads.getNumPartitions
     val merged =
       if (mergeBytes < (64L << 20))
-        grads.aggregate(null: Array[Double])(seqOp, mergeHist)
+        grads.aggregate(Vector.empty: TaskFns.Partials)(
+          TaskFns.tagged(seqOp), TaskFns.concatPartials)
+          .sortBy(_._1).map(_._2)
+          .foldLeft(null: Array[Double])(TaskFns.mergeHist)
       else grads.treeAggregate(null: Array[Double])(
-        seqOp, mergeHist, depth = 2)
+        seqOp, TaskFns.mergeHist, depth = 2)
     if (merged != null) merged else new Array[Double](histSize)
   }
 
@@ -463,9 +482,7 @@ object Trainer {
     * tuples exist only inside the consuming job; the cache keeps blocks. */
   private[learner] def rowsOf(data: RDD[TrainBlock])
       : RDD[(Array[Float], Float, Float)] =
-    data.mapPartitions(_.flatMap { b =>
-      Iterator.tabulate(b.n)(i => (b.marginRow(i), b.labels(i), b.weights(i)))
-    }, preservesPartitioning = true)
+    data.mapPartitions(TaskFns.rowView, preservesPartitioning = true)
 
   /** Per-row (score, label, weight, qid) view — the shape the ranking
     * group metrics consume (k = 1 for rank objectives, so margin slot
@@ -516,102 +533,13 @@ object Trainer {
       val aux: Serializable =
         if (obj.needsGlobalPass) obj.globalPass(rowsOf(data))
         else null
-      data.mapPartitionsWithIndex({ (pid, it) =>
-        val rng = new java.util.Random(mix(seed, round, pid))
-        it.map { b =>
-          val n = b.n
-          val gh = new Array[Float](n * 2 * k)
-          val salts = new Array[Int](n)
-          val g = new Array[Float](k); val h = new Array[Float](k)
-          val m = new Array[Float](k)
-          var i = 0
-          while (i < n) {
-            var c = 0
-            while (c < k) { m(c) = b.margins(i * k + c); c += 1 }
-            val y = b.labels(i)
-            if (aux != null) obj.gradHessGlobal(aux, m, y, g, h)
-            else if (obj.needsBounds)
-              obj.gradHessBounds(m, y, b.upper(i), g, h)
-            else obj.gradHess(m, y, g, h)
-            val w =
-              if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
-              else b.weights(i)
-            c = 0
-            while (c < k) {
-              gh(i * 2 * k + 2 * c) = g(c) * w
-              gh(i * 2 * k + 2 * c + 1) = h(c) * w
-              c += 1
-            }
-            salts(i) = rng.nextInt()
-            i += 1
-          }
-          new GradBlock(n, b.nf, k, b.bins, gh, salts)
-        }
-      }, preservesPartitioning = true)
-    } else {
-      // ranking: walk contiguous qid runs within each block (blocks
-      // never split a group — GraftBoost.toBinned keepGroups), so
-      // memory is O(one group's scratch) however big a partition grows
-      // at scale. Qid groups never straddle partitions (sortByQid).
-      data.mapPartitionsWithIndex({ (pid, it) =>
-        val rng = new java.util.Random(mix(seed, round, pid))
-        it.map { b =>
-          val n = b.n
-          val gh = new Array[Float](n * 2)
-          val salts = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            val q = b.qid(i)
-            var j = i + 1
-            while (j < n && b.qid(j) == q) j += 1
-            val gn = j - i
-            val margins = new Array[Float](gn)
-            val labels = new Array[Float](gn)
-            val weights = new Array[Float](gn)
-            var x = 0
-            while (x < gn) {
-              margins(x) = b.margins(i + x); labels(x) = b.labels(i + x)
-              weights(x) = b.weights(i + x); x += 1
-            }
-            val grad = new Array[Float](gn)
-            val hess = new Array[Float](gn)
-            // pair-sampling seed is (seed, round, qid)-deterministic —
-            // NOT partition-derived — so capped gradients survive
-            // repartitioning and task retries unchanged
-            val pairSeed =
-              if (p.pairCap > 0)
-                mix(seed ^ java.lang.Long.rotateLeft(q, 21), round,
-                  (q ^ (q >>> 32)).toInt)
-              else 0L
-            obj.groupGradients(margins, labels, weights, grad, hess,
-              0, gn, p.pairCap, pairSeed)
-            // rng draw per row in row order — identical to the r11
-            // per-row emission sequence
-            x = 0
-            while (x < gn) {
-              gh((i + x) * 2) = grad(x); gh((i + x) * 2 + 1) = hess(x)
-              salts(i + x) = rng.nextInt()
-              x += 1
-            }
-            i = j
-          }
-          new GradBlock(n, b.nf, 1, b.bins, gh, salts)
-        }
-      }, preservesPartitioning = true)
-    }
-  }
-
-  private def mixInt(a: Int, b: Int): Int = {
-    var z = a * 0x9e3779b9 + b
-    z ^= z >>> 16; z *= 0x85ebca6b; z ^= z >>> 13; z *= 0xc2b2ae35
-    z ^ (z >>> 16)
-  }
-
-  private def mix(seed: Long, round: Int, pid: Int): Long = {
-    var z = seed + 0x9e3779b97f4a7c15L * (round * 1048573L + pid + 1)
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
+      data.mapPartitionsWithIndex(
+        TaskFns.pointwiseGradients(obj, k, seed, round, spw, aux),
+        preservesPartitioning = true)
+    } else
+      data.mapPartitionsWithIndex(
+        TaskFns.rankGradients(obj, seed, round, p.pairCap),
+        preservesPartitioning = true)
   }
 
   /** Driver-side per-tree growth state for one fused round. */
@@ -880,53 +808,11 @@ object Trainer {
           if (chunk.exists(work(_)._1 == t)) states(t).tb.snapshot()
           else null
         }.toArray
-        val bc = sc.broadcast(LevelChunk(chunkTrees, slotOf, treeCls,
-          treeSalts, chunk.map(work(_)._3).toArray))
+        val bc = sc.broadcast(TaskFns.LevelChunk(chunkTrees, slotOf,
+          treeCls, treeSalts, chunk.map(work(_)._3).toArray))
         val histSize = chunk.length * fPerNode * b * 2
-        // the buffer is allocated in the task on first use: a zero value
-        // would ride every task binary
-        val seqOp = (acc0: Array[Double], blk: GradBlock) => {
-          val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
-          val ch = bc.value
-          val nf2 = blk.nf
-          val k2 = blk.k
-          val rb = blk.bins
-          val gh = blk.gh
-          var i = 0
-          while (i < blk.n) {
-            val off = i * nf2
-            val salt = blk.salts(i)
-            var t = 0
-            while (t < ch.trees.length) {
-              val pt = ch.trees(t)
-              if (pt != null) {
-                val keep = subsampleCut == Int.MaxValue ||
-                  mixInt(salt, ch.treeSalts(t)) < subsampleCut
-                val slot =
-                  if (keep) ch.slotOf(t)(pt.leafBinned(rb, off, MissingBin))
-                  else -1
-                if (slot >= 0) {
-                  val cls = ch.treeCls(t)
-                  val g = gh(i * 2 * k2 + 2 * cls)
-                  val h = gh(i * 2 * k2 + 2 * cls + 1)
-                  val fl = ch.featLists(slot)
-                  var j = 0
-                  while (j < fl.length) {
-                    val bi = rb(off + fl(j)) & 0xFF
-                    val slotBin = if (bi == MissingBin) b - 1 else bi
-                    val idx = ((slot * fPerNode + j) * b + slotBin) * 2
-                    acc(idx) += g; acc(idx + 1) += h
-                    j += 1
-                  }
-                }
-              }
-              t += 1
-            }
-            i += 1
-          }
-          acc
-        }
-        val hist = aggregateHist(grads, histSize)(seqOp)
+        val hist = aggregateHist(grads, histSize)(
+          TaskFns.histSeqOp(bc, histSize, subsampleCut, b, fPerNode))
         bc.destroy()
 
         // driver-side split finding per built node, then per sibling
@@ -1698,7 +1584,8 @@ object Trainer {
       val pTree = p.copy(eta = etaRound / p.numParallelTree)
       val nTrees = p.numParallelTree * k
       val builtTrees = buildTrees(grads, bins, pTree,
-        Array.tabulate(nTrees)(i => mix(p.seed, startRound + round, 7919 + i)),
+        Array.tabulate(nTrees)(i =>
+          TaskFns.mix(p.seed, startRound + round, 7919 + i)),
         Array.tabulate(nTrees)(_ % k))
       // adaptive leaf refresh (xgboost UpdateTreeLeaf): the L1 family
       // resets each leaf to η·Q_α of its residuals before the commit
@@ -1802,26 +1689,32 @@ object Trainer {
       // eval-metric aggregation (A2 analog)
       val roundMetrics = scala.collection.mutable.LinkedHashMap[String, Double]()
       evalView.foreach { case (n, r) =>
-        val rows = rowsOf(r)
+        // rank:* objectives evaluate auc PER QID GROUP (weighted mean
+        // of per-group Mann-Whitney, xgboost's ranking-auc semantics);
+        // binary objectives keep the global histogram auc
+        def groupish(mn: String) = !customByName.contains(mn) &&
+          (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
+        // survival metrics read (lower, upper) off the block (label
+        // doubles as the lower bound)
+        def bounds(mn: String) =
+          !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
+        // every other metric reads the row view: one job for all the
+        // (loss, weight) metrics
+        val rowNames =
+          metricNames.filterNot(mn => groupish(mn) || bounds(mn))
+        val rowValues = rowNames.zip(
+          Metrics.computeAll(rowNames, obj, rowsOf(r), customByName)).toMap
         metricNames.foreach { mn =>
-          // rank:* objectives evaluate auc PER QID GROUP (weighted mean
-          // of per-group Mann-Whitney, xgboost's ranking-auc semantics);
-          // binary objectives keep the global histogram auc
-          val groupish = Metrics.isGroupMetric(mn) ||
-            (mn == "auc" && obj.needsGroups)
           val v =
-            if (!customByName.contains(mn) && groupish) {
+            if (groupish(mn)) {
               // ndcg/map/auc walk qid groups — the rank layout keeps
               // groups partition-contiguous: one shuffle-free pass
               require(obj.needsGroups, s"$mn needs a rank:* objective " +
                 "(qid-contiguous evaluation partitions)")
               Metrics.computeGroup(mn, groupRowsOf(r))
-            } else if (!customByName.contains(mn) &&
-              Metrics.isBoundsMetric(mn)) {
-              // survival metrics read (lower, upper) off the block
-              // (label doubles as the lower bound)
+            } else if (bounds(mn))
               Metrics.computeBounds(mn, obj, boundsRowsOf(r))
-            } else Metrics.compute(mn, obj, rows, customByName)
+            else rowValues(mn)
           evalsResult(n)(mn) += v
           roundMetrics(s"$n-$mn") = v
         }
@@ -1936,25 +1829,7 @@ object Trainer {
       rdd: RDD[TrainBlock],
       bcTrees: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]])
       : RDD[TrainBlock] =
-    rdd.mapPartitions({ it =>
-      val cls = bcTrees.value.map(_._1)
-      val ts = bcTrees.value.map(_._2)
-      it.map { b =>
-        val m2 = b.margins.clone()
-        val nf = b.nf; val k = b.k
-        var i = 0
-        while (i < b.n) {
-          val off = i * nf
-          var t = 0
-          while (t < ts.length) {
-            m2(i * k + cls(t)) += ts(t).predictBinned(b.bins, off, MissingBin)
-            t += 1
-          }
-          i += 1
-        }
-        b.withMargins(m2)
-      }
-    }, preservesPartitioning = true)
+    rdd.mapPartitions(TaskFns.advance(bcTrees), preservesPartitioning = true)
 
   /** (t % k, tree) pairs of a round-major, class-inner tree array. */
   private def byClass(trees: Array[RegTree], k: Int): Array[(Int, RegTree)] =
@@ -1990,7 +1865,7 @@ object Trainer {
       round: Int): Array[Int] = {
     val n = weights.length
     if (n == 0 || (p.rateDrop == 0.0 && !p.oneDrop)) return Array.empty
-    val rng = new java.util.Random(mix(p.seed, round, 104729))
+    val rng = new java.util.Random(TaskFns.mix(p.seed, round, 104729))
     if (p.skipDrop > 0.0 && rng.nextDouble() < p.skipDrop)
       return Array.empty
     val dropped = ArrayBuffer[Int]()
@@ -2144,7 +2019,7 @@ object Trainer {
       }
       val bcTrees = sc.broadcast(roundTrees)
       val aggSize = offsets.last * 2
-      // buffer allocated in the task (see mergeHist)
+      // buffer allocated in the task (see TaskFns.mergeHist)
       val merged = grads.aggregate(null: Array[Double])(
         (acc0, blk) => {
           val acc = if (acc0 != null) acc0 else new Array[Double](aggSize)
@@ -2174,7 +2049,7 @@ object Trainer {
           }
           acc
         },
-        mergeHist)
+        TaskFns.mergeHist)
       val agg = if (merged != null) merged else new Array[Double](aggSize)
       bcTrees.destroy()
       ti = 0

@@ -1,0 +1,95 @@
+package graft.api
+
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.SparkTestBase
+import graft.data.DMatrixSpec
+import graft.learner.{Binner, TrainParams}
+
+/**
+ * The fixed cost of the boosting jobs:
+ *  - a round runs one histogram job per level plus ONE metric job for
+ *    all (loss, weight) metrics of its eval set;
+ *  - the materialized blocks reach the bin cuts only through a
+ *    broadcast, so no task binary carries a [[Binner.Bins]].
+ */
+class JobCostSpec extends SparkTestBase {
+
+  /** A parquet-backed learnable frame: the scan lineage a real input
+    * has. */
+  private def parquetFrame(n: Int, seed: Long) = {
+    val r = new java.util.Random(seed)
+    val data = Seq.fill(n) {
+      val x = Array.fill(6)(r.nextDouble())
+      val y = if (x(0) + x(1) * x(2) + 0.2 * r.nextGaussian() > 0.8) 1.0
+        else 0.0
+      (x(0), x(1), x(2), x(3), x(4), x(5), y)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("jobcost").toString +
+      "/data.parquet"
+    spark.createDataFrame(spark.sparkContext.parallelize(data, 4))
+      .toDF("a", "b", "c", "d", "e", "f", "y").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Job group of every job started while attached. */
+  private final class GroupLog extends SparkListener {
+    val group = new ConcurrentHashMap[Int, String]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      group.put(e.jobId, Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+        .getOrElse(""))
+    def trainJobs(): Int = {
+      var last = -1; var tries = 0
+      while (group.size != last && tries < 100) {
+        last = group.size; Thread.sleep(100); tries += 1
+      }
+      group.values.asScala.count(_.startsWith("graft-train-"))
+    }
+  }
+
+  test("a depth-3 round with two pointwise metrics runs depth + 1 jobs") {
+    val df = parquetFrame(4000, 7)
+    val depth = 3
+    val rounds = 3
+    val log = new GroupLog
+    spark.sparkContext.addSparkListener(log)
+    val res = try {
+      GraftBoost.train(df, DMatrixSpec("y"),
+        TrainParams(objective = "binary:logistic", numRounds = rounds,
+          maxDepth = depth, minChildWeight = 0.0,
+          evalMetric = Seq("logloss", "error"), seed = 3),
+        evals = Seq(("train", df)))
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(res.roundsCompleted === rounds)
+    // every level of every round splits: no level job is skipped
+    res.model.trees.foreach(t =>
+      assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
+    assert(log.trainJobs() === rounds * (depth + 1))
+  }
+
+  test("the materialized blocks reach no Binner.Bins") {
+    val df = parquetFrame(2000, 8)
+    val m = GraftBoost.materialize(df, DMatrixSpec("y"),
+      TrainParams(objective = "binary:logistic"))
+    try {
+      val found = scala.collection.mutable.ArrayBuffer[String]()
+      val out = new java.io.ObjectOutputStream(
+          java.io.OutputStream.nullOutputStream()) {
+        enableReplaceObject(true)
+        override protected def replaceObject(o: AnyRef): AnyRef = {
+          if (o.isInstanceOf[Binner.Bins]) found += o.getClass.getName
+          o
+        }
+      }
+      out.writeObject(m.blocks)
+      out.close()
+      assert(found.isEmpty,
+        s"${found.size} Binner.Bins reachable from the blocks' lineage")
+    } finally m.unpersist()
+  }
+}

@@ -7,8 +7,9 @@
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
 #   tools/precommit-check.sh --bench  # additionally run one short
-#                                     # boost_wide benchmark pass and
-#                                     # require its outputs correct
+#                                     # boost_wide benchmark pass,
+#                                     # require its outputs correct and,
+#                                     # at 4 threads, its model pinned
 #   tools/precommit-check.sh --dev    # additionally run the ChaosCheck
 #                                     # and SkewCheck goldens and one
 #                                     # PlanDump at sf0.001; each must
@@ -18,10 +19,19 @@
 # run in the order above. An unknown argument prints this usage and
 # exits 2 before anything runs.
 #
+# The benchmark stores model fingerprints per source digest, so its own
+# check accepts whatever model a source change produces. The --bench
+# step therefore pins the seed-1 boost_wide fingerprint below: an edit
+# that changes the model must update BOOST_WIDE_S1_PIN in the same
+# commit and say why in CHANGES.md. The pin holds for 4 threads (the
+# partition count); with another thread count the check is skipped.
+#
 # Exit 0 = safe to commit/snapshot. Anything else: fix or `git stash`
 # the in-flight hunk before snapshotting.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+BOOST_WIDE_S1_PIN="model=dfc7eca23b657c26b3125bb3;pred=40c3b4cf96571000"
 
 run_test=0 run_bench=0 run_dev=0
 for arg in "$@"; do
@@ -78,6 +88,26 @@ if (( run_bench )); then
     exit 1
   fi
   echo "[precommit] benchmark outputs correct."
+  if ! python3 - "$BOOST_WIDE_S1_PIN" \
+      perfbench/.work/report-boost_wide-s1-t0.json <<'PY'
+import json, sys
+pin, path = sys.argv[1], sys.argv[2]
+with open(path) as fh:
+    report = json.load(fh)
+if report["threads"] != 4:
+    print("[precommit] model pin skipped: the pin holds for 4 threads, "
+          "this run used %d" % report["threads"])
+    sys.exit(0)
+bad = [p["fingerprint"] for p in report["timed"] if p["fingerprint"] != pin]
+if bad:
+    print("[precommit] MODEL CHANGED: boost_wide seed 1 fingerprint %s, "
+          "pinned %s" % (bad[0], pin))
+    sys.exit(1)
+print("[precommit] model matches the pin (%d passes)." % len(report["timed"]))
+PY
+  then
+    exit 1
+  fi
 fi
 
 if (( run_dev )); then
