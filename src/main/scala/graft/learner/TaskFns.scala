@@ -26,7 +26,7 @@ private[learner] object TaskFns {
   final case class LevelChunk(
       trees: Array[RegTree],      // per round-tree; null = no work here
       slotOf: Array[Array[Int]],  // per round-tree: node → slot or -1
-      treeCls: Array[Int],        // tree → output class (gh index)
+      treeCls: Array[Int],        // tree → first output slot it reads
       treeSalts: Array[Int],      // tree → subsample salt
       featLists: Array[Array[Int]]) // global slot → sampled feature ids
 
@@ -68,11 +68,12 @@ private[learner] object TaskFns {
   val concatPartials: (Partials, Partials) => Partials = _ ++ _
 
   /** The histogram `seqOp` of one level chunk: each kept row routes down
-    * each chunk tree to its slot and adds its (g, h) to the slot's bins
-    * of the slot's sampled features. The buffer is allocated in the
-    * task on first use: a zero value would ride every task binary. */
+    * each chunk tree to its slot and adds its `w` (g, h) pairs, from the
+    * tree's first output slot on, to the slot's bins of the slot's
+    * sampled features. The buffer is allocated in the task on first
+    * use: a zero value would ride every task binary. */
   def histSeqOp(bc: Broadcast[LevelChunk], histSize: Int,
-      subsampleCut: Int, b: Int, fPerNode: Int)
+      subsampleCut: Int, b: Int, fPerNode: Int, w: Int)
       : (Array[Double], GradBlock) => Array[Double] = (acc0, blk) => {
     val acc = if (acc0 != null) acc0 else new Array[Double](histSize)
     val ch = bc.value
@@ -83,28 +84,30 @@ private[learner] object TaskFns {
     var i = 0
     while (i < blk.n) {
       val off = i * nf2
-      val salt = blk.salts(i)
       var t = 0
       while (t < ch.trees.length) {
         val pt = ch.trees(t)
         if (pt != null) {
           val keep = subsampleCut == Int.MaxValue ||
-            mixInt(salt, ch.treeSalts(t)) < subsampleCut
+            mixInt(blk.salts(i), ch.treeSalts(t)) < subsampleCut
           val slot =
             if (keep) ch.slotOf(t)(pt.leafBinned(rb, off, MissingBin))
             else -1
           if (slot >= 0) {
-            val cls = ch.treeCls(t)
-            val g = gh(i * 2 * k2 + 2 * cls)
-            val h = gh(i * 2 * k2 + 2 * cls + 1)
             val fl = ch.featLists(slot)
-            var j = 0
-            while (j < fl.length) {
-              val bi = rb(off + fl(j)) & 0xFF
-              val slotBin = if (bi == MissingBin) b - 1 else bi
-              val idx = ((slot * fPerNode + j) * b + slotBin) * 2
-              acc(idx) += g; acc(idx + 1) += h
-              j += 1
+            var c = 0
+            while (c < w) {
+              val g = gh(i * 2 * k2 + 2 * (ch.treeCls(t) + c))
+              val h = gh(i * 2 * k2 + 2 * (ch.treeCls(t) + c) + 1)
+              var j = 0
+              while (j < fl.length) {
+                val bi = rb(off + fl(j)) & 0xFF
+                val slotBin = if (bi == MissingBin) b - 1 else bi
+                val idx = (((slot * fPerNode + j) * b + slotBin) * w + c) * 2
+                acc(idx) += g; acc(idx + 1) += h
+                j += 1
+              }
+              c += 1
             }
           }
         }

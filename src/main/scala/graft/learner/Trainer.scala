@@ -309,19 +309,24 @@ final case class TrainResult(
  *    merges the partials in partition-index order, so a histogram is
  *    bit-reproducible however the tasks finish (the > 64 MiB tree merge
  *    keeps completion order).
+ *  - node-statistics width: every tree grows through `buildTrees`. A
+ *    histogram entry and a node's sums hold `w` (G, H) pairs: 1 for a
+ *    scalar tree, k for a vector-leaf tree of [[MultiOutput]]. A
+ *    candidate's gain sums the per-slot scores, so one level loop, split
+ *    scan and subtraction serve both.
  *  - histogram subtraction (xgboost/LightGBM hist): the driver keeps
  *    each evaluated node's histogram. When both children of a split
  *    are evaluated together, the job builds only the child with the
- *    smaller hessian sum (the left child on a tie); the driver derives
- *    its sibling as parent − built, per feature and bin. Below the root
- *    this halves the histogram bytes each level returns. A child is
- *    built directly instead when the parent's histogram was not kept
- *    (the kept total is held within maxHistBytes; depthwise keeps none
- *    for its last level), when its sampled features are not covered by
- *    both the parent's and its sibling's (colsample_bylevel/bynode,
- *    interaction constraints), or when it samples an optimal-partition
- *    categorical feature, whose present-codes test must never see a
- *    subtraction residue.
+ *    smaller hessian sum over its slots (the left child on a tie); the
+ *    driver derives its sibling as parent − built, per feature and bin.
+ *    Below the root this halves the histogram bytes each level returns.
+ *    A child is built directly instead when the parent's histogram was
+ *    not kept (the kept total is held within maxHistBytes; depthwise
+ *    keeps none for its last level), when its sampled features are not
+ *    covered by both the parent's and its sibling's (colsample_bylevel/
+ *    bynode, interaction constraints), or when it samples an
+ *    optimal-partition categorical feature, whose present-codes test
+ *    must never see a subtraction residue.
  *  - driver work is O(nodes × features × bins) per level — independent
  *    of row count; executors never see the model except via broadcast.
  *  - one tree walk: rows move down a tree only through
@@ -336,16 +341,19 @@ object Trainer {
   private val MissingBin = Binner.MissingBin
 
   /** An evaluated node's histogram, kept on the driver for deriving a
-    * child: (G, H) per (feature of `feats`, bin), the missing bin last. */
+    * child: `w` (G, H) pairs per (feature of `feats`, bin), the missing
+    * bin last. */
   private final class NodeHist(val feats: Array[Int], val h: Array[Double])
 
-  /** The best split of one node found so far (`f` = −1: none). For an
-    * optimal-partition split `codes` holds the feature's categories in
-    * scan order and `bin` the last index of the left prefix. */
-  private final class BestSplit {
+  /** The best split of one node found so far (`f` = −1: none), with the
+    * left child's (G, H) per output slot. For an optimal-partition split
+    * `codes` holds the feature's categories in scan order and `bin` the
+    * last index of the left prefix. */
+  private final class BestSplit(w: Int) {
     var gain = 0.0; var f = -1; var bin = -1
     var codes: Array[Int] = null
-    var defLeft = false; var gL = 0.0; var hL = 0.0
+    var defLeft = false
+    val gL = new Array[Double](w); val hL = new Array[Double](w)
   }
 
   /** Sum per-partition histograms of `histSize` doubles built by
@@ -372,7 +380,9 @@ object Trainer {
   }
 
   // ---- growable node storage while building one tree ----
-  private final class TreeBuilder {
+  // node statistics and values hold `w` entries per node (node-major):
+  // one per output slot of the tree's leaves
+  private final class TreeBuilder(w: Int) {
     val feature = ArrayBuffer[Int]()
     val thresholdBin = ArrayBuffer[Int]()
     val threshold = ArrayBuffer[Float]()
@@ -393,24 +403,41 @@ object Trainer {
     val path = ArrayBuffer[List[Int]]()
     val parent = ArrayBuffer[Int]()   // -1 at the root
 
-    def newNode(g: Double, h: Double,
+    def newNode(g: Array[Double], h: Array[Double],
         lo: Double = Double.NegativeInfinity,
         up: Double = Double.PositiveInfinity,
         pf: List[Int] = Nil, par: Int = -1): Int = {
       feature += -2; thresholdBin += -1; threshold += 0f
       catSplit += false; catBits += null
-      defaultLeft += false; left += -1; right += -1; value += 0f
-      sumG += g; sumH += h; gain += 0.0
+      defaultLeft += false; left += -1; right += -1
+      value ++= new Array[Float](w); sumG ++= g; sumH ++= h; gain += 0.0
       lower += lo; upper += up; path += pf; parent += par
       feature.length - 1
     }
 
-    def clamp(w: Double, i: Int): Double =
-      math.min(math.max(w, lower(i)), upper(i))
+    /** Node `i`'s hessian summed over its slots, in slot order. */
+    def hessSum(i: Int): Double = {
+      var s = 0.0
+      var c = 0
+      while (c < w) { s += sumH(i * w + c); c += 1 }
+      s
+    }
+
+    def clamp(v: Double, i: Int): Double =
+      math.min(math.max(v, lower(i)), upper(i))
+
+    private def setValue(i: Int, p: TrainParams): Unit = {
+      var c = 0
+      while (c < w) {
+        value(i * w + c) =
+          clamp(leafWeight(sumG(i * w + c), sumH(i * w + c), p), i).toFloat
+        c += 1
+      }
+    }
 
     def finalizeLeaf(i: Int, params: TrainParams): Unit = {
       feature(i) = -1
-      value(i) = clamp(leafWeight(sumG(i), sumH(i), params), i).toFloat
+      setValue(i, params)
     }
 
     def result(p: TrainParams): RegTree = {
@@ -421,21 +448,20 @@ object Trainer {
       // histogram, children exactly at split time).
       var i = 0
       while (i < feature.length) {
-        if (feature(i) >= 0 && !sumG(i).isNaN)
-          value(i) =
-            clamp(leafWeight(sumG(i), sumH(i), p), i).toFloat
+        if (feature(i) >= 0 && !sumG(i * w).isNaN) setValue(i, p)
         i += 1
       }
       snapshot()
     }
 
     /** The tree as grown so far; pending nodes keep feature −2, so a
-      * binned walk stops at the pending node a row reaches. */
+      * binned walk stops at the pending node a row reaches. Cover is the
+      * hessian through the node, averaged over the slots. */
     def snapshot(): RegTree =
       new RegTree(feature.toArray, thresholdBin.toArray,
         threshold.toArray, defaultLeft.toArray, left.toArray,
         right.toArray, value.toArray, gain.toArray.map(_.toFloat),
-        sumH.toArray.map(_.toFloat), // cover = hessian sum through node
+        Array.tabulate(feature.length)(i => (hessSum(i) / w).toFloat),
         if (catSplit.contains(true)) catSplit.toArray else Array.empty,
         if (catBits.exists(_ != null)) catBits.toArray else Array.empty)
   }
@@ -544,13 +570,14 @@ object Trainer {
 
   /** Driver-side per-tree growth state for one fused round. */
   private final class TreeState(val cls: Int, treeSeed: Long, nf: Int,
-      p: TrainParams) {
+      p: TrainParams, w: Int) {
     val rng = new java.util.Random(treeSeed)
     val treeSalt: Int = treeSeed.toInt ^ (treeSeed >>> 32).toInt
-    val tb = new TreeBuilder
+    val tb = new TreeBuilder(w)
     val treeFeats: Array[Int] = sampleFeatures(Array.range(0, nf),
       p.colsampleByTree, p.featureWeights, rng)
-    var active: Array[Int] = Array(tb.newNode(Double.NaN, Double.NaN))
+    var active: Array[Int] =
+      Array(tb.newNode(Array.fill(w)(Double.NaN), Array.fill(w)(Double.NaN)))
     // kept histograms of evaluated nodes, by node id
     val hists = scala.collection.mutable.HashMap[Int, NodeHist]()
   }
@@ -563,10 +590,18 @@ object Trainer {
    * forest size, instead of once per level PER TREE (K× / forest-size×
    * fewer passes for softmax / RF presets). Work is chunked so one
    * aggregation buffer stays under maxHistBytes.
+   *
+   * `width` is the node-statistics width: 1 for scalar trees, k for the
+   * vector-leaf trees of [[MultiOutput]]. Tree `t` reads the `width`
+   * gradient pairs from output slot `classes(t)` on; a candidate's gain
+   * sums the per-slot scores in slot order and `min_child_weight` tests
+   * the mean hessian across slots. A returned tree holds `width` values
+   * per node (node-major) and its cover is that mean hessian. Vector
+   * trees take none of the knobs [[MultiOutput.checkParams]] rejects.
    */
-  private def buildTrees(grads: RDD[GradBlock],
+  private[learner] def buildTrees(grads: RDD[GradBlock],
       bins: Binner.Bins, p: TrainParams, treeSeeds: Array[Long],
-      classes: Array[Int]): Array[RegTree] = {
+      classes: Array[Int], width: Int = 1): Array[RegTree] = {
     // per-tree deterministic row subsample threshold on the row salt
     val subsampleCut: Int =
       if (p.subsample >= 1.0) Int.MaxValue
@@ -574,8 +609,10 @@ object Trainer {
     val sc = grads.sparkContext
     val b = bins.maxRealBins + 1 // last slot = missing
     val nf = bins.numFeatures
+    val w = width
+    val binW = 2 * w  // doubles per histogram bin
     val states = Array.tabulate(treeSeeds.length)(i =>
-      new TreeState(classes(i), treeSeeds(i), nf, p))
+      new TreeState(classes(i), treeSeeds(i), nf, p, w))
     val treeSalts = states.map(_.treeSalt)
     val treeCls = states.map(_.cls)
 
@@ -595,7 +632,7 @@ object Trainer {
       * is non-null for optimal-partition categorical splits: the codes
       * routing left, sorted ascending. */
     case class SplitDesc(gain: Double, f: Int, bin: Int, cat: Boolean,
-        defLeft: Boolean, gL: Double, hL: Double,
+        defLeft: Boolean, gL: Array[Double], hL: Array[Double],
         catSet: Array[Int] = null)
 
     /** An optimal-partition categorical feature: its present-codes test
@@ -619,85 +656,153 @@ object Trainer {
       * The built child's histogram starts at `off` of `built`. */
     def derive(par: NodeHist, builtFeats: Array[Int],
         built: Array[Double], off: Int, fl: Array[Int]): Array[Double] = {
-      val w = b * 2
-      val out = new Array[Double](fl.length * w)
+      val fw = b * binW
+      val out = new Array[Double](fl.length * fw)
       var j = 0
       while (j < fl.length) {
-        val pb = java.util.Arrays.binarySearch(par.feats, fl(j)) * w
-        val bb = off + java.util.Arrays.binarySearch(builtFeats, fl(j)) * w
+        val pb = java.util.Arrays.binarySearch(par.feats, fl(j)) * fw
+        val bb = off + java.util.Arrays.binarySearch(builtFeats, fl(j)) * fw
         var x = 0
-        while (x < w) { out(j * w + x) = par.h(pb + x) - built(bb + x); x += 1 }
+        while (x < fw) { out(j * fw + x) = par.h(pb + x) - built(bb + x); x += 1 }
         j += 1
       }
       out
     }
 
+    val allBins = Array.range(0, b)
+    // findSplit's partial sums over the slots before the last, per
+    // candidate x of one feature (see `scan`), and the left child's
+    // (G, H) at each of those slots c (at x·w + c)
+    val candH = new Array[Double](2 * b)
+    val candL = new Array[Double](2 * b)
+    val candR = new Array[Double](2 * b)
+    val candGs = new Array[Double](2 * b * w)
+    val candHs = new Array[Double](2 * b * w)
+
     /** Best split of node `nid` of tree `t` over its features `fl`, from
       * the histogram at `off` of `hist` (feature j's bins at
-      * `off + j·b·2`); sets a root's stats; null = no admissible split. */
+      * `off + j·b·2w`, slot c of a bin at +2c); sets a root's stats;
+      * null = no admissible split. */
     def findSplit(t: Int, nid: Int, fl: Array[Int], hist: Array[Double],
         off: Int): SplitDesc = {
       val tb = states(t).tb
-      // node totals from feature 0's column (all bins + missing)
-      if (tb.sumG(nid).isNaN) {
-        var g = 0.0; var h = 0.0
-        var bi = 0
-        while (bi < b) {
-          g += hist(off + bi * 2); h += hist(off + bi * 2 + 1); bi += 1
+      // node totals per slot from feature 0's column (all bins + missing)
+      if (tb.sumG(nid * w).isNaN) {
+        var c = 0
+        while (c < w) {
+          var g = 0.0; var h = 0.0
+          var bi = 0
+          while (bi < b) {
+            g += hist(off + bi * binW + 2 * c)
+            h += hist(off + bi * binW + 2 * c + 1)
+            bi += 1
+          }
+          tb.sumG(nid * w + c) = g; tb.sumH(nid * w + c) = h
+          c += 1
         }
-        tb.sumG(nid) = g; tb.sumH(nid) = h
       }
-      val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
-      val parentScore = score(gTot, hTot, p)
-      val best = new BestSplit
+      val gTot = Array.tabulate(w)(c => tb.sumG(nid * w + c))
+      val hTot = Array.tabulate(w)(c => tb.sumH(nid * w + c))
+      // the node's score summed over slots, and its mean hessian
+      val (parentScore, hNode) = {
+        var ps = 0.0; var h = 0.0
+        var c = 0
+        while (c < w) {
+          ps += score(gTot(c), hTot(c), p); h += hTot(c); c += 1
+        }
+        (ps, h / w)
+      }
+      val best = new BestSplit(w)
       val mc = p.monotoneConstraints
-      // a candidate split on a constrained feature must order its
-      // child weights in the constraint's direction
+      // a candidate on a constrained feature must order its child
+      // weights in the constraint's direction (scalar trees only: the
+      // left child is (gL, hL))
       def monotoneOk(f: Int, gL: Double, hL: Double): Boolean = {
         val c = if (f < mc.length) mc(f) else 0
         if (c == 0) true
         else {
           val wl = leafWeight(gL, hL, p)
-          val wr = leafWeight(gTot - gL, hTot - hL, p)
+          val wr = leafWeight(gTot(0) - gL, hTot(0) - hL, p)
           if (c > 0) wl <= wr else wl >= wr
         }
       }
-      // the one candidate test: left child (gL, hL), the missing bin on
-      // the `defLeft` side
-      def consider(f: Int, bin: Int, codes: Array[Int], gL: Double,
-          hL: Double, defLeft: Boolean): Unit =
-        if (hL >= p.minChildWeight && hTot - hL >= p.minChildWeight) {
-          val gain = 0.5 * (score(gL, hL, p) +
-            score(gTot - gL, hTot - hL, p) - parentScore) - p.gamma
+      // the sum over the slots before this one (0.0 at the first), and
+      // the sums through this slot of a candidate x
+      def part(a: Array[Double], x: Int, first: Boolean): Double =
+        if (first) 0.0 else a(x)
+      def add(x: Int, c: Int, gL: Double, hL: Double, gT: Double,
+          hT: Double): Unit = {
+        val first = c == 0
+        candGs(x * w + c) = gL; candHs(x * w + c) = hL
+        candH(x) = part(candH, x, first) + hL
+        candL(x) = part(candL, x, first) + score(gL, hL, p)
+        candR(x) = part(candR, x, first) + score(gT - gL, hT - hL, p)
+      }
+      // the one candidate test: candidate x, given the last slot's left
+      // child (gL, hL) and totals (gT, hT)
+      def consider(f: Int, bin: Int, codes: Array[Int], x: Int,
+          first: Boolean, gL: Double, hL: Double, gT: Double, hT: Double)
+          : Unit = {
+        val hSum = part(candH, x, first) + hL
+        // x / 1 == x: a scalar tree skips the division
+        val hMean = if (w == 1) hSum else hSum / w
+        if (hMean >= p.minChildWeight && hNode - hMean >= p.minChildWeight) {
+          val gain = 0.5 * (part(candL, x, first) + score(gL, hL, p) +
+            (part(candR, x, first) + score(gT - gL, hT - hL, p)) -
+            parentScore) - p.gamma
           if (gain > best.gain + 1e-12 && monotoneOk(f, gL, hL)) {
             best.gain = gain; best.f = f; best.bin = bin; best.codes = codes
-            best.defLeft = defLeft; best.gL = gL; best.hL = hL
+            best.defLeft = x % 2 == 0
+            System.arraycopy(candGs, x * w, best.gL, 0, w - 1)
+            System.arraycopy(candHs, x * w, best.hL, 0, w - 1)
+            best.gL(w - 1) = gL; best.hL(w - 1) = hL
           }
         }
-      // left child (gl, hl) without the missing bin: missing rides
-      // left, then right
-      def offer(f: Int, bin: Int, codes: Array[Int], gl: Double,
-          hl: Double, gMiss: Double, hMiss: Double): Unit = {
-        consider(f, bin, codes, gl + gMiss, hl + hMiss, defLeft = true)
-        consider(f, bin, codes, gl, hl, defLeft = false)
+      }
+      // Candidate i's left child, without the missing bin, is the prefix
+      // order(0..i) of feature position j's bins, or bin order(i) alone
+      // (one-hot). The missing bin rides left (x = 2i), then right
+      // (2i + 1). The left hessian and score and the right score sum over
+      // the slots in slot order: the slots before the last leave their
+      // partial sums in candH/candL/candR, the last slot tests.
+      def scan(f: Int, j: Int, order: Array[Int], n: Int, prefix: Boolean,
+          codes: Array[Int]): Unit = {
+        val base = off + j * b * binW
+        val miss = base + (b - 1) * binW
+        var c = 0
+        while (c < w) {
+          val first = c == 0
+          val gT = gTot(c); val hT = hTot(c)
+          val gMiss = hist(miss + 2 * c); val hMiss = hist(miss + 2 * c + 1)
+          var g = 0.0; var h = 0.0
+          var i = 0
+          while (i < n) {
+            val at = base + order(i) * binW + 2 * c
+            if (prefix) { g += hist(at); h += hist(at + 1) }
+            else { g = hist(at); h = hist(at + 1) }
+            if (c < w - 1) {
+              add(2 * i, c, g + gMiss, h + hMiss, gT, hT)
+              add(2 * i + 1, c, g, h, gT, hT)
+            } else {
+              consider(f, i, codes, 2 * i, first, g + gMiss, h + hMiss,
+                gT, hT)
+              consider(f, i, codes, 2 * i + 1, first, g, h, gT, hT)
+            }
+            i += 1
+          }
+          c += 1
+        }
       }
       var j = 0
       while (j < fl.length) {
         val f = fl(j)
-        val base = off + j * b * 2
-        val gMiss = hist(base + (b - 1) * 2)
-        val hMiss = hist(base + (b - 1) * 2 + 1)
+        val base = off + j * b * binW
         val nb = bins.numBins(f)
         if (bins.isCat(f) && nb < p.maxCatToOnehot) {
           // one-hot categorical candidates: left = {code c}
           // (matrix.py:142,159,800 enable_categorical). Same O(bins)
-          // cost as the numeric scan — gl/hl read one bin, not a prefix.
-          var c = 0
-          while (c < nb) {
-            offer(f, c, null, hist(base + c * 2), hist(base + c * 2 + 1),
-              gMiss, hMiss)
-            c += 1
-          }
+          // cost as the numeric scan — one bin, not a prefix.
+          scan(f, j, allBins, nb, prefix = false, null)
         } else if (bins.isCat(f)) {
           // optimal-partition categorical (xgboost max_cat_to_onehot
           // overflow): categories present at this node sorted by
@@ -706,33 +811,21 @@ object Trainer {
           // shape to the numeric one — candidate left set = the first
           // ci+1 sorted categories. Deterministic: ties sort by code.
           // Codes absent here (empty bins) join NEITHER side and route
-          // right at inference, like unseen categories.
+          // right at inference, like unseen categories. Scalar trees
+          // only: vector trees take no categorical features.
           val codes = (0 until nb).filter { c =>
-            hist(base + c * 2) != 0.0 || hist(base + c * 2 + 1) != 0.0
+            hist(base + c * binW) != 0.0 || hist(base + c * binW + 1) != 0.0
           }.toArray
           if (codes.length >= 2) {
             val sorted = codes.sortBy { c =>
-              val g = hist(base + c * 2)
-              val h = hist(base + c * 2 + 1)
+              val g = hist(base + c * binW)
+              val h = hist(base + c * binW + 1)
               (g / math.max(h, 1e-16), c)
             }
-            var gl = 0.0; var hl = 0.0
-            var ci = 0
-            while (ci < sorted.length - 1) {
-              val c = sorted(ci)
-              gl += hist(base + c * 2); hl += hist(base + c * 2 + 1)
-              offer(f, ci, sorted, gl, hl, gMiss, hMiss)
-              ci += 1
-            }
+            scan(f, j, sorted, sorted.length - 1, prefix = true, sorted)
           }
         } else {
-          var gl = 0.0; var hl = 0.0
-          var bi = 0
-          while (bi < nb - 1) {
-            gl += hist(base + bi * 2); hl += hist(base + bi * 2 + 1)
-            offer(f, bi, null, gl, hl, gMiss, hMiss)
-            bi += 1
-          }
+          scan(f, j, allBins, nb - 1, prefix = true, null)
         }
         j += 1
       }
@@ -785,7 +878,8 @@ object Trainer {
         if (par >= 0 && tb.left(par) == l) {
           val r = tb.right(par)
           for (j <- itemOf.get((t, r)); ph <- states(t).hists.get(par)) {
-            val (bi, di) = if (tb.sumH(r) < tb.sumH(l)) (j, i) else (i, j)
+            val (bi, di) =
+              if (tb.hessSum(r) < tb.hessSum(l)) (j, i) else (i, j)
             val df = work(di)._3
             if (covers(ph.feats, df) && covers(work(bi)._3, df) &&
                 !df.exists(partitionCat)) {
@@ -796,7 +890,7 @@ object Trainer {
       }
       val build = work.indices.filterNot(derived)
       val fPerNode = build.map(work(_)._3.length).max
-      val bytesPerNode = fPerNode.toLong * b * 2 * 8
+      val bytesPerNode = fPerNode.toLong * b * binW * 8
       val chunkSize = math.max(1, (p.maxHistBytes / bytesPerNode).toInt)
       build.grouped(chunkSize).foreach { chunk =>
         // per-tree node→global-slot maps for this chunk
@@ -810,16 +904,16 @@ object Trainer {
         }.toArray
         val bc = sc.broadcast(TaskFns.LevelChunk(chunkTrees, slotOf,
           treeCls, treeSalts, chunk.map(work(_)._3).toArray))
-        val histSize = chunk.length * fPerNode * b * 2
+        val histSize = chunk.length * fPerNode * b * binW
         val hist = aggregateHist(grads, histSize)(
-          TaskFns.histSeqOp(bc, histSize, subsampleCut, b, fPerNode))
+          TaskFns.histSeqOp(bc, histSize, subsampleCut, b, fPerNode, w))
         bc.destroy()
 
         // driver-side split finding per built node, then per sibling
         // derived from it
         chunk.zipWithIndex.foreach { case (i, s) =>
           val (t, nid, fl) = work(i)
-          val off = s * fPerNode * b * 2
+          val off = s * fPerNode * b * binW
           out(i) = findSplit(t, nid, fl, hist, off)
           val d = derivedFrom(i)
           if (d >= 0) {
@@ -833,7 +927,8 @@ object Trainer {
           }
           if (keepHists && out(i) != null)
             keepHist(t, nid, new NodeHist(fl,
-              java.util.Arrays.copyOfRange(hist, off, off + fl.length * b * 2)))
+              java.util.Arrays.copyOfRange(hist, off,
+                off + fl.length * b * binW)))
         }
       }
       out
@@ -843,7 +938,8 @@ object Trainer {
       * descriptor), propagate constraint bounds/paths, return (l, r). */
     def applySplit(t: Int, nid: Int, d: SplitDesc): (Int, Int) = {
       val tb = states(t).tb
-      val gTot = tb.sumG(nid); val hTot = tb.sumH(nid)
+      val gR = Array.tabulate(w)(c => tb.sumG(nid * w + c) - d.gL(c))
+      val hR = Array.tabulate(w)(c => tb.sumH(nid * w + c) - d.hL(c))
       // child bounds: inherit the parent's; a split on a
       // constrained feature additionally pins the children on
       // either side of the clamped child-weight midpoint, which
@@ -854,9 +950,8 @@ object Trainer {
       val mc = p.monotoneConstraints
       val cBest = if (d.f < mc.length) mc(d.f) else 0
       if (cBest != 0) {
-        val wl = tb.clamp(leafWeight(d.gL, d.hL, p), nid)
-        val wr = tb.clamp(
-          leafWeight(gTot - d.gL, hTot - d.hL, p), nid)
+        val wl = tb.clamp(leafWeight(d.gL(0), d.hL(0), p), nid)
+        val wr = tb.clamp(leafWeight(gR(0), hR(0), p), nid)
         val mid = (wl + wr) / 2
         if (cBest > 0) { lUp = math.min(lUp, mid)
           rLo = math.max(rLo, mid) }
@@ -867,7 +962,7 @@ object Trainer {
         if (p.interactionConstraints.isEmpty) Nil
         else d.f :: tb.path(nid)
       val l = tb.newNode(d.gL, d.hL, lLo, lUp, childPath, nid)
-      val r = tb.newNode(gTot - d.gL, hTot - d.hL, rLo, rUp, childPath, nid)
+      val r = tb.newNode(gR, hR, rLo, rUp, childPath, nid)
       tb.gain(nid) = d.gain
       tb.feature(nid) = d.f
       tb.thresholdBin(nid) = d.bin

@@ -8,6 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkTestBase
 import graft.data.DMatrixSpec
+import org.apache.spark.sql.functions.col
 import graft.learner.{Binner, TrainParams}
 
 /**
@@ -70,6 +71,27 @@ class JobCostSpec extends SparkTestBase {
     res.model.trees.foreach(t =>
       assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
     assert(log.trainJobs() === rounds * (depth + 1))
+  }
+
+  test("a depth-3 multi-output round runs depth jobs: the margin " +
+      "advance rides the next round's first histogram job") {
+    val df = parquetFrame(4000, 9)
+      .withColumn("y2", col("a") - col("b"))
+      .withColumn("y3", col("c") * col("d"))
+    val depth = 3
+    val rounds = 3
+    val log = new GroupLog
+    spark.sparkContext.addSparkListener(log)
+    val m = try {
+      GraftBoost.trainMultiOutput(df,
+        DMatrixSpec(labelCol = Seq("y", "y2", "y3")),
+        TrainParams(numRounds = rounds, maxDepth = depth,
+          minChildWeight = 0.0, seed = 4))
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(m.k === 3 && m.trees.length === rounds)
+    m.trees.foreach(t =>
+      assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
+    assert(log.trainJobs() === rounds * depth)
   }
 
   test("the materialized blocks reach no Binner.Bins") {

@@ -11,6 +11,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import graft.SparkTestBase
 import graft.api.GraftBoost
 import graft.data.DMatrixSpec
+import org.apache.spark.sql.functions.{hash, lit, pmod, when}
 
 /**
  * Histogram subtraction in `Trainer.buildTrees`: one child of a split is
@@ -28,6 +29,11 @@ import graft.data.DMatrixSpec
  *      a direct build of every frontier node returns.
  *  (c) Histogram jobs keep their `aggregate at Trainer.scala` call site,
  *      by which job-level tooling attributes them.
+ *
+ * Vector-leaf trees (`multi_output_tree`) grow through the same builder,
+ * so each property has a k-target twin: absolute [[MultiOutput.MoTree]]
+ * fingerprints captured from the direct-build vector grower, and the
+ * same byte bound at 16·k bytes per bin.
  */
 class HistSubtractionSpec extends SparkTestBase {
   import spark.implicits._
@@ -95,6 +101,73 @@ class HistSubtractionSpec extends SparkTestBase {
     val cols = names.indices.map(i => $"x".getItem(i).as(names(i))) ++
       (if (cat) Seq($"c") else Nil) :+ $"y"
     df.select(cols: _*)
+  }
+
+  /** SHA-256 over every [[MultiOutput.MoTree]] array bit-exact (the
+    * [[RepresentationGoldenSpec]] multi-output serialization). */
+  private def moFingerprint(m: MultiOutput.MultiOutputModel): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(
+        java.io.OutputStream.nullOutputStream(), md))
+    m.trees.foreach { t =>
+      buf.writeInt(t.k)
+      t.feature.foreach(buf.writeInt)
+      t.thresholdBin.foreach(buf.writeInt)
+      t.threshold.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.defaultLeft.foreach(buf.writeBoolean)
+      t.left.foreach(buf.writeInt); t.right.foreach(buf.writeInt)
+      t.values.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.gain.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+      t.cover.foreach(v => buf.writeInt(JF.floatToIntBits(v)))
+    }
+    buf.flush()
+    md.digest().map("%02x".format(_)).mkString.take(32)
+  }
+
+  /** [[wideDf]]'s regression frame over its first `nf` features with
+    * three targets derived from the score: a k = 3 vector-leaf input. */
+  private def moDf(n: Int, seed: Int, nf: Int = Wide) =
+    wideDf(n, seed, k = 0).select(
+      (0 until nf).map(i => $"f$i") ++ Seq($"y".as("y1"),
+        ($"y" * $"f8").as("y2"), ($"f9" - $"y").as("y3")): _*)
+
+  private val moSpec = DMatrixSpec(labelCol = Seq("y1", "y2", "y3"))
+
+  test("(a) multi-output k=3 depth 6 over 20 features is bit-identical") {
+    val m = GraftBoost.trainMultiOutput(moDf(1600, 31), moSpec,
+      TrainParams(numRounds = 3, maxDepth = 6, seed = 31))
+    assert(m.k === 3)
+    assert(moFingerprint(m) === "ad4439f48458507f65824f3f1d8ad569")
+  }
+
+  test("(a) multi-output binary:logistic k=2 with missing values is " +
+      "bit-identical") {
+    // 10% of f1 missing, picked by value hash (partition-invariant)
+    val df = wideDf(1600, 32).select(
+      (0 until Wide).map { i =>
+        if (i == 1)
+          when(pmod(hash($"f1"), lit(10)) === 0, lit(Double.NaN))
+            .otherwise($"f1").as("f1")
+        else $"f$i"
+      } ++ Seq($"y".as("y1"),
+        when($"f8" + $"f9" > 1.0, 1.0).otherwise(0.0).as("y2")): _*)
+    val m = GraftBoost.trainMultiOutput(df,
+      DMatrixSpec(labelCol = Seq("y1", "y2")),
+      TrainParams(objective = "binary:logistic", numRounds = 3,
+        maxDepth = 5, seed = 32))
+    assert(m.k === 2)
+    assert(moFingerprint(m) === "2d2a8dcfb5eb635ee5e3ed23f5698b8e")
+  }
+
+  test("(a) multi-output chunked jobs past the kept-histogram budget " +
+      "(maxHistBytes = 16 KiB) are bit-identical") {
+    // 5 features × 33 bins × 3 targets: two nodes per job, and the kept
+    // histograms fill the budget, so some pairs fall back to direct builds
+    val m = GraftBoost.trainMultiOutput(moDf(1600, 33, nf = 5), moSpec,
+      TrainParams(numRounds = 2, maxDepth = 5, maxBins = 32,
+        maxHistBytes = 16L << 10, seed = 33))
+    assert(moFingerprint(m) === "62df96c7cf4d28383c9eecbe6e9f140b")
   }
 
   private val catSpec = DMatrixSpec(labelCol = Seq("y"),
@@ -241,5 +314,43 @@ class HistSubtractionSpec extends SparkTestBase {
     assert(allBytes <= 0.55 * direct,
       s"round result bytes $allBytes vs direct build $direct " +
         s"($nodes nodes × $Wide features × $bins bins × 16 B × $parts)")
+  }
+
+  test("(b)+(c) a depth-6 k=3 vector-leaf round returns at most 55% of " +
+      "the direct build's result bytes, from aggregate-at-Trainer jobs") {
+    val k = 3
+    val df = moDf(4000, 21).cache()
+    df.count()
+    val parts = df.rdd.getNumPartitions
+    val log = new JobLog
+    spark.sparkContext.addSparkListener(log)
+    val m = try {
+      GraftBoost.trainMultiOutput(df, moSpec,
+        TrainParams(numRounds = 1, maxDepth = 6, minChildWeight = 0.0,
+          seed = 21))
+    } finally spark.sparkContext.removeSparkListener(log)
+    val jobs = log.trainJobs()
+    df.unpersist()
+
+    val t = m.trees.head
+    def evaluated(i: Int, d: Int): Int =
+      if (d >= 6) 0
+      else if (t.feature(i) < 0) 1
+      else 1 + evaluated(t.left(i), d + 1) + evaluated(t.right(i), d + 1)
+    val nodes = evaluated(0, 0)
+    assert(nodes > 40, s"the depth-6 tree is too sparse: $nodes nodes")
+    val bins = 256 + 1
+    val direct = nodes.toLong * Wide * bins * 16L * k * parts
+
+    val hist = jobs.filter(j => HistCallSite.findPrefixOf(log.name.get(j))
+      .isDefined)
+    assert(hist.length === 6, jobs.map(log.name.get))
+    hist.foreach(j => assert(log.tasks.get(j).get === parts))
+    val allBytes = jobs.map(log.resultBytes.get(_).get).sum
+    info(f"result bytes $allBytes = ${allBytes.toDouble / direct}%.3f of " +
+      s"the direct build's $direct")
+    assert(allBytes <= 0.55 * direct,
+      s"round result bytes $allBytes vs direct build $direct " +
+        s"($nodes nodes × $Wide features × $bins bins × 16·$k B × $parts)")
   }
 }

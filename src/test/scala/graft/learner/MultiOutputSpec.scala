@@ -220,5 +220,14 @@ class MultiOutputSpec extends SparkTestBase {
         TrainParams(numRounds = 1, etaSchedule = Some(_ => 0.1), seed = 1))
     }
     assert(e4.getMessage.contains("eta_schedule"))
+    // the adaptive leaf refresh of the L1 family has no vector form
+    Seq(TrainParams(objective = "reg:absoluteerror", numRounds = 1),
+      TrainParams(objective = "reg:quantileerror", quantileAlpha = 0.3,
+        numRounds = 1)).foreach { p =>
+      val e5 = intercept[IllegalArgumentException] {
+        GraftBoost.trainMultiOutput(df, spec, p)
+      }
+      assert(e5.getMessage.contains("not supported"), p.objective)
+    }
   }
 }

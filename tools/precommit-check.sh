@@ -3,7 +3,8 @@
 # a commit or an end-of-round snapshot. Run before any commit of source
 # changes; the round checklist ends with this script.
 #
-#   tools/precommit-check.sh          # compile main + tests (~20 s warm)
+#   tools/precommit-check.sh          # one-grower check, then compile
+#                                     # main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
 #   tools/precommit-check.sh --bench  # additionally run one short
@@ -45,6 +46,17 @@ for arg in "$@"; do
       exit 2 ;;
   esac
 done
+
+# One tree grower: every tree grows through Trainer.buildTrees, so no
+# other main source may run its own histogram aggregation.
+growers="$(grep -rl --include='*.scala' 'aggregateHist(' src/main |
+  grep -v '/Trainer\.scala$' || true)"
+if [[ -n "$growers" ]]; then
+  echo "[precommit] SECOND TREE GROWER: only Trainer.scala may call" \
+    "aggregateHist( — grow trees through Trainer.buildTrees instead:"
+  echo "$growers"
+  exit 1
+fi
 
 echo "[precommit] sbt Test/compile ..."
 if ! sbt -batch "Test/compile" >/tmp/precommit-compile.log 2>&1; then
