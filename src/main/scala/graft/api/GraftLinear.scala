@@ -237,21 +237,11 @@ object GraftLinear {
     spec.validate(df, requireLabel = true)
     val k = math.max(obj.numOutputs, 1)
     val customByName = params.customMetrics.map(m => m.name -> m).toMap
-    val metricNames = {
-      val base =
-        if (params.evalMetric.nonEmpty) params.evalMetric
-        else if (params.customMetrics.nonEmpty) Nil
-        else Seq(Metrics.defaultMetric(obj.name, params))
-      base ++ params.customMetrics.map(_.name).filterNot(base.contains)
-    }
+    val metricNames = Metrics.resolveNames(params, obj.name)
     metricNames.foreach(mn => require(
       customByName.contains(mn) || !Metrics.isGroupMetric(mn),
       s"$mn needs a rank:* objective; gblinear is pointwise"))
-    // duplicate names would collapse into one history entry and
-    // interleave two metric series — early stopping (which reads the
-    // last set's last value) would then compare alternating datasets
-    require(evals.map(_._1).distinct.size == evals.size,
-      s"duplicate eval set names: ${evals.map(_._1).mkString(", ")}")
+    Metrics.requireDistinctEvalNames(evals.map(_._1))
     val evalRows = evals.map { case (n, e) =>
       spec.validate(e, requireLabel = true)
       (n, pack(GraftBoost.prepare(e, spec, obj, numWorkers))
@@ -288,8 +278,7 @@ object GraftLinear {
       val bias = initModel.map(_.bias.clone())
         .getOrElse(new Array[Float](k))
       val stride = 2 * d + 2 // per-class accumulator block
-      var bestScore = Double.NaN
-      var bestRound = -1
+      val early = new Metrics.EarlyStop(params, metricNames)
       var stop = false
       var round = 0
       while (round < params.numRounds && !stop) {
@@ -405,18 +394,7 @@ object GraftLinear {
             } finally cached.foreach(_.unpersist(blocking = false))
           }
           bcE.destroy()
-          // early stopping on the LAST eval set + LAST metric (the
-          // xgboost rule, same as the tree trainer)
-          if (params.earlyStoppingRounds > 0) {
-            val cur = evalsResult(evalRows.last._1)(metricNames.last).last
-            val better = bestScore.isNaN ||
-              (if (Metrics.maximize(metricNames.last, customByName))
-                cur > bestScore
-              else cur < bestScore)
-            if (better) { bestScore = cur; bestRound = round }
-            else if (round - bestRound >= params.earlyStoppingRounds)
-              stop = true
-          }
+          if (early.update(round, evalsResult)) stop = true
         }
         round += 1
       }
@@ -434,10 +412,7 @@ object GraftLinear {
       LinearTrainResult(
         LinearModel(weights, bias, obj.name, params.baseScore, fNames),
         evalsResult.toMap,
-        bestIteration =
-          if (params.earlyStoppingRounds > 0) bestRound else -1,
-        bestScore =
-          if (params.earlyStoppingRounds > 0) bestScore else Double.NaN)
+        bestIteration = early.bestIteration, bestScore = early.bestScore)
     } finally {
       rows.unpersist(blocking = false)
       evalRows.foreach(_._2.unpersist(blocking = false))

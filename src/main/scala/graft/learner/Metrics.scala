@@ -323,6 +323,50 @@ object Metrics {
       .getOrElse(name == "auc" || name == "aucpr" ||
         name == "interval-regression-accuracy" || isGroupMetric(name))
 
+  /** The metrics a booster evaluates per eval set, in history order:
+    * `evalMetric`, or the objective's default when neither it nor a
+    * custom metric is set, then every custom metric not named yet. */
+  def resolveNames(p: TrainParams, objective: String): Seq[String] = {
+    val base =
+      if (p.evalMetric.nonEmpty) p.evalMetric
+      else if (p.customMetrics.nonEmpty) Nil
+      else Seq(defaultMetric(objective, p))
+    base ++ p.customMetrics.map(_.name).filterNot(base.contains)
+  }
+
+  /** Duplicate eval set names would collapse into one history entry and
+    * interleave two metric series — early stopping (which reads the last
+    * set's last value) would then compare alternating datasets. */
+  def requireDistinctEvalNames(names: Seq[String]): Unit =
+    require(names.distinct.size == names.size,
+      s"duplicate eval set names: ${names.mkString(", ")}")
+
+  /** xgboost's early-stopping rule, shared by the tree and linear
+    * boosters: watch the LAST eval set's LAST metric and stop once
+    * `earlyStoppingRounds` rounds pass without beating its best value
+    * (off when <= 0: never stops, reports no best). */
+  final class EarlyStop(p: TrainParams, names: Seq[String]) {
+    private val rounds = p.earlyStoppingRounds
+    private val larger =
+      maximize(names.last, p.customMetrics.map(m => m.name -> m).toMap)
+    private var best = Double.NaN
+    private var bestRound = -1
+
+    /** Records `round` of `history` (eval set → metric → values, in
+      * eval-set order); true when training should stop. */
+    def update(round: Int, history: collection.Map[String,
+        collection.Map[String, collection.Seq[Double]]]): Boolean =
+      rounds > 0 && history.nonEmpty && {
+        val cur = history.last._2(names.last).last
+        val better = best.isNaN || (if (larger) cur > best else cur < best)
+        if (better) { best = cur; bestRound = round }
+        !better && round - bestRound >= rounds
+      }
+
+    def bestIteration: Int = if (rounds > 0) bestRound else -1
+    def bestScore: Double = if (rounds > 0) best else Double.NaN
+  }
+
   /** True for per-query-group ranking metrics: ndcg[@k], map[@k]
     * (NOT mape, which is pointwise). */
   def isGroupMetric(name: String): Boolean =

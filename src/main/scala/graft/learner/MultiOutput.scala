@@ -189,10 +189,10 @@ object MultiOutput {
   /**
    * Boost `numRounds` vector-leaf trees over cached [[MoBlock]]s. Each
    * round grows one tree of width `k` through [[Trainer.buildTrees]].
-   * The caller owns `blocks0`'s persistence; the margin generations are
-   * persisted and released here by the [[Trainer.boost]] rule: a
+   * The caller owns `blocks0`'s persistence; the rounds run in a
+   * [[RunLifetime]] under the [[Trainer.boost]] ownership rule: a margin
    * generation is computed inside the next round's first histogram job
-   * and its predecessor is released once that round's tree is built.
+   * and released once that round's tree is built.
    */
   def boost(blocks0: RDD[MoBlock], bins: Binner.Bins,
       p: TrainParams, k: Int): Seq[MoTree] = {
@@ -200,69 +200,59 @@ object MultiOutput {
     checkSupported(p, obj, bins)
     require(k >= 2, s"multi_output_tree needs >= 2 targets, got $k")
     val sc = blocks0.sparkContext
-    val trees = ArrayBuffer[MoTree]()
-    // margin-advance broadcasts stay alive until boosting ends: a
-    // persisted generation's LINEAGE closure still references its
-    // broadcast, and Spark serializes the full task binary (closure
-    // included) even for cache hits — destroying early throws
-    // INTERNAL_ERROR_BROADCAST on the next round's job (the same
-    // deferred-destroy discipline as Trainer.boost's `broadcasts`)
-    val bcs = ArrayBuffer[org.apache.spark.broadcast.Broadcast[MoTree]]()
-    var cur = blocks0
-    var prev: Option[RDD[MoBlock]] = None
-    sc.setJobGroup(s"graft-train-${java.util.UUID.randomUUID()}",
-      "graft multi-output boosting rounds")
-    try {
-      var round = 0
-      while (round < p.numRounds) {
-        val rt = Trainer.buildTrees(gradients(cur, obj, k), bins, p,
-          Array(p.seed), Array(0), width = k).head
-        val tree = new MoTree(rt.feature, rt.thresholdBin, rt.threshold,
-          rt.defaultLeft, rt.left, rt.right, rt.value, rt.gain, rt.cover, k)
-        trees += tree
-        // the build above materialized `cur` over the previous generation
-        prev.foreach(_.unpersist(blocking = false))
-        prev = None
-        if (round < p.numRounds - 1) {
-          val bc = sc.broadcast(tree)
-          bcs += bc
-          val next = cur.mapPartitions({ it =>
-            val t = bc.value
-            it.map { blk =>
-              val m2 = blk.margins.clone()
-              var i = 0
-              while (i < blk.n) {
-                val leaf = t.leafOf(blk.bins, i * blk.nf)
-                var j = 0
-                while (j < k) {
-                  m2(i * k + j) += t.values(leaf * k + j); j += 1
+    RunLifetime(sc, p.storageLevel, ownsInputs = false) { life =>
+      val trees = ArrayBuffer[MoTree]()
+      var cur = blocks0
+      var prev: Option[RDD[MoBlock]] = None
+      life.rounds {
+        var round = 0
+        while (round < p.numRounds) {
+          val rt = Trainer.buildTrees(gradients(cur, obj, k), bins, p,
+            Array(p.seed), Array(0), width = k).head
+          val tree = new MoTree(rt.feature, rt.thresholdBin, rt.threshold,
+            rt.defaultLeft, rt.left, rt.right, rt.value, rt.gain, rt.cover, k)
+          trees += tree
+          // the build above materialized `cur` over the previous generation
+          prev.foreach(life.release)
+          prev = None
+          if (round < p.numRounds - 1) {
+            // lives to the end of the run: a persisted (even a locally
+            // checkpointed) generation's LINEAGE closure still references
+            // it, and Spark serializes that closure with every later task,
+            // cache hits included — destroying it early throws
+            // INTERNAL_ERROR_BROADCAST on the next round's job
+            val bc = life.broadcast(tree)
+            val next = life.persist(cur.mapPartitions({ it =>
+              val t = bc.value
+              it.map { blk =>
+                val m2 = blk.margins.clone()
+                var i = 0
+                while (i < blk.n) {
+                  val leaf = t.leafOf(blk.bins, i * blk.nf)
+                  var j = 0
+                  while (j < k) {
+                    m2(i * k + j) += t.values(leaf * k + j); j += 1
+                  }
+                  i += 1
                 }
-                i += 1
+                blk.withMargins(m2)
               }
-              blk.withMargins(m2)
+            }, preservesPartitioning = true))
+            // lineage truncation every 50 rounds (the Trainer.boost rule):
+            // without it a long training's recompute chain grows linearly
+            // with rounds
+            if ((round + 1) % 50 == 0) {
+              next.localCheckpoint()
+              next.foreachPartition(_ => ()) // force the lineage truncation
             }
-          }, preservesPartitioning = true).persist(p.storageLevel)
-          // lineage truncation every 50 rounds (the Trainer.boost rule):
-          // without it a long training's recompute chain grows linearly
-          // with rounds. The broadcasts still live to end-of-boost: the
-          // checkpointed RDD's object graph keeps its closure, and Spark
-          // serializes that graph with every later task.
-          if ((round + 1) % 50 == 0) {
-            next.localCheckpoint()
-            next.foreachPartition(_ => ()) // force the lineage truncation
+            prev = Some(cur) // releasing the caller's blocks0 is a no-op
+            cur = next
           }
-          if (cur ne blocks0) prev = Some(cur)
-          cur = next
+          round += 1
         }
-        round += 1
       }
-    } finally {
-      sc.clearJobGroup()
-      prev.foreach(_.unpersist(blocking = false))
-      if (cur ne blocks0) cur.unpersist(blocking = false)
-      bcs.foreach(b => scala.util.Try(b.destroy()))
+      trees.toSeq
     }
-    trees.toSeq
   }
 
   /** Per-target gradients via the scalar objective: target j's (g, h)

@@ -5,8 +5,8 @@ import org.apache.spark.broadcast.Broadcast
 
 /**
  * The task-side functions of a boosting round: the histogram `seqOp`
- * and merge, the gradient map, the margin advance, the eval row view
- * and the one-pass metric accumulation.
+ * and merge, the refresh's path sums, the gradient map, the margin
+ * advance, the eval row view and the one-pass metric accumulation.
  *
  * They live here, not in [[Trainer]] or [[Metrics]], for a fixed cost:
  * on every RDD call Spark's ClosureCleaner parses the class file that
@@ -114,6 +114,36 @@ private[learner] object TaskFns {
         t += 1
       }
       i += 1
+    }
+    acc
+  }
+
+  /** The refresh `seqOp`: every node on a row's path down round tree t
+    * adds the row's (g, h) of output t % k at `2 × (offsets(t) + node)`. */
+  def pathSums(bc: Broadcast[Array[RegTree]], offsets: Array[Int], k: Int)
+      : (Array[Double], GradBlock) => Array[Double] = (acc0, blk) => {
+    val acc = if (acc0 != null) acc0 else new Array[Double](offsets.last * 2)
+    val ts = bc.value
+    val kb = blk.k; val nf = blk.nf
+    val rowBins = blk.bins; val gh = blk.gh
+    var r = 0
+    while (r < blk.n) {
+      val off = r * nf
+      var t = 0
+      while (t < ts.length) {
+        val tree = ts(t)
+        val g = gh(r * 2 * kb + 2 * (t % k)).toDouble
+        val h = gh(r * 2 * kb + 2 * (t % k) + 1).toDouble
+        var i = 0
+        while (i >= 0) {
+          val base = (offsets(t) + i) * 2
+          acc(base) += g; acc(base + 1) += h
+          i = if (tree.feature(i) < 0) -1
+            else tree.nextBinned(i, rowBins, off, MissingBin)
+        }
+        t += 1
+      }
+      r += 1
     }
     acc
   }

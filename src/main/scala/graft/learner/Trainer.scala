@@ -1386,13 +1386,22 @@ object Trainer {
    * The boosting loop — analog of the reference's `_train` round loop
    * (main.py:1061-1337), with the driver playing the tracker role.
    *
-   * @param train  binned row blocks carrying current margins (will be
-   *               persisted/replaced per round)
+   * Ownership ([[RunLifetime]]): the run owns what it persists and
+   * broadcasts, and its inputs only when `releaseInputs` is set. A
+   * margin generation is released once the next round's trees are
+   * built on its successor, cached ranking gradients once the round's
+   * trees are built, DART's kept-ensemble margins at its commit and
+   * its eval views at the end of the round, each with its broadcast;
+   * gbtree's tree broadcasts (O(R) data) live to the end, where
+   * everything still held is freed on any exit.
+   *
+   * @param train  binned row blocks carrying current margins (persisted
+   *               here if nothing cached them)
    * @param evals  named eval sets in the same representation
    * @param releaseInputs false when `train`/`evals` are caller-owned
    *               caches (a reused [[graft.api.GraftBoost.BinnedMatrix]])
-   *               that must survive this run for the next one — every
-   *               unpersist is then guarded on input identity
+   *               that must survive this run for the next one: the run
+   *               then never releases them
    */
   def boost(
       train: RDD[TrainBlock],
@@ -1406,19 +1415,6 @@ object Trainer {
       releaseInputs: Boolean = true,
       knownRows: Long = -1L)
       : TrainResult = {
-    val inputSet = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[RDD[TrainBlock], java.lang.Boolean]())
-    if (!releaseInputs) {
-      inputSet.add(train); evals.foreach(e => inputSet.add(e._2))
-    }
-    // intermediate (margin-advanced) RDDs always free; caller-owned
-    // input caches never do
-    def release(r: RDD[TrainBlock]): Unit =
-      if (!inputSet.contains(r)) r.unpersist(blocking = false)
-    def persistIfFresh(r: RDD[TrainBlock]): RDD[TrainBlock] =
-      if (r.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        r.persist(p.storageLevel)
-      else r
     val obj = Objectives.resolve(p)
     require(p.customObjective.forall(_.name.startsWith("custom:")),
       "customObjective.name must start with \"custom:\" (model save/load " +
@@ -1452,6 +1448,7 @@ object Trainer {
       require(p.normalizeType == "tree" || p.normalizeType == "forest",
         s"normalizeType must be tree|forest, got '${p.normalizeType}'")
     }
+    Metrics.requireDistinctEvalNames(evals.map(_._1))
     val k = obj.numOutputs
     val trees = ArrayBuffer[RegTree]()
     initModel.foreach(m => trees ++= m.trees)
@@ -1467,26 +1464,6 @@ object Trainer {
     initModel.filter(_.dartWeights.length == trees.length)
       .foreach(m => dartWeights ++= m.dartWeights)
     while (dartWeights.length < trees.length) dartWeights += 1.0
-    val broadcasts = ArrayBuffer[org.apache.spark.broadcast.Broadcast[_]]()
-
-    var data = persistIfFresh(train)
-    // duplicate names would collapse into one history entry and
-    // interleave two metric series — early stopping (which reads the
-    // last set's last value) would then compare alternating datasets
-    // (same guard as the linear booster)
-    require(evals.map(_._1).distinct.size == evals.size,
-      s"duplicate eval set names: ${evals.map(_._1).mkString(", ")}")
-    var evalData = evals.map { case (n, r) =>
-      (n, persistIfFresh(r))
-    }
-    // Continued training (C4): fold the init model's trees into the
-    // margins BEFORE the round loop — otherwise new trees fit gradients
-    // that ignore the init model while the final ensemble sums both
-    // (advisor r1, Trainer.scala:404). Requires the same Binner cuts the
-    // init model was trained with (deterministic for same data + seed).
-    // DART skips the fold-in: its margins are rebuilt fresh each round
-    // over the whole tree buffer (init trees included), because dropped
-    // trees rescale retroactively.
     // round-count arithmetic (startRound below) floor-divides the tree
     // count for BOTH boosters — a mismatched init model must fail fast
     // in dart mode too, where a miscounted startRound would silently
@@ -1523,395 +1500,328 @@ object Trainer {
           "contribs/leaves); train a fresh model or resume from a " +
           "parquet-saved graft model")
     }
-    initModel.filter(_.trees.nonEmpty).filter(_ => !dart).foreach { m =>
-      val bcInit = data.sparkContext.broadcast(byClass(m.trees, k))
-      broadcasts += bcInit
-      val base = data
-      val upd = applyTrees(base, bcInit)
-        .persist(p.storageLevel)
-      upd.foreachPartition(_ => ())
-      evalData = evalData.map { case (n, r) =>
-        // shared eval (the dtrain idiom): same fold, same RDD — alias
-        // the folded train RDD rather than recomputing the just-
-        // unpersisted base through a duplicate chain
-        if (r eq base) (n, upd)
-        else {
-          val u = applyTrees(r, bcInit)
-            .persist(p.storageLevel)
-          u.foreachPartition(_ => ())
-          release(r)
-          (n, u)
+    val stopEvents = callbacks.collect { case s: StopEvent => s }
+    RunLifetime(train.sparkContext, p.storageLevel, releaseInputs,
+        stopEvents) { life =>
+      var data = life.input(train)
+      var evalData = evals.map { case (n, r) => (n, life.input(r)) }
+      // Continued training (C4): fold the init model's trees into the
+      // margins BEFORE the round loop — otherwise new trees fit gradients
+      // that ignore the init model while the final ensemble sums both
+      // (advisor r1, Trainer.scala:404). Requires the same Binner cuts the
+      // init model was trained with (deterministic for same data + seed).
+      // DART skips the fold-in: its margins are rebuilt fresh each round
+      // over the whole tree buffer (init trees included), because dropped
+      // trees rescale retroactively.
+      initModel.filter(_.trees.nonEmpty).filter(_ => !dart).foreach { m =>
+        val bcInit = life.broadcast(byClass(m.trees, k))
+        val base = data
+        val upd = life.persist(applyTrees(base, bcInit))
+        upd.foreachPartition(_ => ())
+        evalData = evalData.map { case (n, r) =>
+          // shared eval (the dtrain idiom): same fold, same RDD — alias
+          // the folded train RDD rather than recomputing the just-
+          // unpersisted base through a duplicate chain
+          if (r eq base) (n, upd)
+          else {
+            val u = life.persist(applyTrees(r, bcInit))
+            u.foreachPartition(_ => ())
+            life.release(r)
+            (n, u)
+          }
+        }
+        life.release(base)
+        data = upd
+      }
+      // A3 total_n (main.py:1333-1335). The caller usually already
+      // counted the input (GraftBoost.train's strategy count / the fused
+      // path's block fold) — reuse that EXACT value instead of paying one
+      // more full-cache job per train (prepare/pack drop no rows, so the
+      // two counts are the same number by construction).
+      val totalN = if (knownRows >= 0L) knownRows else countRows(data)
+
+      // C8 beforeTrain: one lightweight job over the cached partitions
+      if (distributedCallbacks.nonEmpty) {
+        val dcbs = distributedCallbacks
+        data.foreachPartition { (_: Iterator[TrainBlock]) =>
+          val r = DistributedCallback.rank()
+          dcbs.foreach(_.beforeTrain(r))
         }
       }
-      release(base)
-      data = upd
-    }
-    // A3 total_n (main.py:1333-1335). The caller usually already
-    // counted the input (GraftBoost.train's strategy count / the fused
-    // path's block fold) — reuse that EXACT value instead of paying one
-    // more full-cache job per train (prepare/pack drop no rows, so the
-    // two counts are the same number by construction).
-    val totalN = if (knownRows >= 0L) knownRows else countRows(data)
 
-    // C8 beforeTrain: one lightweight job over the cached partitions
-    if (distributedCallbacks.nonEmpty) {
-      val dcbs = distributedCallbacks
-      data.foreachPartition { (_: Iterator[TrainBlock]) =>
-        val r = DistributedCallback.rank()
-        dcbs.foreach(_.beforeTrain(r))
+      val customByName = p.customMetrics.map(m => m.name -> m).toMap
+      val metricNames = Metrics.resolveNames(p, obj.name)
+      val evalsResult = scala.collection.mutable.LinkedHashMap[String,
+        Map[String, ArrayBuffer[Double]]]()
+      evalData.foreach { case (n, _) =>
+        evalsResult(n) = metricNames.map(m => m -> ArrayBuffer[Double]()).toMap
       }
-    }
 
-    val customByName = p.customMetrics.map(m => m.name -> m).toMap
-    val metricNames = {
-      val base =
-        if (p.evalMetric.nonEmpty) p.evalMetric
-        else if (p.customMetrics.nonEmpty) Nil
-        else Seq(Metrics.defaultMetric(obj.name, p))
-      base ++ p.customMetrics.map(_.name).filterNot(base.contains)
-    }
-    val evalsResult = scala.collection.mutable.LinkedHashMap[String,
-      Map[String, ArrayBuffer[Double]]]()
-    evalData.foreach { case (n, _) =>
-      evalsResult(n) = metricNames.map(m => m -> ArrayBuffer[Double]()).toMap
-    }
-
-    var bestScore = Double.NaN
-    var bestRound = -1
-    var stop = false
-    var round = 0
-    // C6: all training jobs run under one job group so a hard StopEvent
-    // can kill in-flight stages; the catch below turns the cancellation
-    // into a clean return of the model built so far
-    val sc = data.sparkContext
-    val jobGroup = s"graft-train-${java.util.UUID.randomUUID()}"
-    sc.setJobGroup(jobGroup, "graft boosting rounds",
-      interruptOnCancel = true)
-    val stopEvents = callbacks.collect { case s: StopEvent => s }
-    stopEvents.foreach(_.bindCancel(() => sc.cancelJobGroup(jobGroup)))
-    // margin-update RDD of the previous round, unpersisted lazily once
-    // the current round's gradient pass has materialized on top of it
-    // (saves one full data pass per round vs eager materialization)
-    var prevData: Option[RDD[TrainBlock]] = None
-    // checkpoint-resume arithmetic (C4): each completed round appended
-    // numParallelTree*k trees (advisor r1: `/k` alone miscounted forests)
-    val startRound = trees.length / (k * p.numParallelTree)
-    val initTreeCount = trees.length // for partial-round trim on hard stop
-    var curGrads: Option[RDD[GradBlock]] = None
-    // Pointwise gradients are a cheap narrow map over the cached margin
-    // RDD — recomputing them inside each level's histogram job costs a
-    // few sigmoid/softmax evaluations per row, while PERSISTING them
-    // costs a full extra cached copy of the dataset per round (old-gen
-    // churn that showed up as the r3 train slowdown). Only ranking
-    // gradients — which buffer whole partitions to walk qid groups —
-    // are worth caching across the round's level jobs.
-    val cacheGrads = obj.needsGroups
-    // DART per-round state, visible to the hard-stop catch: snapshot of
-    // the tree buffer taken BEFORE this round's retroactive rescale so
-    // an aborted round can be rolled back (gbtree only appends, so its
-    // trim arithmetic suffices; dart also mutates earlier trees).
-    var dartPreRound: Array[RegTree] = null
-    var dartPreWeights: Array[Double] = null
-    // DART per-round resources, tracked in vars so BOTH the in-loop
-    // cleanup and the hard-stop catch can release them. Unlike gbtree
-    // (which broadcasts only the round's ~k new trees, O(R) total data),
-    // dart broadcasts the full kept/post-rescale ensemble every round —
-    // accumulating those to end-of-training would hold O(R²) tree
-    // copies, so each is destroyed as soon as its round's jobs finish
-    // (advisor r8). By then the margin/metric results are materialized
-    // and the backing RDDs unpersisted, so no live lineage can need the
-    // broadcast again.
-    var dartBcKept: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]] = null
-    var dartBcAll: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]] = null
-    var dartRoundData: RDD[TrainBlock] = null
-    var dartEvalView: Seq[RDD[TrainBlock]] = null
-    while (round < p.numRounds && !stop) try {
-      // DART: pick this round's dropped-tree set on the driver —
-      // deterministic in (seed, round), so partitioning/retries cannot
-      // change it (the xgboost DropTrees analog).
-      val dropIdx: Array[Int] =
-        if (dart && trees.nonEmpty)
-          chooseDropSet(dartWeights, p, startRound + round)
-        else Array.empty[Int]
-      if (dart) {
-        dartPreRound = trees.toArray
-        dartPreWeights = dartWeights.toArray
-      }
-      // DART gradient base: margins rebuilt FRESH over the kept trees,
-      // layered on the immutable init-margin RDD (`data` is never
-      // advanced in dart mode). Margins cannot be carried incrementally
-      // — dropped trees rescale retroactively — and a float carried sum
-      // minus the dropped predictions would not cancel exactly. xgboost
-      // DART re-predicts the ensemble every round too; this is the
-      // documented DART cost profile, one kept-ensemble pass per round.
-      val roundData =
-        if (!dart || trees.isEmpty) data
-        else {
-          val dropSet = dropIdx.toSet
-          val kept = Array.range(0, trees.length).filterNot(dropSet)
-          if (kept.isEmpty) data // whole ensemble dropped: margins ARE
-                                 // the init margins — no copy needed
-          else {
-            dartBcKept = sc.broadcast(kept.map(i => (i % k, trees(i))))
-            val rd = applyTrees(data, dartBcKept)
-              .persist(p.storageLevel)
-            dartRoundData = rd
+      val early = new Metrics.EarlyStop(p, metricNames)
+      var stop = false
+      var round = 0
+      // margin-update RDD of the previous round, unpersisted lazily once
+      // the current round's gradient pass has materialized on top of it
+      // (saves one full data pass per round vs eager materialization)
+      var prevData: Option[RDD[TrainBlock]] = None
+      // checkpoint-resume arithmetic (C4): each completed round appended
+      // numParallelTree*k trees (advisor r1: `/k` alone miscounted forests)
+      val startRound = trees.length / (k * p.numParallelTree)
+      val initTreeCount = trees.length // for partial-round trim on hard stop
+      // DART: snapshot of the tree buffer taken BEFORE this round's
+      // retroactive rescale, so the hard-stop catch can roll an aborted
+      // round back (gbtree only appends, so its trim arithmetic suffices;
+      // dart also mutates earlier trees).
+      var dartPreRound: Array[RegTree] = null
+      var dartPreWeights: Array[Double] = null
+      // C6: the rounds run under the run's job group, so a hard StopEvent
+      // can kill in-flight stages; the catch below turns the cancellation
+      // into a clean return of the model built so far
+      life.rounds {
+        while (round < p.numRounds && !stop) try {
+          // DART: pick this round's dropped-tree set on the driver —
+          // deterministic in (seed, round), so partitioning/retries cannot
+          // change it (the xgboost DropTrees analog).
+          val dropIdx: Array[Int] =
+            if (dart && trees.nonEmpty)
+              chooseDropSet(dartWeights, p, startRound + round)
+            else Array.empty[Int]
+          if (dart) {
+            dartPreRound = trees.toArray
+            dartPreWeights = dartWeights.toArray
+          }
+          // DART gradient base: margins rebuilt FRESH over the kept trees,
+          // layered on the immutable init-margin RDD (`data` is never
+          // advanced in dart mode). Margins cannot be carried incrementally
+          // — dropped trees rescale retroactively — and a float carried sum
+          // minus the dropped predictions would not cancel exactly. xgboost
+          // DART re-predicts the ensemble every round too; this is the
+          // documented DART cost profile, one kept-ensemble pass per round.
+          // With the whole ensemble dropped the margins ARE the init
+          // margins — no copy needed.
+          val kept =
+            if (!dart || trees.isEmpty) Array.empty[Int]
+            else Array.range(0, trees.length).filterNot(dropIdx.toSet)
+          // Unlike gbtree (which broadcasts only the round's ~k new trees,
+          // O(R) total data), dart broadcasts the full kept/post-rescale
+          // ensemble every round — accumulating those to end-of-training
+          // would hold O(R²) tree copies, so each is destroyed as soon as
+          // its round's jobs finish (advisor r8). By then the margin/metric
+          // results are materialized and the backing RDDs unpersisted, so
+          // no live lineage can need the broadcast again.
+          val bcKept =
+            if (kept.isEmpty) None
+            else Some(life.broadcast(kept.map(i => (i % k, trees(i)))))
+          val roundData = bcKept.fold(data) { bc =>
+            val rd = life.persist(applyTrees(data, bc))
             rd.foreachPartition(_ => ())
             rd
           }
-        }
-      val gradsRaw = gradients(roundData, obj, startRound + round, p)
-      val grads =
-        if (cacheGrads) {
-          val g = gradsRaw.persist(p.storageLevel)
-          curGrads = Some(g)
-          g
-        } else gradsRaw
-      // layout: class-inner so GraftModel's (t % k) class mapping holds
-      // for any numParallelTree: [pt0·c0, pt0·c1, …, pt1·c0, …].
-      // All trees of the round grow in ONE fused job per level.
-      // per-round learning rate (LearningRateScheduler analog); global
-      // round index keeps a resumed schedule aligned with the full run
-      val etaRound = p.etaSchedule
-        .map(f => f(startRound + round)).getOrElse(p.eta)
-      require(etaRound > 0, s"etaSchedule returned $etaRound for " +
-        s"round ${startRound + round}; learning rates must be positive")
-      val pTree = p.copy(eta = etaRound / p.numParallelTree)
-      val nTrees = p.numParallelTree * k
-      val builtTrees = buildTrees(grads, bins, pTree,
-        Array.tabulate(nTrees)(i =>
-          TaskFns.mix(p.seed, startRound + round, 7919 + i)),
-        Array.tabulate(nTrees)(_ % k))
-      // adaptive leaf refresh (xgboost UpdateTreeLeaf): the L1 family
-      // resets each leaf to η·Q_α of its residuals before the commit
-      // (α per output slot — multi-quantile trains one tree per α)
-      val roundTrees = obj.leafRefreshAlphas match {
-        case Some(as) => refreshLeaves(roundData, builtTrees, as,
-          Array.tabulate(nTrees)(_ % k), pTree.eta)
-        case None => builtTrees
-      }
-      // the tree builds above materialized `data` (via the gradient
-      // map) — the previous round's cache is now safe to drop
-      prevData.foreach(release)
-      prevData = None
-      if (cacheGrads) { grads.unpersist(blocking = false); curGrads = None }
-
-      if (!dart) {
-        trees ++= roundTrees
-
-        val bcTrees = data.sparkContext.broadcast(byClass(roundTrees, k))
-        broadcasts += bcTrees
-        val newData = applyTrees(data, bcTrees)
-          .persist(p.storageLevel)
-        if ((round + 1) % 50 == 0) {
-          newData.localCheckpoint()
-          newData.foreachPartition(_ => ()) // force the lineage truncation
-        }
-        prevData = Some(data)
-        data = newData
-
-        val newEvals = evalData.map { case (n, r) =>
-          // an eval set that IS the training RDD (the GraftBoost
-          // evals=[(dtrain,...)] reuse): the advanced TRAIN RDD is
-          // bit-identical to the advanced eval (same trees, same
-          // margins) — alias it instead of computing and caching a
-          // duplicate chain. The train side owns its lifecycle
-          // (prevData unpersists AFTER the next round materializes the
-          // child; unpersisting the shared base here would force a
-          // full lineage recompute of the training data at round+1).
-          if (prevData.exists(_ eq r)) (n, data)
-          else {
-            val updated = applyTrees(r, bcTrees)
-              .persist(p.storageLevel)
-            if ((round + 1) % 50 == 0) updated.localCheckpoint()
-            updated.foreachPartition(_ => ())
-            release(r)
-            (n, updated)
+          // Pointwise gradients are a cheap narrow map over the cached margin
+          // RDD — recomputing them inside each level's histogram job costs a
+          // few sigmoid/softmax evaluations per row, while PERSISTING them
+          // costs a full extra cached copy of the dataset per round (old-gen
+          // churn that showed up as the r3 train slowdown). Only ranking
+          // gradients — which buffer whole partitions to walk qid groups —
+          // are worth caching across the round's level jobs.
+          val grads = gradients(roundData, obj, startRound + round, p)
+          if (obj.needsGroups) life.persist(grads)
+          // layout: class-inner so GraftModel's (t % k) class mapping holds
+          // for any numParallelTree: [pt0·c0, pt0·c1, …, pt1·c0, …].
+          // All trees of the round grow in ONE fused job per level.
+          // per-round learning rate (LearningRateScheduler analog); global
+          // round index keeps a resumed schedule aligned with the full run
+          val etaRound = p.etaSchedule
+            .map(f => f(startRound + round)).getOrElse(p.eta)
+          require(etaRound > 0, s"etaSchedule returned $etaRound for " +
+            s"round ${startRound + round}; learning rates must be positive")
+          val pTree = p.copy(eta = etaRound / p.numParallelTree)
+          val nTrees = p.numParallelTree * k
+          val builtTrees = buildTrees(grads, bins, pTree,
+            Array.tabulate(nTrees)(i =>
+              TaskFns.mix(p.seed, startRound + round, 7919 + i)),
+            Array.tabulate(nTrees)(_ % k))
+          // adaptive leaf refresh (xgboost UpdateTreeLeaf): the L1 family
+          // resets each leaf to η·Q_α of its residuals before the commit
+          // (α per output slot — multi-quantile trains one tree per α)
+          val roundTrees = obj.leafRefreshAlphas match {
+            case Some(as) => refreshLeaves(roundData, builtTrees, as,
+              Array.tabulate(nTrees)(_ % k), pTree.eta)
+            case None => builtTrees
           }
-        }
-        evalData = newEvals
-      } else {
-        // DART commit: normalize (xgboost NormalizeTrees) — "tree":
-        // new trees weighted 1/(k+lr), the k dropped rescaled by
-        // k/(k+lr); "forest": both scaled by 1/(1+lr); lr =
-        // eta/treesPerRound. Weights bake into stored values (one
-        // double multiply, one float rounding per node).
-        val kd = dropIdx.length
-        val (dropScale, newWeight) =
-          if (kd == 0) (1.0, 1.0)
-          else {
-            val lrNorm = etaRound / roundTrees.length
-            if (p.normalizeType == "forest") {
-              val d = 1.0 + lrNorm; (1.0 / d, 1.0 / d)
-            } else { val d = kd + lrNorm; (kd / d, 1.0 / d) }
+          // the tree builds above materialized `data` (via the gradient
+          // map) — the previous round's cache is now safe to drop
+          prevData.foreach(life.release)
+          prevData = None
+          life.release(grads) // cached for ranking objectives only
+
+          if (!dart) {
+            trees ++= roundTrees
+
+            val bcTrees = life.broadcast(byClass(roundTrees, k))
+            val newData = life.persist(applyTrees(data, bcTrees))
+            if ((round + 1) % 50 == 0) {
+              newData.localCheckpoint()
+              newData.foreachPartition(_ => ()) // force the lineage truncation
+            }
+            prevData = Some(data)
+            data = newData
+
+            evalData = evalData.map { case (n, r) =>
+              // an eval set that IS the training RDD (the GraftBoost
+              // evals=[(dtrain,...)] reuse): the advanced TRAIN RDD is
+              // bit-identical to the advanced eval (same trees, same
+              // margins) — alias it instead of computing and caching a
+              // duplicate chain. The train side owns its lifecycle
+              // (prevData unpersists AFTER the next round materializes the
+              // child; unpersisting the shared base here would force a
+              // full lineage recompute of the training data at round+1).
+              if (prevData.exists(_ eq r)) (n, data)
+              else {
+                val updated = life.persist(applyTrees(r, bcTrees))
+                if ((round + 1) % 50 == 0) updated.localCheckpoint()
+                updated.foreachPartition(_ => ())
+                life.release(r)
+                (n, updated)
+              }
+            }
+          } else {
+            // DART commit: normalize (xgboost NormalizeTrees) — "tree":
+            // new trees weighted 1/(k+lr), the k dropped rescaled by
+            // k/(k+lr); "forest": both scaled by 1/(1+lr); lr =
+            // eta/treesPerRound. Weights bake into stored values (one
+            // double multiply, one float rounding per node).
+            val kd = dropIdx.length
+            val (dropScale, newWeight) =
+              if (kd == 0) (1.0, 1.0)
+              else {
+                val lrNorm = etaRound / roundTrees.length
+                if (p.normalizeType == "forest") {
+                  val d = 1.0 + lrNorm; (1.0 / d, 1.0 / d)
+                } else { val d = kd + lrNorm; (kd / d, 1.0 / d) }
+              }
+            if (kd > 0) dropIdx.foreach { i =>
+              trees(i) = scaleTreeValues(trees(i), dropScale)
+              dartWeights(i) *= dropScale
+            }
+            val finalNew =
+              if (kd == 0) roundTrees
+              else roundTrees.map(scaleTreeValues(_, newWeight))
+            trees ++= finalNew
+            var j = 0
+            while (j < finalNew.length) { dartWeights += newWeight; j += 1 }
+            // the round's trees are built and committed — the per-round
+            // margin cache and the kept-ensemble broadcast behind it are
+            // dead (nothing downstream reads roundData; eval margins are
+            // rebuilt from evalData + the post-rescale ensemble below)
+            bcKept.foreach { bc => life.release(roundData); life.destroy(bc) }
           }
-        if (kd > 0) dropIdx.foreach { i =>
-          trees(i) = scaleTreeValues(trees(i), dropScale)
-          dartWeights(i) *= dropScale
-        }
-        val finalNew =
-          if (kd == 0) roundTrees
-          else roundTrees.map(scaleTreeValues(_, newWeight))
-        trees ++= finalNew
-        var j = 0
-        while (j < finalNew.length) { dartWeights += newWeight; j += 1 }
-        // the round's trees are built and committed — the per-round
-        // margin cache and the kept-ensemble broadcast behind it are
-        // dead (nothing downstream reads roundData; eval margins are
-        // rebuilt from evalData + the post-rescale ensemble below)
-        if (roundData ne data) {
-          roundData.unpersist(blocking = false)
-          dartRoundData = null
-        }
-        if (dartBcKept != null) { dartBcKept.destroy(); dartBcKept = null }
-      }
 
-      // DART: eval margins are also rebuilt fresh over the full
-      // (post-rescale) ensemble — the carried eval RDDs stay at their
-      // init margins. Persisted only for this round's metric jobs.
-      val evalView =
-        if (!dart || trees.isEmpty || evalData.isEmpty) evalData
-        else {
-          dartBcAll = sc.broadcast(byClass(trees.toArray, k))
-          val v = evalData.map { case (n, r) =>
-            (n, applyTrees(r, dartBcAll)
-              .persist(p.storageLevel))
+          // DART: eval margins are also rebuilt fresh over the full
+          // (post-rescale) ensemble — the carried eval RDDs stay at their
+          // init margins. Persisted only for this round's metric jobs.
+          val bcAll =
+            if (!dart || trees.isEmpty || evalData.isEmpty) None
+            else Some(life.broadcast(byClass(trees.toArray, k)))
+          val evalView = bcAll.fold(evalData) { bc =>
+            evalData.map { case (n, r) => (n, life.persist(applyTrees(r, bc))) }
           }
-          dartEvalView = v.map(_._2)
-          v
-        }
 
-      // eval-metric aggregation (A2 analog)
-      val roundMetrics = scala.collection.mutable.LinkedHashMap[String, Double]()
-      evalView.foreach { case (n, r) =>
-        // rank:* objectives evaluate auc PER QID GROUP (weighted mean
-        // of per-group Mann-Whitney, xgboost's ranking-auc semantics);
-        // binary objectives keep the global histogram auc
-        def groupish(mn: String) = !customByName.contains(mn) &&
-          (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
-        // survival metrics read (lower, upper) off the block (label
-        // doubles as the lower bound)
-        def bounds(mn: String) =
-          !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
-        // every other metric reads the row view: one job for all the
-        // (loss, weight) metrics
-        val rowNames =
-          metricNames.filterNot(mn => groupish(mn) || bounds(mn))
-        val rowValues = rowNames.zip(
-          Metrics.computeAll(rowNames, obj, rowsOf(r), customByName)).toMap
-        metricNames.foreach { mn =>
-          val v =
-            if (groupish(mn)) {
-              // ndcg/map/auc walk qid groups — the rank layout keeps
-              // groups partition-contiguous: one shuffle-free pass
-              require(obj.needsGroups, s"$mn needs a rank:* objective " +
-                "(qid-contiguous evaluation partitions)")
-              Metrics.computeGroup(mn, groupRowsOf(r))
-            } else if (bounds(mn))
-              Metrics.computeBounds(mn, obj, boundsRowsOf(r))
-            else rowValues(mn)
-          evalsResult(n)(mn) += v
-          roundMetrics(s"$n-$mn") = v
+          // eval-metric aggregation (A2 analog)
+          val roundMetrics =
+            scala.collection.mutable.LinkedHashMap[String, Double]()
+          evalView.foreach { case (n, r) =>
+            // rank:* objectives evaluate auc PER QID GROUP (weighted mean
+            // of per-group Mann-Whitney, xgboost's ranking-auc semantics);
+            // binary objectives keep the global histogram auc
+            def groupish(mn: String) = !customByName.contains(mn) &&
+              (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
+            // survival metrics read (lower, upper) off the block (label
+            // doubles as the lower bound)
+            def bounds(mn: String) =
+              !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
+            // every other metric reads the row view: one job for all the
+            // (loss, weight) metrics
+            val rowNames =
+              metricNames.filterNot(mn => groupish(mn) || bounds(mn))
+            val rowValues = rowNames.zip(
+              Metrics.computeAll(rowNames, obj, rowsOf(r), customByName)).toMap
+            metricNames.foreach { mn =>
+              val v =
+                if (groupish(mn)) {
+                  // ndcg/map/auc walk qid groups — the rank layout keeps
+                  // groups partition-contiguous: one shuffle-free pass
+                  require(obj.needsGroups, s"$mn needs a rank:* objective " +
+                    "(qid-contiguous evaluation partitions)")
+                  Metrics.computeGroup(mn, groupRowsOf(r))
+                } else if (bounds(mn))
+                  Metrics.computeBounds(mn, obj, boundsRowsOf(r))
+                else rowValues(mn)
+              evalsResult(n)(mn) += v
+              roundMetrics(s"$n-$mn") = v
+            }
+          }
+
+          if (early.update(round, evalsResult)) stop = true
+
+          // checkpoint (A6/C4 analog of _save_checkpoint_callback main.py:612)
+          if (p.checkpointEvery > 0 && p.checkpointPath.isDefined &&
+              (round + 1) % p.checkpointEvery == 0) {
+            spark.foreach { s =>
+              currentModel(trees, obj, p, bins, dartWeights)
+                .save(s, p.checkpointPath.get)
+            }
+          }
+
+          callbacks.foreach { cb =>
+            val stopNow = cb match {
+              case m: ModelAwareCallback => m.afterIterationWithModel(
+                startRound + round, roundMetrics.toMap,
+                () => currentModel(trees, obj, p, bins, dartWeights))
+              case _ =>
+                cb.afterIteration(startRound + round, roundMetrics.toMap)
+            }
+            if (stopNow) stop = true
+          }
+          bcAll.foreach { bc =>
+            evalView.foreach(e => life.release(e._2)); life.destroy(bc)
+          }
+          round += 1
+        } catch {
+          // a hard StopEvent cancelled the job group mid-round: drop the
+          // partial round and return the model built so far (the reference
+          // returns the last checkpoint on stop). `trees ++= roundTrees`
+          // may already have run when the cancel landed in the margin-update
+          // or metric jobs — trim back to the last COMPLETED round so model
+          // length and roundsCompleted agree (advisor r2). What the aborted
+          // round cached or broadcast is freed with the run.
+          case _: Throwable if stopEvents.exists(_.isSet) =>
+            // DART: the aborted round may have already RESCALED earlier
+            // trees (not just appended) — roll the buffer back to its
+            // start-of-round snapshot before the append-only trim below
+            if (dart && dartPreRound != null) {
+              trees.clear(); trees ++= dartPreRound
+              dartWeights.clear(); dartWeights ++= dartPreWeights
+            }
+            val keep = initTreeCount + round * k * p.numParallelTree
+            if (trees.length > keep) trees.takeInPlace(keep)
+            stop = true
         }
       }
 
-      // early stopping on the LAST eval set + LAST metric (xgboost rule)
-      if (p.earlyStoppingRounds > 0 && evalData.nonEmpty) {
-        val lastEval = evalData.last._1
-        val lastMetric = metricNames.last
-        val cur = evalsResult(lastEval)(lastMetric).last
-        val better = bestScore.isNaN ||
-          (if (Metrics.maximize(lastMetric, customByName)) cur > bestScore
-           else cur < bestScore)
-        if (better) { bestScore = cur; bestRound = round }
-        else if (round - bestRound >= p.earlyStoppingRounds) stop = true
-      }
-
-      // checkpoint (A6/C4 analog of _save_checkpoint_callback main.py:612)
-      if (p.checkpointEvery > 0 && p.checkpointPath.isDefined &&
-          (round + 1) % p.checkpointEvery == 0) {
-        spark.foreach { s =>
-          currentModel(trees, obj, p, bins, dartWeights).save(s, p.checkpointPath.get)
+      // C8 afterTrain, before the caches go away
+      if (distributedCallbacks.nonEmpty) {
+        val dcbs = distributedCallbacks
+        data.foreachPartition { (_: Iterator[TrainBlock]) =>
+          val r = DistributedCallback.rank()
+          dcbs.foreach(_.afterTrain(r))
         }
       }
 
-      callbacks.foreach { cb =>
-        val stopNow = cb match {
-          case m: ModelAwareCallback => m.afterIterationWithModel(
-            startRound + round, roundMetrics.toMap,
-            () => currentModel(trees, obj, p, bins, dartWeights))
-          case _ =>
-            cb.afterIteration(startRound + round, roundMetrics.toMap)
-        }
-        if (stopNow) stop = true
-      }
-      if (dart && (evalView ne evalData)) {
-        evalView.foreach(_._2.unpersist(blocking = false))
-        dartEvalView = null
-      }
-      if (dartBcAll != null) { dartBcAll.destroy(); dartBcAll = null }
-      round += 1
-    } catch {
-      // a hard StopEvent cancelled the job group mid-round: drop the
-      // partial round and return the model built so far (the reference
-      // returns the last checkpoint on stop). `trees ++= roundTrees`
-      // may already have run when the cancel landed in the margin-update
-      // or metric jobs — trim back to the last COMPLETED round so model
-      // length and roundsCompleted agree (advisor r2).
-      case _: Throwable if stopEvents.exists(_.isSet) =>
-        curGrads.foreach(_.unpersist(blocking = false))
-        // DART: release whatever the aborted round had in flight — its
-        // per-round margin cache, eval views, and ensemble broadcasts
-        // are local vals inside the try, so the vars are the only
-        // handles left (advisor r8: roundData leaked one cached copy
-        // per hard stop). destroy() may race the in-flight cancelled
-        // jobs, so failures are swallowed — the JVM is reclaiming
-        // anyway.
-        if (dartRoundData != null) {
-          dartRoundData.unpersist(blocking = false); dartRoundData = null
-        }
-        if (dartEvalView != null) {
-          dartEvalView.foreach(_.unpersist(blocking = false))
-          dartEvalView = null
-        }
-        if (dartBcKept != null) {
-          scala.util.Try(dartBcKept.destroy()); dartBcKept = null
-        }
-        if (dartBcAll != null) {
-          scala.util.Try(dartBcAll.destroy()); dartBcAll = null
-        }
-        // DART: the aborted round may have already RESCALED earlier
-        // trees (not just appended) — roll the buffer back to its
-        // start-of-round snapshot before the append-only trim below
-        if (dart && dartPreRound != null) {
-          trees.clear(); trees ++= dartPreRound
-          dartWeights.clear(); dartWeights ++= dartPreWeights
-        }
-        val keep = initTreeCount + round * k * p.numParallelTree
-        if (trees.length > keep) trees.takeInPlace(keep)
-        stop = true
+      TrainResult(currentModel(trees, obj, p, bins, dartWeights),
+        evalsResult.map { case (n, m) => (n, m) }.toMap, totalN, round,
+        bestIteration = early.bestIteration, bestScore = early.bestScore)
     }
-    sc.clearJobGroup() // post-loop jobs must not inherit the cancel group
-
-    // C8 afterTrain, before the caches go away
-    if (distributedCallbacks.nonEmpty) {
-      val dcbs = distributedCallbacks
-      data.foreachPartition { (_: Iterator[TrainBlock]) =>
-        val r = DistributedCallback.rank()
-        dcbs.foreach(_.afterTrain(r))
-      }
-    }
-
-    release(data)
-    prevData.foreach(release)
-    evalData.foreach(e => release(e._2))
-    // all per-round results are materialized — the round broadcasts are
-    // no longer reachable from any live lineage (advisor r1: leak)
-    broadcasts.foreach(_.destroy())
-    TrainResult(currentModel(trees, obj, p, bins, dartWeights),
-      evalsResult.map { case (n, m) => (n, m) }.toMap, totalN, round,
-      bestIteration = if (p.earlyStoppingRounds > 0) bestRound else -1,
-      bestScore = if (p.earlyStoppingRounds > 0) bestScore else Double.NaN)
   }
 
   /** Add each (class, tree) pair's leaf value to the carried margin of
@@ -2015,11 +1925,14 @@ object Trainer {
    * leaves become −η·T(G)/(H+λ); nodes no row routes to keep their
    * trained values/stats.
    *
-   * Scale shape: one [[gradients]] map + ONE flat-array `aggregate`
-   * per round (per-node G/H accumulated along each row's root→leaf
-   * path — histogram-free, array size = Σ nodes × 2), then a narrow
-   * margin-advance map. No shuffles anywhere; driver state is
-   * tree-sized.
+   * Scale shape: one [[gradients]] map + ONE flat-array
+   * [[aggregateHist]] per round (per-node G/H accumulated along each
+   * row's root→leaf path — histogram-free, array size = Σ nodes × 2,
+   * merged in partition-index order), then a narrow margin-advance
+   * map. No shuffles anywhere; driver state is tree-sized.
+   * Ownership as in [[boost]]: each margin generation is released once
+   * its successor is materialized, the margin-advance broadcasts on any
+   * exit at the end.
    */
   private def refreshModel(
       train: RDD[TrainBlock],
@@ -2030,8 +1943,6 @@ object Trainer {
       initModel: Option[GraftModel],
       releaseInputs: Boolean = true,
       knownRows: Long = -1L): TrainResult = {
-    def release(r: RDD[TrainBlock]): Unit =
-      if (releaseInputs || !(r eq train)) r.unpersist(blocking = false)
     val k = obj.numOutputs
     val m = initModel.filter(_.trees.nonEmpty).getOrElse(
       throw new IllegalArgumentException(
@@ -2074,172 +1985,133 @@ object Trainer {
         "updater=prune needs per-node gain stats; this model was " +
           "saved without them (pre-r3 save)")
     val tpr = m.treesPerRound
-    val sc = train.sparkContext
-    var data =
-      if (train.getStorageLevel == org.apache.spark.storage.StorageLevel.NONE)
-        train.persist(p.storageLevel)
-      else train
-    val totalN = if (knownRows >= 0L) knownRows else countRows(data)
-    val outTrees = m.trees.clone()
-    var prevData: Option[RDD[TrainBlock]] = None
-    // margin-advance broadcasts stay referenced by every LATER round's
-    // lineage (task closures serialize the full DAG) — destroy only
-    // after the last job has run
-    val liveBc = ArrayBuffer[org.apache.spark.broadcast.Broadcast[_]]()
-    var round = 0
-    while (round < p.numRounds) {
-      val etaRound = p.etaSchedule.map(f => f(round)).getOrElse(p.eta)
-      // same per-tree shrinkage the original training applied
-      val pLeaf = p.copy(eta = etaRound / math.max(m.numParallelTree, 1))
-      updaters.foreach {
-        case "prune" =>
-          // driver-only structure transform on the CURRENT stats (the
-          // trained gains, or the re-fit gains if refresh ran first)
-          var j = 0
-          while (j < tpr) {
-            outTrees(round * tpr + j) =
-              pruneTree(outTrees(round * tpr + j), p.gamma)
-            j += 1
-          }
-        case "refresh" => refreshPass()
-      }
-      def refreshPass(): Unit = {
-      val grads = gradients(data, obj, round, p)
-      val roundTrees = outTrees.slice(round * tpr, round * tpr + tpr)
-      val offsets = new Array[Int](roundTrees.length + 1)
-      var ti = 0
-      while (ti < roundTrees.length) {
-        offsets(ti + 1) = offsets(ti) + roundTrees(ti).numNodes
-        ti += 1
-      }
-      val bcTrees = sc.broadcast(roundTrees)
-      val aggSize = offsets.last * 2
-      // buffer allocated in the task (see TaskFns.mergeHist)
-      val merged = grads.aggregate(null: Array[Double])(
-        (acc0, blk) => {
-          val acc = if (acc0 != null) acc0 else new Array[Double](aggSize)
-          val ts = bcTrees.value
-          val kb = blk.k; val nf = blk.nf
-          val rowBins = blk.bins; val gh = blk.gh
-          var r = 0
-          while (r < blk.n) {
-            val off = r * nf
-            var t = 0
-            while (t < ts.length) {
-              val tree = ts(t)
-              // class-inner layout: tree j of a round owns output j % k
-              val g = gh(r * 2 * kb + 2 * (t % k)).toDouble
-              val h = gh(r * 2 * kb + 2 * (t % k) + 1).toDouble
-              // every node on the row's path accumulates (g, h)
-              var i = 0
-              while (i >= 0) {
-                val base = (offsets(t) + i) * 2
-                acc(base) += g; acc(base + 1) += h
-                i = if (tree.feature(i) < 0) -1
-                  else tree.nextBinned(i, rowBins, off, MissingBin)
+    RunLifetime(train.sparkContext, p.storageLevel, releaseInputs) { life =>
+      var data = life.input(train)
+      val totalN = if (knownRows >= 0L) knownRows else countRows(data)
+      val outTrees = m.trees.clone()
+      var prevData: Option[RDD[TrainBlock]] = None
+      var round = 0
+      life.rounds {
+        while (round < p.numRounds) {
+          val etaRound = p.etaSchedule.map(f => f(round)).getOrElse(p.eta)
+          // same per-tree shrinkage the original training applied
+          val pLeaf = p.copy(eta = etaRound / math.max(m.numParallelTree, 1))
+          updaters.foreach {
+            case "prune" =>
+              // driver-only structure transform on the CURRENT stats (the
+              // trained gains, or the re-fit gains if refresh ran first)
+              var j = 0
+              while (j < tpr) {
+                outTrees(round * tpr + j) =
+                  pruneTree(outTrees(round * tpr + j), p.gamma)
+                j += 1
               }
-              t += 1
-            }
-            r += 1
+            case "refresh" => refreshPass()
           }
-          acc
-        },
-        TaskFns.mergeHist)
-      val agg = if (merged != null) merged else new Array[Double](aggSize)
-      bcTrees.destroy()
-      ti = 0
-      while (ti < roundTrees.length) {
-        val tree = roundTrees(ti)
-        // dart: bake the stored cumulative weight back into the re-fit
-        // value (the trainer's baked-leaf convention); 1.0 for gbtree
-        val wT = if (m.dartWeights.isEmpty) 1.0
-          else m.dartWeights(round * tpr + ti)
-        val n = tree.numNodes
-        val value = tree.value.clone()
-        val gain =
-          if (tree.hasStats) tree.gain.clone() else new Array[Float](n)
-        val cover =
-          if (tree.hasStats) tree.cover.clone() else new Array[Float](n)
-        var i = 0
-        while (i < n) {
-          val base = (offsets(ti) + i) * 2
-          val sumG = agg(base); val sumH = agg(base + 1)
-          if (sumH > 0) {
-            cover(i) = sumH.toFloat
-            // internal nodes carry their would-be-leaf weight (the
-            // trainer stores the same), so a later prune pass
-            // collapses onto a CURRENT-data weight
-            if (p.refreshLeaf)
-              value(i) = (leafWeight(sumG, sumH, pLeaf) * wT).toFloat
-            if (tree.feature(i) >= 0) {
-              val lb = (offsets(ti) + tree.left(i)) * 2
-              val rb = (offsets(ti) + tree.right(i)) * 2
-              gain(i) = (score(agg(lb), agg(lb + 1), pLeaf) +
-                score(agg(rb), agg(rb + 1), pLeaf) -
-                score(sumG, sumH, pLeaf)).toFloat
+          def refreshPass(): Unit = {
+            val roundTrees = outTrees.slice(round * tpr, round * tpr + tpr)
+            val offsets = roundTrees.scanLeft(0)(_ + _.numNodes)
+            val bcTrees = life.broadcast(roundTrees)
+            // merged in partition-index order, like every histogram
+            val agg = aggregateHist(gradients(data, obj, round, p),
+              offsets.last * 2)(TaskFns.pathSums(bcTrees, offsets, k))
+            life.destroy(bcTrees)
+            var ti = 0
+            while (ti < roundTrees.length) {
+              val tree = roundTrees(ti)
+              // dart: bake the stored cumulative weight back into the
+              // re-fit value (the trainer's baked-leaf convention); 1.0
+              // for gbtree
+              val wT = if (m.dartWeights.isEmpty) 1.0
+                else m.dartWeights(round * tpr + ti)
+              val n = tree.numNodes
+              val value = tree.value.clone()
+              val gain =
+                if (tree.hasStats) tree.gain.clone() else new Array[Float](n)
+              val cover =
+                if (tree.hasStats) tree.cover.clone() else new Array[Float](n)
+              var i = 0
+              while (i < n) {
+                val base = (offsets(ti) + i) * 2
+                val sumG = agg(base); val sumH = agg(base + 1)
+                if (sumH > 0) {
+                  cover(i) = sumH.toFloat
+                  // internal nodes carry their would-be-leaf weight (the
+                  // trainer stores the same), so a later prune pass
+                  // collapses onto a CURRENT-data weight
+                  if (p.refreshLeaf)
+                    value(i) = (leafWeight(sumG, sumH, pLeaf) * wT).toFloat
+                  if (tree.feature(i) >= 0) {
+                    val lb = (offsets(ti) + tree.left(i)) * 2
+                    val rb = (offsets(ti) + tree.right(i)) * 2
+                    gain(i) = (score(agg(lb), agg(lb + 1), pLeaf) +
+                      score(agg(rb), agg(rb + 1), pLeaf) -
+                      score(sumG, sumH, pLeaf)).toFloat
+                  }
+                } // no routed rows: keep the trained value/stats
+                i += 1
+              }
+              outTrees(round * tpr + ti) = new RegTree(tree.feature,
+                tree.thresholdBin, tree.threshold, tree.defaultLeft,
+                tree.left, tree.right, value, gain, cover, tree.catSplit,
+                tree.catBits)
+              ti += 1
             }
-          } // no routed rows: keep the trained value/stats
-          i += 1
-        }
-        outTrees(round * tpr + ti) = new RegTree(tree.feature,
-          tree.thresholdBin, tree.threshold, tree.defaultLeft,
-          tree.left, tree.right, value, gain, cover, tree.catSplit,
-          tree.catBits)
-        ti += 1
-      }
-      // L1-family parity: xgboost invokes the objective's
-      // UpdateTreeLeaf hook after EVERY updater pass, refresh included
-      // — MAE/quantile leaves reset to η·Q_α of the CURRENT residuals
-      // (same adaptive machinery training uses), overriding the
-      // generic −η·G/(H+λ) re-fit above
-      if (p.refreshLeaf) obj.leafRefreshAlphas.foreach { as =>
-        val adapted = refreshLeaves(data,
-          outTrees.slice(round * tpr, round * tpr + tpr), as,
-          Array.tabulate(tpr)(_ % k), pLeaf.eta)
-        var j = 0
-        while (j < adapted.length) {
-          val t = adapted(j)
-          // dart: the adaptive hook sets RAW leaves (η·Q_α); re-apply
-          // the stored weight like xgboost's predict-time weight_drop
-          val wT = if (m.dartWeights.isEmpty) 1.0
-            else m.dartWeights(round * tpr + j)
-          if (wT != 1.0) {
-            var i = 0
-            while (i < t.numNodes) {
-              if (t.feature(i) < 0) t.value(i) = (t.value(i) * wT).toFloat
-              i += 1
+            // L1-family parity: xgboost invokes the objective's
+            // UpdateTreeLeaf hook after EVERY updater pass, refresh
+            // included — MAE/quantile leaves reset to η·Q_α of the
+            // CURRENT residuals (same adaptive machinery training uses),
+            // overriding the generic −η·G/(H+λ) re-fit above
+            if (p.refreshLeaf) obj.leafRefreshAlphas.foreach { as =>
+              val adapted = refreshLeaves(data,
+                outTrees.slice(round * tpr, round * tpr + tpr), as,
+                Array.tabulate(tpr)(_ % k), pLeaf.eta)
+              var j = 0
+              while (j < adapted.length) {
+                val t = adapted(j)
+                // dart: the adaptive hook sets RAW leaves (η·Q_α);
+                // re-apply the stored weight like xgboost's
+                // predict-time weight_drop
+                val wT = if (m.dartWeights.isEmpty) 1.0
+                  else m.dartWeights(round * tpr + j)
+                if (wT != 1.0) {
+                  var i = 0
+                  while (i < t.numNodes) {
+                    if (t.feature(i) < 0)
+                      t.value(i) = (t.value(i) * wT).toFloat
+                    i += 1
+                  }
+                }
+                outTrees(round * tpr + j) = t; j += 1
+              }
             }
           }
-          outTrees(round * tpr + j) = t; j += 1
+          // margins advance with the REFRESHED trees (xgboost update
+          // order); the broadcast lives to the end of the run, since
+          // every LATER round's lineage (task closures serialize the
+          // full DAG) still references it
+          val bcNew = life.broadcast(
+            byClass(outTrees.slice(round * tpr, round * tpr + tpr), k))
+          val nd = life.persist(applyTrees(data, bcNew))
+          nd.foreachPartition(_ => ())
+          prevData.foreach(life.release)
+          prevData = Some(data)
+          data = nd
+          round += 1
         }
       }
-      } // refreshPass
-      // margins advance with the REFRESHED trees (xgboost update order)
-      val bcNew = sc.broadcast(
-        byClass(outTrees.slice(round * tpr, round * tpr + tpr), k))
-      liveBc += bcNew
-      val nd = applyTrees(data, bcNew)
-        .persist(p.storageLevel)
-      nd.foreachPartition(_ => ())
-      prevData.foreach(release)
-      prevData = Some(data)
-      data = nd
-      round += 1
+      // xgboost process_type=update COMMITS only the num_boost_round
+      // updated rounds (all trees move to trees_to_update; the
+      // un-refreshed tail is dropped) — a prefix refresh must not return
+      // stale tail trees that would shift predictions
+      val kept = p.numRounds * tpr
+      TrainResult(
+        new GraftModel(outTrees.take(kept), obj.name,
+          if (obj.numOutputs <= 1) 0 else obj.numOutputs, p.baseScore,
+          MissingBin, bins.numFeatures, m.numParallelTree,
+          m.dartWeights.take(kept), m.featureNames),
+        Map.empty, totalN, p.numRounds)
     }
-    prevData.foreach(release)
-    release(data)
-    liveBc.foreach(_.destroy())
-    // xgboost process_type=update COMMITS only the num_boost_round
-    // updated rounds (all trees move to trees_to_update; the
-    // un-refreshed tail is dropped) — a prefix refresh must not return
-    // stale tail trees that would shift predictions
-    val kept = p.numRounds * tpr
-    TrainResult(
-      new GraftModel(outTrees.take(kept), obj.name,
-        if (obj.numOutputs <= 1) 0 else obj.numOutputs, p.baseScore,
-        MissingBin, bins.numFeatures, m.numParallelTree,
-        m.dartWeights.take(kept), m.featureNames),
-      Map.empty, totalN, p.numRounds)
   }
 
   /**

@@ -290,8 +290,7 @@ class PlanAuditSpec extends SparkTestBase {
         (if (j == c) 10.0 else 0.0) + rng.nextDouble() * 0.01))
     }
     val df = rows.toDF("id", "vec").repartition(3)
-    val idx = java.nio.file.Files
-      .createTempDirectory("ivfpq-prune").toString + "/idx"
+    val idx = tempDir("ivfpq-prune").toString + "/idx"
     graft.ops.Similarity.ivfPqWriteIndex(df, "id", "vec", idx,
       nCells = 5, m = 4, ksub = 4)
     val cellIds = new java.io.File(idx).listFiles()

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 import java.nio.file.Files
 
 /**
@@ -11,7 +9,7 @@ import java.nio.file.Files
  * goes, and fresh or foreign dirs are never touched. Replay
  * checkpoints (`graft_ck_<sink>_<pid>`) follow the same rule.
  */
-class ScratchPruneSpec extends AnyFunSuite {
+class ScratchPruneSpec extends SparkTestBase {
 
   private def mkdir(root: java.io.File, name: String,
       ageMs: Long, now: Long): java.io.File = {
@@ -24,7 +22,7 @@ class ScratchPruneSpec extends AnyFunSuite {
 
   test("a stale dir with a live pid is kept; one with a dead pid is " +
       "pruned") {
-    val root = Files.createTempDirectory("graft-prune-spec").toFile
+    val root = tempDir("graft-prune-spec").toFile
     val now = System.currentTimeMillis()
     val day = 24L * 3600 * 1000
     val live = ProcessHandle.current().pid()
@@ -54,7 +52,7 @@ class ScratchPruneSpec extends AnyFunSuite {
 
   test("a day-old replay checkpoint of a dead pid is pruned; the same " +
       "name with the live pid is kept") {
-    val root = Files.createTempDirectory("graft-prune-spec").toFile
+    val root = tempDir("graft-prune-spec").toFile
     val now = System.currentTimeMillis()
     val dayOld = 24L * 3600 * 1000 + 60000L
     val child = new ProcessBuilder("true").start()

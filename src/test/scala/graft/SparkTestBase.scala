@@ -9,6 +9,20 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
+  private val tempDirs =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it after the suite's last test. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tempDirs.add(d.toFile)
+    d
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => Scratch.delete(d)) finally super.afterAll()
+
   /** Structural hash over every model-defining tree array — the one
     * bit-identity comparator for "these two trainings produced the
     * same model" assertions (keep the field list exhaustive: a weaker

@@ -30,7 +30,7 @@ class JobCostSpec extends SparkTestBase {
         else 0.0
       (x(0), x(1), x(2), x(3), x(4), x(5), y)
     }
-    val dir = java.nio.file.Files.createTempDirectory("jobcost").toString +
+    val dir = tempDir("jobcost").toString +
       "/data.parquet"
     spark.createDataFrame(spark.sparkContext.parallelize(data, 4))
       .toDF("a", "b", "c", "d", "e", "f", "y").write.parquet(dir)

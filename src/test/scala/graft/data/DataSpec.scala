@@ -87,7 +87,7 @@ class DataSpec extends SparkTestBase {
     // three single-row csv shards whose listing order differs from
     // their sorted order — matrix.py:503-505 sorts for determinism and
     // so does DataLoader.load
-    val dir = java.nio.file.Files.createTempDirectory("graft-o3")
+    val dir = tempDir("graft-o3")
     val names = Seq("b.csv", "a.csv", "c.csv")
     names.zipWithIndex.foreach { case (n, i) =>
       java.nio.file.Files.writeString(dir.resolve(n),
@@ -126,7 +126,7 @@ class DataSpec extends SparkTestBase {
       "column pruning pushed to the scan (X51)") {
     val src = Seq((1L, "a", 1.5), (2L, "b", -2.25), (3L, "c", 0.0))
       .toDF("id", "s", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("orc-rt").toString
+    val tmp = tempDir("orc-rt").toString
     src.coalesce(1).write.mode("overwrite").orc(tmp)
     val files = new java.io.File(tmp).listFiles()
       .filter(_.getName.endsWith(".orc")).map(_.getPath).toSeq
@@ -147,7 +147,7 @@ class DataSpec extends SparkTestBase {
   test("writePartitioned: directory-per-value layout, per-file row cap " +
       "honored, planned bucket counts, exact content round-trip (X65)") {
     val docs = spark.read.parquet(sf("sf0.001") + "/documents.parquet")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink_")
+    val tmp = tempDir("graft_sink_")
       .toString
     val target = 10L
     val buckets = DataLoader.writePartitioned(docs, tmp, "source",
@@ -194,7 +194,7 @@ class DataSpec extends SparkTestBase {
   test("JSONL loads (plain + gzip), multi-file, with column pruning " +
       "(the web-corpus interchange format)") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft-jsonl").toString
+    val dir = tempDir("graft-jsonl").toString
     val lines1 = (1 to 5).map(i =>
       s"""{"id": $i, "text": "doc $i", "score": ${i * 0.5}}""")
     Files.write(Paths.get(s"$dir/part1.jsonl"),

@@ -107,8 +107,7 @@ class CatPartitionSpec extends SparkTestBase {
       numRounds = 2, maxDepth = 2, seed = 1)).model
     assert(m.dump().contains("in{"),
       "partition nodes must dump their category set")
-    val dir = java.nio.file.Files
-      .createTempDirectory("catpart").toString
+    val dir = tempDir("catpart").toString
     m.save(spark, dir)
     val back = GraftModel.load(spark, dir)
     assert(back.dump() === m.dump())

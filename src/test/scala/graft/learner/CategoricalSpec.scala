@@ -74,8 +74,7 @@ class CategoricalSpec extends SparkTestBase {
       categoricalCols = Seq("cat"))
     val m = GraftBoost.train(df, spec, TrainParams(numRounds = 2,
       maxDepth = 2, seed = 3)).model
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-cat-model").toString
+    val path = tempDir("graft-cat-model").toString
     m.save(spark, path)
     val loaded = GraftModel.load(spark, path)
     assert(loaded.dump() === m.dump())

@@ -47,7 +47,7 @@ class DartWeightsSpec extends SparkTestBase {
       objective = "reg:squarederror", booster = "dart", numRounds = 4,
       maxDepth = 2, eta = 0.5, rateDrop = 1.0, seed = 13)).model
     assert(m.dartWeights.length === 4)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dw").toString
+    val dir = tempDir("graft-dw").toString
     m.save(spark, dir)
     val loaded = GraftModel.load(spark, dir)
     assert(loaded.dump() === m.dump())
@@ -57,7 +57,7 @@ class DartWeightsSpec extends SparkTestBase {
     // a non-dart save leaves no weights behind
     val gb = GraftBoost.train(df, spec, TrainParams(numRounds = 1,
       maxDepth = 2, seed = 1)).model
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-dw2")
+    val dir2 = tempDir("graft-dw2")
       .toString
     gb.save(spark, dir2)
     assert(GraftModel.load(spark, dir2).dartWeights.isEmpty)

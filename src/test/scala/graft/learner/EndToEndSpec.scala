@@ -159,7 +159,7 @@ class EndToEndSpec extends SparkTestBase {
     val res = GraftBoost.train(df, DMatrixSpec("label"),
       TrainParams(objective = "multi:softprob", numClass = 4,
         numRounds = 3, maxDepth = 2, seed = 9))
-    val dir = java.nio.file.Files.createTempDirectory("graft-model")
+    val dir = tempDir("graft-model")
       .toString
     res.model.save(spark, dir)
     val loaded = GraftModel.load(spark, dir)
@@ -212,7 +212,7 @@ class EndToEndSpec extends SparkTestBase {
       maxDepth = 3, seed = 3)
     val full = GraftBoost.train(df, DMatrixSpec("y"), p)
 
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val ckpt = tempDir("graft-ckpt")
       .toString
     GraftBoost.train(df, DMatrixSpec("y"),
       p.copy(numRounds = 5, checkpointEvery = 5,
@@ -317,7 +317,7 @@ class EndToEndSpec extends SparkTestBase {
     assert(custom.model.dump() === builtin.model.dump())
     assert(custom.model.objective === "custom:squarederror")
     // save/load round-trips; custom-objective predictions are raw margins
-    val dir = java.nio.file.Files.createTempDirectory("graft-cobj").toString
+    val dir = tempDir("graft-cobj").toString
     custom.model.save(spark, dir)
     val loaded = GraftModel.load(spark, dir)
     val a = GraftBoost.predict(builtin.model, df, DMatrixSpec("y"))
@@ -510,7 +510,7 @@ class EndToEndSpec extends SparkTestBase {
     assert(one.trees.length === 4, "truncate cut mid-forest")
     // a whole forest averages to an unbiased round — predictions from
     // the 1-round model must differ from the full model but stay finite
-    val dir = java.nio.file.Files.createTempDirectory("graft-rf").toString
+    val dir = tempDir("graft-rf").toString
     res.model.save(spark, dir)
     val loaded = GraftModel.load(spark, dir)
     assert(loaded.numParallelTree === 4)

@@ -56,7 +56,7 @@ class GblinearJsonSpec extends SparkTestBase {
     assert(json.contains(""""feature_names":["a","b"]"""))
     assert(json.contains(""""feature_types":["float","float"]"""))
     assert(GraftLinear.fromXgbJson(json).featureNames === Seq("a", "b"))
-    val dir = java.nio.file.Files.createTempDirectory("linfn")
+    val dir = tempDir("linfn")
     GraftLinear.save(m, spark, dir.toString)
     assert(GraftLinear.load(spark, dir.toString).featureNames ===
       Seq("a", "b"))
@@ -158,7 +158,7 @@ class GblinearJsonSpec extends SparkTestBase {
 
   test("file round-trip: saveXgbJson -> loadXgbJson") {
     val m = trainLinear("reg:squarederror")
-    val dir = java.nio.file.Files.createTempDirectory("gblinjson")
+    val dir = tempDir("gblinjson")
     val path = dir.resolve("m.json").toString
     GraftLinear.saveXgbJson(m, path)
     val im = GraftLinear.loadXgbJson(path)

@@ -153,8 +153,7 @@ class LinearSpec extends SparkTestBase {
       .setParams(TrainParams(objective = "reg:squarederror",
         numRounds = 50, eta = 0.5, lambda = 0.0, baseScore = 0.0))
       .fit(df)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-linear").toString + "/m"
+    val dir = tempDir("graft-linear").toString + "/m"
     m.save(spark, dir)
     val loaded = GraftLinear.load(spark, dir)
     assert(loaded.weights.map(_.toSeq).toSeq ===

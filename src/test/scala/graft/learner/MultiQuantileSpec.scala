@@ -85,7 +85,7 @@ class MultiQuantileSpec extends SparkTestBase {
     assert(row.getDouble(1) === vec(0).toDouble,
       "scalar prediction = first alpha's output")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-mq").toString
+    val dir = tempDir("graft-mq").toString
     res.model.save(spark, dir)
     val loaded = GraftModel.load(spark, dir)
     assert(loaded.dump() === res.model.dump())

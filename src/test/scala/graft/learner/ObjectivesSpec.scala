@@ -160,7 +160,7 @@ class ObjectivesSpec extends SparkTestBase {
     val res = GraftBoost.train(df, DMatrixSpec("y"),
       TrainParams(objective = "count:poisson", numRounds = 5,
         maxDepth = 3, seed = 3))
-    val dir = java.nio.file.Files.createTempDirectory("graft-poisson")
+    val dir = tempDir("graft-poisson")
       .toString
     res.model.save(spark, dir)
     val back = GraftModel.load(spark, dir)

@@ -1,0 +1,147 @@
+package graft.learner
+
+import graft.SparkTestBase
+import graft.api.GraftBoost
+import graft.data.DMatrixSpec
+
+/**
+ * Every boosting loop ends its run the same way whatever ends it: a
+ * throwing callback, a failing task or a hard [[StopEvent]] leaves the
+ * calling thread without the `graft-train-*` job group and frees every
+ * cache and broadcast the run made, while a caller-owned
+ * [[GraftBoost.BinnedMatrix]] keeps its blocks and trains again.
+ *
+ * Failures are injected through [[TrainLifetimeSpec.TripSq]], squared
+ * error that runs [[TrainLifetimeSpec.trip]] on every row whose margin
+ * has moved off the base score: rows of round 0 never trip, so each
+ * failure lands in round 1 or later, with margin generations cached.
+ */
+class TrainLifetimeSpec extends SparkTestBase {
+  import TrainLifetimeSpec._
+  import spark.implicits._
+
+  private lazy val df = {
+    val rng = new scala.util.Random(5)
+    (1 to 2000).map { _ =>
+      val a = rng.nextDouble(); val b = rng.nextDouble()
+      (a, b, 3 * a - 2 * b + 0.1 * rng.nextGaussian(), a * b)
+    }.toDF("a", "b", "y", "y2").repartition(4)
+  }
+  private lazy val valid = df.limit(500).repartition(2)
+  private val spec =
+    DMatrixSpec(labelCol = Seq("y"), featureCols = Some(Seq("a", "b")))
+  private val params = TrainParams(numRounds = 4, maxDepth = 3, seed = 7,
+    customObjective = Some(TripSq))
+
+  private def sc = spark.sparkContext
+  private def cached(): Set[Int] = sc.getPersistentRDDs.keySet.toSet
+
+  /** Runs `run` with `arm` installed as the trip, then checks that the
+    * thread carries no job group and the cached RDDs are the ones
+    * cached before. */
+  private def leavesNothing(arm: () => Unit)(run: => Any): Unit = {
+    val before = cached()
+    trip = arm
+    try run finally trip = null
+    val group = Option(sc.getLocalProperty("spark.jobGroup.id"))
+    val after = cached()
+    assert(group.isEmpty && after == before,
+      s"job group ${group.orNull}; ${(after -- before).size} RDD(s) " +
+        s"left cached, ${(before -- after).size} released")
+  }
+
+  private def throwsAt(round: Int): TrainingCallback = new TrainingCallback {
+    override def afterIteration(r: Int, m: Map[String, Double]): Boolean =
+      if (r == round) throw new IllegalStateException(s"callback at $r")
+      else false
+  }
+
+  private val fail: () => Unit =
+    () => throw new IllegalStateException("injected task failure")
+
+  /** Hard-stops `stop` from the task, then waits for the cancel. */
+  private def hardStop(stop: StopEvent): () => Unit = () => {
+    stop.set(hard = true)
+    Thread.sleep(30000)
+  }
+
+  for (booster <- Seq("gbtree", "dart")) {
+    val p = params.copy(booster = booster, rateDrop = 0.0)
+
+    test(s"$booster: a callback throwing at round 1 frees the run") {
+      leavesNothing(null) {
+        val e = intercept[IllegalStateException] {
+          GraftBoost.train(df, spec, p, evals = Seq("valid" -> valid),
+            callbacks = Seq(throwsAt(1)))
+        }
+        assert(e.getMessage === "callback at 1")
+      }
+    }
+
+    test(s"$booster: a BinnedMatrix whose train threw keeps its blocks " +
+        "and trains again") {
+      val m = GraftBoost.materialize(df, spec, p)
+      try {
+        leavesNothing(null) {
+          intercept[IllegalStateException] {
+            m.train(p, evals = Seq("train" -> m), callbacks = Seq(throwsAt(1)))
+          }
+        }
+        leavesNothing(null) {
+          assert(m.train(p, evals = Seq("train" -> m)).roundsCompleted === 4)
+        }
+      } finally m.unpersist()
+    }
+
+    test(s"$booster: a hard StopEvent mid-round frees the run") {
+      val stop = new StopEvent
+      leavesNothing(hardStop(stop)) {
+        val res = GraftBoost.train(df, spec, p, evals = Seq("valid" -> valid),
+          callbacks = Seq(stop))
+        assert(stop.isSet)
+        assert(res.roundsCompleted === 1)
+        assert(res.model.trees.length === 1)
+      }
+    }
+  }
+
+  test("process_type=update: a failing task frees the run") {
+    val m = GraftBoost.train(df, spec, params).model
+    leavesNothing(fail) {
+      intercept[org.apache.spark.SparkException] {
+        GraftBoost.train(df, spec, params.copy(processType = "update"),
+          initModel = Some(m))
+      }
+    }
+  }
+
+  test("multi_output_tree: a failing task frees the run") {
+    leavesNothing(fail) {
+      intercept[org.apache.spark.SparkException] {
+        GraftBoost.trainMultiOutput(df,
+          DMatrixSpec(labelCol = Seq("y", "y2"),
+            featureCols = Some(Seq("a", "b"))),
+          params)
+      }
+    }
+  }
+}
+
+object TrainLifetimeSpec {
+  /** Run on every gradient row whose margin has left the base score;
+    * shared with the tasks, which run in this JVM under `local[N]`. */
+  @volatile var trip: () => Unit = _
+
+  object TripSq extends Objective {
+    val name = "custom:tripsq"
+    val numOutputs = 1
+    def initMargin(b: Double): Float = b.toFloat
+    def transform(m: Array[Float]): Array[Float] = m
+    def gradHess(m: Array[Float], y: Float, g: Array[Float],
+        h: Array[Float]): Unit = {
+      val t = trip
+      if (t != null && m(0) != 0.5f) t()
+      g(0) = m(0) - y; h(0) = 1.0f
+    }
+  }
+}

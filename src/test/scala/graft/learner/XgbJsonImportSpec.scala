@@ -290,7 +290,7 @@ class XgbJsonImportSpec extends SparkTestBase {
     assert(im.featureNames === Seq("a", "b"),
       "import must re-attach recorded names")
     // parquet model sink carries them too
-    val dir = java.nio.file.Files.createTempDirectory("fnames")
+    val dir = tempDir("fnames")
     m.save(spark, dir.toString)
     assert(GraftModel.load(spark, dir.toString).featureNames ===
       Seq("a", "b"))
@@ -298,7 +298,7 @@ class XgbJsonImportSpec extends SparkTestBase {
 
   test("file round-trip: saveXgbJson -> loadXgbJson") {
     val m = trainModel("binary:logistic", rounds = 3, depth = 3)
-    val dir = java.nio.file.Files.createTempDirectory("xgbimp")
+    val dir = tempDir("xgbimp")
     val path = dir.resolve("m.json").toString
     m.saveXgbJson(path)
     val im = GraftModel.loadXgbJson(path)

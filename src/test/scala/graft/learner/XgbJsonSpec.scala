@@ -133,7 +133,7 @@ class XgbJsonSpec extends SparkTestBase {
     }.toDF("a", "y").repartition(2)
     val m = GraftBoost.train(df, DMatrixSpec("y"),
       TrainParams(numRounds = 2, maxDepth = 2, seed = 1)).model
-    val f = java.nio.file.Files.createTempFile("graft-xgb", ".json")
+    val f = tempDir("graft-xgb").resolve("model.json")
     m.saveXgbJson(f.toString)
     val parsed = mapper.readTree(java.nio.file.Files.readAllBytes(f))
     assert(parsed.get("version").get(0).asInt() === 2)

@@ -271,7 +271,7 @@ class EstimatorSpec extends SparkTestBase {
     }
     // checkpoint cadence: partial models land under round=<r> and load
     // independently with the right tree counts
-    val dir = java.nio.file.Files.createTempDirectory("graft-tune")
+    val dir = tempDir("graft-tune")
       .toString
     GraftBoost.train(tr, DMatrixSpec("y"),
       TrainParams(objective = "reg:squarederror", numRounds = 5,
@@ -308,7 +308,7 @@ class EstimatorSpec extends SparkTestBase {
     }
     assert(m.model.featureImportances("total_gain")(0) > 0.95)
     // stats survive the parquet round-trip
-    val dir = java.nio.file.Files.createTempDirectory("graft-imp").toString
+    val dir = tempDir("graft-imp").toString
     m.model.save(spark, dir)
     val loaded = graft.learner.GraftModel.load(spark, dir)
     assert(loaded.trees.forall(_.hasStats))
@@ -340,7 +340,7 @@ class EstimatorSpec extends SparkTestBase {
           "else 1 end as int)"))
     val m = new GraftClassifier().setNumRounds(5).setMaxDepth(3)
       .setSeed(13).fit(shifted)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lbl").toString
+    val dir = tempDir("graft-lbl").toString
     m.save(spark, dir)
     val loaded = GraftPredictionModel.loadClassifier(spark, dir, m.spec)
     assert(loaded.classLabels.toSeq === Seq(1.0, 2.0, 3.0))
@@ -355,7 +355,7 @@ class EstimatorSpec extends SparkTestBase {
   test("model save/load through estimator wrapper (S12)") {
     val m = new GraftClassifier().setNumRounds(5).setMaxDepth(3)
       .setSeed(5).fit(binaryDf)
-    val dir = java.nio.file.Files.createTempDirectory("graft-est").toString
+    val dir = tempDir("graft-est").toString
     m.save(spark, dir)
     val loaded = GraftPredictionModel.loadClassifier(spark, dir, m.spec)
     val a = m.transform(binaryDf).select("prediction").collect()

@@ -57,7 +57,7 @@ class MLInteropSpec extends SparkTestBase {
       out.count()
     assert(acc > 0.672, s"pipeline accuracy $acc") // beat base rate
     // persistence round-trip through the MLlib writer machinery
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipe")
+    val dir = tempDir("graft-pipe")
       .toString
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
@@ -101,7 +101,7 @@ class MLInteropSpec extends SparkTestBase {
     val model = est.fit(tri)
     assert(model.numClasses === 3)
     assert(model.classLabels.toSeq === Seq(1.0, 3.0, 5.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-clf")
+    val dir = tempDir("graft-clf")
       .toString
     model.write.overwrite().save(dir)
     val loaded = GraftXGBClassificationModel.load(dir)
@@ -167,7 +167,7 @@ class MLInteropSpec extends SparkTestBase {
       .setFeaturesCols(Array("price", "disc"))
       .setNumRounds(4).setMaxDepth(3).setSeed(4L).setNumWorkers(4)
     val model = est.fit(df)
-    val dir = java.nio.file.Files.createTempDirectory("graft-reg")
+    val dir = tempDir("graft-reg")
       .toString
     model.write.overwrite().save(dir)
     val loaded = GraftXGBRegressionModel.load(dir)
@@ -184,7 +184,7 @@ class MLInteropSpec extends SparkTestBase {
       .setOneDrop(true).setSampleType("weighted")
       .setNormalizeType("forest")
       .setNumRounds(3).setMaxDepth(2).setSeed(7L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-dart-est")
+    val dir = tempDir("graft-dart-est")
       .toString
     est.write.overwrite().save(dir)
     val loaded = GraftXGBRegressor.load(dir)
@@ -204,7 +204,7 @@ class MLInteropSpec extends SparkTestBase {
       .setObjective("reg:quantileerror")
       .setQuantileAlphas(Array(0.25, 0.75))
       .setNumRounds(2).setMaxDepth(2).setSeed(11L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mq-est")
+    val dir = tempDir("graft-mq-est")
       .toString
     est.write.overwrite().save(dir)
     val loaded = GraftXGBRegressor.load(dir)
@@ -215,7 +215,7 @@ class MLInteropSpec extends SparkTestBase {
     assert(m1.graftModel.objective === "reg:quantileerror@0.25,0.75")
     assert(m1.graftModel.dump() === m2.graftModel.dump())
     // fitted-model persistence keeps the multi-output objective intact
-    val mdir = java.nio.file.Files.createTempDirectory("graft-mq-model")
+    val mdir = tempDir("graft-mq-model")
       .toString
     m1.write.overwrite().save(mdir)
     val lm = GraftXGBRegressionModel.load(mdir)
@@ -240,7 +240,7 @@ class MLInteropSpec extends SparkTestBase {
     val t = model.graftModel.trees.head
     assert(t.isCatNode(0) && t.threshold(0) === 5f,
       "facade-declared categorical column should yield a == 5 split")
-    val dir = java.nio.file.Files.createTempDirectory("graft-cat-fac")
+    val dir = tempDir("graft-cat-fac")
       .toString
     model.write.overwrite().save(dir)
     val loaded = GraftXGBRegressionModel.load(dir)
@@ -316,7 +316,7 @@ class MLInteropSpec extends SparkTestBase {
       .collect().map(_.getDouble(1))
     assert(mPos > mNeg,
       s"ranking margins do not separate: pos=$mPos neg=$mNeg")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rank")
+    val dir = tempDir("graft-rank")
       .toString
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
@@ -339,7 +339,7 @@ class MLInteropSpec extends SparkTestBase {
     val model = new Pipeline().setStages(Array(lin)).fit(df)
     val lm = model.stages.head.asInstanceOf[GraftXGBLinearModel]
     assert(lm.coefficients.size === 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-lin")
+    val dir = tempDir("graft-lin")
       .toString
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
@@ -417,7 +417,7 @@ class MLInteropSpec extends SparkTestBase {
     val acc = out.filter($"prediction" === $"y").count().toDouble /
       out.count()
     assert(acc > 0.672, s"RF pipeline accuracy $acc")
-    val dir = java.nio.file.Files.createTempDirectory("graft-rfc")
+    val dir = tempDir("graft-rfc")
       .toString
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
@@ -435,7 +435,7 @@ class MLInteropSpec extends SparkTestBase {
     val model = new Pipeline().setStages(Array(rf)).fit(df)
     val m = model.stages.head.asInstanceOf[GraftXGBRegressionModel]
     assert(m.graftModel.trees.length === 15)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rfr")
+    val dir = tempDir("graft-rfr")
       .toString
     model.write.overwrite().save(dir)
     val loaded = PipelineModel.load(dir)
@@ -539,7 +539,7 @@ class MLInteropSpec extends SparkTestBase {
     assert(preds(0) <= preds(1) + 1e-9,
       s"monotone +1 on qty violated: ${preds.toSeq}")
     // params persist through the MLlib save/load path
-    val dir = java.nio.file.Files.createTempDirectory("mlparams")
+    val dir = tempDir("mlparams")
       .toString + "/m"
     m.save(dir)
     val loaded = GraftXGBRegressionModel.load(dir)
@@ -642,7 +642,7 @@ class MLInteropSpec extends SparkTestBase {
       .setInitModel(m.inner.model).fit(df)
     assert(refreshed.inner.model.dump() === m.inner.model.dump())
     // Param round-trips through estimator persistence
-    val dir = java.nio.file.Files.createTempDirectory("graft-upd-est")
+    val dir = tempDir("graft-upd-est")
       .toString
     val est = new GraftXGBRegressor().setProcessType("update")
       .setRefreshLeaf(false)

@@ -100,7 +100,7 @@ class BpeSpec extends SparkTestBase {
 
   test("save/load round-trips the ranked merge table") {
     val m = TextOps.trainBpe(sennrichCorpus(2), "text", numMerges = 5)
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = tempDir("bpe").toString
     TextOps.saveBpe(spark, m, dir + "/model")
     val loaded = TextOps.loadBpe(spark, dir + "/model")
     assert(loaded.merges === m.merges)

@@ -167,8 +167,7 @@ class OpsSpec extends SparkTestBase {
     assert(out(3L) === ((0L, 0L, 0.0)))
     assert(run(rows.repartition(7)) === out)
     // save/load round-trips exactly (integer log-probs)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bigram-lm").toString + "/lm"
+    val dir = tempDir("bigram-lm").toString + "/lm"
     TextOps.saveBigramLM(spark, lm, dir)
     val lm2 = TextOps.loadBigramLM(spark, dir)
     assert(lm2.vocab.toMap === lm.vocab.toMap)
@@ -208,7 +207,7 @@ class OpsSpec extends SparkTestBase {
       .collect().map(_.toSeq).toSet
     assert(fused === staged)
     // save/load round-trip preserves the LM exactly
-    val dir = java.nio.file.Files.createTempDirectory("graft-lm").toString
+    val dir = tempDir("graft-lm").toString
     TextOps.saveUnigramLM(spark, lm, dir)
     assert(TextOps.loadUnigramLM(spark, dir) === lm)
   }

@@ -102,8 +102,7 @@ class PqSpec extends SparkTestBase {
     val rows = clustered(4, 20)
     val df = rows.toDF("id", "vec").repartition(3)
     val cb = Similarity.pqTrain(df, "id", "vec", m = 4, ksub = 8)
-    val dir = java.nio.file.Files
-      .createTempDirectory("pq-cb").toString + "/cb"
+    val dir = tempDir("pq-cb").toString + "/cb"
     Similarity.savePqCodebook(spark, cb, dir)
     val cb2 = Similarity.loadPqCodebook(spark, dir)
     assert((cb2.m, cb2.kEff, cb2.dim) === (cb.m, cb.kEff, cb.dim))
@@ -144,8 +143,7 @@ class PqSpec extends SparkTestBase {
     val rows = base :+ (9999L, base(3)._2)
     val df = rows.toDF("id", "vec").repartition(3)
     val q = Seq((3L, base(3)._2), (7L, base(7)._2)).toDF("qid", "vec")
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivfpq-idx").toString + "/idx"
+    val dir = tempDir("ivfpq-idx").toString + "/idx"
     val (coarse, cb) = Similarity.ivfPqWriteIndex(df, "id", "vec", dir,
       nCells = 5, m = 4, ksub = 8)
     def res(d: org.apache.spark.sql.DataFrame) =

@@ -128,8 +128,7 @@ class SqSpec extends SparkTestBase {
     val rows = clustered(4, 20)
     val df = rows.toDF("id", "vec").repartition(3)
     val cb = Similarity.sqTrain(df, "vec")
-    val dir = java.nio.file.Files
-      .createTempDirectory("sq-cb").toString + "/cb"
+    val dir = tempDir("sq-cb").toString + "/cb"
     Similarity.saveSqCodebook(spark, cb, dir)
     val cb2 = Similarity.loadSqCodebook(spark, dir)
     assert(cb2.minQ.toSeq === cb.minQ.toSeq)

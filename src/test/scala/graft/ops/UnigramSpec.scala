@@ -72,8 +72,7 @@ class UnigramSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val m = Unigram.trainUnigram(docs, "text", vocabSize = 10,
       maxWords = 100)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_uni_").toString + "/model"
+    val dir = tempDir("graft_uni_").toString + "/model"
     Unigram.saveUnigram(spark, m, dir)
     val re = Unigram.loadUnigram(spark, dir)
     assert(re.pieces == m.pieces)

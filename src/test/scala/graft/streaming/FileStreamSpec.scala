@@ -29,7 +29,7 @@ class FileStreamSpec extends SparkTestBase {
       "min-id dedup (st_dedup's oracle, production ingest shape)") {
     import spark.implicits._
 
-    val root = Files.createTempDirectory("graft_filestream_").toString
+    val root = tempDir("graft_filestream_").toString
     val watch = s"$root/in"
     val ckpt = s"$root/ckpt"
     Files.createDirectories(Paths.get(watch))

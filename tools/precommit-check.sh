@@ -3,7 +3,8 @@
 # a commit or an end-of-round snapshot. Run before any commit of source
 # changes; the round checklist ends with this script.
 #
-#   tools/precommit-check.sh          # one-grower check, then compile
+#   tools/precommit-check.sh          # one-grower and one-lifetime
+#                                     # checks, then compile
 #                                     # main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
@@ -55,6 +56,18 @@ if [[ -n "$growers" ]]; then
   echo "[precommit] SECOND TREE GROWER: only Trainer.scala may call" \
     "aggregateHist( — grow trees through Trainer.buildTrees instead:"
   echo "$growers"
+  exit 1
+fi
+
+# One run lifetime: every boosting loop sets and clears its graft-train-*
+# job group through RunLifetime, so no other main source may do either.
+groupers="$(grep -rlE --include='*.scala' 'setJobGroup\(|clearJobGroup\(' \
+  src/main | grep -v '/RunLifetime\.scala$' || true)"
+if [[ -n "$groupers" ]]; then
+  echo "[precommit] SECOND JOB-GROUP OWNER: only RunLifetime.scala may" \
+    "call setJobGroup( or clearJobGroup( — run the loop inside a" \
+    "RunLifetime instead:"
+  echo "$groupers"
   exit 1
 fi
 
