@@ -40,13 +40,15 @@ object GraftBoost {
     val obj = Objectives.resolve(params)
     val data = materialize(df, spec, params, numWorkers,
       distributedCallbacks)
-    val evalRdds = bindEvals(evals, df, data.blocks, data.bins, spec, obj,
-      params.baseScore, numWorkers)
     // one-shot training owns its caches: boost releases the blocks as
     // the margin chain advances past them, exactly the pre-BinnedMatrix
-    // lifecycle
-    boostMatrix(data, params, evalRdds, callbacks, initModel,
-      distributedCallbacks, releaseInputs = true)
+    // lifecycle, and a failure before boost takes them frees them here
+    try {
+      val evalRdds = bindEvals(evals, df, data.blocks, data.bins, spec, obj,
+        params.baseScore, numWorkers)
+      boostMatrix(data, params, evalRdds, callbacks, initModel,
+        distributedCallbacks, releaseInputs = true)
+    } catch { case t: Throwable => data.unpersist(); throw t }
   }
 
   /**
@@ -128,20 +130,12 @@ object GraftBoost {
       distributedCallbacks: Seq[DistributedCallback] = Nil)
       : BinnedMatrix = {
     val obj = Objectives.resolve(params)
-    // survival objectives may declare bounds instead of a point label
-    // (matrix.py:333-343): label_lower_bound stands in as the label
-    val boundsOnly = obj.needsBounds && spec.labelCol.isEmpty &&
-      spec.labelLowerCol.isDefined
-    require(spec.labelCol.size == 1 || boundsOnly,
+    require(spec.labelCol.size == 1 || boundsOnly(spec, obj),
       "trainer supports a single label column (multi-label loading is a " +
         "data-layer feature; see DMatrixSpec)")
-    val in = load(df, spec, params, obj, requireLabel = !boundsOnly,
-      distributedCallbacks)(
-      prepare(df, spec, obj, numWorkers, distributedCallbacks))(_._1)
-    val blocks = toBinned(in.rows, in.bins, obj, params.baseScore)
-      .persist(params.storageLevel)
-    blocks.foreachPartition(_ => ()) // materialize bytes, drop floats
-    in.release()
+    val in = load(df, spec, params, obj, numWorkers, distributedCallbacks)
+    val blocks = in.pack(params.storageLevel)(
+      toBinned(_, in.bins, obj, params.baseScore))
     val names = attachableNames(spec, df, in.bins.numFeatures)
     new BinnedMatrix(blocks, in.bins, in.catFlags, names,
       spec.featureWeights, df.sparkSession, obj.name, obj.numOutputs,
@@ -167,9 +161,8 @@ object GraftBoost {
         s"objective/baseScore ('${train.objName}' ×${train.numOutputs}, " +
         s"${train.baseScore}); " +
         s"got '${obj.name}' ×${obj.numOutputs}, ${params.baseScore}")
-    val ev = bindEval(df, spec, obj, params.baseScore, numWorkers,
-      train.bins).persist(params.storageLevel)
-    ev.foreachPartition(_ => ())
+    val ev = cache(bindEval(df, spec, obj, params.baseScore, numWorkers,
+      train.bins), params.storageLevel)
     new BinnedMatrix(ev, train.bins, train.catFlags, Nil, None,
       df.sparkSession, train.objName, train.numOutputs, train.baseScore,
       train.maxBins, train.seed, forTraining = false,
@@ -328,6 +321,12 @@ object GraftBoost {
    * over the SAME feature set — the per-target-tree layout xgboost
    * multi-output uses, trained sequentially with full cluster
    * parallelism per target.
+   *
+   * Pointwise objectives take one input pass for all L labels: [[load]]
+   * projects every label column beside the features, [[toBinned]] packs
+   * them L per row, and the cached composite splits each block into
+   * label 0's [[TrainBlock]] plus labels 1..L−1 beside it. Each label
+   * then trains against a view that swaps in its labels column.
    */
   def trainMultiLabel(
       df: DataFrame,
@@ -357,24 +356,21 @@ object GraftBoost {
     // L label columns alongside the features and packs them together
     // (separate per-label plan evaluations CANNOT be zipped instead —
     // an exchange in the plan redistributes rows by the projected
-    // bytes, which differ per label). Each label then trains against a
-    // cheap view that swaps in its labels column; the packed
-    // bins/weights/margins arrays are shared by reference and the
-    // per-label boost owns (and frees) only its view. Cuts are
-    // identical to the per-label pipeline (same features, same binner
-    // seed): L labels cost 2 data scans total instead of 2L. The
-    // by-reference sharing holds for DESERIALIZED storage levels
-    // (boost's persist of the view then stores object refs into the
-    // composite's arrays); under a _SER level each view's persist
-    // serializes its own full byte copy for the duration of that
-    // label's training — the 2-scan saving stands, the memory
-    // saving does not.
-    val in = loadMulti(df, spec, params, obj, numWorkers)
+    // bytes, which differ per label). The packed bins/weights/margins
+    // arrays are shared by reference and the per-label boost owns (and
+    // frees) only its view. Cuts are identical to the per-label
+    // pipeline (same features, same binner seed): L labels cost 2 data
+    // scans total instead of 2L. The by-reference sharing holds for
+    // DESERIALIZED storage levels (boost's persist of the view then
+    // stores object refs into the composite's arrays); under a _SER
+    // level each view's persist serializes its own full byte copy for
+    // the duration of that label's training — the 2-scan saving
+    // stands, the memory saving does not.
+    val nl = spec.labelCol.size
+    val in = load(df, spec, params, obj, numWorkers)
     val bins = in.bins
-    val composite = packMultiLabel(in.rows, bins, obj, params.baseScore,
-      spec.labelCol.size).persist(params.storageLevel)
-    composite.foreachPartition(_ => ())
-    in.release()
+    val composite = in.pack(params.storageLevel)(rows =>
+      toBinned(rows, bins, obj, params.baseScore).map(splitLabels(_, nl)))
     val names = attachableNames(spec, df, bins.numFeatures)
     try {
       MultiLabelResult(spec.labelCol.zipWithIndex.map { case (l, j) =>
@@ -396,85 +392,20 @@ object GraftBoost {
     } finally composite.unpersist(blocking = false)
   }
 
-  /** One-pass multi-label row: (features, all L labels, weight,
-    * baseMargin). */
-  private[api] type MultiRow = (Array[Float], Array[Float], Float, Float)
-
-  /** [[load]] over the label-invariant [[prepareMulti]] projection —
-    * the input step of both multi-target fast paths. */
-  private[api] def loadMulti(df: DataFrame, spec: DMatrixSpec,
-      params: TrainParams, obj: Objective, numWorkers: Int)
-      : Loaded[MultiRow] =
-    load(df, spec, params, obj, requireLabel = true, Nil)(
-      prepareMulti(df, spec, numWorkers))(_._1)
-
-  /** [[trainMultiLabel]]'s packer: each block carries the FIRST label
-    * in its TrainBlock and the other L−1 label columns beside it, so a
-    * per-label view swaps in one column and shares the rest. */
-  private[api] def packMultiLabel(rows: RDD[MultiRow], bins: Binner.Bins,
-      obj: Objective, baseScore: Double, nLabels: Int)
-      : RDD[(TrainBlock, Array[Array[Float]])] = {
-    val k = obj.numOutputs
-    val init = obj.initMargin(baseScore)
-    val bcBins = rows.sparkContext.broadcast(bins)
-    rows.mapPartitions({ it0 =>
-      val it = it0.buffered
-      val bins = bcBins.value
-      val nf = bins.numFeatures
-      val cap = graft.learner.TrainBlock.capacity(nf, k)
-      new Iterator[(TrainBlock, Array[Array[Float]])] {
-        def hasNext: Boolean = it.hasNext
-        def next(): (TrainBlock, Array[Array[Float]]) = {
-          val binsArr = new Array[Byte](cap * nf)
-          val labels = Array.fill(nLabels)(new Array[Float](cap))
-          val weights = new Array[Float](cap)
-          val margins = new Array[Float](cap * k)
-          var n = 0
-          while (it.hasNext && n < cap) {
-            val (f, ys, w, bm) = it.next()
-            val rb = bins.binRow(f)
-            System.arraycopy(rb, 0, binsArr, n * nf, nf)
-            var j = 0
-            while (j < nLabels) { labels(j)(n) = ys(j); j += 1 }
-            weights(n) = w
-            val m0 = if (bm.isNaN) init else bm
-            java.util.Arrays.fill(margins, n * k, n * k + k, m0)
-            n += 1
-          }
-          (new TrainBlock(n, nf, k,
-            java.util.Arrays.copyOf(binsArr, n * nf),
-            java.util.Arrays.copyOf(labels(0), n),
-            java.util.Arrays.copyOf(weights, n), null, null,
-            java.util.Arrays.copyOf(margins, n * k)),
-            Array.tabulate(nLabels - 1)(j =>
-              java.util.Arrays.copyOf(labels(j + 1), n)))
-        }
-      }
-    }, preservesPartitioning = true)
-  }
-
-  /** The label-invariant twin of [[prepare]] for the pointwise
-    * multi-target fast paths: one pass projects every label column
-    * ([[MultiRow]]). */
-  private def prepareMulti(df: DataFrame, spec: DMatrixSpec,
-      numWorkers: Int): RDD[MultiRow] = {
-    val base = if (numWorkers > 0) df.repartition(numWorkers) else df
-    val assembled = spec.assemble(base)
-    val cols = assembled.columns
-    val lis = spec.labelCol.map(cols.indexOf(_)).toArray
-    val wi = spec.weightCol.map(cols.indexOf(_)).getOrElse(-1)
-    val mi = spec.baseMarginCol.map(cols.indexOf(_)).getOrElse(-1)
-    assembled.queryExecution.toRdd.mapPartitions({ it =>
-      it.map { row: InternalRow =>
-        val f = row.getArray(0).toFloatArray()
-        val ys = lis.map(li =>
-          if (li >= 0 && !row.isNullAt(li)) row.getFloat(li) else 0f)
-        val w = if (wi >= 0 && !row.isNullAt(wi)) row.getFloat(wi) else 1f
-        val m = if (mi >= 0 && !row.isNullAt(mi)) row.getFloat(mi)
-          else Float.NaN
-        (f, ys, w, m)
-      }
-    }, preservesPartitioning = true)
+  /** [[trainMultiLabel]]'s composite layout of a block packed with `nl`
+    * labels per row: label 0 stays in the [[TrainBlock]], labels
+    * 1..nl−1 ride beside it as one column each. */
+  private[api] def splitLabels(b: TrainBlock, nl: Int)
+      : (TrainBlock, Array[Array[Float]]) = {
+    val cols = Array.fill(nl)(new Array[Float](b.n))
+    var i = 0
+    while (i < b.n) {
+      var j = 0
+      while (j < nl) { cols(j)(i) = b.labels(i * nl + j); j += 1 }
+      i += 1
+    }
+    (new TrainBlock(b.n, b.nf, b.k, b.bins, cols(0), b.weights, b.qids,
+      b.uppers, b.margins), cols.tail)
   }
 
   /** Append one `prediction_<label>` column per trained label. */
@@ -493,10 +424,11 @@ object GraftBoost {
    * Train ONE vector-leaf tree per round over all label columns — the
    * xgboost 2.x `multi_strategy = "multi_output_tree"` analog (see
    * [[graft.learner.MultiOutput]] for semantics and v1 scope). Same
-   * prepare→bin→pack pipeline as [[trainMultiLabel]]'s fast path (one
-   * data pass assembles all L labels), but training then costs one
-   * histogram pass per level TOTAL instead of one per label, and the
-   * model is L× smaller (shared split structure).
+   * load→bin→pack pipeline as [[trainMultiLabel]]'s fast path (one
+   * data pass assembles all L labels), packed at margin width L, but
+   * training then costs one histogram pass per level TOTAL instead of
+   * one per label, and the model is L× smaller (shared split
+   * structure).
    */
   def trainMultiOutput(
       df: DataFrame,
@@ -516,57 +448,14 @@ object GraftBoost {
     // of the whole input first
     MultiOutput.checkParams(params, obj)
     val kOut = spec.labelCol.size
-    val in = loadMulti(df, spec, params, obj, numWorkers)
-    val blocks = packMultiOutput(in.rows, in.bins, obj, params.baseScore,
-      kOut).persist(params.storageLevel)
-    blocks.foreachPartition(_ => ())
-    in.release()
+    val in = load(df, spec, params, obj, numWorkers)
+    val blocks = in.pack(params.storageLevel)(
+      toBinned(_, in.bins, obj, params.baseScore, k = kOut))
     try {
       val trees = MultiOutput.boost(blocks, in.bins, params, kOut)
       MultiOutput.MultiOutputModel(trees, kOut, obj.name,
         params.baseScore, in.bins.numFeatures, spec.labelCol)
     } finally blocks.unpersist(blocking = false)
-  }
-
-  /** [[trainMultiOutput]]'s packer: all `kOut` targets row-major in one
-    * [[MultiOutput.MoBlock]], margins at stride `kOut`. */
-  private[api] def packMultiOutput(rows: RDD[MultiRow], bins: Binner.Bins,
-      obj: Objective, baseScore: Double, kOut: Int)
-      : RDD[MultiOutput.MoBlock] = {
-    val init = obj.initMargin(baseScore)
-    val bcBins = rows.sparkContext.broadcast(bins)
-    rows.mapPartitions({ it0 =>
-      val it = it0.buffered
-      val bins = bcBins.value
-      val nf = bins.numFeatures
-      val cap = graft.learner.TrainBlock.capacity(nf, kOut)
-      new Iterator[MultiOutput.MoBlock] {
-        def hasNext: Boolean = it.hasNext
-        def next(): MultiOutput.MoBlock = {
-          val binsArr = new Array[Byte](cap * nf)
-          val labels = new Array[Float](cap * kOut)
-          val weights = new Array[Float](cap)
-          val margins = new Array[Float](cap * kOut)
-          var n = 0
-          while (it.hasNext && n < cap) {
-            val (f, ys, w, bm) = it.next()
-            val rb = bins.binRow(f)
-            System.arraycopy(rb, 0, binsArr, n * nf, nf)
-            var j = 0
-            while (j < kOut) { labels(n * kOut + j) = ys(j); j += 1 }
-            weights(n) = w
-            val m0 = if (bm.isNaN) init else bm
-            java.util.Arrays.fill(margins, n * kOut, n * kOut + kOut, m0)
-            n += 1
-          }
-          new MultiOutput.MoBlock(n, nf, kOut,
-            java.util.Arrays.copyOf(binsArr, n * nf),
-            java.util.Arrays.copyOf(labels, n * kOut),
-            java.util.Arrays.copyOf(weights, n),
-            java.util.Arrays.copyOf(margins, n * kOut))
-        }
-      }
-    }, preservesPartitioning = true)
   }
 
   /** Append one `prediction_<label>` column per target of a
@@ -765,22 +654,56 @@ object GraftBoost {
     spec.featuresArray(df)
   }
 
-  /** Projected training rows plus what every packer needs from them:
+  /** One projected training row. `labels` holds every label column of
+    * the spec (one for a single-label, bounds-only or label-less spec);
+    * label 0 doubles as the survival lower bound, `upper` is label 0
+    * unless the spec declares an upper-bound column (NaN where that is
+    * NULL: right-censored). `margin` is NaN where the row has no base
+    * margin. */
+  private[api] final class TrainRow(val features: Array[Float],
+      val labels: Array[Float], val weight: Float, val margin: Float,
+      val qid: Long, val upper: Float) extends Serializable
+
+  /** Projected training rows plus what the packer needs from them:
     * the exact row count and the fitted cuts. */
-  private[api] final class Loaded[R](val rows: RDD[R], val cached: Boolean,
-      val totalRows: Long, val bins: Binner.Bins,
+  private[api] final class Loaded(val rows: RDD[TrainRow],
+      val cached: Boolean, val totalRows: Long, val bins: Binner.Bins,
       val catFlags: Array[Boolean]) {
-    /** Drop the cached rows once the caller's packed blocks are
-      * materialized (no-op on the re-scan path). */
+    /** Drop the cached rows (no-op on the re-scan path). */
     def release(): Unit = if (cached) rows.unpersist(blocking = false)
+
+    /** The one pack step: persist and force the blocks `packer` builds
+      * from the rows, then drop the rows. A failing pack frees both
+      * before the exception propagates. */
+    def pack[B](level: org.apache.spark.storage.StorageLevel)(
+        packer: RDD[TrainRow] => RDD[B]): RDD[B] =
+      try cache(packer(rows), level) finally release()
   }
 
+  /** Persist `blocks` and force them; a failing job unpersists them
+    * before the exception propagates. */
+  private def cache[B](blocks: RDD[B],
+      level: org.apache.spark.storage.StorageLevel): RDD[B] = {
+    blocks.persist(level)
+    try blocks.foreachPartition(_ => ())
+    catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+    blocks
+  }
+
+  /** Survival objectives may declare bounds instead of a point label
+    * (matrix.py:333-343): label_lower_bound then stands in as the
+    * label. */
+  private def boundsOnly(spec: DMatrixSpec, obj: Objective): Boolean =
+    obj.needsBounds && spec.labelCol.isEmpty && spec.labelLowerCol.isDefined
+
   /**
-   * The one training-input step: validate the spec, resolve the
-   * categorical flags (and reject monotone constraints on them), choose
-   * cache-or-rescan, count the rows and fit the binner. Each trainer
-   * brings only its row projection (`project`, built after validation)
-   * and packs the returned rows with its own block packer.
+   * The one training-input step, shared by single-label, multi-label and
+   * vector-leaf training: validate the spec, resolve the categorical
+   * flags (and reject monotone constraints on them), project the rows
+   * ([[prepare]]), choose cache-or-rescan, count the rows and fit the
+   * binner. The caller packs the rows with [[toBinned]] through
+   * [[Loaded.pack]]. A failing count or fit unpersists the rows it
+   * cached before the exception propagates.
    *
    * Round-1 strategy (two-pass, r13): the fat per-row projected rows
    * are not cached — Binner.fit and the packer each evaluate the
@@ -799,11 +722,10 @@ object GraftBoost {
    * scans is outside what any engine-side check can see — snapshot
    * such inputs first.
    */
-  private[api] def load[R](df: DataFrame, spec: DMatrixSpec,
-      params: TrainParams, obj: Objective, requireLabel: Boolean,
-      dcbs: Seq[DistributedCallback])(project: => RDD[R])(
-      features: R => Array[Float]): Loaded[R] = {
-    spec.validate(df, requireLabel = requireLabel)
+  private[api] def load(df: DataFrame, spec: DMatrixSpec,
+      params: TrainParams, obj: Objective, numWorkers: Int,
+      dcbs: Seq[DistributedCallback] = Nil): Loaded = {
+    spec.validate(df, requireLabel = !boundsOnly(spec, obj))
     val catFlags = spec.categoricalFlags(df)
     checkMonotoneCats(params, catFlags)
     val nondetPlan = df.queryExecution.analyzed.exists {
@@ -811,27 +733,28 @@ object GraftBoost {
       case p => p.expressions.exists(!_.deterministic)
     }
     val cached = dcbs.nonEmpty || obj.needsGroups || nondetPlan
+    val project = prepare(df, spec, obj, numWorkers, dcbs)
     val rows = if (cached) project.persist(params.storageLevel) else project
-    val totalRows = if (cached) rows.count() else df.count()
-    val bins = Binner.fit(rows.map(features), totalRows, params.maxBins,
-      seed = params.seed + 42, catFeatures = catFlags,
-      knownWidth = spec.featureWidth(df))
-    new Loaded(rows, cached, totalRows, bins, catFlags)
+    try {
+      val totalRows = if (cached) rows.count() else df.count()
+      val bins = Binner.fit(rows.map(_.features), totalRows, params.maxBins,
+        seed = params.seed + 42, catFeatures = catFlags,
+        knownWidth = spec.featureWidth(df))
+      new Loaded(rows, cached, totalRows, bins, catFlags)
+    } catch {
+      case t: Throwable =>
+        if (cached) rows.unpersist(blocking = false)
+        throw t
+    }
   }
 
-  /** (features, label, weight, baseMargin, qid, upperBound) rows; label
-    * doubles as the survival lower bound, upperBound is NaN unless the
-    * spec declares survival bounds. */
-  private[api] type Prepared =
-    RDD[(Array[Float], Float, Float, Float, Long, Float)]
-
-  /** The training rows of `df`, read off `queryExecution.toRdd` with
-    * primitive getters: the same rows in the same order as
-    * `Dataset.rdd`, without the row deserializer riding every later
-    * task binary of the training run. */
+  /** The training rows of `df` ([[TrainRow]]), read off
+    * `queryExecution.toRdd` with primitive getters: the same rows in the
+    * same order as `Dataset.rdd`, without the row deserializer riding
+    * every later task binary of the training run. */
   private[api] def prepare(df: DataFrame, spec: DMatrixSpec, obj: Objective,
       numWorkers: Int,
-      dcbs: Seq[DistributedCallback] = Nil): Prepared = {
+      dcbs: Seq[DistributedCallback] = Nil): RDD[TrainRow] = {
     // ranking needs qid-contiguous partitions (matrix.py:70-102)
     val base =
       if (obj.needsGroups) {
@@ -850,8 +773,9 @@ object GraftBoost {
 
     val assembled = spec.assemble(base)
     val cols = assembled.columns
-    val li = spec.labelCol.headOption.orElse(spec.labelLowerCol)
-      .map(cols.indexOf(_)).getOrElse(-1)
+    val lis = (if (spec.labelCol.nonEmpty) spec.labelCol
+      else spec.labelLowerCol.toSeq).map(cols.indexOf(_)).toArray
+    val nl = math.max(lis.length, 1)
     val wi = spec.weightCol.map(cols.indexOf(_)).getOrElse(-1)
     val mi = spec.baseMarginCol.map(cols.indexOf(_)).getOrElse(-1)
     val qi = spec.qidCol.map(cols.indexOf(_)).getOrElse(-1)
@@ -860,98 +784,108 @@ object GraftBoost {
       val it = DistributedCallback.wrapLoading(dcbs, init = true)(it0)
       it.map { row: InternalRow =>
         val f = row.getArray(0).toFloatArray()
-        val y = if (li >= 0 && !row.isNullAt(li)) row.getFloat(li) else 0f
+        val ys = new Array[Float](nl)
+        var j = 0
+        while (j < lis.length) {
+          val li = lis(j)
+          if (li >= 0 && !row.isNullAt(li)) ys(j) = row.getFloat(li)
+          j += 1
+        }
         val w = if (wi >= 0 && !row.isNullAt(wi)) row.getFloat(wi) else 1f
         val m = if (mi >= 0 && !row.isNullAt(mi)) row.getFloat(mi)
           else Float.NaN
         val q = if (qi >= 0 && !row.isNullAt(qi)) row.getLong(qi) else 0L
         val u = if (ui >= 0 && !row.isNullAt(ui)) row.getFloat(ui)
-          else if (ui < 0) y // no upper column ⇒ uncensored point label
-          else Float.NaN     // declared but NULL ⇒ right-censored (∞)
-        (f, y, w, m, q, u)
+          else if (ui < 0) ys(0) // no upper column ⇒ uncensored point label
+          else Float.NaN         // declared but NULL ⇒ right-censored (∞)
+        new TrainRow(f, ys, w, m, q, u)
       }
     }, preservesPartitioning = true)
   }
 
   /** Bin prepared rows into packed primitive [[TrainBlock]]s (the r12
     * cached representation — see TrainBlock.scala for the layout and
-    * the footprint rationale). Row order within each partition is the
-    * prepared order, so every downstream per-row pass (gradients,
-    * histograms, metrics) sees the exact sequence the r11 per-row
-    * tuples produced — the RepresentationGoldenSpec bit-identity
-    * contract. `keepGroups` (ranking) extends a block past its
-    * capacity until the current qid run ends, so qid groups never
-    * straddle blocks.
+    * the footprint rationale) — the one packer of single-label,
+    * multi-label and vector-leaf training. Each row's L labels land
+    * row-major in `labels` (stride L); its margins, `k` per row, start
+    * at its base margin or the objective's init margin. `k` is the
+    * margin width: 0 (the default) takes `obj.numOutputs`, a
+    * vector-leaf run passes its target count L. Blocks hold
+    * `TrainBlock.capacity(nf, k)` rows.
     *
-    * Like the other two packers, it reads the cuts through a broadcast,
-    * not a captured [[Binner.Bins]]: the blocks' lineage rides every
-    * later task binary of the training run, histogram levels included.
-    * The broadcast is never destroyed explicitly — a lost block
-    * recomputes through it — and ContextCleaner reclaims it with the
-    * RDD. */
-  private[api] def toBinned(rows: Prepared, bins: Binner.Bins, obj: Objective,
-      baseScore: Double, tolerateUnseenCats: Boolean = false)
-      : RDD[TrainBlock] = {
-    val k = obj.numOutputs
+    * Row order within each partition is the prepared order, so every
+    * downstream per-row pass (gradients, histograms, metrics) sees the
+    * exact sequence the r11 per-row tuples produced — the
+    * RepresentationGoldenSpec bit-identity contract. `keepGroups`
+    * (ranking) extends a block past its capacity until the current qid
+    * run ends, so qid groups never straddle blocks.
+    *
+    * It reads the cuts through a broadcast, not a captured
+    * [[Binner.Bins]]: the blocks' lineage rides every later task binary
+    * of the training run, histogram levels included. The broadcast is
+    * never destroyed explicitly — a lost block recomputes through it —
+    * and ContextCleaner reclaims it with the RDD. */
+  private[api] def toBinned(rows: RDD[TrainRow], bins: Binner.Bins,
+      obj: Objective, baseScore: Double, k: Int = 0,
+      tolerateUnseenCats: Boolean = false): RDD[TrainBlock] = {
+    val width = if (k > 0) k else obj.numOutputs
     val init = obj.initMargin(baseScore)
     val keepGroups = obj.needsGroups
     val bcBins = rows.sparkContext.broadcast(bins)
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
       val bins = bcBins.value
+      val nf = bins.numFeatures
+      val cap0 = TrainBlock.capacity(nf, width)
       new Iterator[TrainBlock] {
         def hasNext: Boolean = it.hasNext
         def next(): TrainBlock = {
-          // width from the binner: a mismatched row fails the check below
-          val nf = bins.numFeatures
-          val cap0 = TrainBlock.capacity(nf, k)
+          val nl = it.head.labels.length
           var cap = cap0
           var binsArr = new Array[Byte](cap * nf)
-          var labels = new Array[Float](cap)
+          var labels = new Array[Float](cap * nl)
           var weights = new Array[Float](cap)
           var qids = new Array[Long](cap)
           var uppers = new Array[Float](cap)
-          var margins = new Array[Float](cap * k)
+          var margins = new Array[Float](cap * width)
           var n = 0
           var anyQid = false
           var anyBound = false
           def grow(): Unit = {
             cap *= 2
             binsArr = java.util.Arrays.copyOf(binsArr, cap * nf)
-            labels = java.util.Arrays.copyOf(labels, cap)
+            labels = java.util.Arrays.copyOf(labels, cap * nl)
             weights = java.util.Arrays.copyOf(weights, cap)
             qids = java.util.Arrays.copyOf(qids, cap)
             uppers = java.util.Arrays.copyOf(uppers, cap)
-            margins = java.util.Arrays.copyOf(margins, cap * k)
+            margins = java.util.Arrays.copyOf(margins, cap * width)
           }
           def add(): Unit = {
-            val (f, y, w, m, q, u) = it.next()
-            if (f.length != nf) throw new IllegalArgumentException(
-              s"graft: feature row has ${f.length} element(s); " +
-                s"expected $nf (inconsistent pre-assembled feature " +
-                "widths?)")
+            val r = it.next()
+            // binRow fails a row whose width disagrees with the cuts
+            val rb = bins.binRow(r.features, tolerateUnseenCats)
             if (n == cap) grow()
-            val rb = bins.binRow(f, tolerateUnseenCats)
             System.arraycopy(rb, 0, binsArr, n * nf, nf)
-            labels(n) = y; weights(n) = w; qids(n) = q; uppers(n) = u
-            if (q != 0L) anyQid = true
-            // NaN upper (right-censored) compares unequal to y, so the
-            // bounds column is kept exactly when some row needs it
-            if (u != y) anyBound = true
-            val m0 = if (m.isNaN) init else m
-            java.util.Arrays.fill(margins, n * k, n * k + k, m0)
+            System.arraycopy(r.labels, 0, labels, n * nl, nl)
+            weights(n) = r.weight; qids(n) = r.qid; uppers(n) = r.upper
+            if (r.qid != 0L) anyQid = true
+            // NaN upper (right-censored) compares unequal to the label,
+            // so the bounds column is kept exactly when some row needs it
+            if (r.upper != r.labels(0)) anyBound = true
+            val m0 = if (r.margin.isNaN) init else r.margin
+            java.util.Arrays.fill(margins, n * width, n * width + width, m0)
             n += 1
           }
           add()
           while (it.hasNext && (n < cap0 ||
-              (keepGroups && it.head._5 == qids(n - 1)))) add()
-          new TrainBlock(n, nf, k,
+              (keepGroups && it.head.qid == qids(n - 1)))) add()
+          new TrainBlock(n, nf, width,
             java.util.Arrays.copyOf(binsArr, n * nf),
-            java.util.Arrays.copyOf(labels, n),
+            java.util.Arrays.copyOf(labels, n * nl),
             java.util.Arrays.copyOf(weights, n),
             if (anyQid) java.util.Arrays.copyOf(qids, n) else null,
             if (anyBound) java.util.Arrays.copyOf(uppers, n) else null,
-            java.util.Arrays.copyOf(margins, n * k))
+            java.util.Arrays.copyOf(margins, n * width))
         }
       }
     }, preservesPartitioning = true)

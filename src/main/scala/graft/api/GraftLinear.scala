@@ -1,5 +1,6 @@
 package graft.api
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -140,14 +141,13 @@ object GraftLinear {
     * bit-exact `ml_linear` oracle replay — depends on it). Width
     * mismatches fail here with the same message the per-row seqOp
     * used. */
-  private def pack(rows: GraftBoost.Prepared)
-      : org.apache.spark.rdd.RDD[LinRows] =
+  private def pack(rows: RDD[GraftBoost.TrainRow]): RDD[LinRows] =
     rows.mapPartitions({ it0 =>
       val it = it0.buffered
       new Iterator[LinRows] {
         def hasNext: Boolean = it.hasNext
         def next(): LinRows = {
-          val d = it.head._1.length
+          val d = it.head.features.length
           val cap = math.max(1024,
             math.min(1 << 18, (2 << 20) / math.max(d, 1)))
           val xs = new Array[Float](cap * d)
@@ -156,13 +156,13 @@ object GraftLinear {
           val bms = new Array[Float](cap)
           var n = 0
           while (it.hasNext && n < cap) {
-            val (x, y, w, bm, _, _) = it.next()
-            if (x.length != d) throw new IllegalArgumentException(
-              s"graft: feature row has ${x.length} element(s); training " +
-                s"resolved $d features (inconsistent pre-assembled " +
-                "feature widths?)")
-            System.arraycopy(x, 0, xs, n * d, d)
-            ys(n) = y; ws(n) = w; bms(n) = bm
+            val r = it.next()
+            if (r.features.length != d) throw new IllegalArgumentException(
+              s"graft: feature row has ${r.features.length} element(s); " +
+                s"training resolved $d features (inconsistent " +
+                "pre-assembled feature widths?)")
+            System.arraycopy(r.features, 0, xs, n * d, d)
+            ys(n) = r.labels(0); ws(n) = r.weight; bms(n) = r.margin
             n += 1
           }
           new LinRows(n, d,
@@ -244,8 +244,7 @@ object GraftLinear {
     Metrics.requireDistinctEvalNames(evals.map(_._1))
     val evalRows = evals.map { case (n, e) =>
       spec.validate(e, requireLabel = true)
-      (n, pack(GraftBoost.prepare(e, spec, obj, numWorkers))
-        .persist(params.storageLevel))
+      (n, pack(GraftBoost.prepare(e, spec, obj, numWorkers)))
     }
     val evalsResult = scala.collection.mutable.LinkedHashMap[String,
       Map[String, scala.collection.mutable.ArrayBuffer[Double]]]()
@@ -254,7 +253,9 @@ object GraftLinear {
         m -> scala.collection.mutable.ArrayBuffer[Double]()).toMap
     }
     val rows = pack(GraftBoost.prepare(df, spec, obj, numWorkers))
-      .persist(params.storageLevel)
+    // persisted only once every input has been projected, so a failure
+    // before the try leaves nothing cached
+    (rows +: evalRows.map(_._2)).foreach(_.persist(params.storageLevel))
     try {
       val head = rows.take(1)
       require(head.nonEmpty, "gblinear training data is empty")

@@ -20,8 +20,11 @@ import scala.collection.mutable.ArrayBuffer
  * One builder: a vector tree grows through [[Trainer.buildTrees]] with
  * node-statistics width K, the same level loop, histogram job, split
  * scan and histogram subtraction as a scalar tree. This object keeps
- * only what is vector-specific: the [[MoBlock]] layout, per-target
- * gradients, the margin advance, [[MoTree]] and the scope check.
+ * only what is vector-specific: per-target gradients, the margin
+ * advance, [[MoTree]] and the scope check. Its input is the one packed
+ * block, a [[TrainBlock]] of margin width K whose `labels` hold K
+ * targets per row (row-major, stride K), built by the same
+ * `GraftBoost.load`/`toBinned` step as single-label training.
  *
  * Scale shape: identical to [[Trainer]]. Per level, ONE histogram job
  * over the cached binned blocks; a histogram entry is K (G, H) pairs
@@ -56,21 +59,6 @@ import scala.collection.mutable.ArrayBuffer
 object MultiOutput {
 
   import Binner.MissingBin
-
-  /** Columnar block for vector-target training: the [[TrainBlock]]
-    * layout with K labels AND K margins per row (both row-major,
-    * stride K). */
-  final class MoBlock(
-      val n: Int,
-      val nf: Int,
-      val k: Int,
-      val bins: Array[Byte],
-      val labels: Array[Float],
-      val weights: Array[Float],
-      val margins: Array[Float]) extends Serializable {
-    def withMargins(m: Array[Float]): MoBlock =
-      new MoBlock(n, nf, k, bins, labels, weights, m)
-  }
 
   /**
    * One vector-leaf regression tree: [[RegTree]]'s flat-array layout
@@ -187,14 +175,15 @@ object MultiOutput {
   }
 
   /**
-   * Boost `numRounds` vector-leaf trees over cached [[MoBlock]]s. Each
-   * round grows one tree of width `k` through [[Trainer.buildTrees]].
+   * Boost `numRounds` vector-leaf trees over cached [[TrainBlock]]s of
+   * margin width `k` with `k` labels per row. Each round grows one tree
+   * of width `k` through [[Trainer.buildTrees]].
    * The caller owns `blocks0`'s persistence; the rounds run in a
    * [[RunLifetime]] under the [[Trainer.boost]] ownership rule: a margin
    * generation is computed inside the next round's first histogram job
    * and released once that round's tree is built.
    */
-  def boost(blocks0: RDD[MoBlock], bins: Binner.Bins,
+  def boost(blocks0: RDD[TrainBlock], bins: Binner.Bins,
       p: TrainParams, k: Int): Seq[MoTree] = {
     val obj = Objectives.resolve(p)
     checkSupported(p, obj, bins)
@@ -203,7 +192,7 @@ object MultiOutput {
     RunLifetime(sc, p.storageLevel, ownsInputs = false) { life =>
       val trees = ArrayBuffer[MoTree]()
       var cur = blocks0
-      var prev: Option[RDD[MoBlock]] = None
+      var prev: Option[RDD[TrainBlock]] = None
       life.rounds {
         var round = 0
         while (round < p.numRounds) {
@@ -259,7 +248,7 @@ object MultiOutput {
     * from its own (margin_j, label_j), row-weighted — reusing
     * [[GradBlock]]'s stride-2K layout. No salts: the histogram `seqOp`
     * reads them only under row subsampling, which v1 rejects. */
-  private def gradients(data: RDD[MoBlock], obj: Objective,
+  private def gradients(data: RDD[TrainBlock], obj: Objective,
       k: Int): RDD[GradBlock] =
     data.mapPartitions({ it =>
       val m1 = new Array[Float](1)

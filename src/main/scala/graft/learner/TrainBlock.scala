@@ -12,7 +12,9 @@ package graft.learner
  *
  * Layout: row-major packed primitives. Row `i`'s bins occupy
  * `bins(i*nf until (i+1)*nf)`; its `k` margins occupy
- * `margins(i*k until (i+1)*k)`. `qids`/`uppers` are null when every
+ * `margins(i*k until (i+1)*k)`. `labels` holds one label per row, or,
+ * in a vector-leaf block ([[MultiOutput]]), `k` targets per row at
+ * `labels(i*k until (i+1)*k)`. `qids`/`uppers` are null when every
  * row is qid-0 / uncensored (upper == label), so the common
  * non-ranking, non-survival case pays 9 bytes/row at 4 features +
  * 4k margin bytes.

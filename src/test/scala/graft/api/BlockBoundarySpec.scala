@@ -12,7 +12,9 @@ import graft.learner.{Binner, Objectives, TrainParams}
  * toBinned past the capacity with one partition and checks the packed
  * columns against the prepared rows element-for-element, plus the
  * ranking keepGroups contract (a qid run straddling the capacity
- * extends the block instead of splitting the group).
+ * extends the block instead of splitting the group), and the
+ * multi-target blocks: 3 labels per row at margin width 1 (the
+ * multi-label composite) and 3 (vector leaves).
  */
 class BlockBoundarySpec extends SparkTestBase {
   import spark.implicits._
@@ -28,7 +30,7 @@ class BlockBoundarySpec extends SparkTestBase {
       spark.sparkContext.parallelize(rows, 1)).toDF("a", "y")
     val spec = DMatrixSpec("y")
     val prepared = GraftBoost.prepare(df, spec, obj, numWorkers = 0)
-    val bins = Binner.fit(prepared.map(_._1), n, 256, seed = 1)
+    val bins = Binner.fit(prepared.map(_.features), n, 256, seed = 1)
     val blocks = GraftBoost.toBinned(prepared, bins, obj, baseScore = 0.5)
       .collect()
     assert(blocks.map(_.n.toLong).sum === n.toLong)
@@ -54,9 +56,63 @@ class BlockBoundarySpec extends SparkTestBase {
     val probe = Seq(0, cap - 1, cap, n - 1)
     val prep = prepared.collect()
     probe.foreach { i =>
-      val expect = bins.binRow(prep(i)._1)
+      val expect = bins.binRow(prep(i).features)
       val (b, off) = if (i < cap) (blocks(0), i) else (blocks(1), i - cap)
       assert(b.bins(off * b.nf) === expect(0), s"bin byte at row $i")
+    }
+  }
+
+  test("multi-target blocks (3 labels) split at capacity and round-trip " +
+      "every label and margin at margin widths 1 and 3") {
+    val nl = 3
+    val obj = Objectives.resolve(TrainParams())
+    val widths = Seq(1, 3)
+    val n = widths.map(k => graft.learner.TrainBlock.capacity(1, k)).max +
+      1357
+    def label(i: Int, j: Int): Float = (i % (7 - 2 * j)).toFloat
+    // every 13th row has no base margin and starts at the init margin
+    def margin(i: Int): Float =
+      if (i % 13 == 0) obj.initMargin(0.5) else (i % 11) * 0.25f
+    val rows = (0 until n).map(i => (i.toDouble % 97, label(i, 0).toDouble,
+      label(i, 1).toDouble, label(i, 2).toDouble,
+      if (i % 13 == 0) None else Some(margin(i).toDouble)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1))
+      .toDF("a", "y0", "y1", "y2", "bm")
+    val spec = DMatrixSpec(labelCol = Seq("y0", "y1", "y2"),
+      baseMarginCol = Some("bm"))
+    val prepared = GraftBoost.prepare(df, spec, obj, numWorkers = 0)
+    val bins = Binner.fit(prepared.map(_.features), n, 256, seed = 1)
+    for (k <- widths) {
+      val cap = graft.learner.TrainBlock.capacity(bins.numFeatures, k)
+      val blocks = GraftBoost.toBinned(prepared, bins, obj,
+        baseScore = 0.5, k = k).collect()
+      assert(blocks.map(_.n).toSeq === Seq(cap, n - cap),
+        s"k = $k block sizes")
+      val labels = blocks.flatMap(b => b.labels.take(b.n * nl))
+      val margins = blocks.flatMap(b => b.margins.take(b.n * k))
+      assert(blocks.forall(b => b.k == k &&
+        b.labels.length == b.n * nl && b.margins.length == b.n * k))
+      (0 until n).foreach { i =>
+        (0 until nl).foreach { j =>
+          assert(labels(i * nl + j) === label(i, j),
+            s"k = $k label $j, row $i")
+        }
+        (0 until k).foreach { c =>
+          assert(margins(i * k + c) === margin(i),
+            s"k = $k margin $c, row $i")
+        }
+      }
+      if (k == 1) {
+        // the multi-label composite: label 0 in the block, 1..L-1 beside
+        val split = blocks.map(GraftBoost.splitLabels(_, nl))
+        (0 until nl).foreach { j =>
+          val col = split.flatMap { case (b, others) =>
+            if (j == 0) b.labels else others(j - 1) }
+          assert(col.length === n)
+          (0 until n).foreach(i =>
+            assert(col(i) === label(i, j), s"composite label $j, row $i"))
+        }
+      }
     }
   }
 
@@ -71,7 +127,7 @@ class BlockBoundarySpec extends SparkTestBase {
       spark.sparkContext.parallelize(rows, 1)).toDF("qid", "a", "rel")
     val spec = DMatrixSpec(labelCol = Seq("rel"), qidCol = Some("qid"))
     val prepared = GraftBoost.prepare(df, spec, obj, numWorkers = 1)
-    val bins = Binner.fit(prepared.map(_._1), n, 256, seed = 1)
+    val bins = Binner.fit(prepared.map(_.features), n, 256, seed = 1)
     val blocks = GraftBoost.toBinned(prepared, bins, obj, baseScore = 0.5)
       .collect()
     assert(blocks.map(_.n.toLong).sum === n.toLong)

@@ -13,9 +13,9 @@ import org.apache.spark.storage.StorageLevel
  * shared [[GraftBoost.load]] step must cache the projected rows and take
  * its count from that cache: otherwise the count handed to
  * `Binner.fit`/`Trainer.boost` and the rows the packer actually packs
- * come from different scans. Checked for all three callers — the
- * single-label `materialize`/`train` path, the multi-label fast path and
- * the multi-output fast path.
+ * come from different scans. Checked for all three callers of the one
+ * `load`/`toBinned` step — the single-label `materialize`/`train` path,
+ * the multi-label fast path and the multi-output fast path.
  */
 class NondeterministicInputSpec extends SparkTestBase {
   import spark.implicits._
@@ -45,14 +45,13 @@ class NondeterministicInputSpec extends SparkTestBase {
     ignore = Seq("y2"))
   private val multi = DMatrixSpec(labelCol = Seq("y1", "y2"))
 
-  private def cachedRows(in: GraftBoost.Loaded[_]): Boolean =
+  private def cachedRows(in: GraftBoost.Loaded): Boolean =
     in.cached && in.rows.getStorageLevel != StorageLevel.NONE
 
   test("single-label: prepared rows are cached and the count equals " +
       "the packed rows") {
     val df = nondet
-    val in = GraftBoost.load(df, single, params, obj, requireLabel = true,
-      Nil)(GraftBoost.prepare(df, single, obj, 0))(_._1)
+    val in = GraftBoost.load(df, single, params, obj, 0)
     try {
       assert(cachedRows(in))
       val packed = GraftBoost.toBinned(in.rows, in.bins, obj,
@@ -73,11 +72,11 @@ class NondeterministicInputSpec extends SparkTestBase {
   test("multi-label: rows are cached and every label's totalN equals " +
       "the packed rows") {
     val df = nondet
-    val in = GraftBoost.loadMulti(df, multi, params, obj, 0)
+    val in = GraftBoost.load(df, multi, params, obj, 0)
     try {
       assert(cachedRows(in))
-      val packed = GraftBoost.packMultiLabel(in.rows, in.bins, obj,
-        params.baseScore, 2).map(_._1.n.toLong).fold(0L)(_ + _)
+      val packed = GraftBoost.toBinned(in.rows, in.bins, obj,
+        params.baseScore).map(_.n.toLong).fold(0L)(_ + _)
       assert(packed === in.totalRows)
     } finally in.release()
     val res = GraftBoost.trainMultiLabel(df, multi, params)
@@ -91,11 +90,11 @@ class NondeterministicInputSpec extends SparkTestBase {
   test("multi-output: rows are cached and the count equals the packed " +
       "rows") {
     val df = nondet
-    val in = GraftBoost.loadMulti(df, multi, params, obj, 0)
+    val in = GraftBoost.load(df, multi, params, obj, 0)
     try {
       assert(cachedRows(in))
-      val packed = GraftBoost.packMultiOutput(in.rows, in.bins, obj,
-        params.baseScore, 2).map(_.n.toLong).fold(0L)(_ + _)
+      val packed = GraftBoost.toBinned(in.rows, in.bins, obj,
+        params.baseScore, k = 2).map(_.n.toLong).fold(0L)(_ + _)
       assert(packed === in.totalRows)
     } finally in.release()
     val model = GraftBoost.trainMultiOutput(df, multi, params)
@@ -104,12 +103,11 @@ class NondeterministicInputSpec extends SparkTestBase {
 
   test("a deterministic plan re-scans instead of caching") {
     val df = base
-    val in = GraftBoost.loadMulti(df, multi, params, obj, 0)
+    val in = GraftBoost.load(df, multi, params, obj, 0)
     assert(!in.cached)
     assert(in.rows.getStorageLevel === StorageLevel.NONE)
     assert(in.totalRows === 2000L)
-    val one = GraftBoost.load(df, single, params, obj, requireLabel = true,
-      Nil)(GraftBoost.prepare(df, single, obj, 0))(_._1)
+    val one = GraftBoost.load(df, single, params, obj, 0)
     assert(!one.cached && one.totalRows === 2000L)
   }
 }

@@ -15,6 +15,10 @@ import graft.data.DMatrixSpec
  * error that runs [[TrainLifetimeSpec.trip]] on every row whose margin
  * has moved off the base score: rows of round 0 never trip, so each
  * failure lands in round 1 or later, with margin generations cached.
+ * The `input step` cases fail before any round: a throwing loading
+ * callback, a booster the trainer rejects after packing, a wrong-width
+ * eval matrix, a throwing input row and a gblinear eval set without its
+ * label must each leave nothing cached.
  */
 class TrainLifetimeSpec extends SparkTestBase {
   import TrainLifetimeSpec._
@@ -115,6 +119,73 @@ class TrainLifetimeSpec extends SparkTestBase {
     }
   }
 
+  // the input step (load, pack, eval binding) frees what it cached too
+  test("input step: a throwing beforeDataLoading frees the loaded rows") {
+    leavesNothing(null) {
+      intercept[org.apache.spark.SparkException] {
+        GraftBoost.train(df, spec, params,
+          distributedCallbacks = Seq(FailingLoad))
+      }
+    }
+  }
+
+  test("input step: a train rejected after packing frees the blocks") {
+    leavesNothing(null) {
+      intercept[IllegalArgumentException] {
+        GraftBoost.train(df, spec, params.copy(booster = "gblinear"))
+      }
+    }
+  }
+
+  test("input step: a wrong-width eval matrix frees its blocks") {
+    val vspec = DMatrixSpec(labelCol = Seq("y"), featureCols = Some(Seq("f")))
+    val rows = (0 until 200).map(i => (i % 13).toDouble)
+    val m = GraftBoost.materialize(
+      rows.map(v => (Seq(v, v * 2), v)).toDF("f", "y"), vspec, params)
+    try {
+      leavesNothing(null) {
+        val e = intercept[org.apache.spark.SparkException] {
+          GraftBoost.materializeEval(
+            rows.map(v => (Seq(v, v * 2, v * 3), v)).toDF("f", "y"), m,
+            vspec, params)
+        }
+        assert(e.getMessage.contains("inconsistent pre-assembled"))
+      }
+    } finally m.unpersist()
+  }
+
+  test("input step: a row failing in a multi_output_tree input frees " +
+      "the loaded rows") {
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id == 137L) throw new IllegalStateException("bad row")
+      id.toDouble
+    }.asNondeterministic()
+    import org.apache.spark.sql.functions.col
+    val bad = spark.range(0, 400, 1, 4).select(
+      (col("id") % 11).cast("double").as("a"), boom(col("id")).as("b"),
+      (col("id") % 7).cast("double").as("y"),
+      (col("id") % 3).cast("double").as("y2"))
+    leavesNothing(null) {
+      intercept[org.apache.spark.SparkException] {
+        GraftBoost.trainMultiOutput(bad,
+          DMatrixSpec(labelCol = Seq("y", "y2"),
+            featureCols = Some(Seq("a", "b"))),
+          params.copy(customObjective = None))
+      }
+    }
+  }
+
+  test("input step: a gblinear eval set without the label frees the " +
+      "eval sets before it") {
+    leavesNothing(null) {
+      intercept[IllegalArgumentException] {
+        graft.api.GraftLinear.trainWithEvals(df, spec,
+          TrainParams(objective = "reg:squarederror", numRounds = 2),
+          Seq("v1" -> valid, "v2" -> valid.drop("y")))
+      }
+    }
+  }
+
   test("multi_output_tree: a failing task frees the run") {
     leavesNothing(fail) {
       intercept[org.apache.spark.SparkException] {
@@ -131,6 +202,12 @@ object TrainLifetimeSpec {
   /** Run on every gradient row whose margin has left the base score;
     * shared with the tasks, which run in this JVM under `local[N]`. */
   @volatile var trip: () => Unit = _
+
+  /** Fails every partition's data loading. */
+  object FailingLoad extends DistributedCallback {
+    override def beforeDataLoading(rank: Int): Unit =
+      throw new IllegalStateException("injected loading failure")
+  }
 
   object TripSq extends Objective {
     val name = "custom:tripsq"

@@ -3,8 +3,8 @@
 # a commit or an end-of-round snapshot. Run before any commit of source
 # changes; the round checklist ends with this script.
 #
-#   tools/precommit-check.sh          # one-grower and one-lifetime
-#                                     # checks, then compile
+#   tools/precommit-check.sh          # one-grower, one-lifetime and
+#                                     # one-packer checks, then compile
 #                                     # main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
@@ -68,6 +68,19 @@ if [[ -n "$groupers" ]]; then
     "call setJobGroup( or clearJobGroup( — run the loop inside a" \
     "RunLifetime instead:"
   echo "$groupers"
+  exit 1
+fi
+
+# One block packer: every training input (single-label, multi-label,
+# vector-leaf, eval) is binned by GraftBoost.toBinned, so `.binRow(`
+# has exactly one call site in src/main outside Binner.scala.
+binners="$(grep -rn --include='*.scala' '\.binRow(' src/main |
+  grep -v '/Binner\.scala:' || true)"
+if [[ "$(grep -c . <<<"$binners")" -ne 1 ]]; then
+  echo "[precommit] NOT ONE BLOCK PACKER: \`.binRow(\` must have exactly" \
+    "one call site outside Binner.scala (GraftBoost.toBinned) — pack" \
+    "through toBinned instead:"
+  echo "${binners:-(none)}"
   exit 1
 fi
 
