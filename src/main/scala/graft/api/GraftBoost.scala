@@ -1,9 +1,10 @@
 package graft.api
 
 import graft.data.{DMatrixSpec, Sharding}
+import graft.functions.EnsembleScore
 import graft.learner._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
@@ -410,12 +411,18 @@ object GraftBoost {
 
   /** Append one `prediction_<label>` column per trained label. */
   def predictMultiLabel(result: MultiLabelResult, df: DataFrame,
-      spec: DMatrixSpec): DataFrame = {
+      spec: DMatrixSpec): DataFrame =
+    predictPerLabel(result.models, df, spec)
+
+  /** One `prediction_<label>` column per (label, model), each scored by
+    * [[predict]] under the label's [[singleLabelSpec]]. */
+  private def predictPerLabel(models: Seq[(String, GraftModel)],
+      df: DataFrame, spec: DMatrixSpec): DataFrame = {
     // earlier prediction columns must not leak into later feature sets
-    val predCols = result.results.map { case (l, _) => s"prediction_$l" }
-    result.results.foldLeft(df) { case (acc, (l, r)) =>
+    val predCols = models.map { case (l, _) => s"prediction_$l" }
+    models.foldLeft(df) { case (acc, (l, m)) =>
       val s = singleLabelSpec(spec, l)
-      predict(r.model, acc, s.copy(ignore = s.ignore ++ predCols))
+      predict(m, acc, s.copy(ignore = s.ignore ++ predCols))
         .withColumnRenamed("prediction", s"prediction_$l")
     }
   }
@@ -464,16 +471,9 @@ object GraftBoost {
     * structure-shared [[graft.learner.MultiOutput.MoTree.slice]]
     * view. */
   def predictMultiOutput(model: MultiOutput.MultiOutputModel,
-      df: DataFrame, spec: DMatrixSpec): DataFrame = {
-    // earlier prediction columns must not leak into later feature sets
-    val predCols = model.labelNames.map(l => s"prediction_$l")
-    model.labelNames.zipWithIndex.foldLeft(df) { case (acc, (l, j)) =>
-      val s = singleLabelSpec(spec, l)
-      predict(model.sliceModel(j), acc,
-        s.copy(ignore = s.ignore ++ predCols))
-        .withColumnRenamed("prediction", s"prediction_$l")
-    }
-  }
+      df: DataFrame, spec: DMatrixSpec): DataFrame =
+    predictPerLabel(model.labelNames.zipWithIndex.map { case (l, j) =>
+      (l, model.sliceModel(j)) }, df, spec)
 
   /**
    * Batch prediction — analog of `predict()` (main.py:1750-1806):
@@ -498,18 +498,8 @@ object GraftBoost {
       outputMargin: Boolean = false,
       distributedCallbacks: Seq[DistributedCallback] = Nil): DataFrame = {
     val spark = df.sparkSession
-    val featsArr = checkedFeatures(model, df, spec)
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
-    // per-row base margin (DMatrix base_margin predict semantics,
-    // matrix.py:329-331): rows without one — or a predict df without
-    // the declared column — fall back to the objective's init margin
-    // (NaN sentinel)
-    val baseMargin = spec.baseMarginCol.filter(df.columns.contains)
-      .map(c => coalesce(col(c).cast("float"), lit(Float.NaN)))
-      .getOrElse(lit(Float.NaN))
-    val scores = GraftColumnBridge.column(graft.functions.EnsembleScore(
-      GraftColumnBridge.expression(featsArr),
-      GraftColumnBridge.expression(baseMargin), model, outputMargin))
+    val scores = scored(model, df, spec,
+      if (outputMargin) EnsembleScore.Margin else EnsembleScore.Prediction)
     val out = if (model.numClass >= 2 && model.objective == "multi:softprob") {
       val withP = df.withColumn("probabilities", scores)
       withP.withColumn("prediction",
@@ -545,13 +535,9 @@ object GraftBoost {
    * codegen zero-boxing path as the score predict.
    */
   def predictLeaf(model: GraftModel, df: DataFrame,
-      spec: DMatrixSpec): DataFrame = {
-    val featsArr = checkedFeatures(model, df, spec)
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
+      spec: DMatrixSpec): DataFrame =
     df.withColumn("leaf_indices",
-      GraftColumnBridge.column(graft.functions.EnsembleLeaves(
-        GraftColumnBridge.expression(featsArr), model)))
-  }
+      scored(model, df, spec, EnsembleScore.LeafIds))
 
   /**
    * Feature-contribution prediction — the xgboost `pred_contribs=True`
@@ -567,36 +553,11 @@ object GraftBoost {
    *                       `approx_contribs=True`).
    */
   def predictContrib(model: GraftModel, df: DataFrame,
-      spec: DMatrixSpec, approxContribs: Boolean = false): DataFrame = {
-    val featsArr = checkedFeatures(model, df, spec)
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
-    val expr =
-      if (approxContribs) graft.functions.EnsembleContribs(
-        GraftColumnBridge.expression(featsArr), model)
-      else graft.functions.EnsembleShapContribs(
-        GraftColumnBridge.expression(featsArr), model)
-    val out = df.withColumn("contribs", GraftColumnBridge.column(expr))
-    // per-row base margin rides the bias slot (DMatrix base_margin
-    // predict semantics, matrix.py:329-331) so each class block still
-    // sums to the margin `predict` reports on the same spec
-    baseMarginAdj(model, df, spec).fold(out) { adj =>
-      val w = model.numFeatures + 1
-      out.withColumn("contribs", transform(col("contribs"), (x, i) =>
-        when(i % w === w - 1, (x.cast("double") + adj).cast("float"))
-          .otherwise(x)))
-    }
-  }
-
-  /** Bias-slot correction for a per-row base margin: bm − initMargin
-    * (0 for NaN/absent rows). None when the spec declares no margin
-    * column or `df` lacks it — the common path stays adjustment-free. */
-  private def baseMarginAdj(model: GraftModel, df: DataFrame,
-      spec: DMatrixSpec): Option[org.apache.spark.sql.Column] =
-    spec.baseMarginCol.filter(df.columns.contains).map { c =>
-      val bm = coalesce(col(c).cast("float"), lit(Float.NaN))
-      when(isnan(bm), lit(0d))
-        .otherwise(bm.cast("double") - model.initMargin.toDouble)
-    }
+      spec: DMatrixSpec, approxContribs: Boolean = false): DataFrame =
+    withDecomposition(model, df, spec, "contribs",
+      if (approxContribs) EnsembleScore.SaabasContribs
+      else EnsembleScore.ExactContribs,
+      block = model.numFeatures + 1)
 
   /**
    * Pairwise interaction prediction — the xgboost
@@ -615,38 +576,61 @@ object GraftBoost {
    */
   def predictInteractions(model: GraftModel, df: DataFrame,
       spec: DMatrixSpec, approxInteractions: Boolean = false)
-      : DataFrame = {
-    val featsArr = checkedFeatures(model, df, spec)
-    import org.apache.spark.sql.graftbridge.GraftColumnBridge
-    val expr =
-      if (approxInteractions) graft.functions.EnsembleInteractions(
-        GraftColumnBridge.expression(featsArr), model)
-      else graft.functions.EnsembleShapInteractions(
-        GraftColumnBridge.expression(featsArr), model)
-    val out =
-      df.withColumn("interactions", GraftColumnBridge.column(expr))
-    // base margin lands on the (bias, bias) diagonal cell of each
-    // class block, keeping row sums aligned with the adjusted contribs
-    // and the total equal to the margin
-    baseMarginAdj(model, df, spec).fold(out) { adj =>
-      val side = model.numFeatures + 1
-      val block = side * side
-      val biasCell = (side - 1) * side + (side - 1)
-      out.withColumn("interactions",
-        transform(col("interactions"), (x, i) =>
-          when(i % block === biasCell,
-            (x.cast("double") + adj).cast("float")).otherwise(x)))
-    }
-  }
+      : DataFrame =
+    withDecomposition(model, df, spec, "interactions",
+      if (approxInteractions) EnsembleScore.SaabasInteractions
+      else EnsembleScore.ExactInteractions,
+      block = (model.numFeatures + 1) * (model.numFeatures + 1))
 
   // ---- internals ----
+
+  /** Per-row base margin (DMatrix base_margin predict semantics,
+    * matrix.py:329-331), NaN where a row has none; None when the spec
+    * declares no margin column or `df` lacks it. */
+  private def baseMargin(df: DataFrame, spec: DMatrixSpec): Option[Column] =
+    spec.baseMarginCol.filter(df.columns.contains)
+      .map(c => coalesce(col(c).cast("float"), lit(Float.NaN)))
+
+  /** The one scoring step behind every per-row output: the checked
+    * feature array and the per-row base margin (NaN = the objective's
+    * init margin) through [[EnsembleScore]] in `output` mode. */
+  private def scored(model: GraftModel, df: DataFrame, spec: DMatrixSpec,
+      output: EnsembleScore.Output): Column = {
+    import org.apache.spark.sql.graftbridge.GraftColumnBridge
+    GraftColumnBridge.column(EnsembleScore(
+      GraftColumnBridge.expression(checkedFeatures(model, df, spec)),
+      GraftColumnBridge.expression(
+        baseMargin(df, spec).getOrElse(lit(Float.NaN))),
+      model, output))
+  }
+
+  /** `df` plus the per-class decomposition `output` (contributions or
+    * interactions) as column `name`. The bias entry closes every
+    * `block`-long class block (the contribs bias slot, the (bias, bias)
+    * interaction cell); it also carries the per-row base margin minus
+    * the init margin (0 for NaN rows), so each block still sums to the
+    * margin [[predict]] reports on the same spec and interaction row
+    * sums stay aligned with the contribs. Without a base-margin column
+    * the blocks stay as scored. */
+  private def withDecomposition(model: GraftModel, df: DataFrame,
+      spec: DMatrixSpec, name: String, output: EnsembleScore.Output,
+      block: Int): DataFrame = {
+    val out = df.withColumn(name, scored(model, df, spec, output))
+    baseMargin(df, spec).fold(out) { bm =>
+      val adj = when(isnan(bm), lit(0d))
+        .otherwise(bm.cast("double") - model.initMargin.toDouble)
+      out.withColumn(name, transform(col(name), (x, i) =>
+        when(i % block === block - 1,
+          (x.cast("double") + adj).cast("float")).otherwise(x)))
+    }
+  }
 
   /** Inference feature array via the SAME assembly expression training
     * used (`DMatrixSpec.featuresArray` — per-column or pre-assembled
     * Vector/array, `missing` substitution included), with the model
     * width check applied when the width is statically known. */
   private def checkedFeatures(model: GraftModel, df: DataFrame,
-      spec: DMatrixSpec): org.apache.spark.sql.Column = {
+      spec: DMatrixSpec): Column = {
     spec.featureWidth(df).foreach { n =>
       require(n == model.numFeatures,
         s"model expects ${model.numFeatures} features, got $n")

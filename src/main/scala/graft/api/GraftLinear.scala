@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.data.DMatrixSpec
-import graft.learner.{Metrics, Objectives, TrainParams}
+import graft.learner.{Metrics, Objectives, RunLifetime, TrainParams}
 
 /**
  * Distributed linear booster — the `booster="gblinear"` side of the
@@ -215,6 +215,9 @@ object GraftLinear {
    * weights; with a single metric that is one reduce job, with several
    * metrics the scored margins persist for the round and each extra
    * metric is a cache-read reduce. No margin state survives the round.
+   * The run is one [[graft.learner.RunLifetime]]: its rounds carry a
+   * `graft-train-*` job group, and its packed rows, weight broadcasts
+   * and scored margins are freed on every exit.
    */
   def trainWithEvals(df: DataFrame, spec: DMatrixSpec,
       params: TrainParams, evals: Seq[(String, DataFrame)],
@@ -254,13 +257,13 @@ object GraftLinear {
     }
     val rows = pack(GraftBoost.prepare(df, spec, obj, numWorkers))
     // persisted only once every input has been projected, so a failure
-    // before the try leaves nothing cached
-    (rows +: evalRows.map(_._2)).foreach(_.persist(params.storageLevel))
-    try {
+    // before the run leaves nothing cached
+    RunLifetime(df.sparkSession.sparkContext, params.storageLevel,
+        ownsInputs = true) { life =>
+      (rows +: evalRows.map(_._2)).foreach(life.input(_))
       val head = rows.take(1)
       require(head.nonEmpty, "gblinear training data is empty")
       val d = head(0).d
-      val sc = df.sparkSession.sparkContext
       val init = obj.initMargin(params.baseScore)
       // scale_pos_weight: same binary-objective gating as the tree path
       val spw =
@@ -280,124 +283,126 @@ object GraftLinear {
         .getOrElse(new Array[Float](k))
       val stride = 2 * d + 2 // per-class accumulator block
       val early = new Metrics.EarlyStop(params, metricNames)
-      var stop = false
-      var round = 0
-      while (round < params.numRounds && !stop) {
-        val bcW = sc.broadcast((weights.map(_.clone()), bias.clone()))
-        val acc = rows.treeAggregate(new Array[Double](k * stride))(
-          seqOp = (a, blk) => {
-            if (blk.d != d) throw new IllegalArgumentException(
-              s"graft: feature row has ${blk.d} element(s); training " +
-                s"resolved $d features (inconsistent pre-assembled " +
-                "feature widths?)")
-            val (w, b) = bcW.value
-            val m = new Array[Float](k)
-            val g = new Array[Float](k); val h = new Array[Float](k)
-            var i = 0
-            while (i < blk.n) {
-              val off = i * d
-              val bm = blk.bms(i)
-              val y = blk.ys(i)
-              var c = 0
-              while (c < k) {
-                var mc = (if (bm.isNaN) init else bm).toDouble + b(c)
-                val wc = w(c)
-                var j = 0
-                while (j < d) {
-                  val xv = blk.xs(off + j)
-                  if (!xv.isNaN) mc += wc(j).toDouble * xv
-                  j += 1
-                }
-                m(c) = mc.toFloat
-                c += 1
-              }
-              obj.gradHess(m, y, g, h)
-              val w2 =
-                if (spw != 1.0f && y == 1.0f) blk.ws(i) * spw
-                else blk.ws(i)
-              c = 0
-              while (c < k) {
-                val base = c * stride
-                val gw = g(c).toDouble * w2
-                val hw = h(c).toDouble * w2
-                var j = 0
-                while (j < d) {
-                  val xv = blk.xs(off + j)
-                  if (!xv.isNaN && xv != 0f) {
-                    a(base + 2 * j) += gw * xv
-                    a(base + 2 * j + 1) += hw * xv.toDouble * xv
+      life.rounds {
+        var stop = false
+        var round = 0
+        while (round < params.numRounds && !stop) {
+          val bcW =
+            life.broadcast((weights.map(_.clone()), bias.clone()))
+          val acc = rows.treeAggregate(new Array[Double](k * stride))(
+            seqOp = (a, blk) => {
+              if (blk.d != d) throw new IllegalArgumentException(
+                s"graft: feature row has ${blk.d} element(s); training " +
+                  s"resolved $d features (inconsistent pre-assembled " +
+                  "feature widths?)")
+              val (w, b) = bcW.value
+              val m = new Array[Float](k)
+              val g = new Array[Float](k); val h = new Array[Float](k)
+              var i = 0
+              while (i < blk.n) {
+                val off = i * d
+                val bm = blk.bms(i)
+                val y = blk.ys(i)
+                var c = 0
+                while (c < k) {
+                  var mc = (if (bm.isNaN) init else bm).toDouble + b(c)
+                  val wc = w(c)
+                  var j = 0
+                  while (j < d) {
+                    val xv = blk.xs(off + j)
+                    if (!xv.isNaN) mc += wc(j).toDouble * xv
+                    j += 1
                   }
-                  j += 1
+                  m(c) = mc.toFloat
+                  c += 1
                 }
-                a(base + 2 * d) += gw; a(base + 2 * d + 1) += hw
-                c += 1
+                obj.gradHess(m, y, g, h)
+                val w2 =
+                  if (spw != 1.0f && y == 1.0f) blk.ws(i) * spw
+                  else blk.ws(i)
+                c = 0
+                while (c < k) {
+                  val base = c * stride
+                  val gw = g(c).toDouble * w2
+                  val hw = h(c).toDouble * w2
+                  var j = 0
+                  while (j < d) {
+                    val xv = blk.xs(off + j)
+                    if (!xv.isNaN && xv != 0f) {
+                      a(base + 2 * j) += gw * xv
+                      a(base + 2 * j + 1) += hw * xv.toDouble * xv
+                    }
+                    j += 1
+                  }
+                  a(base + 2 * d) += gw; a(base + 2 * d + 1) += hw
+                  c += 1
+                }
+                i += 1
               }
-              i += 1
-            }
-            a
-          },
-          combOp = (a, c) => {
-            var i = 0
-            while (i < a.length) { a(i) += c(i); i += 1 }
-            a
-          },
-          depth = 2)
-        bcW.destroy()
-        var c = 0
-        while (c < k) {
-          val base = c * stride
-          val wc = weights(c)
-          var j = 0
-          while (j < d) {
-            val denom = acc(base + 2 * j + 1) + params.lambda
-            // a feature absent from every row has H_j = 0; with λ = 0
-            // the step would be 0/0 — skip, like xgboost empty columns
-            if (denom > 0) {
-              val gj = acc(base + 2 * j) + params.lambda * wc(j)
-              val t =
-                if (gj > params.alpha) gj - params.alpha
-                else if (gj < -params.alpha) gj + params.alpha
-                else 0.0
-              wc(j) = (wc(j) - params.eta * t / denom).toFloat
-            }
-            j += 1
-          }
-          if (acc(base + 2 * d + 1) > 0)
-            bias(c) = (bias(c) -
-              params.eta * acc(base + 2 * d) /
-                acc(base + 2 * d + 1)).toFloat
-          c += 1
-        }
-        if (evalRows.nonEmpty) {
-          val bcE = sc.broadcast((weights.map(_.clone()), bias.clone()))
-          evalRows.foreach { case (n, er) =>
-            val scored = er.mapPartitions(_.flatMap { blk =>
-              val (w, b) = bcE.value
-              Iterator.tabulate(blk.n)(i =>
-                (evalMargins(blk, i, init, w, b, k), blk.ys(i),
-                  blk.ws(i)))
-            }, preservesPartitioning = true)
-            // computeAll runs one job for all (loss, weight) metrics and
-            // one per whole-set metric (auc, aucpr); when that is more
-            // than one job, persist the scored margins for the round so
-            // the margin map runs ONCE and the extra jobs pay only a
-            // cache read
-            val cached =
-              if (Metrics.jobs(metricNames, customByName) > 1)
-                Some(scored.persist(params.storageLevel))
-              else None
-            try {
-              val src = cached.getOrElse(scored)
-              metricNames.zip(Metrics.computeAll(metricNames, obj, src,
-                customByName)).foreach { case (mn, v) =>
-                evalsResult(n)(mn) += v
+              a
+            },
+            combOp = (a, c) => {
+              var i = 0
+              while (i < a.length) { a(i) += c(i); i += 1 }
+              a
+            },
+            depth = 2)
+          life.destroy(bcW)
+          var c = 0
+          while (c < k) {
+            val base = c * stride
+            val wc = weights(c)
+            var j = 0
+            while (j < d) {
+              val denom = acc(base + 2 * j + 1) + params.lambda
+              // a feature absent from every row has H_j = 0; with λ = 0
+              // the step would be 0/0 — skip, like xgboost empty columns
+              if (denom > 0) {
+                val gj = acc(base + 2 * j) + params.lambda * wc(j)
+                val t =
+                  if (gj > params.alpha) gj - params.alpha
+                  else if (gj < -params.alpha) gj + params.alpha
+                  else 0.0
+                wc(j) = (wc(j) - params.eta * t / denom).toFloat
               }
-            } finally cached.foreach(_.unpersist(blocking = false))
+              j += 1
+            }
+            if (acc(base + 2 * d + 1) > 0)
+              bias(c) = (bias(c) -
+                params.eta * acc(base + 2 * d) /
+                  acc(base + 2 * d + 1)).toFloat
+            c += 1
           }
-          bcE.destroy()
-          if (early.update(round, evalsResult)) stop = true
+          if (evalRows.nonEmpty) {
+            val bcE =
+              life.broadcast((weights.map(_.clone()), bias.clone()))
+            evalRows.foreach { case (n, er) =>
+              val scored = er.mapPartitions(_.flatMap { blk =>
+                val (w, b) = bcE.value
+                Iterator.tabulate(blk.n)(i =>
+                  (evalMargins(blk, i, init, w, b, k), blk.ys(i),
+                    blk.ws(i)))
+              }, preservesPartitioning = true)
+              // computeAll runs one job for all (loss, weight) metrics and
+              // one per whole-set metric (auc, aucpr); when that is more
+              // than one job, persist the scored margins for the round so
+              // the margin map runs ONCE and the extra jobs pay only a
+              // cache read
+              val cached =
+                if (Metrics.jobs(metricNames, customByName) > 1)
+                  Some(life.persist(scored))
+                else None
+              metricNames.zip(Metrics.computeAll(metricNames, obj,
+                cached.getOrElse(scored), customByName)).foreach {
+                case (mn, v) => evalsResult(n)(mn) += v
+              }
+              cached.foreach(life.release)
+            }
+            life.destroy(bcE)
+            if (early.update(round, evalsResult)) stop = true
+          }
+          round += 1
         }
-        round += 1
       }
       // carry the resolved feature names when they map 1:1 to weight
       // slots (not for a pre-assembled vector column, whose inner
@@ -414,9 +419,6 @@ object GraftLinear {
         LinearModel(weights, bias, obj.name, params.baseScore, fNames),
         evalsResult.toMap,
         bestIteration = early.bestIteration, bestScore = early.bestScore)
-    } finally {
-      rows.unpersist(blocking = false)
-      evalRows.foreach(_._2.unpersist(blocking = false))
     }
   }
 

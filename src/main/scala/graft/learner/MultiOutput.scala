@@ -196,8 +196,8 @@ object MultiOutput {
       life.rounds {
         var round = 0
         while (round < p.numRounds) {
-          val rt = Trainer.buildTrees(gradients(cur, obj, k), bins, p,
-            Array(p.seed), Array(0), width = k).head
+          val rt = Trainer.buildTrees(life, gradients(cur, obj, k), bins,
+            p, Array(p.seed), Array(0), width = k).head
           val tree = new MoTree(rt.feature, rt.thresholdBin, rt.threshold,
             rt.defaultLeft, rt.left, rt.right, rt.value, rt.gain, rt.cover, k)
           trees += tree

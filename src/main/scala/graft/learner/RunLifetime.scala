@@ -14,18 +14,22 @@ import org.apache.spark.storage.StorageLevel
  * What one boosting run holds, and the one place it lets go — the
  * analog of the reference's finalize step, which shuts down its actors,
  * queue, stop event and placement group together (main.py:925-955,
- * 1733-1740). [[Trainer.boost]] (gbtree and DART), its refresh and
- * [[MultiOutput.boost]] each run inside one [[RunLifetime.apply]]:
- * [[rounds]] runs the round loop under a fresh `graft-train-*` job
- * group that every [[StopEvent]] can cancel; [[input]], [[persist]]
- * and [[broadcast]] record what the run owns — never a caller's input
- * cache (a reused [[graft.api.GraftBoost.BinnedMatrix]]) — and
- * [[release]] / [[destroy]] free one of those early. On every exit
+ * 1733-1740). [[Trainer.boost]] (gbtree and DART), its refresh,
+ * [[MultiOutput.boost]] and gblinear's
+ * [[graft.api.GraftLinear.trainWithEvals]] each run inside one
+ * [[RunLifetime.apply]]: [[rounds]] runs the round loop under a fresh
+ * `graft-train-*` job group that every [[StopEvent]] can cancel;
+ * [[input]], [[persist]] and [[broadcast]] record what the run owns —
+ * never a caller's input cache (a reused
+ * [[graft.api.GraftBoost.BinnedMatrix]]) — and [[release]] /
+ * [[destroy]] free one of those early. Every learner broadcast, the
+ * tree builder's level chunks and the leaf refresh's included, is
+ * made here (`tools/precommit-check.sh` gates it). On every exit
  * (the last round, a stop, a failing task, a throwing callback) one
  * `finally` clears the job group, unbinds the stop hooks and frees
  * whatever is still held.
  */
-private[learner] final class RunLifetime private (sc: SparkContext,
+private[graft] final class RunLifetime private (sc: SparkContext,
     level: StorageLevel, ownsInputs: Boolean, stopEvents: Seq[StopEvent]) {
 
   private val owned = Collections.newSetFromMap(
@@ -77,7 +81,7 @@ private[learner] final class RunLifetime private (sc: SparkContext,
   }
 }
 
-private[learner] object RunLifetime {
+private[graft] object RunLifetime {
   def apply[A](sc: SparkContext, level: StorageLevel, ownsInputs: Boolean,
       stopEvents: Seq[StopEvent] = Nil)(run: RunLifetime => A): A = {
     val life = new RunLifetime(sc, level, ownsInputs, stopEvents)

@@ -598,15 +598,18 @@ object Trainer {
    * the mean hessian across slots. A returned tree holds `width` values
    * per node (node-major) and its cover is that mean hessian. Vector
    * trees take none of the knobs [[MultiOutput.checkParams]] rejects.
+   * Each level chunk's broadcast belongs to the run's `life`: it is
+   * destroyed once the chunk's histogram is in, or by the run's end
+   * when the level job fails.
    */
-  private[learner] def buildTrees(grads: RDD[GradBlock],
-      bins: Binner.Bins, p: TrainParams, treeSeeds: Array[Long],
-      classes: Array[Int], width: Int = 1): Array[RegTree] = {
+  private[learner] def buildTrees(life: RunLifetime,
+      grads: RDD[GradBlock], bins: Binner.Bins, p: TrainParams,
+      treeSeeds: Array[Long], classes: Array[Int],
+      width: Int = 1): Array[RegTree] = {
     // per-tree deterministic row subsample threshold on the row salt
     val subsampleCut: Int =
       if (p.subsample >= 1.0) Int.MaxValue
       else (Int.MinValue + (p.subsample * 4294967295.0)).toInt
-    val sc = grads.sparkContext
     val b = bins.maxRealBins + 1 // last slot = missing
     val nf = bins.numFeatures
     val w = width
@@ -902,12 +905,12 @@ object Trainer {
           if (chunk.exists(work(_)._1 == t)) states(t).tb.snapshot()
           else null
         }.toArray
-        val bc = sc.broadcast(TaskFns.LevelChunk(chunkTrees, slotOf,
+        val bc = life.broadcast(TaskFns.LevelChunk(chunkTrees, slotOf,
           treeCls, treeSalts, chunk.map(work(_)._3).toArray))
         val histSize = chunk.length * fPerNode * b * binW
         val hist = aggregateHist(grads, histSize)(
           TaskFns.histSeqOp(bc, histSize, subsampleCut, b, fPerNode, w))
-        bc.destroy()
+        life.destroy(bc)
 
         // driver-side split finding per built node, then per sibling
         // derived from it
@@ -1183,8 +1186,13 @@ object Trainer {
    * Documented divergences from xgboost: the lower quantile (xgboost
    * interpolates adjacent order statistics), and the refresh sees all
    * rows (xgboost restricts to the row subsample).
+   *
+   * Its broadcasts belong to the run's `life`: each pass's edges and
+   * bounds go after the pass, the trees and slot maps after the last
+   * pass, and all of them at the run's end if a pass fails.
    */
   private def refreshLeaves(
+      life: RunLifetime,
       data: RDD[TrainBlock],
       roundTrees: Array[RegTree],
       alphas: Array[Double], treeCls: Array[Int],
@@ -1205,9 +1213,8 @@ object Trainer {
         m
     }
     val slotTreeArr = slotTree.toArray
-    val sc = data.sparkContext
-    val bcTrees = sc.broadcast(roundTrees)
-    val bcSlots = sc.broadcast(leafSlot)
+    val bcTrees = life.broadcast(roundTrees)
+    val bcSlots = life.broadcast(leafSlot)
 
     // ---- pass 0: per-slot (Σw, min, max) of residuals ----
     val z0 = new Array[Double](nSlots * 3)
@@ -1287,10 +1294,10 @@ object Trainer {
         val b = hi(sl)
         Array.tabulate(B - 1)(i => a + (i + 1) * (b - a) / B)
       }
-      val bcEdges = sc.broadcast(edges)
-      val bcLo = sc.broadcast(act.map(lo))
-      val bcHi = sc.broadcast(act.map(hi))
-      val bcPos = sc.broadcast(slotPos)
+      val bcEdges = life.broadcast(edges)
+      val bcLo = life.broadcast(act.map(lo))
+      val bcHi = life.broadcast(act.map(hi))
+      val bcPos = life.broadcast(slotPos)
       val width = B + 2 // hist + interval min + interval max
       val z = new Array[Double](act.length * width)
       var i = 0
@@ -1344,7 +1351,7 @@ object Trainer {
           }
           a
         })
-      bcEdges.destroy(); bcLo.destroy(); bcHi.destroy(); bcPos.destroy()
+      Seq(bcEdges, bcLo, bcHi, bcPos).foreach(life.destroy)
       act.zipWithIndex.foreach { case (sl, pi) =>
         val base = pi * width
         val mnI = h(base + B); val mxI = h(base + B + 1)
@@ -1367,7 +1374,7 @@ object Trainer {
       unresolved = unresolved.filter(i => value(i).isNaN)
     }
     unresolved.foreach(sl => value(sl) = hi(sl)) // guard exhausted
-    bcTrees.destroy(); bcSlots.destroy()
+    life.destroy(bcTrees); life.destroy(bcSlots)
 
     roundTrees.zipWithIndex.map { case (t, ti) =>
       val v = t.value.clone()
@@ -1637,7 +1644,7 @@ object Trainer {
             s"round ${startRound + round}; learning rates must be positive")
           val pTree = p.copy(eta = etaRound / p.numParallelTree)
           val nTrees = p.numParallelTree * k
-          val builtTrees = buildTrees(grads, bins, pTree,
+          val builtTrees = buildTrees(life, grads, bins, pTree,
             Array.tabulate(nTrees)(i =>
               TaskFns.mix(p.seed, startRound + round, 7919 + i)),
             Array.tabulate(nTrees)(_ % k))
@@ -1645,8 +1652,8 @@ object Trainer {
           // resets each leaf to η·Q_α of its residuals before the commit
           // (α per output slot — multi-quantile trains one tree per α)
           val roundTrees = obj.leafRefreshAlphas match {
-            case Some(as) => refreshLeaves(roundData, builtTrees, as,
-              Array.tabulate(nTrees)(_ % k), pTree.eta)
+            case Some(as) => refreshLeaves(life, roundData, builtTrees,
+              as, Array.tabulate(nTrees)(_ % k), pTree.eta)
             case None => builtTrees
           }
           // the tree builds above materialized `data` (via the gradient
@@ -2063,7 +2070,7 @@ object Trainer {
             // CURRENT residuals (same adaptive machinery training uses),
             // overriding the generic −η·G/(H+λ) re-fit above
             if (p.refreshLeaf) obj.leafRefreshAlphas.foreach { as =>
-              val adapted = refreshLeaves(data,
+              val adapted = refreshLeaves(life, data,
                 outTrees.slice(round * tpr, round * tpr + tpr), as,
                 Array.tabulate(tpr)(_ % k), pLeaf.eta)
               var j = 0

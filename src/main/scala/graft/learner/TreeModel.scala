@@ -583,7 +583,6 @@ final class GraftModel(
     * is xgboost's own documented approximation. */
   def contribs(x: Array[Float]): Array[Float] = {
     val k = numOutputs
-    val w = numFeatures + 1
     val acc = Array.ofDim[Double](k, numFeatures)
     val biasAcc = new Array[Double](k)
     var t = 0
@@ -591,9 +590,18 @@ final class GraftModel(
       biasAcc(t % k) += trees(t).contribWalk(x, acc(t % k))
       t += 1
     }
-    val out = new Array[Float](k * w)
+    packContribs(acc, biasAcc)
+  }
+
+  /** The [[contribs]] / [[shapContribs]] layout from per-class feature
+    * sums `acc` and tree expectations `biasAcc`: per class numFeatures
+    * values, then the bias (expectations + the init margin). */
+  private def packContribs(acc: Array[Array[Double]],
+      biasAcc: Array[Double]): Array[Float] = {
+    val w = numFeatures + 1
+    val out = new Array[Float](acc.length * w)
     var c = 0
-    while (c < k) {
+    while (c < acc.length) {
       var f = 0
       while (f < numFeatures) { out(c * w + f) = acc(c)(f).toFloat; f += 1 }
       out(c * w + numFeatures) = (biasAcc(c) + bias).toFloat
@@ -616,7 +624,6 @@ final class GraftModel(
     * local-accuracy property Saabas only satisfies telescopically. */
   def shapContribs(x: Array[Float]): Array[Float] = {
     val k = numOutputs
-    val w = numFeatures + 1
     val acc = Array.ofDim[Double](k, numFeatures)
     val biasAcc = new Array[Double](k)
     val s = shapWsSize
@@ -627,15 +634,7 @@ final class GraftModel(
       biasAcc(t % k) += trees(t).shapInto(x, acc(t % k), wsD, wsZ, wsO, wsW)
       t += 1
     }
-    val out = new Array[Float](k * w)
-    var c = 0
-    while (c < k) {
-      var f = 0
-      while (f < numFeatures) { out(c * w + f) = acc(c)(f).toFloat; f += 1 }
-      out(c * w + numFeatures) = (biasAcc(c) + bias).toFloat
-      c += 1
-    }
-    out
+    packContribs(acc, biasAcc)
   }
 
   /**

@@ -355,9 +355,21 @@ class DataSpec extends SparkTestBase {
     val bad = Seq((Seq(1.0, 2.0, 3.0), 1.0)).toDF("f", "y")
     val spec = DMatrixSpec(labelCol = Seq("y"),
       featureCols = Some(Seq("f")))
-    val e = intercept[Exception] {
-      GraftBoost.predict(res.model, bad, spec).collect()
+    val m = res.model
+    // every per-row output goes through the same guard
+    Seq[(String, org.apache.spark.sql.DataFrame)](
+      "margin" -> GraftBoost.predict(m, bad, spec, outputMargin = true),
+      "prediction" -> GraftBoost.predict(m, bad, spec),
+      "leaf" -> GraftBoost.predictLeaf(m, bad, spec),
+      "contribs_saabas" -> GraftBoost.predictContrib(m, bad, spec, true),
+      "contribs_exact" -> GraftBoost.predictContrib(m, bad, spec),
+      "interactions_saabas" ->
+        GraftBoost.predictInteractions(m, bad, spec, true),
+      "interactions_exact" -> GraftBoost.predictInteractions(m, bad, spec)
+    ).foreach { case (name, out) =>
+      val e = intercept[Exception](out.collect())
+      assert(allMessages(e).contains("expects 2"),
+        s"$name: ${allMessages(e)}")
     }
-    assert(allMessages(e).contains("expects 2"), allMessages(e))
   }
 }

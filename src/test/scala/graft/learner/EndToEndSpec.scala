@@ -781,7 +781,7 @@ class EndToEndSpec extends SparkTestBase {
     assert(offDiagMass > 1.0, s"a×b interaction mass $offDiagMass")
   }
 
-  test("EnsembleInteractions compiles under codegen-only mode") {
+  test("EnsembleScore compiles under codegen-only mode in every output") {
     val df = Seq((1.0, 2.0, 5.0), (2.0, 1.0, 8.0), (0.5, 0.5, 3.0))
       .toDF("a", "b", "y")
     val res = GraftBoost.train(df, DMatrixSpec("y"),
@@ -790,12 +790,23 @@ class EndToEndSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.fallback", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     try {
-      val n = GraftBoost.predictInteractions(res.model, df,
-        DMatrixSpec("y"))
-        .filter(org.apache.spark.sql.functions.size(
-          org.apache.spark.sql.functions.col("interactions")) === 9)
-        .count()
-      assert(n === 3L)
+      val (m, s) = (res.model, DMatrixSpec("y"))
+      // (output frame, its array column, per-row length)
+      Seq(
+        (GraftBoost.predict(m, df, s, outputMargin = true), "prediction", 0),
+        (GraftBoost.predict(m, df, s), "prediction", 0),
+        (GraftBoost.predictLeaf(m, df, s), "leaf_indices", 2),
+        (GraftBoost.predictContrib(m, df, s, true), "contribs", 3),
+        (GraftBoost.predictContrib(m, df, s), "contribs", 3),
+        (GraftBoost.predictInteractions(m, df, s, true), "interactions", 9),
+        (GraftBoost.predictInteractions(m, df, s), "interactions", 9)
+      ).foreach { case (out, c, len) =>
+        val ok =
+          if (len == 0) org.apache.spark.sql.functions.col(c).isNotNull
+          else org.apache.spark.sql.functions.size(
+            org.apache.spark.sql.functions.col(c)) === len
+        assert(out.filter(ok).count() === 3L, c)
+      }
     } finally {
       spark.conf.unset("spark.sql.codegen.fallback")
       spark.conf.unset("spark.sql.codegen.factoryMode")

@@ -5,11 +5,13 @@ import graft.api.GraftBoost
 import graft.data.DMatrixSpec
 
 /**
- * Every boosting loop ends its run the same way whatever ends it: a
- * throwing callback, a failing task or a hard [[StopEvent]] leaves the
- * calling thread without the `graft-train-*` job group and frees every
- * cache and broadcast the run made, while a caller-owned
- * [[GraftBoost.BinnedMatrix]] keeps its blocks and trains again.
+ * Every boosting loop — gbtree, DART, the `process_type=update`
+ * refresh, `multi_output_tree` and gblinear — ends its run the same way
+ * whatever ends it: a throwing callback, a failing task or a hard
+ * [[StopEvent]] leaves the calling thread without the `graft-train-*`
+ * job group and frees every cache and broadcast the run made, while a
+ * caller-owned [[GraftBoost.BinnedMatrix]] keeps its blocks and trains
+ * again. gblinear's round and eval-metric jobs carry that group too.
  *
  * Failures are injected through [[TrainLifetimeSpec.TripSq]], squared
  * error that runs [[TrainLifetimeSpec.trip]] on every row whose margin
@@ -186,6 +188,23 @@ class TrainLifetimeSpec extends SparkTestBase {
     }
   }
 
+  test("gblinear: round and eval-metric jobs run under one " +
+      "graft-train-* group") {
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try leavesNothing(null) {
+      graft.api.GraftLinear.trainWithEvals(df, spec,
+        TrainParams(objective = "reg:squarederror", numRounds = 3),
+        Seq("valid" -> valid))
+    } finally sc.removeSparkListener(log)
+    val jobs = log.settled()
+    val rounds = jobs.filter(_._2.startsWith("treeAggregate at GraftLinear"))
+    val metrics = jobs.filter(_._2.contains(" at Metrics.scala"))
+    assert(rounds.size === 3 && metrics.size === 3, jobs)
+    val groups = (rounds ++ metrics).map(_._1).distinct
+    assert(groups.size === 1 && groups.head.startsWith("graft-train-"), jobs)
+  }
+
   test("multi_output_tree: a failing task frees the run") {
     leavesNothing(fail) {
       intercept[org.apache.spark.SparkException] {
@@ -199,6 +218,31 @@ class TrainLifetimeSpec extends SparkTestBase {
 }
 
 object TrainLifetimeSpec {
+  /** Job group and last stage name of every job started while
+    * attached. */
+  final class JobLog extends org.apache.spark.scheduler.SparkListener {
+    private val jobs =
+      new java.util.concurrent.ConcurrentSkipListMap[Int, (String, String)]()
+    override def onJobStart(
+        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+      jobs.put(e.jobId, (
+        Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""),
+        e.stageInfos.sortBy(_.stageId).lastOption.map(_.name).getOrElse("")))
+    /** (group, stage name) per job in id order, once the async listener
+      * bus stops delivering. */
+    def settled(): Seq[(String, String)] = {
+      var last = -1; var tries = 0
+      while (jobs.size != last && tries < 100) {
+        last = jobs.size; Thread.sleep(100); tries += 1
+      }
+      import scala.jdk.CollectionConverters._
+      jobs.values.asScala.toSeq
+    }
+  }
+
+
   /** Run on every gradient row whose margin has left the base score;
     * shared with the tasks, which run in this JVM under `local[N]`. */
   @volatile var trip: () => Unit = _

@@ -3,9 +3,10 @@
 # a commit or an end-of-round snapshot. Run before any commit of source
 # changes; the round checklist ends with this script.
 #
-#   tools/precommit-check.sh          # one-grower, one-lifetime and
-#                                     # one-packer checks, then compile
-#                                     # main + tests (~20 s warm)
+#   tools/precommit-check.sh          # one-grower, one-lifetime,
+#                                     # one-packer, run-owned-broadcast
+#                                     # and one-scorer checks, then
+#                                     # compile main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
 #   tools/precommit-check.sh --bench  # additionally run one short
@@ -81,6 +82,28 @@ if [[ "$(grep -c . <<<"$binners")" -ne 1 ]]; then
     "one call site outside Binner.scala (GraftBoost.toBinned) — pack" \
     "through toBinned instead:"
   echo "${binners:-(none)}"
+  exit 1
+fi
+
+# Run-owned broadcasts: every broadcast the learner makes belongs to a
+# RunLifetime (`life.broadcast`), so a failing job or a hard stop frees
+# it with the run; no learner source calls a raw `.broadcast(`.
+rawbc="$(grep -rn --include='*.scala' '\.broadcast(' src/main/scala/graft/learner |
+  grep -v '/RunLifetime\.scala:' | grep -v '\blife\.broadcast(' || true)"
+if [[ -n "$rawbc" ]]; then
+  echo "[precommit] RAW BROADCAST IN THE LEARNER: create it through the" \
+    "run's RunLifetime (life.broadcast / life.destroy) instead:"
+  echo "$rawbc"
+  exit 1
+fi
+
+# One scoring expression: every per-row model output (margin,
+# prediction, leaf ids, contributions, interactions) is a mode of
+# EnsembleScore, the only case class in its file.
+scorers="$(grep -c 'case class' src/main/scala/graft/functions/EnsembleScore.scala || true)"
+if [[ "$scorers" -ne 1 ]]; then
+  echo "[precommit] NOT ONE SCORING EXPRESSION: EnsembleScore.scala holds" \
+    "$scorers case classes — add an EnsembleScore.Output mode instead"
   exit 1
 fi
 
