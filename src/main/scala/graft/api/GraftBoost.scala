@@ -409,21 +409,27 @@ object GraftBoost {
       b.uppers, b.margins), cols.tail)
   }
 
-  /** Append one `prediction_<label>` column per trained label. */
+  /** Append one `prediction_<label>` column per trained label (and,
+    * under softprob, one `probabilities_<label>` array). */
   def predictMultiLabel(result: MultiLabelResult, df: DataFrame,
       spec: DMatrixSpec): DataFrame =
     predictPerLabel(result.models, df, spec)
 
-  /** One `prediction_<label>` column per (label, model), each scored by
-    * [[predict]] under the label's [[singleLabelSpec]]. */
+  /** Per (label, model), [[predict]]'s output columns scored under the
+    * label's [[singleLabelSpec]] and suffixed with the label:
+    * `prediction_<label>`, and `probabilities_<label>` (softprob) or
+    * `predictions_<label>` (multi-quantile). */
   private def predictPerLabel(models: Seq[(String, GraftModel)],
       df: DataFrame, spec: DMatrixSpec): DataFrame = {
-    // earlier prediction columns must not leak into later feature sets
-    val predCols = models.map { case (l, _) => s"prediction_$l" }
+    val outputs = Seq("probabilities", "predictions", "prediction")
+    // earlier labels' outputs must not leak into later feature sets
+    val labelled = for ((l, _) <- models; c <- outputs) yield s"${c}_$l"
     models.foldLeft(df) { case (acc, (l, m)) =>
       val s = singleLabelSpec(spec, l)
-      predict(m, acc, s.copy(ignore = s.ignore ++ predCols))
-        .withColumnRenamed("prediction", s"prediction_$l")
+      outputs.foldLeft(
+        predict(m, acc, s.copy(ignore = s.ignore ++ labelled))) { (out, c) =>
+          out.withColumnRenamed(c, s"${c}_$l")
+        }
     }
   }
 

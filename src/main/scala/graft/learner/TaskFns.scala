@@ -43,9 +43,10 @@ private[learner] object TaskFns {
     z ^ (z >>> 31)
   }
 
-  /** combOp of the histogram aggregates: element-wise sum into `a`.
-    * `null` is the zero — the buffer is allocated in the task on first
-    * use, so a partition without rows returns none. */
+  /** combOp of the tree merge of dense histograms (merge volumes over
+    * 64 MiB): element-wise sum into `a`. `null` is the zero — the buffer
+    * is allocated in the task on first use, so a partition without rows
+    * returns none. */
   val mergeHist: (Array[Double], Array[Double]) => Array[Double] = (a, c) =>
     if (a == null) c
     else if (c == null) a
@@ -55,17 +56,72 @@ private[learner] object TaskFns {
       a
     }
 
-  /** A task's histogram tagged with its partition index, for a merge in
-    * partition-index order on the driver; empty for a partition without
-    * rows. */
-  type Partials = Vector[(Int, Array[Double])]
+  /** One partition's histogram as it leaves its task: a bitmap over the
+    * histogram's (g, h) pairs, bit p set when pair p has a nonzero raw
+    * bit pattern, then the two doubles of each set pair in pair order.
+    * A deep level's node sees few rows per partition, so most of its
+    * bins are exact zeros that need not travel; at full density the
+    * bitmap adds 1/128 of the dense bytes. */
+  final class PackedHist(val pid: Int, val bits: Array[Long],
+      val vals: Array[Double]) extends Serializable {
 
-  def tagged(seqOp: (Array[Double], GradBlock) => Array[Double])
-      : (Partials, GradBlock) => Partials = (acc, blk) =>
-    Vector((TaskContext.getPartitionId(),
-      seqOp(if (acc.isEmpty) null else acc.head._2, blk)))
+    /** Writes this partial's pairs into `acc` (`first`: a zero buffer)
+      * or adds them to it. Skipping a pair left out is exact: it is
+      * (+0.0, +0.0), a task's sums start at +0.0 and so never hold −0.0,
+      * and x + (+0.0) = x for every other x. */
+    def mergeInto(acc: Array[Double], first: Boolean): Unit = {
+      var v = 0
+      var wi = 0
+      while (wi < bits.length) {
+        var word = bits(wi)
+        while (word != 0L) {
+          val i = ((wi << 6) + java.lang.Long.numberOfTrailingZeros(word)) * 2
+          if (first) { acc(i) = vals(v); acc(i + 1) = vals(v + 1) }
+          else { acc(i) += vals(v); acc(i + 1) += vals(v + 1) }
+          v += 2
+          word &= word - 1
+        }
+        wi += 1
+      }
+    }
+  }
 
-  val concatPartials: (Partials, Partials) => Partials = _ ++ _
+  /** Packs partition `pid`'s histogram `h` of (g, h) pairs, compacting
+    * the kept pairs to the front of `h` (the task's own buffer, dead
+    * after this) and copying that prefix out. */
+  def pack(pid: Int, h: Array[Double]): PackedHist = {
+    val pairs = h.length / 2
+    val bits = new Array[Long]((pairs + 63) >>> 6)
+    var v = 0
+    var p = 0
+    while (p < pairs) {
+      val g = h(2 * p); val hs = h(2 * p + 1)
+      val x = java.lang.Double.doubleToRawLongBits(g) |
+        java.lang.Double.doubleToRawLongBits(hs)
+      val kept = (x | -x) >>> 63 // 1 unless both raw patterns are 0
+      bits(p >>> 6) |= kept << p
+      h(v) = g; h(v + 1) = hs // v ≤ 2p: pair p is already read
+      v += (kept << 1).toInt
+      p += 1
+    }
+    new PackedHist(pid, bits, java.util.Arrays.copyOf(h, v))
+  }
+
+  /** A level task: fold the partition's blocks with the histogram
+    * `seqOp`, then emit the histogram packed; a partition without blocks
+    * emits nothing. */
+  def packedPartial(seqOp: (Array[Double], GradBlock) => Array[Double])
+      : Iterator[GradBlock] => Iterator[PackedHist] = it =>
+    if (!it.hasNext) Iterator.empty
+    else Iterator.single(pack(TaskContext.getPartitionId(),
+      it.foldLeft(null: Array[Double])(seqOp)))
+
+  /** The aggregate ops gathering a level job's packed partials. */
+  val addPacked: (Vector[PackedHist], PackedHist) => Vector[PackedHist] =
+    _ :+ _
+
+  val concatPacked: (Vector[PackedHist], Vector[PackedHist])
+      => Vector[PackedHist] = _ ++ _
 
   /** The histogram `seqOp` of one level chunk: each kept row routes down
     * each chunk tree to its slot and adds its `w` (g, h) pairs, from the

@@ -4,11 +4,14 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 
 import graft.SparkTestBase
 import graft.data.DMatrixSpec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.learner.{Binner, TrainParams}
 
 /**
@@ -16,7 +19,9 @@ import graft.learner.{Binner, TrainParams}
  *  - a round runs one histogram job per level plus ONE metric job for
  *    all (loss, weight) metrics of its eval set;
  *  - the materialized blocks reach the bin cuts only through a
- *    broadcast, so no task binary carries a [[Binner.Bins]].
+ *    broadcast, so no task binary carries a [[Binner.Bins]];
+ *  - a level task returns its histogram packed: the (g, h) pairs its
+ *    rows left at zero do not travel.
  */
 class JobCostSpec extends SparkTestBase {
 
@@ -92,6 +97,72 @@ class JobCostSpec extends SparkTestBase {
     m.trees.foreach(t =>
       assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
     assert(log.trainJobs() === rounds * depth)
+  }
+
+  /** Tasks and `taskMetrics.resultSize` of every histogram level job (call
+    * site `aggregate at Trainer.scala`) started while attached. */
+  private final class LevelResults extends SparkListener {
+    private val levelStages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new java.util.concurrent.atomic.AtomicInteger()
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      e.stageInfos.filter(_.name.startsWith("aggregate at Trainer.scala"))
+        .foreach(s => levelStages.add(s.stageId))
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (levelStages.contains(e.stageId) && e.taskMetrics != null) {
+        bytes.addAndGet(e.taskMetrics.resultSize)
+        tasks.incrementAndGet()
+      }
+    def settledJobs(): Int = {
+      var last = -1; var tries = 0
+      while (tasks.get != last && tries < 100) {
+        last = tasks.get; Thread.sleep(100); tries += 1
+      }
+      levelStages.size
+    }
+  }
+
+  test("a 64-feature depth-6 round's level tasks return at most half " +
+      "the dense histogram bytes") {
+    val nf = 64
+    val parts = 4
+    val r = new java.util.Random(21)
+    val rows = Seq.fill(4000) {
+      val x = Array.fill(nf)(r.nextGaussian())
+      Row.fromSeq(x.toSeq :+ (if (1.5 * x(0) - x(1) > 0) 1.0 else 0.0))
+    }
+    val schema = StructType((0 until nf).map(j =>
+      StructField(s"x$j", DoubleType)) :+ StructField("y", DoubleType))
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, parts), schema)
+    val params = TrainParams(objective = "binary:logistic", numRounds = 1,
+      maxDepth = 6, seed = 5)
+    val m = GraftBoost.materialize(df, DMatrixSpec("y"), params)
+    val log = new LevelResults
+    val tree = try {
+      spark.sparkContext.addSparkListener(log)
+      try m.train(params).model.trees.head
+      finally spark.sparkContext.removeSparkListener(log)
+    } finally m.unpersist()
+    val levels = log.settledJobs()
+    assert(levels === 6 && log.tasks.get === levels * parts)
+    // built nodes per level: the root, then one child of each split
+    // above (its sibling is derived by subtraction on the driver)
+    val depthOf = new Array[Int](tree.numNodes)
+    val splitsAt = new Array[Int](levels)
+    (0 until tree.numNodes).foreach { i =>
+      if (tree.feature(i) >= 0) {
+        splitsAt(depthOf(i)) += 1
+        depthOf(tree.left(i)) = depthOf(i) + 1
+        depthOf(tree.right(i)) = depthOf(i) + 1
+      }
+    }
+    assert(splitsAt(0) === 1 && splitsAt(levels - 1) > 0)
+    val built = 1 +: splitsAt.init.toSeq
+    val histSize = nf.toLong * (m.bins.maxRealBins + 1) * 2
+    val denseBytes = built.map(n => parts * n * histSize * 8).sum
+    assert(log.bytes.get <= denseBytes / 2,
+      s"level tasks returned ${log.bytes.get} bytes, dense $denseBytes")
   }
 
   test("the materialized blocks reach no Binner.Bins") {

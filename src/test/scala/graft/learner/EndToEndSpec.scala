@@ -399,6 +399,42 @@ class EndToEndSpec extends SparkTestBase {
     assert(e.getMessage.contains("single label"))
   }
 
+  test("multi-label prediction under multi:softprob and multi-quantile " +
+      "keeps each label's output array out of later feature sets") {
+    val rng = new scala.util.Random(67)
+    val df = (1 to 300).map { _ =>
+      val a = rng.nextDouble(); val b = rng.nextDouble()
+      (a, b, math.min(2, (3 * a).toInt).toDouble,
+        math.min(2, (3 * b).toInt).toDouble)
+    }.toDF("a", "b", "y1", "y2")
+    val spec = DMatrixSpec(labelCol = Seq("y1", "y2"))
+    val runs = Seq(
+      (TrainParams(objective = "multi:softprob", numClass = 3,
+        numRounds = 10, maxDepth = 3, seed = 5), "probabilities"),
+      (TrainParams(objective = "reg:quantileerror",
+        quantileAlphas = Seq(0.1, 0.9), numRounds = 10, maxDepth = 3,
+        seed = 5), "predictions"))
+    for ((params, array) <- runs) {
+      val res = GraftBoost.trainMultiLabel(df, spec, params)
+      val pred = GraftBoost.predictMultiLabel(res, df, spec)
+      assert(pred.columns.toSeq === df.columns.toSeq ++ Seq(
+        s"${array}_y1", "prediction_y1", s"${array}_y2", "prediction_y2"))
+      // each label's columns equal its model scored alone
+      res.models.foreach { case (l, m) =>
+        val other = if (l == "y1") "y2" else "y1"
+        val alone = GraftBoost.predict(m, df,
+          DMatrixSpec(labelCol = Seq(l), ignore = Seq(other)))
+          .select(array, "prediction").collect().toSeq
+        assert(pred.select(s"${array}_$l", s"prediction_$l")
+          .collect().toSeq === alone, s"${params.objective} $l")
+        if (array == "probabilities") {
+          val acc = pred.where(s"prediction_$l = $l").count() / 300.0
+          assert(acc > 0.9, s"$l accuracy $acc")
+        }
+      }
+    }
+  }
+
   test("multi-label shared pack == independent per-label training " +
       "(weights + base margin), bit-for-bit on exchange-free input") {
     // no repartition: both plans scan the local relation in input

@@ -64,6 +64,78 @@ class HistMergeOrderSpec extends SparkTestBase {
       java.lang.Float.floatToIntBits(inOrder._1))
     assert(reverse._2 === inOrder._2)
   }
+
+  /** `aggregateHist` over `parts` (partition i holds `parts(i)`) next to
+    * the dense fold of the same per-partition histograms on the driver:
+    * each non-empty partition's blocks folded by `seqOp`, the partials
+    * summed by `TaskFns.mergeHist` in partition-index order. */
+  private def assertDenseFold(parts: Seq[Seq[GradBlock]], w: Int): Unit = {
+    val seqOp = entrySeqOp(w)
+    val size = histSize(w)
+    val rdd = spark.sparkContext.parallelize(parts, parts.length)
+      .flatMap(identity)
+    val got = Trainer.aggregateHist(rdd, size)(seqOp)
+    val folded = parts.filter(_.nonEmpty)
+      .map(_.foldLeft(null: Array[Double])(seqOp))
+      .foldLeft(null: Array[Double])(TaskFns.mergeHist)
+    val expected = if (folded != null) folded else new Array[Double](size)
+    assert(bits(got) === bits(expected))
+  }
+
+  test("packed partials merge like a dense partition-order fold, bit " +
+      "for bit: random sparse and fully dense partials") {
+    val rng = new java.util.Random(11)
+    for (w <- Seq(1, 3); dense <- Seq(false, true); _ <- 0 until 2) {
+      val parts = Seq.tabulate(6) { pid =>
+        Seq.fill(1 + rng.nextInt(3))(block(rng,
+          if (dense) 2 * Bins else if (pid % 2 == 0) 3 else 40, w, dense))
+      }
+      assertDenseFold(parts, w)
+    }
+    // a dense block's partial touches every pair
+    val h = entrySeqOp(3)(null, block(rng, 2 * Bins, 3, dense = true))
+    assert(h.forall(_ != 0.0))
+    assert(TaskFns.pack(0, h).vals.length === h.length)
+  }
+
+  test("packed partials merge like a dense fold: empty partitions, " +
+      "zero-weight rows, zero gradients and −0.0 gradients") {
+    val rng = new java.util.Random(12)
+    for (w <- Seq(1, 3)) {
+      val zeroWeight = block(rng, 30, w, dense = false, g = _ => 0f)
+      val negZero = block(rng, 30, w, dense = false, g = _ => -0f)
+      val mixed = block(rng, 30, w, dense = false,
+        g = r => if (r.nextBoolean()) -0f else gradient(r))
+      // g = +0.0 with h > 0: the pair travels on its h alone
+      val flat = block(rng, 30, w, dense = false, g = _ => 0f,
+        hess = _ => 1f)
+      val empty = new GradBlock(0, 2, w, Array.empty[Byte],
+        Array.empty[Float], Array.empty[Int])
+      // touched pairs that sum to +0.0 travel as nothing
+      assert(TaskFns.pack(0, entrySeqOp(w)(null, zeroWeight)).vals.isEmpty)
+      assert(TaskFns.pack(0, entrySeqOp(w)(null, negZero)).vals.isEmpty)
+      assertDenseFold(Seq(Nil, Seq(zeroWeight), Nil, Seq(mixed),
+        Seq(negZero, block(rng, 5, w, dense = false)), Seq(empty), Nil,
+        Seq(flat)), w)
+      assertDenseFold(Seq(Seq(negZero), Seq(mixed), Seq(zeroWeight)), w)
+      assertDenseFold(Seq(Nil, Nil), w)
+    }
+  }
+
+  test("packed partials of a width-3 layout finishing in reverse index " +
+      "order merge like the dense partition-order fold, bit for bit") {
+    val rng = new java.util.Random(13)
+    val w = 3
+    val blocks = Array.tabulate(Parts)(pid =>
+      block(rng, 4 + 20 * pid, w, dense = false))
+    val seqOp = entrySeqOp(w)
+    val reverse = Trainer.aggregateHist(
+      gated(spark.sparkContext, (0 until Parts).reverse)(blocks(_)),
+      histSize(w))(seqOp)
+    val expected = blocks.map(seqOp(null, _))
+      .foldLeft(null: Array[Double])(TaskFns.mergeHist)
+    assert(bits(reverse) === bits(expected))
+  }
 }
 
 object HistMergeOrderSpec {
@@ -84,6 +156,60 @@ object HistMergeOrderSpec {
     }
     acc
   }
+
+  /** Features and bins of the [[entrySeqOp]] layout. */
+  val Feats = 2
+  val Bins = 64
+
+  def histSize(w: Int): Int = Feats * Bins * w * 2
+
+  /** A histogram `seqOp` with the level layout: row i adds its `w`
+    * (g, h) pairs at ((f × Bins + bin) × w + c) × 2 for each feature f. */
+  def entrySeqOp(w: Int): (Array[Double], GradBlock) => Array[Double] =
+    (acc0, blk) => {
+      val acc = if (acc0 != null) acc0 else new Array[Double](histSize(w))
+      var i = 0
+      while (i < blk.n) {
+        var f = 0
+        while (f < Feats) {
+          var c = 0
+          while (c < w) {
+            val idx = ((f * Bins + blk.bins(i * Feats + f)) * w + c) * 2
+            acc(idx) += blk.gh(i * 2 * w + 2 * c)
+            acc(idx + 1) += blk.gh(i * 2 * w + 2 * c + 1)
+            c += 1
+          }
+          f += 1
+        }
+        i += 1
+      }
+      acc
+    }
+
+  /** A gradient whose sums do not commute: magnitudes from 1e-3 to 1e17. */
+  def gradient(r: java.util.Random): Float =
+    (r.nextGaussian() * math.pow(10, r.nextInt(21) - 3)).toFloat
+
+  /** `n` rows of `w` (g, h) pairs: random bins (`dense`: row i in bin
+    * (i + f) mod Bins, so 2 × Bins rows touch every pair), g from `g`,
+    * h = `hess(g)` (`dense`: 1 + |g|). */
+  def block(r: java.util.Random, n: Int, w: Int, dense: Boolean,
+      g: java.util.Random => Float = gradient,
+      hess: Float => Float = math.abs): GradBlock = {
+    val bins = Array.tabulate(n * Feats)(j =>
+      (if (dense) (j / Feats + j % Feats) % Bins else r.nextInt(Bins)).toByte)
+    val gh = new Array[Float](n * 2 * w)
+    var j = 0
+    while (j < n * w) {
+      gh(2 * j) = g(r)
+      gh(2 * j + 1) = if (dense) 1f + math.abs(gh(2 * j)) else hess(gh(2 * j))
+      j += 1
+    }
+    new GradBlock(n, Feats, w, bins, gh, new Array[Int](n))
+  }
+
+  def bits(h: Array[Double]): Seq[Long] =
+    h.toSeq.map(java.lang.Double.doubleToRawLongBits)
 
   val RefreshParams = TrainParams(objective = "reg:squarederror",
     numRounds = 1, processType = "update")
