@@ -245,9 +245,9 @@ object GraftBoost {
     * like predict); train rows keep the fail-fast. Lazy: the caller
     * decides whether to persist and force it. */
   private def bindEval(e: DataFrame, spec: DMatrixSpec, obj: Objective,
-      baseScore: Double, numWorkers: Int, bins: Binner.Bins)
+      baseScore: Double, numWorkers: Int, bins: Binner.Bins, k: Int = 0)
       : RDD[TrainBlock] =
-    toBinned(prepare(e, spec, obj, numWorkers), bins, obj, baseScore,
+    toBinned(prepare(e, spec, obj, numWorkers), bins, obj, baseScore, k,
       tolerateUnseenCats = true)
 
   /** Named eval sets for a trainer over `trainBlocks`. The xgboost
@@ -259,11 +259,11 @@ object GraftBoost {
     * benchmark_cpu_gpu.py:96-100). */
   private def bindEvals(evals: Seq[(String, DataFrame)], df: DataFrame,
       trainBlocks: RDD[TrainBlock], bins: Binner.Bins, spec: DMatrixSpec,
-      obj: Objective, baseScore: Double, numWorkers: Int)
+      obj: Objective, baseScore: Double, numWorkers: Int, k: Int = 0)
       : Seq[(String, RDD[TrainBlock])] =
     evals.map { case (n, e) =>
       if (e eq df) (n, trainBlocks)
-      else (n, bindEval(e, spec, obj, baseScore, numWorkers, bins))
+      else (n, bindEval(e, spec, obj, baseScore, numWorkers, bins, k))
     }
 
   private def attachNames(res: TrainResult,
@@ -319,15 +319,15 @@ object GraftBoost {
   /**
    * Multi-label training (matrix.py:410-425: list-of-names labels,
    * Parquet multi-label loading): one boosted ensemble per label column
-   * over the SAME feature set — the per-target-tree layout xgboost
-   * multi-output uses, trained sequentially with full cluster
-   * parallelism per target.
-   *
-   * Pointwise objectives take one input pass for all L labels: [[load]]
-   * projects every label column beside the features, [[toBinned]] packs
-   * them L per row, and the cached composite splits each block into
-   * label 0's [[TrainBlock]] plus labels 1..L−1 beside it. Each label
-   * then trains against a view that swaps in its labels column.
+   * over the SAME feature set — xgboost's `one_output_per_tree` layout;
+   * each label's model equals its own [[train]] run's, bit for bit on
+   * exchange-free input. [[load]] projects every label column beside the
+   * features and [[toBinned]] packs them L per row, eval frames too, in
+   * one pass. ONE [[Trainer.boostTargets]] run then trains all L models
+   * at margin width L·c, every label's trees in the same level jobs;
+   * each label keeps its own eval history and early stop and saves its
+   * checkpoints under `<checkpointPath>/<label>`. DART (per-model drop
+   * sets) runs the loop once per label over the same blocks.
    */
   def trainMultiLabel(
       df: DataFrame,
@@ -338,75 +338,47 @@ object GraftBoost {
     require(spec.labelCol.size >= 2,
       s"multi-label needs >=2 label columns, got ${spec.labelCol}")
     val obj = Objectives.resolve(params)
-    // ranking sorts rows by (qid, content incl. the label column) and
-    // survival reads the label as a bound — both entangle the label
-    // role with row layout. A spec DECLARING qid/bounds columns takes
-    // the fallback too, even under a pointwise objective: the fast
-    // path packs qids=null/uppers=null, which would silently degrade
-    // a bounds metric (review r13) — the per-label pipeline carries
+    val labels = spec.labelCol
+    // Rows laid out by the label keep one train per label: ranking sorts
+    // rows by (qid, content incl. the label column) and survival reads
+    // the label as a bound. A spec DECLARING qid/bounds columns takes
+    // this path too, even under a pointwise objective: a block with
+    // several labels per row carries no qids or bounds, which would
+    // silently degrade a bounds metric — the per-label pipeline carries
     // the declared columns through.
     if (obj.needsGroups || obj.needsBounds || spec.qidCol.isDefined ||
         spec.labelLowerCol.isDefined || spec.labelUpperCol.isDefined)
-      return MultiLabelResult(spec.labelCol.map { l =>
-        (l, train(df, singleLabelSpec(spec, l), params, evals,
-          numWorkers))
+      return MultiLabelResult(labels.map { l =>
+        (l, train(df, singleLabelSpec(spec, l), params.copy(
+          checkpointPath = params.checkpointPath.map(c => s"$c/$l")),
+          evals, numWorkers))
       })
-    // Every label trains over the SAME feature set (the other label
-    // columns are roles, never features), so the dominant
-    // prepare→bin→pack work is label-invariant. ONE pass assembles all
-    // L label columns alongside the features and packs them together
-    // (separate per-label plan evaluations CANNOT be zipped instead —
-    // an exchange in the plan redistributes rows by the projected
-    // bytes, which differ per label). The packed bins/weights/margins
-    // arrays are shared by reference and the per-label boost owns (and
-    // frees) only its view. Cuts are identical to the per-label
-    // pipeline (same features, same binner seed): L labels cost 2 data
-    // scans total instead of 2L. The by-reference sharing holds for
-    // DESERIALIZED storage levels (boost's persist of the view then
-    // stores object refs into the composite's arrays); under a _SER
-    // level each view's persist serializes its own full byte copy for
-    // the duration of that label's training — the 2-scan saving
-    // stands, the memory saving does not.
-    val nl = spec.labelCol.size
+    val nl = labels.size
+    val runs =
+      if (params.booster == "dart")
+        labels.indices.map(j => Targets(nl, Seq(j), Seq(labels(j))))
+      else Seq(Targets(nl, labels.indices, labels))
+    val width = runs.head.labels.length * obj.numOutputs
     val in = load(df, spec, params, obj, numWorkers)
-    val bins = in.bins
-    val composite = in.pack(params.storageLevel)(rows =>
-      toBinned(rows, bins, obj, params.baseScore).map(splitLabels(_, nl)))
-    val names = attachableNames(spec, df, bins.numFeatures)
+    val blocks = in.pack(params.storageLevel)(
+      toBinned(_, in.bins, obj, params.baseScore, k = width))
+    val names = attachableNames(spec, df, in.bins.numFeatures)
+    val p2 = params.copy(featureWeights =
+      params.featureWeights.orElse(spec.featureWeights))
+    var evalRdds = Seq.empty[(String, RDD[TrainBlock])]
+    // one run owns and frees its inputs as its margins advance; several
+    // share them. Either way, what is still cached is freed here.
     try {
-      MultiLabelResult(spec.labelCol.zipWithIndex.map { case (l, j) =>
-        val blocks =
-          if (j == 0) composite.map(_._1)
-          else composite.map { case (b, others) =>
-            new TrainBlock(b.n, b.nf, b.k, b.bins, others(j - 1),
-              b.weights, null, null, b.margins)
-          }
-        val evalRdds = bindEvals(evals, df, blocks, bins,
-          singleLabelSpec(spec, l), obj, params.baseScore, numWorkers)
-        val p2 = params.copy(featureWeights =
-          params.featureWeights.orElse(spec.featureWeights))
-        val res = Trainer.boost(blocks, evalRdds, bins, p2,
-          Nil, None, Some(df.sparkSession), Nil,
+      evalRdds = bindEvals(evals, df, blocks, in.bins, spec, obj,
+        params.baseScore, numWorkers, k = width)
+      MultiLabelResult(runs.flatMap { tg =>
+        val res = Trainer.boostTargets(blocks, evalRdds, in.bins, p2, tg,
+          spark = Some(df.sparkSession), releaseInputs = runs.length == 1,
           knownRows = in.totalRows)
-        (l, attachNames(res, names))
+        tg.names.zip(res.map(attachNames(_, names)))
       })
-    } finally composite.unpersist(blocking = false)
-  }
-
-  /** [[trainMultiLabel]]'s composite layout of a block packed with `nl`
-    * labels per row: label 0 stays in the [[TrainBlock]], labels
-    * 1..nl−1 ride beside it as one column each. */
-  private[api] def splitLabels(b: TrainBlock, nl: Int)
-      : (TrainBlock, Array[Array[Float]]) = {
-    val cols = Array.fill(nl)(new Array[Float](b.n))
-    var i = 0
-    while (i < b.n) {
-      var j = 0
-      while (j < nl) { cols(j)(i) = b.labels(i * nl + j); j += 1 }
-      i += 1
-    }
-    (new TrainBlock(b.n, b.nf, b.k, b.bins, cols(0), b.weights, b.qids,
-      b.uppers, b.margins), cols.tail)
+    } finally
+      (blocks +: evalRdds.map(_._2)).foreach(_.unpersist(blocking = false))
   }
 
   /** Append one `prediction_<label>` column per trained label (and,
@@ -437,11 +409,10 @@ object GraftBoost {
    * Train ONE vector-leaf tree per round over all label columns — the
    * xgboost 2.x `multi_strategy = "multi_output_tree"` analog (see
    * [[graft.learner.MultiOutput]] for semantics and v1 scope). Same
-   * load→bin→pack pipeline as [[trainMultiLabel]]'s fast path (one
-   * data pass assembles all L labels), packed at margin width L, but
-   * training then costs one histogram pass per level TOTAL instead of
-   * one per label, and the model is L× smaller (shared split
-   * structure).
+   * load→bin→pack step as [[trainMultiLabel]], packed at margin width
+   * L, and the same round loop ([[Trainer.boostTargets]] with
+   * `vectorLeaf`): one tree of node width L per round, so the model is
+   * L× smaller (shared split structure).
    */
   def trainMultiOutput(
       df: DataFrame,
@@ -456,18 +427,23 @@ object GraftBoost {
       spec.labelUpperCol.isEmpty,
       "multi_output_tree supports pointwise objectives without " +
         "qid/bounds roles — use trainMultiLabel for those")
-    // param-only knob validation BEFORE any data scan (review r20):
-    // an unsupported booster/subsample must not cost prepare+bin+pack
-    // of the whole input first
-    MultiOutput.checkParams(params, obj)
+    // scope validation BEFORE any data scan: an unsupported
+    // booster/subsample must not cost prepare+bin+pack of the whole
+    // input first
+    MultiOutput.checkParams(params, obj, spec.categoricalFlags(df))
     val kOut = spec.labelCol.size
     val in = load(df, spec, params, obj, numWorkers)
     val blocks = in.pack(params.storageLevel)(
       toBinned(_, in.bins, obj, params.baseScore, k = kOut))
     try {
-      val trees = MultiOutput.boost(blocks, in.bins, params, kOut)
-      MultiOutput.MultiOutputModel(trees, kOut, obj.name,
-        params.baseScore, in.bins.numFeatures, spec.labelCol)
+      val res = Trainer.boostTargets(blocks, Nil, in.bins, params,
+        Targets(kOut, 0 until kOut, vectorLeaf = true),
+        knownRows = in.totalRows).head
+      MultiOutput.MultiOutputModel(res.model.trees.toSeq.map(t =>
+        new MultiOutput.MoTree(t.feature, t.thresholdBin, t.threshold,
+          t.defaultLeft, t.left, t.right, t.value, t.gain, t.cover, kOut)),
+        kOut, obj.name, params.baseScore, in.bins.numFeatures,
+        spec.labelCol)
     } finally blocks.unpersist(blocking = false)
   }
 

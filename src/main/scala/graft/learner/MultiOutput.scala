@@ -1,8 +1,5 @@
 package graft.learner
 
-import org.apache.spark.rdd.RDD
-import scala.collection.mutable.ArrayBuffer
-
 /**
  * Multi-output trees — the xgboost 2.x
  * `multi_strategy = "multi_output_tree"` analog (the one modern
@@ -13,18 +10,24 @@ import scala.collection.mutable.ArrayBuffer
  * the per-target scores, so the tree finds structure shared across
  * targets; leaves fit each target independently given that structure.
  * Contrast [[graft.api.GraftBoost.trainMultiLabel]] (one full model
- * per label — xgboost's `one_output_per_tree` strategy): K targets
- * cost ONE histogram pass per level here instead of K, and the model
- * is K× smaller, at the price of shared split structure.
+ * per label — xgboost's `one_output_per_tree` strategy): both run one
+ * histogram job per level for all K targets, but here the K targets
+ * share one tree's nodes, so the histograms cover one tree's frontier
+ * instead of K trees', and the model is K× smaller, at the price of
+ * shared split structure.
  *
- * One builder: a vector tree grows through [[Trainer.buildTrees]] with
- * node-statistics width K, the same level loop, histogram job, split
- * scan and histogram subtraction as a scalar tree. This object keeps
- * only what is vector-specific: per-target gradients, the margin
- * advance, [[MoTree]] and the scope check. Its input is the one packed
- * block, a [[TrainBlock]] of margin width K whose `labels` hold K
- * targets per row (row-major, stride K), built by the same
- * `GraftBoost.load`/`toBinned` step as single-label training.
+ * One loop and one builder: a vector-leaf run is [[Trainer.boost]]'s
+ * round loop ([[Trainer.boostTargets]]) over [[Targets]] with
+ * `vectorLeaf` set — T = K targets of one output each, margin width K,
+ * one tree per round of node-statistics width K grown by
+ * [[Trainer.buildTrees]] with the same level loop, histogram job,
+ * split scan and histogram subtraction as a scalar tree. Output slot j
+ * reads label j through the scalar objective; the margin advance adds
+ * a leaf's K values. Its input is the one packed block, a
+ * [[TrainBlock]] of margin width K whose `labels` hold K targets per
+ * row (row-major, stride K), built by the same `GraftBoost.load`/
+ * `toBinned` step as single-label training. This object keeps only
+ * [[MoTree]], [[MultiOutputModel]] and the scope check.
  *
  * Scale shape: identical to [[Trainer]]. Per level, ONE histogram job
  * over the cached binned blocks; a histogram entry is K (G, H) pairs
@@ -35,9 +38,7 @@ import scala.collection.mutable.ArrayBuffer
  * node at K = 3, `HistSubtractionSpec`). The DATA passes do not grow
  * with K. No shuffle of rows, ever; margins advance block-locally,
  * inside the next round's first histogram job. Rows move down a tree
- * only through the one [[RegTree]] binned walk: the level router walks
- * a [[RegTree]] view of the growing tree, the margin advance
- * [[MoTree.leafOf]].
+ * only through the one [[RegTree]] binned walk.
  *
  * Formula parity with [[Trainer]] (pinned by the closed-form
  * `ml_stump_multiout` oracle): per target j, leaf_j =
@@ -100,16 +101,6 @@ object MultiOutput {
       new RegTree(feature, thresholdBin, threshold, defaultLeft,
         left, right, v, gain, cover)
     }
-
-    /** The split structure every [[slice]] shares, as a [[RegTree]]. */
-    private val shape = new RegTree(feature, thresholdBin, threshold,
-      defaultLeft, left, right, Array.emptyFloatArray)
-
-    /** Leaf node id for a binned row (the margin-advance router): the
-      * one binned walk, [[RegTree.leafBinned]], over the shared
-      * structure. */
-    def leafOf(rb: Array[Byte], off: Int): Int =
-      shape.leafBinned(rb, off, MissingBin)
   }
 
   /**
@@ -133,11 +124,12 @@ object MultiOutput {
         baseScore, MissingBin, numFeatures)
   }
 
-  /** Param-only validation — callable BEFORE any data scan, so an
-    * unsupported knob fails in milliseconds, not after prepare/bin/
-    * pack of a 100 TB input (review r20). The bins-dependent
-    * categorical check is the one that must wait for the binner. */
-  private[graft] def checkParams(p: TrainParams, obj: Objective): Unit = {
+  /** Scope validation from the params and the spec's categorical
+    * feature flags — run BEFORE any data scan, so an unsupported knob
+    * fails in milliseconds, not after prepare/bin/pack of a 100 TB
+    * input. */
+  private[graft] def checkParams(p: TrainParams, obj: Objective,
+      catFlags: Array[Boolean]): Unit = {
     def no(cond: Boolean, what: String): Unit = require(cond,
       s"multi_output_tree: $what is not supported (xgboost 2.x's " +
         "vector-leaf strategy carries the same limits); train " +
@@ -161,115 +153,8 @@ object MultiOutput {
     no(p.etaSchedule.isEmpty, "eta_schedule")
     no(obj.leafRefreshAlphas.isEmpty,
       s"the adaptive leaf refresh of ${obj.name}")
+    no(!catFlags.contains(true), "a categorical feature")
     require(p.maxDepth >= 1,
       s"multi_output_tree: maxDepth must be >= 1, got ${p.maxDepth}")
   }
-
-  private def checkSupported(p: TrainParams, obj: Objective,
-      bins: Binner.Bins): Unit = {
-    checkParams(p, obj)
-    require(!bins.cat.exists(identity),
-      "multi_output_tree: categorical features are not supported " +
-        "(xgboost 2.x's vector-leaf strategy carries the same " +
-        "limits); train per-label via trainMultiLabel instead")
-  }
-
-  /**
-   * Boost `numRounds` vector-leaf trees over cached [[TrainBlock]]s of
-   * margin width `k` with `k` labels per row. Each round grows one tree
-   * of width `k` through [[Trainer.buildTrees]].
-   * The caller owns `blocks0`'s persistence; the rounds run in a
-   * [[RunLifetime]] under the [[Trainer.boost]] ownership rule: a margin
-   * generation is computed inside the next round's first histogram job
-   * and released once that round's tree is built.
-   */
-  def boost(blocks0: RDD[TrainBlock], bins: Binner.Bins,
-      p: TrainParams, k: Int): Seq[MoTree] = {
-    val obj = Objectives.resolve(p)
-    checkSupported(p, obj, bins)
-    require(k >= 2, s"multi_output_tree needs >= 2 targets, got $k")
-    val sc = blocks0.sparkContext
-    RunLifetime(sc, p.storageLevel, ownsInputs = false) { life =>
-      val trees = ArrayBuffer[MoTree]()
-      var cur = blocks0
-      var prev: Option[RDD[TrainBlock]] = None
-      life.rounds {
-        var round = 0
-        while (round < p.numRounds) {
-          val rt = Trainer.buildTrees(life, gradients(cur, obj, k), bins,
-            p, Array(p.seed), Array(0), width = k).head
-          val tree = new MoTree(rt.feature, rt.thresholdBin, rt.threshold,
-            rt.defaultLeft, rt.left, rt.right, rt.value, rt.gain, rt.cover, k)
-          trees += tree
-          // the build above materialized `cur` over the previous generation
-          prev.foreach(life.release)
-          prev = None
-          if (round < p.numRounds - 1) {
-            // lives to the end of the run: a persisted (even a locally
-            // checkpointed) generation's LINEAGE closure still references
-            // it, and Spark serializes that closure with every later task,
-            // cache hits included — destroying it early throws
-            // INTERNAL_ERROR_BROADCAST on the next round's job
-            val bc = life.broadcast(tree)
-            val next = life.persist(cur.mapPartitions({ it =>
-              val t = bc.value
-              it.map { blk =>
-                val m2 = blk.margins.clone()
-                var i = 0
-                while (i < blk.n) {
-                  val leaf = t.leafOf(blk.bins, i * blk.nf)
-                  var j = 0
-                  while (j < k) {
-                    m2(i * k + j) += t.values(leaf * k + j); j += 1
-                  }
-                  i += 1
-                }
-                blk.withMargins(m2)
-              }
-            }, preservesPartitioning = true))
-            // lineage truncation every 50 rounds (the Trainer.boost rule):
-            // without it a long training's recompute chain grows linearly
-            // with rounds
-            if ((round + 1) % 50 == 0) {
-              next.localCheckpoint()
-              next.foreachPartition(_ => ()) // force the lineage truncation
-            }
-            prev = Some(cur) // releasing the caller's blocks0 is a no-op
-            cur = next
-          }
-          round += 1
-        }
-      }
-      trees.toSeq
-    }
-  }
-
-  /** Per-target gradients via the scalar objective: target j's (g, h)
-    * from its own (margin_j, label_j), row-weighted — reusing
-    * [[GradBlock]]'s stride-2K layout. No salts: the histogram `seqOp`
-    * reads them only under row subsampling, which v1 rejects. */
-  private def gradients(data: RDD[TrainBlock], obj: Objective,
-      k: Int): RDD[GradBlock] =
-    data.mapPartitions({ it =>
-      val m1 = new Array[Float](1)
-      val g1 = new Array[Float](1)
-      val h1 = new Array[Float](1)
-      it.map { b =>
-        val gh = new Array[Float](b.n * 2 * k)
-        var i = 0
-        while (i < b.n) {
-          val w = b.weights(i)
-          var j = 0
-          while (j < k) {
-            m1(0) = b.margins(i * k + j)
-            obj.gradHess(m1, b.labels(i * k + j), g1, h1)
-            gh(i * 2 * k + 2 * j) = g1(0) * w
-            gh(i * 2 * k + 2 * j + 1) = h1(0) * w
-            j += 1
-          }
-          i += 1
-        }
-        new GradBlock(b.n, b.nf, k, b.bins, gh, null)
-      }
-    }, preservesPartitioning = true)
 }

@@ -14,8 +14,8 @@ import org.apache.spark.storage.StorageLevel
  * What one boosting run holds, and the one place it lets go — the
  * analog of the reference's finalize step, which shuts down its actors,
  * queue, stop event and placement group together (main.py:925-955,
- * 1733-1740). [[Trainer.boost]] (gbtree and DART), its refresh,
- * [[MultiOutput.boost]] and gblinear's
+ * 1733-1740). [[Trainer.boost]] (gbtree and DART, one label or
+ * several, scalar or vector leaves), its refresh and gblinear's
  * [[graft.api.GraftLinear.trainWithEvals]] each run inside one
  * [[RunLifetime.apply]]: [[rounds]] runs the round loop under a fresh
  * `graft-train-*` job group that every [[StopEvent]] can cancel;

@@ -206,35 +206,47 @@ private[learner] object TaskFns {
 
   /** Pointwise gradients of a round: gh = [g0,h0,...] interleaved
     * (stride 2k) and one salt per row, drawn in row order from a
-    * (seed, round, partition) stream. `aux` is a global-pass objective's
-    * driver-reduced state, else null; `spw` scales positive-row weights. */
-  def pointwiseGradients(obj: Objective, k: Int, seed: Long, round: Int,
-      spw: Float, aux: Serializable)
+    * (seed, round, partition) stream. The k = T·c output slots form T
+    * targets of `c` slots each: target t takes its (g, h) through the
+    * objective from its slots and label `labels(t)` of the row's
+    * `stride` labels ([[Targets]]). `aux` holds each target's
+    * global-pass state (a global-pass objective), else null; `spw`
+    * scales positive-row weights. */
+  def pointwiseGradients(obj: Objective, c: Int, stride: Int,
+      labels: Array[Int], seed: Long, round: Int, spw: Float,
+      aux: Array[Serializable])
       : (Int, Iterator[TrainBlock]) => Iterator[GradBlock] = (pid, it) => {
     val rng = new java.util.Random(mix(seed, round, pid))
+    val nt = labels.length
+    val k = nt * c
     it.map { b =>
       val n = b.n
       val gh = new Array[Float](n * 2 * k)
       val salts = new Array[Int](n)
-      val g = new Array[Float](k); val h = new Array[Float](k)
-      val m = new Array[Float](k)
+      val g = new Array[Float](c); val h = new Array[Float](c)
+      val m = new Array[Float](c)
       var i = 0
       while (i < n) {
-        var c = 0
-        while (c < k) { m(c) = b.margins(i * k + c); c += 1 }
-        val y = b.labels(i)
-        if (aux != null) obj.gradHessGlobal(aux, m, y, g, h)
-        else if (obj.needsBounds)
-          obj.gradHessBounds(m, y, b.upper(i), g, h)
-        else obj.gradHess(m, y, g, h)
-        val w =
-          if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
-          else b.weights(i)
-        c = 0
-        while (c < k) {
-          gh(i * 2 * k + 2 * c) = g(c) * w
-          gh(i * 2 * k + 2 * c + 1) = h(c) * w
-          c += 1
+        var t = 0
+        while (t < nt) {
+          val o = i * k + t * c
+          var s = 0
+          while (s < c) { m(s) = b.margins(o + s); s += 1 }
+          val y = b.labels(i * stride + labels(t))
+          if (aux != null) obj.gradHessGlobal(aux(t), m, y, g, h)
+          else if (obj.needsBounds)
+            obj.gradHessBounds(m, y, b.upper(i), g, h)
+          else obj.gradHess(m, y, g, h)
+          val w =
+            if (spw != 1.0f && y == 1.0f) b.weights(i) * spw
+            else b.weights(i)
+          s = 0
+          while (s < c) {
+            gh(2 * (o + s)) = g(s) * w
+            gh(2 * (o + s) + 1) = h(s) * w
+            s += 1
+          }
+          t += 1
         }
         salts(i) = rng.nextInt()
         i += 1
@@ -294,10 +306,11 @@ private[learner] object TaskFns {
     }
   }
 
-  /** The margin advance: each (class, tree) pair's leaf value added to
-    * the carried margin of its class, in a new margin generation per
-    * block that shares the static columns with its input. */
-  def advance(bcTrees: Broadcast[Array[(Int, RegTree)]])
+  /** The margin advance: each (slot, tree) pair adds the tree's `w`
+    * leaf values to the carried margins from its slot on, in a new
+    * margin generation per block that shares the static columns with
+    * its input. */
+  def advance(bcTrees: Broadcast[Array[(Int, RegTree)]], w: Int)
       : Iterator[TrainBlock] => Iterator[TrainBlock] = it => {
     val cls = bcTrees.value.map(_._1)
     val ts = bcTrees.value.map(_._2)
@@ -309,7 +322,12 @@ private[learner] object TaskFns {
         val off = i * nf
         var t = 0
         while (t < ts.length) {
-          m2(i * k + cls(t)) += ts(t).predictBinned(b.bins, off, MissingBin)
+          val leaf = ts(t).leafBinned(b.bins, off, MissingBin)
+          var c = 0
+          while (c < w) {
+            m2(i * k + cls(t) + c) += ts(t).value(leaf * w + c)
+            c += 1
+          }
           t += 1
         }
         i += 1
@@ -318,10 +336,16 @@ private[learner] object TaskFns {
     }
   }
 
-  /** Per-row (margins, label, weight) view of blocks. */
-  val rowView: Iterator[TrainBlock] => Iterator[(Array[Float], Float, Float)] =
+  /** Per-row (margins, label, weight) view of one target: its `c`
+    * margins from slot `from` on and its label `label` of the row's
+    * `stride` labels. */
+  def rowView(c: Int, from: Int, stride: Int, label: Int)
+      : Iterator[TrainBlock] => Iterator[(Array[Float], Float, Float)] =
     _.flatMap { b =>
-      Iterator.tabulate(b.n)(i => (b.marginRow(i), b.labels(i), b.weights(i)))
+      Iterator.tabulate(b.n)(i => (
+        java.util.Arrays.copyOfRange(b.margins, i * b.k + from,
+          i * b.k + from + c),
+        b.labels(i * stride + label), b.weights(i)))
     }
 
   /** One partition's (Σ loss, Σ weight) of every metric term, summed in

@@ -12,12 +12,14 @@ package graft.learner
  *
  * Layout: row-major packed primitives. Row `i`'s bins occupy
  * `bins(i*nf until (i+1)*nf)`; its `k` margins occupy
- * `margins(i*k until (i+1)*k)`. `labels` holds one label per row, or,
- * in a vector-leaf block ([[MultiOutput]]), `k` targets per row at
- * `labels(i*k until (i+1)*k)`. `qids`/`uppers` are null when every
- * row is qid-0 / uncensored (upper == label), so the common
- * non-ranking, non-survival case pays 9 bytes/row at 4 features +
- * 4k margin bytes.
+ * `margins(i*k until (i+1)*k)`. `labels` holds L labels per row at
+ * `labels(i*L until (i+1)*L)`: one for single-label training, every
+ * label column for a multi-label or vector-leaf run, whose [[Targets]]
+ * read label j of a row at `labels(i*L + j)` and own c margin slots
+ * each (k = T·c; a vector-leaf run has c = 1). `qids`/`uppers` are
+ * null when every row is qid-0 / uncensored (upper == label), so the
+ * common non-ranking, non-survival case pays 9 bytes/row at 4 features
+ * + 4k margin bytes.
  *
  * The per-round margin advance ([[Trainer]] applyTrees) replaces ONLY
  * `margins`; `bins`/`labels`/`weights`/`qids`/`uppers` are shared by
@@ -49,10 +51,6 @@ final class TrainBlock(
   /** Same static columns, new margin generation. */
   def withMargins(m: Array[Float]): TrainBlock =
     new TrainBlock(n, nf, k, bins, labels, weights, qids, uppers, m)
-
-  /** Row `i`'s margins as a fresh k-array (metric/objective row view). */
-  def marginRow(i: Int): Array[Float] =
-    java.util.Arrays.copyOfRange(margins, i * k, i * k + k)
 }
 
 object TrainBlock {

@@ -255,6 +255,23 @@ final case class TrainResult(
 }
 
 /**
+ * The targets one [[Trainer.boost]] run trains. Its blocks hold `stride`
+ * labels per row (no qids or bounds when several); target t reads label
+ * `labels(t)` and owns the output slots [t·c, t·c + c) of the margins,
+ * c being the objective's outputs: the margin width is T·c. Each target
+ * is its own model, unless `vectorLeaf`: then each round grows one tree
+ * of T values per node ([[MultiOutput]]). A run that names its targets
+ * saves target t's checkpoint under `<checkpointPath>/<names(t)>`.
+ */
+private[graft] final case class Targets(stride: Int, labels: Seq[Int],
+    names: Seq[String] = Nil, vectorLeaf: Boolean = false)
+
+private[graft] object Targets {
+  /** One label per row, one target: single-label training. */
+  val Single: Targets = Targets(1, Seq(0))
+}
+
+/**
  * Native distributed gradient-boosted-tree trainer.
  *
  * Semantic replacement for the reference's Rabit allreduce ring
@@ -315,11 +332,13 @@ final case class TrainResult(
  *    the tasks finish and equals the dense sum bit for bit (the
  *    > 64 MiB tree merge ships dense partials and keeps completion
  *    order).
- *  - node-statistics width: every tree grows through `buildTrees`. A
- *    histogram entry and a node's sums hold `w` (G, H) pairs: 1 for a
- *    scalar tree, k for a vector-leaf tree of [[MultiOutput]]. A
- *    candidate's gain sums the per-slot scores, so one level loop, split
- *    scan and subtraction serve both.
+ *  - targets and width: one round loop ([[boostTargets]]) trains the T
+ *    [[Targets]] (labels) of the same rows at margin width T·c, all
+ *    models' trees in the same level jobs. Every tree grows through
+ *    `buildTrees`: a histogram entry and a node's sums hold `w` (G, H)
+ *    pairs, 1 for a scalar tree and T for a vector-leaf tree of
+ *    [[MultiOutput]]. A candidate's gain sums the per-slot scores, so
+ *    one level loop, split scan and subtraction serve both.
  *  - histogram subtraction (xgboost/LightGBM hist): the driver keeps
  *    each evaluated node's histogram. When both children of a split
  *    are evaluated together, the job builds only the child with the
@@ -521,16 +540,18 @@ object Trainer {
     keyed.sortBy(-_._1).take(n).map(_._2).sorted
   }
 
-  /** Per-row (margins, label, weight) view of blocked data — the shape
-    * [[Metrics.compute]] and global-pass objectives consume. Lazy row
-    * tuples exist only inside the consuming job; the cache keeps blocks. */
-  private[learner] def rowsOf(data: RDD[TrainBlock])
+  /** Per-row (margins, label, weight) view of target `t` of blocked
+    * data — the shape [[Metrics.compute]] and global-pass objectives
+    * consume. Lazy row tuples exist only inside the consuming job; the
+    * cache keeps blocks. */
+  private def rowsOf(data: RDD[TrainBlock], tg: Targets, c: Int, t: Int)
       : RDD[(Array[Float], Float, Float)] =
-    data.mapPartitions(TaskFns.rowView, preservesPartitioning = true)
+    data.mapPartitions(TaskFns.rowView(c, t * c, tg.stride, tg.labels(t)),
+      preservesPartitioning = true)
 
   /** Per-row (score, label, weight, qid) view — the shape the ranking
     * group metrics consume (k = 1 for rank objectives, so margin slot
-    * 0 IS the score). */
+    * 0 IS the score; ranking trains one label per run). */
   private def groupRowsOf(data: RDD[TrainBlock])
       : RDD[(Float, Float, Float, Long)] =
     data.mapPartitions(_.flatMap { b =>
@@ -538,14 +559,22 @@ object Trainer {
         (b.margins(i * b.k), b.labels(i), b.weights(i), b.qid(i)))
     }, preservesPartitioning = true)
 
-  /** Per-row (margins, lower, upper, weight) view — the survival-metric
-    * shape (label doubles as the lower bound). */
-  private def boundsRowsOf(data: RDD[TrainBlock])
-      : RDD[(Array[Float], Float, Float, Float)] =
+  /** Per-row (margins, lower, upper, weight) view of target `t` — the
+    * survival-metric shape (label doubles as the lower bound; a block
+    * with several labels per row carries no bounds, so there the upper
+    * bound is the label too). */
+  private def boundsRowsOf(data: RDD[TrainBlock], tg: Targets, c: Int,
+      t: Int): RDD[(Array[Float], Float, Float, Float)] = {
+    val stride = tg.stride; val l = tg.labels(t)
     data.mapPartitions(_.flatMap { b =>
-      Iterator.tabulate(b.n)(i =>
-        (b.marginRow(i), b.labels(i), b.upper(i), b.weights(i)))
+      Iterator.tabulate(b.n) { i =>
+        val y = b.labels(i * stride + l)
+        (java.util.Arrays.copyOfRange(b.margins, i * b.k + t * c,
+          i * b.k + t * c + c), y, if (stride == 1) b.upper(i) else y,
+          b.weights(i))
+      }
     }, preservesPartitioning = true)
+  }
 
   /** Exact row count of blocked data (block `n` sums — no per-row work). */
   private def countRows(data: RDD[TrainBlock]): Long =
@@ -553,16 +582,18 @@ object Trainer {
       Iterator.single(it.foldLeft(0L)(_ + _.n))).fold(0L)(_ + _)
 
   /**
-   * Compute per-block gradients for one boosting round.
+   * Compute per-block gradients for one boosting round, each output slot
+   * from its target's label ([[Targets]]).
    * Output blocks carry gh = [g0,h0,...] interleaved (stride 2k) and a
    * deterministic per-row salt used by per-TREE subsampling in
    * buildTree (rows skip split voting but still get margin updates).
    * Row order — and with it the per-partition RNG draw sequence — is
    * the r11 per-row order exactly.
    */
-  private def gradients(data: RDD[TrainBlock],
-      obj: Objective, round: Int, p: TrainParams): RDD[GradBlock] = {
-    val k = obj.numOutputs
+  private def gradients(data: RDD[TrainBlock], obj: Objective,
+      round: Int, p: TrainParams, tg: Targets = Targets.Single)
+      : RDD[GradBlock] = {
+    val c = obj.numOutputs
     val seed = p.seed
     // scale_pos_weight multiplies positive-row gradients in binary
     // objectives (xgboost applies it inside logistic regression only)
@@ -572,13 +603,16 @@ object Trainer {
       else 1.0f
     if (!obj.needsGroups) {
       // global-pass objectives (Cox): one driver-reduced pre-pass per
-      // round; the result rides the stage closure (Spark torrent-
-      // broadcasts task binaries per stage and cleans them with it)
-      val aux: Serializable =
-        if (obj.needsGlobalPass) obj.globalPass(rowsOf(data))
+      // target per round; the results ride the stage closure (Spark
+      // torrent-broadcasts task binaries per stage and cleans them with
+      // it)
+      val aux: Array[Serializable] =
+        if (obj.needsGlobalPass) Array.tabulate(tg.labels.length)(t =>
+          obj.globalPass(rowsOf(data, tg, c, t)))
         else null
       data.mapPartitionsWithIndex(
-        TaskFns.pointwiseGradients(obj, k, seed, round, spw, aux),
+        TaskFns.pointwiseGradients(obj, c, tg.stride, tg.labels.toArray,
+          seed, round, spw, aux),
         preservesPartitioning = true)
     } else
       data.mapPartitionsWithIndex(
@@ -609,21 +643,25 @@ object Trainer {
    * fewer passes for softmax / RF presets). Work is chunked so one
    * aggregation buffer stays under maxHistBytes.
    *
-   * `width` is the node-statistics width: 1 for scalar trees, k for the
+   * `width` is the node-statistics width: 1 for scalar trees, T for the
    * vector-leaf trees of [[MultiOutput]]. Tree `t` reads the `width`
    * gradient pairs from output slot `classes(t)` on; a candidate's gain
    * sums the per-slot scores in slot order and `min_child_weight` tests
    * the mean hessian across slots. A returned tree holds `width` values
    * per node (node-major) and its cover is that mean hessian. Vector
    * trees take none of the knobs [[MultiOutput.checkParams]] rejects.
+   * `targets(t)` is tree t's model. Each model keeps its own
+   * kept-histogram budget of maxHistBytes, so its trees keep, derive and
+   * build the nodes they would in a run of their own; the driver may
+   * then hold models × maxHistBytes.
    * Each level chunk's broadcast belongs to the run's `life`: it is
    * destroyed once the chunk's histogram is in, or by the run's end
    * when the level job fails.
    */
   private[learner] def buildTrees(life: RunLifetime,
       grads: RDD[GradBlock], bins: Binner.Bins, p: TrainParams,
-      treeSeeds: Array[Long], classes: Array[Int],
-      width: Int = 1): Array[RegTree] = {
+      treeSeeds: Array[Long], classes: Array[Int], width: Int,
+      targets: Array[Int]): Array[RegTree] = {
     // per-tree deterministic row subsample threshold on the row salt
     val subsampleCut: Int =
       if (p.subsample >= 1.0) Int.MaxValue
@@ -665,13 +703,16 @@ object Trainer {
     def covers(sup: Array[Int], sub: Array[Int]): Boolean =
       sub.forall(java.util.Arrays.binarySearch(sup, _) >= 0)
 
-    var keptBytes = 0L
-    def keepHist(t: Int, nid: Int, nh: NodeHist): Unit =
-      if (keptBytes + nh.h.length * 8L <= p.maxHistBytes) {
-        states(t).hists(nid) = nh; keptBytes += nh.h.length * 8L
+    // kept histogram bytes per model, each held within maxHistBytes
+    val keptBytes = new Array[Long](targets.max + 1)
+    def keepHist(t: Int, nid: Int, nh: NodeHist): Unit = {
+      val g = targets(t)
+      if (keptBytes(g) + nh.h.length * 8L <= p.maxHistBytes) {
+        states(t).hists(nid) = nh; keptBytes(g) += nh.h.length * 8L
       }
-    def dropHist(t: Int, nid: Int): Unit =
-      states(t).hists.remove(nid).foreach(keptBytes -= _.h.length * 8L)
+    }
+    def dropHist(t: Int, nid: Int): Unit = states(t).hists.remove(nid)
+      .foreach(keptBytes(targets(t)) -= _.h.length * 8L)
 
     /** Sibling histogram over `fl`: parent − built, per feature and bin.
       * The built child's histogram starts at `off` of `built`. */
@@ -1213,11 +1254,15 @@ object Trainer {
       life: RunLifetime,
       data: RDD[TrainBlock],
       roundTrees: Array[RegTree],
-      alphas: Array[Double], treeCls: Array[Int],
+      alphas: Array[Double], treeCls: Array[Int], tg: Targets,
       eta: Double): Array[RegTree] = {
     val B = 1024
-    // (tree, node) → global leaf slot; slot → owning tree (its output
-    // slot selects the margin AND the target quantile α)
+    // tree t refreshes against the margin of its output slot s and the
+    // label of its target, labels(s / c), at the quantile α of s mod c
+    val c = alphas.length
+    val stride = tg.stride
+    val treeLabel = treeCls.map(s => tg.labels(s / c))
+    // (tree, node) → global leaf slot; slot → owning tree
     var nSlots = 0
     val slotTree = ArrayBuffer[Int]()
     val leafSlot: Array[Array[Int]] = roundTrees.zipWithIndex.map {
@@ -1254,8 +1299,8 @@ object Trainer {
           while (t < ts.length) {
             // each tree refreshes against ITS OWN output's margin — for
             // multi-quantile (one tree per α) slot t%k trees see m(cls)
-            val r: Double =
-              (blk.labels(i) - blk.margins(i * kb + treeCls(t))).toDouble
+            val r: Double = (blk.labels(i * stride + treeLabel(t)) -
+              blk.margins(i * kb + treeCls(t))).toDouble
             val slot = ls(t)(ts(t).leafBinned(blk.bins, off, MissingBin))
             acc(slot * 3) += w
             if (r < acc(slot * 3 + 1)) acc(slot * 3 + 1) = r
@@ -1290,7 +1335,7 @@ object Trainer {
       if (w <= 0) keepOld(s) = true // unroutable leaf: keep as trained
       else if (mn == mx) value(s) = mn
       else {
-        target(s) = alphas(treeCls(slotTreeArr(s))) * w
+        target(s) = alphas(treeCls(slotTreeArr(s)) % c) * w
         lo(s) = Double.NegativeInfinity; hi(s) = mx; wBelow(s) = 0.0
       }
       s += 1
@@ -1335,8 +1380,8 @@ object Trainer {
             val w = blk.weights(i).toDouble
             var t = 0
             while (t < ts.length) {
-              val r: Double =
-                (blk.labels(i) - blk.margins(i * kb + treeCls(t))).toDouble
+              val r: Double = (blk.labels(i * stride + treeLabel(t)) -
+                blk.margins(i * kb + treeCls(t))).toDouble
               val slot = ls(t)(ts(t).leafBinned(blk.bins, off, MissingBin))
               val pi = pos(slot)
               if (pi >= 0 && r > bcLo.value(pi) && r <= bcHi.value(pi)) {
@@ -1409,7 +1454,8 @@ object Trainer {
 
   /**
    * The boosting loop — analog of the reference's `_train` round loop
-   * (main.py:1061-1337), with the driver playing the tracker role.
+   * (main.py:1061-1337), with the driver playing the tracker role. It
+   * trains one label; [[boostTargets]] runs the same loop over several.
    *
    * Ownership ([[RunLifetime]]): the run owns what it persists and
    * broadcasts, and its inputs only when `releaseInputs` is set. A
@@ -1439,7 +1485,33 @@ object Trainer {
       distributedCallbacks: Seq[DistributedCallback] = Nil,
       releaseInputs: Boolean = true,
       knownRows: Long = -1L)
-      : TrainResult = {
+      : TrainResult =
+    boostTargets(train, evals, bins, p, Targets.Single, callbacks,
+      initModel, spark, distributedCallbacks, releaseInputs, knownRows).head
+
+  /**
+   * The one round loop of every tree model: [[boost]] over the
+   * [[Targets]] of `train`, one [[TrainResult]] per model. Each round
+   * grows the trees of every model still training in ONE [[buildTrees]]
+   * call, so T labels cost the jobs of one. Model j's tree i reads slot
+   * j·c + i mod c, takes the seed and the kept-histogram budget of its
+   * own one-label run, so its trees equal that run's bit for bit, and
+   * keeps its own eval history and early stop: once stopped it takes no
+   * more trees. Callbacks, init models and DART (per-model drop sets)
+   * train one model per run.
+   */
+  private[graft] def boostTargets(
+      train: RDD[TrainBlock],
+      evals: Seq[(String, RDD[TrainBlock])],
+      bins: Binner.Bins,
+      p: TrainParams,
+      targets: Targets,
+      callbacks: Seq[TrainingCallback] = Nil,
+      initModel: Option[GraftModel] = None,
+      spark: Option[org.apache.spark.sql.SparkSession] = None,
+      distributedCallbacks: Seq[DistributedCallback] = Nil,
+      releaseInputs: Boolean = true,
+      knownRows: Long = -1L): Seq[TrainResult] = {
     val obj = Objectives.resolve(p)
     require(p.customObjective.forall(_.name.startsWith("custom:")),
       "customObjective.name must start with \"custom:\" (model save/load " +
@@ -1460,8 +1532,8 @@ object Trainer {
     require(p.processType == "default" || p.processType == "update",
       s"unknown processType '${p.processType}' (default | update)")
     if (p.processType == "update")
-      return refreshModel(train, evals, bins, p, obj, initModel,
-        releaseInputs, knownRows)
+      return Seq(refreshModel(train, evals, bins, p, obj, initModel,
+        releaseInputs, knownRows))
     val dart = p.booster == "dart"
     if (dart) {
       require(p.rateDrop >= 0.0 && p.rateDrop <= 1.0,
@@ -1474,8 +1546,20 @@ object Trainer {
         s"normalizeType must be tree|forest, got '${p.normalizeType}'")
     }
     Metrics.requireDistinctEvalNames(evals.map(_._1))
-    val k = obj.numOutputs
-    val trees = ArrayBuffer[RegTree]()
+    // c output slots per target, trees per round per model, and the
+    // node-statistics width of a tree
+    val c = obj.numOutputs
+    val vector = targets.vectorLeaf
+    val tpr = p.numParallelTree * c
+    val w = if (vector) targets.labels.length else 1
+    val metricNames = Metrics.resolveNames(p, obj.name)
+    val models = Array.fill(if (vector) 1 else targets.labels.length)(
+      new ModelRun(p, metricNames, evals.map(_._1)))
+    require(models.length == 1 ||
+        (callbacks.isEmpty && initModel.isEmpty && !dart),
+      "callbacks, init models and DART train one model per run")
+    // the one model of a single-model run (init model, DART, stop trim)
+    val trees = models(0).trees
     initModel.foreach(m => trees ++= m.trees)
     // DART weight per tree — SAMPLING bookkeeping only ("weighted"
     // sample_type probabilities): the weights themselves are baked into
@@ -1494,9 +1578,9 @@ object Trainer {
     // in dart mode too, where a miscounted startRound would silently
     // shift the (seed, round)-deterministic drop-set sequence
     initModel.filter(_.trees.nonEmpty).foreach { m =>
-      require(m.trees.length % (k * p.numParallelTree) == 0,
+      require(m.trees.length % tpr == 0,
         s"init model has ${m.trees.length} trees, not a multiple of " +
-          s"numOutputs*numParallelTree = ${k * p.numParallelTree}")
+          s"numOutputs*numParallelTree = $tpr")
       // shape compatibility (review r9): a single-output objective makes
       // the multiple-of check above vacuous (k = 1 divides everything),
       // so a multiclass init model would silently fold every class tree
@@ -1504,9 +1588,9 @@ object Trainer {
       // executor at bins(feature(i)). Objective NAME is deliberately
       // not compared — xgboost's xgb_model semantics allow continuing
       // raw margins under a different objective.
-      require(m.numOutputs == k,
+      require(m.numOutputs == c,
         s"init model has ${m.numOutputs} output(s) per round, the " +
-          s"objective ${obj.name} trains $k — resume with a matching " +
+          s"objective ${obj.name} trains $c — resume with a matching " +
           "objective/numClass")
       require(m.numFeatures == bins.numFeatures,
         s"init model was trained on ${m.numFeatures} feature(s), this " +
@@ -1539,7 +1623,7 @@ object Trainer {
       // over the whole tree buffer (init trees included), because dropped
       // trees rescale retroactively.
       initModel.filter(_.trees.nonEmpty).filter(_ => !dart).foreach { m =>
-        val bcInit = life.broadcast(byClass(m.trees, k))
+        val bcInit = life.broadcast(byClass(m.trees, c))
         val base = data
         val upd = life.persist(applyTrees(base, bcInit))
         upd.foreachPartition(_ => ())
@@ -1575,15 +1659,15 @@ object Trainer {
       }
 
       val customByName = p.customMetrics.map(m => m.name -> m).toMap
-      val metricNames = Metrics.resolveNames(p, obj.name)
-      val evalsResult = scala.collection.mutable.LinkedHashMap[String,
-        Map[String, ArrayBuffer[Double]]]()
-      evalData.foreach { case (n, _) =>
-        evalsResult(n) = metricNames.map(m => m -> ArrayBuffer[Double]()).toMap
-      }
-
-      val early = new Metrics.EarlyStop(p, metricNames)
-      var stop = false
+      // rank:* objectives evaluate auc PER QID GROUP (weighted mean of
+      // per-group Mann-Whitney, xgboost's ranking-auc semantics); binary
+      // objectives keep the global histogram auc
+      def groupish(mn: String) = !customByName.contains(mn) &&
+        (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
+      // survival metrics read (lower, upper) off the block (label doubles
+      // as the lower bound)
+      def bounds(mn: String) =
+        !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
       var round = 0
       // margin-update RDD of the previous round, unpersisted lazily once
       // the current round's gradient pass has materialized on top of it
@@ -1591,7 +1675,7 @@ object Trainer {
       var prevData: Option[RDD[TrainBlock]] = None
       // checkpoint-resume arithmetic (C4): each completed round appended
       // numParallelTree*k trees (advisor r1: `/k` alone miscounted forests)
-      val startRound = trees.length / (k * p.numParallelTree)
+      val startRound = trees.length / tpr
       val initTreeCount = trees.length // for partial-round trim on hard stop
       // DART: snapshot of the tree buffer taken BEFORE this round's
       // retroactive rescale, so the hard-stop catch can roll an aborted
@@ -1603,7 +1687,10 @@ object Trainer {
       // can kill in-flight stages; the catch below turns the cancellation
       // into a clean return of the model built so far
       life.rounds {
-        while (round < p.numRounds && !stop) try {
+        while (round < p.numRounds && models.exists(!_.done)) try {
+          // the models still training: one that stopped early takes no
+          // more trees
+          val live = models.indices.filterNot(models(_).done).toArray
           // DART: pick this round's dropped-tree set on the driver —
           // deterministic in (seed, round), so partitioning/retries cannot
           // change it (the xgboost DropTrees analog).
@@ -1636,7 +1723,7 @@ object Trainer {
           // no live lineage can need the broadcast again.
           val bcKept =
             if (kept.isEmpty) None
-            else Some(life.broadcast(kept.map(i => (i % k, trees(i)))))
+            else Some(life.broadcast(kept.map(i => (i % c, trees(i)))))
           val roundData = bcKept.fold(data) { bc =>
             val rd = life.persist(applyTrees(data, bc))
             rd.foreachPartition(_ => ())
@@ -1649,11 +1736,13 @@ object Trainer {
           // churn that showed up as the r3 train slowdown). Only ranking
           // gradients — which buffer whole partitions to walk qid groups —
           // are worth caching across the round's level jobs.
-          val grads = gradients(roundData, obj, startRound + round, p)
+          val grads = gradients(roundData, obj, startRound + round, p,
+            targets)
           if (obj.needsGroups) life.persist(grads)
-          // layout: class-inner so GraftModel's (t % k) class mapping holds
-          // for any numParallelTree: [pt0·c0, pt0·c1, …, pt1·c0, …].
-          // All trees of the round grow in ONE fused job per level.
+          // layout: model-major, class-inner within a model so
+          // GraftModel's (t % k) class mapping holds for any
+          // numParallelTree: [pt0·c0, pt0·c1, …, pt1·c0, …]. All trees of
+          // the round grow in ONE fused job per level.
           // per-round learning rate (LearningRateScheduler analog); global
           // round index keeps a resumed schedule aligned with the full run
           val etaRound = p.etaSchedule
@@ -1661,17 +1750,20 @@ object Trainer {
           require(etaRound > 0, s"etaSchedule returned $etaRound for " +
             s"round ${startRound + round}; learning rates must be positive")
           val pTree = p.copy(eta = etaRound / p.numParallelTree)
-          val nTrees = p.numParallelTree * k
+          val treeModel =
+            Array.tabulate(live.length * tpr)(i => live(i / tpr))
+          val treeCls = Array.tabulate(treeModel.length)(i =>
+            treeModel(i) * c + i % c)
           val builtTrees = buildTrees(life, grads, bins, pTree,
-            Array.tabulate(nTrees)(i =>
-              TaskFns.mix(p.seed, startRound + round, 7919 + i)),
-            Array.tabulate(nTrees)(_ % k))
+            Array.tabulate(treeModel.length)(i =>
+              TaskFns.mix(p.seed, startRound + round, 7919 + i % tpr)),
+            treeCls, width = w, targets = treeModel)
           // adaptive leaf refresh (xgboost UpdateTreeLeaf): the L1 family
           // resets each leaf to η·Q_α of its residuals before the commit
           // (α per output slot — multi-quantile trains one tree per α)
           val roundTrees = obj.leafRefreshAlphas match {
             case Some(as) => refreshLeaves(life, roundData, builtTrees,
-              as, Array.tabulate(nTrees)(_ % k), pTree.eta)
+              as, treeCls, targets, pTree.eta)
             case None => builtTrees
           }
           // the tree builds above materialized `data` (via the gradient
@@ -1681,10 +1773,13 @@ object Trainer {
           life.release(grads) // cached for ranking objectives only
 
           if (!dart) {
-            trees ++= roundTrees
+            live.indices.foreach { j =>
+              models(live(j)).trees ++=
+                roundTrees.slice(j * tpr, j * tpr + tpr)
+            }
 
-            val bcTrees = life.broadcast(byClass(roundTrees, k))
-            val newData = life.persist(applyTrees(data, bcTrees))
+            val bcTrees = life.broadcast(treeCls.zip(roundTrees))
+            val newData = life.persist(applyTrees(data, bcTrees, w))
             if ((round + 1) % 50 == 0) {
               newData.localCheckpoint()
               newData.foreachPartition(_ => ()) // force the lineage truncation
@@ -1703,7 +1798,7 @@ object Trainer {
               // full lineage recompute of the training data at round+1).
               if (prevData.exists(_ eq r)) (n, data)
               else {
-                val updated = life.persist(applyTrees(r, bcTrees))
+                val updated = life.persist(applyTrees(r, bcTrees, w))
                 if ((round + 1) % 50 == 0) updated.localCheckpoint()
                 updated.foreachPartition(_ => ())
                 life.release(r)
@@ -1747,66 +1842,65 @@ object Trainer {
           // init margins. Persisted only for this round's metric jobs.
           val bcAll =
             if (!dart || trees.isEmpty || evalData.isEmpty) None
-            else Some(life.broadcast(byClass(trees.toArray, k)))
+            else Some(life.broadcast(byClass(trees.toArray, c)))
           val evalView = bcAll.fold(evalData) { bc =>
             evalData.map { case (n, r) => (n, life.persist(applyTrees(r, bc))) }
           }
 
-          // eval-metric aggregation (A2 analog)
-          val roundMetrics =
-            scala.collection.mutable.LinkedHashMap[String, Double]()
-          evalView.foreach { case (n, r) =>
-            // rank:* objectives evaluate auc PER QID GROUP (weighted mean
-            // of per-group Mann-Whitney, xgboost's ranking-auc semantics);
-            // binary objectives keep the global histogram auc
-            def groupish(mn: String) = !customByName.contains(mn) &&
-              (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
-            // survival metrics read (lower, upper) off the block (label
-            // doubles as the lower bound)
-            def bounds(mn: String) =
-              !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
-            // every other metric reads the row view: one job for all the
-            // (loss, weight) metrics
-            val rowNames =
-              metricNames.filterNot(mn => groupish(mn) || bounds(mn))
-            val rowValues = rowNames.zip(
-              Metrics.computeAll(rowNames, obj, rowsOf(r), customByName)).toMap
-            metricNames.foreach { mn =>
-              val v =
-                if (groupish(mn)) {
-                  // ndcg/map/auc walk qid groups — the rank layout keeps
-                  // groups partition-contiguous: one shuffle-free pass
-                  require(obj.needsGroups, s"$mn needs a rank:* objective " +
-                    "(qid-contiguous evaluation partitions)")
-                  Metrics.computeGroup(mn, groupRowsOf(r))
-                } else if (bounds(mn))
-                  Metrics.computeBounds(mn, obj, boundsRowsOf(r))
-                else rowValues(mn)
-              evalsResult(n)(mn) += v
-              roundMetrics(s"$n-$mn") = v
+          // eval-metric aggregation (A2 analog), then early stop,
+          // checkpoint and callbacks, per model still training
+          live.foreach { g =>
+            val run = models(g)
+            val roundMetrics =
+              scala.collection.mutable.LinkedHashMap[String, Double]()
+            evalView.foreach { case (n, r) =>
+              // every (loss, weight) metric reads the model's row view:
+              // one job for all of them
+              val rowNames =
+                metricNames.filterNot(mn => groupish(mn) || bounds(mn))
+              val rowValues = rowNames.zip(Metrics.computeAll(rowNames, obj,
+                rowsOf(r, targets, c, g), customByName)).toMap
+              metricNames.foreach { mn =>
+                val v =
+                  if (groupish(mn)) {
+                    // ndcg/map/auc walk qid groups — the rank layout keeps
+                    // groups partition-contiguous: one shuffle-free pass
+                    require(obj.needsGroups, s"$mn needs a rank:* " +
+                      "objective (qid-contiguous evaluation partitions)")
+                    Metrics.computeGroup(mn, groupRowsOf(r))
+                  } else if (bounds(mn))
+                    Metrics.computeBounds(mn, obj,
+                      boundsRowsOf(r, targets, c, g))
+                  else rowValues(mn)
+                run.evalsResult(n)(mn) += v
+                roundMetrics(s"$n-$mn") = v
+              }
             }
-          }
 
-          if (early.update(round, evalsResult)) stop = true
+            if (run.early.update(round, run.evalsResult)) run.done = true
 
-          // checkpoint (A6/C4 analog of _save_checkpoint_callback main.py:612)
-          if (p.checkpointEvery > 0 && p.checkpointPath.isDefined &&
-              (round + 1) % p.checkpointEvery == 0) {
-            spark.foreach { s =>
-              currentModel(trees, obj, p, bins, dartWeights)
-                .save(s, p.checkpointPath.get)
+            // checkpoint (A6/C4 analog of _save_checkpoint_callback
+            // main.py:612); a named target saves under its own name
+            if (p.checkpointEvery > 0 && p.checkpointPath.isDefined &&
+                (round + 1) % p.checkpointEvery == 0) {
+              spark.foreach { s =>
+                currentModel(run.trees, obj, p, bins, dartWeights).save(s,
+                  if (targets.names.isEmpty) p.checkpointPath.get
+                  else s"${p.checkpointPath.get}/${targets.names(g)}")
+              }
             }
-          }
 
-          callbacks.foreach { cb =>
-            val stopNow = cb match {
-              case m: ModelAwareCallback => m.afterIterationWithModel(
-                startRound + round, roundMetrics.toMap,
-                () => currentModel(trees, obj, p, bins, dartWeights))
-              case _ =>
-                cb.afterIteration(startRound + round, roundMetrics.toMap)
+            callbacks.foreach { cb =>
+              val stopNow = cb match {
+                case m: ModelAwareCallback => m.afterIterationWithModel(
+                  startRound + round, roundMetrics.toMap,
+                  () => currentModel(run.trees, obj, p, bins, dartWeights))
+                case _ =>
+                  cb.afterIteration(startRound + round, roundMetrics.toMap)
+              }
+              if (stopNow) run.done = true
             }
-            if (stopNow) stop = true
+            run.rounds += 1
           }
           bcAll.foreach { bc =>
             evalView.foreach(e => life.release(e._2)); life.destroy(bc)
@@ -1819,7 +1913,8 @@ object Trainer {
           // may already have run when the cancel landed in the margin-update
           // or metric jobs — trim back to the last COMPLETED round so model
           // length and roundsCompleted agree (advisor r2). What the aborted
-          // round cached or broadcast is freed with the run.
+          // round cached or broadcast is freed with the run. Stop events
+          // are callbacks, so the run trains one model.
           case _: Throwable if stopEvents.exists(_.isSet) =>
             // DART: the aborted round may have already RESCALED earlier
             // trees (not just appended) — roll the buffer back to its
@@ -1828,9 +1923,10 @@ object Trainer {
               trees.clear(); trees ++= dartPreRound
               dartWeights.clear(); dartWeights ++= dartPreWeights
             }
-            val keep = initTreeCount + round * k * p.numParallelTree
+            val keep = initTreeCount + round * tpr
             if (trees.length > keep) trees.takeInPlace(keep)
-            stop = true
+            models(0).rounds = round
+            models(0).done = true
         }
       }
 
@@ -1843,23 +1939,40 @@ object Trainer {
         }
       }
 
-      TrainResult(currentModel(trees, obj, p, bins, dartWeights),
-        evalsResult.map { case (n, m) => (n, m) }.toMap, totalN, round,
-        bestIteration = early.bestIteration, bestScore = early.bestScore)
+      models.toSeq.map { run =>
+        TrainResult(currentModel(run.trees, obj, p, bins, dartWeights),
+          run.evalsResult.toMap, totalN, run.rounds,
+          bestIteration = run.early.bestIteration,
+          bestScore = run.early.bestScore)
+      }
     }
   }
 
-  /** Add each (class, tree) pair's leaf value to the carried margin of
-    * its class. gbtree passes [[byClass]] pairs; DART passes a kept
+  /** One model of a run: its trees, eval history (eval set → metric →
+    * values), early stop, completed rounds and whether it stopped. */
+  private final class ModelRun(p: TrainParams, metricNames: Seq[String],
+      evalNames: Seq[String]) {
+    val trees = ArrayBuffer[RegTree]()
+    val evalsResult = scala.collection.mutable.LinkedHashMap(
+      evalNames.map(n =>
+        n -> metricNames.map(m => m -> ArrayBuffer[Double]()).toMap): _*)
+    val early = new Metrics.EarlyStop(p, metricNames)
+    var rounds = 0; var done = false
+  }
+
+  /** Add each (slot, tree) pair's `w` leaf values to the carried
+    * margins from its slot on (w > 1: a vector-leaf tree). gbtree passes
+    * the round's trees with their output slots; DART passes a kept
     * subset with gaps, whose trees still reach their original class
     * slots. Emits a new margin generation per block; the static columns
     * (bins/labels/weights/qids/uppers) are shared by reference with the
     * input block ([[TrainBlock.withMargins]]). */
   private def applyTrees(
       rdd: RDD[TrainBlock],
-      bcTrees: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]])
-      : RDD[TrainBlock] =
-    rdd.mapPartitions(TaskFns.advance(bcTrees), preservesPartitioning = true)
+      bcTrees: org.apache.spark.broadcast.Broadcast[Array[(Int, RegTree)]],
+      w: Int = 1): RDD[TrainBlock] =
+    rdd.mapPartitions(TaskFns.advance(bcTrees, w),
+      preservesPartitioning = true)
 
   /** (t % k, tree) pairs of a round-major, class-inner tree array. */
   private def byClass(trees: Array[RegTree], k: Int): Array[(Int, RegTree)] =
@@ -2090,7 +2203,7 @@ object Trainer {
             if (p.refreshLeaf) obj.leafRefreshAlphas.foreach { as =>
               val adapted = refreshLeaves(life, data,
                 outTrees.slice(round * tpr, round * tpr + tpr), as,
-                Array.tabulate(tpr)(_ % k), pLeaf.eta)
+                Array.tabulate(tpr)(_ % k), Targets.Single, pLeaf.eta)
               var j = 0
               while (j < adapted.length) {
                 val t = adapted(j)

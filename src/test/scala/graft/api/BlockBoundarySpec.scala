@@ -13,8 +13,9 @@ import graft.learner.{Binner, Objectives, TrainParams}
  * columns against the prepared rows element-for-element, plus the
  * ranking keepGroups contract (a qid run straddling the capacity
  * extends the block instead of splitting the group), and the
- * multi-target blocks: 3 labels per row at margin width 1 (the
- * multi-label composite) and 3 (vector leaves).
+ * multi-target blocks: 3 labels per row at margin width 1 (one label
+ * per run, as multi-label DART trains) and 3 (a multi-label or
+ * vector-leaf run over 3 single-output targets).
  */
 class BlockBoundarySpec extends SparkTestBase {
   import spark.implicits._
@@ -102,16 +103,14 @@ class BlockBoundarySpec extends SparkTestBase {
             s"k = $k margin $c, row $i")
         }
       }
-      if (k == 1) {
-        // the multi-label composite: label 0 in the block, 1..L-1 beside
-        val split = blocks.map(GraftBoost.splitLabels(_, nl))
-        (0 until nl).foreach { j =>
-          val col = split.flatMap { case (b, others) =>
-            if (j == 0) b.labels else others(j - 1) }
-          assert(col.length === n)
-          (0 until n).foreach(i =>
-            assert(col(i) === label(i, j), s"composite label $j, row $i"))
-        }
+      // each target's label column, read per block at stride L the
+      // way a multi-target run reads label j: labels(i·L + j)
+      (0 until nl).foreach { j =>
+        val col = blocks.flatMap(b =>
+          Array.tabulate(b.n)(i => b.labels(i * nl + j)))
+        assert(col.length === n)
+        (0 until n).foreach(i =>
+          assert(col(i) === label(i, j), s"k = $k target label $j, row $i"))
       }
     }
   }

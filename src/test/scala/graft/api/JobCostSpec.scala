@@ -56,6 +56,8 @@ class JobCostSpec extends SparkTestBase {
       }
       group.values.asScala.count(_.startsWith("graft-train-"))
     }
+    def trainGroups(): Int =
+      group.values.asScala.filter(_.startsWith("graft-train-")).toSet.size
   }
 
   test("a depth-3 round with two pointwise metrics runs depth + 1 jobs") {
@@ -97,6 +99,31 @@ class JobCostSpec extends SparkTestBase {
     m.trees.foreach(t =>
       assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
     assert(log.trainJobs() === rounds * depth)
+  }
+
+  test("a depth-3 multi-label round over 3 labels runs depth jobs in " +
+      "one run: the job count of a single-label round") {
+    val df = parquetFrame(4000, 9)
+      .withColumn("y2", col("a") - col("b"))
+      .withColumn("y3", col("c") * col("d"))
+    val depth = 3
+    val rounds = 3
+    val log = new GroupLog
+    spark.sparkContext.addSparkListener(log)
+    val res = try {
+      GraftBoost.trainMultiLabel(df,
+        DMatrixSpec(labelCol = Seq("y", "y2", "y3")),
+        TrainParams(numRounds = rounds, maxDepth = depth,
+          minChildWeight = 0.0, seed = 4))
+    } finally spark.sparkContext.removeSparkListener(log)
+    assert(res.results.map(_._1) === Seq("y", "y2", "y3"))
+    res.results.foreach { case (l, r) =>
+      assert(r.roundsCompleted === rounds && r.model.trees.length === rounds)
+      r.model.trees.foreach(t => assert(t.numNodes === (1 << (depth + 1)) - 1,
+        s"label $l: a level stopped early"))
+    }
+    assert(log.trainJobs() === rounds * depth)
+    assert(log.trainGroups() === 1)
   }
 
   /** Tasks and `taskMetrics.resultSize` of every histogram level job (call

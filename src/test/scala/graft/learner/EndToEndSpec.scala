@@ -3,6 +3,7 @@ package graft.learner
 import graft.SparkTestBase
 import graft.api.GraftBoost
 import graft.data.DMatrixSpec
+import org.apache.spark.sql.functions.{col, floor, least, lit}
 
 /**
  * Flagship semantic tests, mirroring the reference's end-to-end suite
@@ -449,17 +450,99 @@ class EndToEndSpec extends SparkTestBase {
     }.toDF("a", "b", "w", "bm", "y1", "y2")
     val spec = DMatrixSpec(labelCol = Seq("y1", "y2"),
       weightCol = Some("w"), baseMarginCol = Some("bm"))
-    val p = TrainParams(numRounds = 3, maxDepth = 3, seed = 9,
-      subsample = 0.9)
-    val shared = GraftBoost.trainMultiLabel(df, spec, p)
+    // classes 0..2 for softmax: y1 by thirds of a, y2 by thirds of b
+    val classes = df
+      .withColumn("y1", floor(least(col("a") * 3, lit(2.0))))
+      .withColumn("y2", floor(least(col("b") * 3, lit(2.0))))
+    // c > 1 outputs per label (softprob classes, quantile alphas), the
+    // latter with its per-output adaptive leaf refresh; then a per-label
+    // global pass (Cox) and per-label drop sets (DART)
+    val inputs = Seq(
+      (TrainParams(numRounds = 3, maxDepth = 3, seed = 9,
+        subsample = 0.9), df),
+      (TrainParams(objective = "multi:softprob", numClass = 3,
+        numRounds = 3, maxDepth = 3, seed = 9, subsample = 0.9), classes),
+      (TrainParams(objective = "reg:quantileerror",
+        quantileAlphas = Seq(0.1, 0.9), numRounds = 3, maxDepth = 3,
+        seed = 9, subsample = 0.9), df),
+      (TrainParams(objective = "survival:cox", numRounds = 3, maxDepth = 3,
+        seed = 9, subsample = 0.9), df),
+      (TrainParams(booster = "dart", rateDrop = 0.5, sampleType = "weighted",
+        numRounds = 4, maxDepth = 3, seed = 9, subsample = 0.9), df))
     def hash(m: GraftModel): Int = modelStructureHash(m)
-    Seq("y1", "y2").foreach { l =>
+    for ((p, in) <- inputs) {
+      val shared = GraftBoost.trainMultiLabel(in, spec, p)
+      Seq("y1", "y2").foreach { l =>
+        val solo = GraftBoost.train(in,
+          spec.copy(labelCol = Seq(l),
+            ignore = spec.ignore ++ spec.labelCol.filterNot(_ == l)), p)
+        val sharedModel = shared.models.toMap.apply(l)
+        assert(hash(sharedModel) === hash(solo.model),
+          s"${p.objective} label $l")
+        assert(sharedModel.featureNames === solo.model.featureNames)
+      }
+    }
+  }
+
+  test("multi-label with an eval set and early stopping == per-label " +
+      "solo runs: best iteration, history, rounds and model") {
+    // y1 is learnable and y2 is noise, so the labels stop at different
+    // rounds; exchange-free input, as in the shared-pack test above
+    def frame(seed: Int, n: Int) = {
+      val rng = new scala.util.Random(seed)
+      (1 to n).map { _ =>
+        val a = rng.nextDouble(); val b = rng.nextDouble()
+        (a, b, 2.0 * a + b + 0.1 * rng.nextGaussian(), rng.nextGaussian())
+      }.toDF("a", "b", "y1", "y2")
+    }
+    val df = frame(71, 300)
+    val valid = frame(73, 200)
+    val spec = DMatrixSpec(labelCol = Seq("y1", "y2"))
+    val p = TrainParams(numRounds = 40, maxDepth = 3, seed = 11,
+      earlyStoppingRounds = 3, evalMetric = Seq("mae", "rmse"))
+    val evals = Seq(("train", df), ("valid", valid))
+    val shared = GraftBoost.trainMultiLabel(df, spec, p, evals).results.toMap
+    val rounds = Seq("y1", "y2").map { l =>
       val solo = GraftBoost.train(df,
-        spec.copy(labelCol = Seq(l),
-          ignore = spec.ignore ++ spec.labelCol.filterNot(_ == l)), p)
-      val sharedModel = shared.models.toMap.apply(l)
-      assert(hash(sharedModel) === hash(solo.model), s"label $l")
-      assert(sharedModel.featureNames === solo.model.featureNames)
+        spec.copy(labelCol = Seq(l), ignore = Seq("y1", "y2").filterNot(_ == l)),
+        p, evals)
+      val r = shared(l)
+      assert(r.bestIteration === solo.bestIteration, s"label $l")
+      assert(r.bestScore === solo.bestScore, s"label $l")
+      assert(r.roundsCompleted === solo.roundsCompleted, s"label $l")
+      assert(r.evalsResult.keySet === Set("train", "valid"), s"label $l")
+      assert(r.evalsResult === solo.evalsResult, s"label $l")
+      assert(r.totalN === solo.totalN, s"label $l")
+      assert(modelStructureHash(r.model) === modelStructureHash(solo.model),
+        s"label $l")
+      r.roundsCompleted
+    }
+    assert(rounds(0) > rounds(1) && rounds(1) < 40,
+      s"the labels should stop at different rounds: $rounds")
+  }
+
+  test("multi-label checkpoints: each label saves under " +
+      "<checkpointPath>/<label>, one-pass and per-label paths alike") {
+    val rng = new scala.util.Random(79)
+    val df = (1 to 200).map { _ =>
+      val a = rng.nextDouble(); val b = rng.nextDouble()
+      (a, b, (rng.nextInt(4)).toLong, 2.0 * a, b - a)
+    }.toDF("a", "b", "q", "y1", "y2")
+    val p = TrainParams(numRounds = 4, maxDepth = 2, seed = 13,
+      checkpointEvery = 2)
+    // no qid: one input pass; a declared qid column: one run per label
+    for (qid <- Seq(None, Some("q"))) {
+      val ckpt = tempDir("graft-ml-ckpt").toString
+      val res = GraftBoost.trainMultiLabel(df,
+        DMatrixSpec(labelCol = Seq("y1", "y2"), qidCol = qid,
+          ignore = if (qid.isEmpty) Seq("q") else Nil),
+        p.copy(checkpointPath = Some(ckpt)))
+      res.models.foreach { case (l, m) =>
+        val saved = GraftModel.load(spark, s"$ckpt/$l")
+        assert(saved.trees.length === 4, s"qid $qid label $l")
+        assert(modelStructureHash(saved) === modelStructureHash(m),
+          s"qid $qid label $l")
+      }
     }
   }
 

@@ -243,9 +243,9 @@ class RepresentationGoldenSpec extends SparkTestBase {
   }
 
   test("multi-label one-pass shared pack (r13 fingerprint)") {
-    // the composite layout packs all labels through toBinned once and
-    // splits them per label; pin both per-label models absolutely
-    // (weights + base margin columns ride along)
+    // toBinned packs all labels once, L per row, and one run trains
+    // every label's model from them; pin both per-label models
+    // absolutely (weights + base margin columns ride along)
     val rng = new scala.util.Random(155)
     val df = (1 to 300).map { _ =>
       val a = rng.nextDouble(); val b = rng.nextDouble()

@@ -4,8 +4,9 @@
 # changes; the round checklist ends with this script.
 #
 #   tools/precommit-check.sh          # one-grower, one-lifetime,
-#                                     # one-packer, run-owned-broadcast
-#                                     # and one-scorer checks, then
+#                                     # one-loop, one-packer,
+#                                     # run-owned-broadcast and
+#                                     # one-scorer checks, then
 #                                     # compile main + tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
@@ -73,6 +74,20 @@ if [[ -n "$groupers" ]]; then
     "call setJobGroup( or clearJobGroup( — run the loop inside a" \
     "RunLifetime instead:"
   echo "$groupers"
+  exit 1
+fi
+
+# One boosting loop: every tree model (single-label, multi-label and
+# vector-leaf) trains in Trainer.boost's round loop, so a `life.rounds`
+# loop runs only in Trainer.scala and in gblinear's GraftLinear.scala
+# (gblinear is not a tree model).
+loops="$(grep -rl --include='*.scala' 'life\.rounds' src/main |
+  grep -vE '/(Trainer|GraftLinear)\.scala$' || true)"
+if [[ -n "$loops" ]]; then
+  echo "[precommit] SECOND BOOSTING LOOP: only Trainer.scala (tree" \
+    "models) and GraftLinear.scala (gblinear) may run life.rounds —" \
+    "train through Trainer.boostTargets instead:"
+  echo "$loops"
   exit 1
 fi
 
