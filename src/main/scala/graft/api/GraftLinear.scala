@@ -380,20 +380,19 @@ object GraftLinear {
               val scored = er.mapPartitions(_.flatMap { blk =>
                 val (w, b) = bcE.value
                 Iterator.tabulate(blk.n)(i =>
-                  (evalMargins(blk, i, init, w, b, k), blk.ys(i),
-                    blk.ws(i)))
+                  new Metrics.EvalRow(0, evalMargins(blk, i, init, w, b, k),
+                    blk.ys(i), blk.ws(i), blk.ys(i), 0L))
               }, preservesPartitioning = true)
-              // computeAll runs one job for all (loss, weight) metrics and
-              // one per whole-set metric (auc, aucpr); when that is more
-              // than one job, persist the scored margins for the round so
-              // the margin map runs ONCE and the extra jobs pay only a
-              // cache read
+              // computeAll sums every metric in one job, and cox-nloglik
+              // in jobs of its own; when that is more than one job,
+              // persist the scored margins for the round so the margin
+              // map runs ONCE and the extra jobs pay only a cache read
               val cached =
                 if (Metrics.jobs(metricNames, customByName) > 1)
                   Some(life.persist(scored))
                 else None
               metricNames.zip(Metrics.computeAll(metricNames, obj,
-                cached.getOrElse(scored), customByName)).foreach {
+                cached.getOrElse(scored), 1, customByName)(0)).foreach {
                 case (mn, v) => evalsResult(n)(mn) += v
               }
               cached.foreach(life.release)

@@ -6,109 +6,110 @@ import org.apache.spark.rdd.RDD
  * Distributed evaluation metrics — analog of the reference's eval-metric
  * aggregation (xgboost computes metrics with a weighted allreduce; the
  * driver reads rank-0's result, reference: xgboost_ray/main.py:704-708,
- * 745-752, 1323-1328). Here all (loss, weight) metrics of one eval set
- * share one job: each task returns its partition's partial sums and the
- * driver adds them up, the same partial+final shape as the allreduce.
- *
- * AUC is computed from a fixed 4096-bucket score histogram (rank-sum
- * formula over buckets) — single pass, deterministic, no global sort;
- * exact when scores land in distinct buckets, else a tight approximation.
+ * 745-752, 1323-1328). Every metric of every model of one eval set sums
+ * in ONE job, [[computeAll]]'s pass: a metric is a [[Term]] with a fixed
+ * slot range in one per-partition `Array[Double]`, each task sums its
+ * rows in row order and the driver adds the partials in partition-index
+ * order — the allreduce's partial+final shape, bit-reproducible however
+ * the tasks finish. A (loss, weight) term, survival bounds included,
+ * takes 2 slots; a group term (`ndcg[@k]`, `map[@k]`, rank-objective
+ * `auc`) scores each qid group as it ends, 2 slots; the bucketed
+ * `auc`/`aucpr` term is a 4096-bucket (positive, negative) score
+ * histogram, 2 × 4096 slots (rank-sum over buckets: no global sort,
+ * exact when scores land in distinct buckets, else a tight
+ * approximation). `cox-nloglik` needs a global risk table first, so it
+ * alone runs jobs of its own ([[Objectives.CoxPh.nloglik]]).
  * Custom metrics: pass a function (margin, label, weight) → (loss, w).
  */
 object Metrics {
 
-  /** Deterministic (loss, weight) pair-sum. `treeReduce` merges
-    * partition partials in task-COMPLETION order, so repeated runs of
-    * the same plan can differ in the last ulp — enough to flake golden
-    * metric-history comparisons and, pathologically, flip an
-    * early-stopping tie. Per-partition partials are already
-    * deterministic (sequential in-partition fold); summing them on the
-    * driver in PARTITION-INDEX order makes the whole metric
-    * bit-reproducible. The collect is two doubles per partition —
-    * O(partitions) bytes, smaller than treeReduce's own driver
-    * traffic. */
-  private implicit final class DetSum(private val rdd: RDD[(Double, Double)]) {
-    def detSum2: (Double, Double) = {
-      val parts = rdd.mapPartitionsWithIndex({ (i, it) =>
-        var a = 0.0; var b = 0.0
-        while (it.hasNext) { val p = it.next(); a += p._1; b += p._2 }
-        Iterator.single((i, a, b))
-      }, preservesPartitioning = true).collect()
-      java.util.Arrays.sort(parts, Ordering.by((t: (Int, Double, Double)) => t._1))
-      var a = 0.0; var b = 0.0
-      var i = 0
-      while (i < parts.length) { a += parts(i)._2; b += parts(i)._3; i += 1 }
-      (a, b)
+  /** One row of an eval set as every [[Term]] reads it: model `model`'s
+    * raw margins `m`, its label `y` (the lower bound of a survival row),
+    * weight, upper bound (`y` when uncensored) and qid. */
+  private[graft] final class EvalRow(val model: Int, val m: Array[Float],
+      val y: Float, val wt: Float, val upper: Float, val qid: Long)
+
+  /** One metric of the pass: `slots` accumulator slots from `at` on. A
+    * row term adds each row in [[add]] (`p`: the row's transformed
+    * prediction, null unless some term of the pass `readsPred`); a
+    * `grouped` term adds each qid group in [[group]] instead. */
+  private[learner] abstract class Term(val slots: Int = 2,
+      val readsPred: Boolean = false, val grouped: Boolean = false)
+      extends Serializable {
+    def add(r: EvalRow, p: Array[Float], acc: Array[Double],
+        at: Int): Unit = ()
+    /** A whole group's (score, relevance) rows, `gw` its weight. */
+    def group(rows: Array[(Float, Float)], gw: Float, acc: Array[Double],
+        at: Int): Unit = ()
+    /** The metric's value from the summed slots. */
+    def finish(sums: Array[Double], at: Int): Double
+  }
+
+  /** A built-in row's weighted loss (`p`: its prediction). */
+  private abstract class Loss extends Serializable {
+    def apply(r: EvalRow, p: Array[Float]): Double
+  }
+
+  /** A (Σ loss, Σ weight) term of the row weights; `fin` maps the two
+    * sums to the value. */
+  private class Sums(loss: Loss, readsPred: Boolean,
+      fin: (Double, Double) => Double = _ / _)
+      extends Term(readsPred = readsPred) {
+    override def add(r: EvalRow, p: Array[Float], acc: Array[Double],
+        at: Int): Unit = {
+      acc(at) += loss(r, p); acc(at + 1) += r.wt.toDouble
     }
+    def finish(sums: Array[Double], at: Int): Double =
+      fin(sums(at), sums(at + 1))
   }
 
-  /** One (loss, weight) metric's per-row term: adds the row's weighted
-    * loss at `acc(at)` and its weight at `acc(at + 1)`. `m` is the row's
-    * raw margins, `p` its transformed prediction (null when no term of
-    * the pass reads it). */
-  private[learner] abstract class RowTerm extends Serializable {
-    def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
-        acc: Array[Double], at: Int): Unit
-  }
+  private def mean(loss: Loss, readsPred: Boolean = true): Term =
+    new Sums(loss, readsPred)
 
-  /** A built-in term: `loss` is the row's weighted loss, the row weight
-    * its weight. */
-  private abstract class Weighted extends RowTerm {
-    def loss(m: Array[Float], p: Array[Float], y: Float, wt: Float): Double
-    final def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
-        acc: Array[Double], at: Int): Unit = {
-      acc(at) += loss(m, p, y, wt); acc(at + 1) += wt.toDouble
-    }
-  }
+  private def rootMean(loss: Loss): Term =
+    new Sums(loss, true, (se, w) => math.sqrt(se / w))
 
-  /** A (loss, weight) metric: its row term, whether the term reads the
-    * transformed prediction, and the finisher of (Σ loss, Σ weight). */
-  private final class Pointwise(val term: RowTerm, val readsPred: Boolean,
-      val finish: (Double, Double) => Double)
-
-  private def mean(term: Weighted, readsPred: Boolean = true): Pointwise =
-    new Pointwise(term, readsPred, _ / _)
-
-  private def rootMean(term: Weighted): Pointwise =
-    new Pointwise(term, true, (se, w) => math.sqrt(se / w))
-
-  /** Metrics computed from the whole eval set at once, each its own job:
-    * the bucketed-histogram AUCs and Cox's partial likelihood. */
-  private val WholeSet = Set("auc", "aucpr", "cox-nloglik")
-
-  /** The (loss, weight) metric `name`, or None for a [[WholeSet]] one.
-    * Custom metrics (E7) win over built-in names. */
-  private def pointwise(name: String, obj: Objective,
-      custom: Map[String, CustomMetric]): Option[Pointwise] =
+  /** The term of metric `name`, or None for `cox-nloglik`. Custom
+    * metrics (E7) win over built-in names; under a rank objective `auc`
+    * is the per-group AUC. */
+  private def term(name: String, obj: Objective,
+      custom: Map[String, CustomMetric]): Option[Term] =
     custom.get(name) match {
       case Some(cm) =>
         val fn = cm.fn
-        Some(new Pointwise(new RowTerm {
-          def add(m: Array[Float], p: Array[Float], y: Float, wt: Float,
-              acc: Array[Double], at: Int): Unit = {
-            val (loss, w) = fn(m, y, wt)
+        Some(new Sums(null, false) {
+          override def add(r: EvalRow, p: Array[Float], acc: Array[Double],
+              at: Int): Unit = {
+            val (loss, w) = fn(r.m, r.y, r.wt)
             acc(at) += loss; acc(at + 1) += w
           }
-        }, false, _ / _))
-      case None if WholeSet(name) => None
+        })
+      case None if name == "cox-nloglik" => None
+      case None if isGroupMetric(name) || (name == "auc" && obj.needsGroups) =>
+        // ndcg/map/auc walk qid groups — the rank layout keeps groups
+        // partition-contiguous
+        require(obj.needsGroups, s"$name needs a rank:* objective " +
+          "(qid-contiguous evaluation partitions)")
+        Some(groupTerm(name))
       case None => Some(builtin(name, obj))
     }
 
-  /** The table of built-in (loss, weight) metrics. */
-  private def builtin(name: String, obj: Objective): Pointwise = name match {
+  /** The table of built-in row metrics. */
+  private def builtin(name: String, obj: Objective): Term = name match {
     case "rmse" =>
-      rootMean((_, p, y, wt) => { val d = p(0) - y; d.toDouble * d * wt })
+      rootMean((r, p) => { val d = p(0) - r.y; d.toDouble * d * r.wt })
     case "mae" =>
-      mean((_, p, y, wt) => math.abs(p(0) - y).toDouble * wt)
+      mean((r, p) => math.abs(p(0) - r.y).toDouble * r.wt)
     case "logloss" =>
-      mean((_, pr, y, wt) => {
-        val p = clamp(pr(0))
-        -(y * math.log(p) + (1 - y) * math.log(1 - p)) * wt
+      mean((r, pr) => {
+        val p = clamp(pr(0)); val y = r.y
+        -(y * math.log(p) + (1 - y) * math.log(1 - p)) * r.wt
       })
     case "mlogloss" =>
       // softmax over RAW margins — obj.transform would argmax to a
       // length-1 array under multi:softmax (advisor r1: AIOOBE)
-      mean((m, _, y, wt) => {
+      mean((r, _) => {
+        val m = r.m
         var mx = Float.NegativeInfinity
         var i = 0
         while (i < m.length) { if (m(i) > mx) mx = m(i); i += 1 }
@@ -116,58 +117,57 @@ object Metrics {
         val e = new Array[Double](m.length)
         i = 0
         while (i < m.length) { e(i) = math.exp(m(i) - mx); s += e(i); i += 1 }
-        val p = math.min(math.max(e(y.toInt) / s, 1e-15), 1.0 - 1e-15)
-        -math.log(p) * wt
+        val p = math.min(math.max(e(r.y.toInt) / s, 1e-15), 1.0 - 1e-15)
+        -math.log(p) * r.wt
       }, readsPred = false)
     case "error" => // binary misclassification at p=0.5
-      mean((_, p, y, wt) =>
-        if ((if (p(0) > 0.5f) 1f else 0f) != y) wt.toDouble else 0.0)
+      mean((r, p) =>
+        if ((if (p(0) > 0.5f) 1f else 0f) != r.y) r.wt.toDouble else 0.0)
     case t if t.startsWith("error@") => // binary error at threshold t
       // (xgboost error@t: classify positive when prediction > t)
       val th = t.stripPrefix("error@").toDouble
-      mean((_, p, y, wt) =>
-        if ((if (p(0) > th) 1f else 0f) != y) wt.toDouble else 0.0)
+      mean((r, p) =>
+        if ((if (p(0) > th) 1f else 0f) != r.y) r.wt.toDouble else 0.0)
     case "gamma-deviance" => // 2·mean(ln(p/y) + y/p − 1), xgboost's
       // epsilon-guarded form (labels and predictions floored at 1e-16)
-      val deviance: Weighted = (_, pr, y, wt) => {
+      new Sums((r, pr) => {
         val p = pr(0).toDouble + 1e-16
-        val yy = y.toDouble + 1e-16
-        (math.log(p / yy) + yy / p - 1.0) * wt
-      }
-      new Pointwise(deviance, true, (d, w) => 2.0 * d / w)
+        val yy = r.y.toDouble + 1e-16
+        (math.log(p / yy) + yy / p - 1.0) * r.wt
+      }, true, (d, w) => 2.0 * d / w)
     case "merror" => // multiclass: argmax != label
-      mean((_, p, y, wt) => {
+      mean((r, p) => {
         var best = 0; var i = 1
         while (i < p.length) { if (p(i) > p(best)) best = i; i += 1 }
         // softmax objective already argmaxes to length-1
         val cls = if (p.length == 1) p(0) else best.toFloat
-        if (cls != y) wt.toDouble else 0.0
+        if (cls != r.y) r.wt.toDouble else 0.0
       })
     case "rmsle" => // √(Σw·(ln1p(ŷ)−ln1p(y))²/Σw); preds below −1
       // floor just above it (xgboost validates labels ≥ −1 but lets an
       // unbounded regressor's prediction produce NaN — floor instead)
-      rootMean((_, pr, y, wt) => {
-        require(y >= -1f, s"rmsle needs labels >= -1, got $y")
+      rootMean((r, pr) => {
+        require(r.y >= -1f, s"rmsle needs labels >= -1, got ${r.y}")
         val p = math.max(pr(0).toDouble, -1.0 + 1e-15)
-        val d = math.log1p(p) - math.log1p(y.toDouble)
-        d * d * wt
+        val d = math.log1p(p) - math.log1p(r.y.toDouble)
+        d * d * r.wt
       })
     case "mape" => // mean absolute percentage error (zero-safe floor)
-      mean((_, p, y, wt) => {
-        val d = math.abs(p(0) - y).toDouble /
-          math.max(math.abs(y.toDouble), 1e-10)
-        d * wt
+      mean((r, p) => {
+        val d = math.abs(p(0) - r.y).toDouble /
+          math.max(math.abs(r.y.toDouble), 1e-10)
+        d * r.wt
       })
     case "poisson-nloglik" => // lnΓ(y+1) + p − y·ln p (p = predicted rate)
-      mean((_, pr, y, wt) => {
+      mean((r, pr) => {
         val p = math.max(pr(0).toDouble, 1e-16)
-        (org.apache.commons.math3.special.Gamma.logGamma(y + 1.0)
-          + p - math.log(p) * y) * wt
+        (org.apache.commons.math3.special.Gamma.logGamma(r.y + 1.0)
+          + p - math.log(p) * r.y) * r.wt
       })
     case "gamma-nloglik" => // unit-shape gamma NLL: y/p + ln p
-      mean((_, pr, y, wt) => {
+      mean((r, pr) => {
         val p = math.max(pr(0).toDouble, 1e-16)
-        (y / p + math.log(p)) * wt
+        (r.y / p + math.log(p)) * r.wt
       })
     case t if t.startsWith("tweedie-nloglik") =>
       // −y·p^{1−ρ}/(1−ρ) + p^{2−ρ}/(2−ρ); ρ from "tweedie-nloglik@1.5"
@@ -176,11 +176,11 @@ object Metrics {
         case _ => 1.5
       }
       require(rho > 1.0 && rho < 2.0, s"tweedie power out of (1,2): $rho")
-      mean((_, pr, y, wt) => {
+      mean((r, pr) => {
         val p = math.max(pr(0).toDouble, 1e-16)
-        val a = y * math.exp((1.0 - rho) * math.log(p)) / (1.0 - rho)
+        val a = r.y * math.exp((1.0 - rho) * math.log(p)) / (1.0 - rho)
         val b = math.exp((2.0 - rho) * math.log(p)) / (2.0 - rho)
-        (-a + b) * wt
+        (-a + b) * r.wt
       })
     case t if t.startsWith("mphe") =>
       // mean pseudo-Huber error δ²(√(1+(z/δ)²) − 1); δ from "mphe@0.5"
@@ -189,9 +189,9 @@ object Metrics {
         case _ => 1.0
       }
       require(d > 0, s"mphe slope must be positive: $d")
-      mean((_, p, y, wt) => {
-        val z = (p(0) - y).toDouble
-        d * d * (math.sqrt(1.0 + (z / d) * (z / d)) - 1.0) * wt
+      mean((r, p) => {
+        val z = (p(0) - r.y).toDouble
+        d * d * (math.sqrt(1.0 + (z / d) * (z / d)) - 1.0) * r.wt
       })
     case t if t.startsWith("quantile") =>
       // mean pinball loss: α·(y−p)⁺ + (1−α)·(p−y)⁺; α from "quantile@0.9".
@@ -213,17 +213,38 @@ object Metrics {
           s"objective ${obj.name} produces " +
           s"${math.max(obj.numOutputs, 1)} output(s) — list one alpha " +
           "per output, in output order")
-      mean((_, p, y, wt) => {
+      mean((r, p) => {
         var pin = 0.0
         var c = 0
         val k = math.min(alphas.length, p.length)
         while (c < k) {
-          val err = (y - p(c)).toDouble
+          val err = (r.y - p(c)).toDouble
           pin += (if (err >= 0) alphas(c) * err else (alphas(c) - 1.0) * err)
           c += 1
         }
-        pin / k * wt
+        pin / k * r.wt
       })
+    case "aft-nloglik" => // weighted mean NLL under the TRAINED
+      // distribution/sigma ([[Objectives.Aft.nloglik]])
+      val aft = obj match {
+        case a: Objectives.Aft => a
+        case other => throw new IllegalArgumentException(
+          s"aft-nloglik needs the survival:aft objective, got " +
+            other.name)
+      }
+      mean((r, _) => aft.nloglik(r.m(0), r.y, r.upper) * r.wt,
+        readsPred = false)
+    case "interval-regression-accuracy" => // weighted fraction of rows
+      // whose predicted time exp(margin) lands inside [lower, upper]
+      // (NaN/missing upper = +∞)
+      mean((r, _) => {
+        val t = math.exp(r.m(0).toDouble)
+        val hi =
+          if (r.upper.isNaN) Double.PositiveInfinity else r.upper.toDouble
+        if (t >= r.y && t <= hi) r.wt.toDouble else 0.0
+      }, readsPred = false)
+    case "auc" => new ScoreHistogram(probOutput(obj), auc)
+    case "aucpr" => new ScoreHistogram(probOutput(obj), aucpr)
     case other => throw new IllegalArgumentException(s"unknown metric $other")
   }
 
@@ -233,50 +254,67 @@ object Metrics {
       custom: Map[String, CustomMetric] = Map.empty): Double =
     computeAll(Seq(name), obj, rows, custom).head
 
-  /** The value of each metric of `names` over one eval set's rows, in
-    * `names` order. Every (loss, weight) metric accumulates in ONE job:
-    * each task sums each metric's row terms in row order, and the driver
-    * sums the partition partials in partition-index order, so the values
-    * are bit-reproducible whatever order the tasks finish in. Each
-    * [[WholeSet]] metric runs a job of its own. */
+  /** The value of each metric of `names` over (raw margins, label,
+    * weight) rows, in `names` order: [[computeAll]] for one model. The
+    * rows carry no qid, so a rank objective's group metrics would score
+    * each partition as one group: use [[computeGroup]] for those. */
   def computeAll(names: Seq[String], obj: Objective,
       rows: RDD[(Array[Float], Float, Float)],
-      custom: Map[String, CustomMetric] = Map.empty): Seq[Double] = {
-    val plan = names.map(pointwise(_, obj, custom))
+      custom: Map[String, CustomMetric] = Map.empty): Seq[Double] =
+    computeAll(names, obj, rows.map { case (m, y, wt) =>
+      new EvalRow(0, m, y, wt, y, 0L)
+    }, 1, custom)(0).toSeq
+
+  /** The value of each metric of `names` for each of `models` models
+    * over one eval set's rows: `values(g)(j)` is model g's value of
+    * `names(j)`. Every metric but `cox-nloglik` sums in ONE job: each
+    * task adds its rows in row order into one accumulator, model-major
+    * (model g's terms from g × the terms' width on), and the driver adds
+    * the partials in partition-index order, so the values are
+    * bit-reproducible whatever order the tasks finish in. A group term
+    * needs each qid group contiguous within a partition (the rank
+    * layout: `Sharding.sortByQid`). `cox-nloglik` runs its own jobs per
+    * model ([[jobs]]). */
+  private[graft] def computeAll(names: Seq[String], obj: Objective,
+      rows: RDD[EvalRow], models: Int,
+      custom: Map[String, CustomMetric]): Array[Array[Double]] = {
+    val plan = names.map(term(_, obj, custom))
     val terms = plan.flatten.toArray
-    val sums = new Array[Double](terms.length * 2)
+    val at = terms.scanLeft(0)(_ + _.slots)
+    val sums = new Array[Double](models * at.last)
     if (terms.nonEmpty) {
       val parts = new Array[Array[Double]](rows.getNumPartitions)
-      rows.sparkContext.runJob(rows,
-        TaskFns.metricPass(obj, terms.map(_.term), terms.exists(_.readsPred)),
+      rows.sparkContext.runJob(rows, TaskFns.metricPass(obj, terms, models),
         (i: Int, part: Array[Double]) => parts(i) = part)
       parts.foreach { part =>
         var j = 0
         while (j < sums.length) { sums(j) += part(j); j += 1 }
       }
     }
-    var next = 0
-    names.zip(plan).map {
-      case (_, Some(pw)) =>
-        next += 1
-        pw.finish(sums(2 * next - 2), sums(2 * next - 1))
-      case ("auc", None) => auc(rows, obj)
-      case ("aucpr", None) => aucpr(rows, obj)
-      case (_, None) => obj match { // cox-nloglik: Breslow partial NLL
-        case cox: Objectives.CoxPh => cox.nloglik(rows)
-        case other => throw new IllegalArgumentException(
-          s"cox-nloglik needs the survival:cox objective, got " +
-            other.name)
-      }
+    Array.tabulate(models) { g =>
+      var next = 0
+      plan.map {
+        case Some(t) =>
+          next += 1
+          t.finish(sums, g * at.last + at(next - 1))
+        case None => obj match { // cox-nloglik: Breslow partial NLL
+          case cox: Objectives.CoxPh =>
+            cox.nloglik(rows.mapPartitions(TaskFns.modelRows(g)))
+          case other => throw new IllegalArgumentException(
+            s"cox-nloglik needs the survival:cox objective, got " +
+              other.name)
+        }
+      }.toArray
     }
   }
 
-  /** Jobs [[computeAll]] runs for `names`: one for all (loss, weight)
-    * metrics, plus one per [[WholeSet]] metric. */
+  /** Jobs [[computeAll]] runs per model for `names`: the one pass for
+    * every metric but `cox-nloglik`, whose Breslow NLL first reduces
+    * the risk table and then sums, two jobs. */
   def jobs(names: Seq[String],
       custom: Map[String, CustomMetric] = Map.empty): Int = {
-    val whole = names.count(n => !custom.contains(n) && WholeSet(n))
-    whole + (if (whole < names.length) 1 else 0)
+    val cox = names.count(n => !custom.contains(n) && n == "cox-nloglik")
+    2 * cox + (if (cox < names.length) 1 else 0)
   }
 
   def defaultMetric(objective: String): String = objective match {
@@ -379,97 +417,87 @@ object Metrics {
     name == "aft-nloglik" || name == "interval-regression-accuracy"
 
   /**
-   * Survival metrics over (margins, lower, upper, weight) rows:
-   *  - `aft-nloglik` (the survival:aft default): weighted mean NLL
-   *    under the TRAINED distribution/sigma ([[Objectives.Aft.nloglik]]).
-   *  - `interval-regression-accuracy`: weighted fraction of rows whose
-   *    predicted time exp(margin) lands inside [lower, upper]
-   *    (NaN/missing upper = +∞).
-   * Same deterministic partition-ordered summation as every pointwise
-   * metric.
-   */
-  def computeBounds(name: String, obj: Objective,
-      rows: RDD[(Array[Float], Float, Float, Float)]): Double =
-    name match {
-      case "aft-nloglik" =>
-        val aft = obj match {
-          case a: Objectives.Aft => a
-          case other => throw new IllegalArgumentException(
-            s"aft-nloglik needs the survival:aft objective, got " +
-              other.name)
-        }
-        val (ll, w) = rows.map { case (m, lo, up, wt) =>
-          (aft.nloglik(m(0), lo, up) * wt, wt.toDouble)
-        }.detSum2
-        ll / w
-      case "interval-regression-accuracy" =>
-        val (hit, w) = rows.map { case (m, lo, up, wt) =>
-          val t = math.exp(m(0).toDouble)
-          val hi = if (up.isNaN) Double.PositiveInfinity else up.toDouble
-          (if (t >= lo && t <= hi) wt.toDouble else 0.0, wt.toDouble)
-        }.detSum2
-        hit / w
-      case other => throw new IllegalArgumentException(
-        s"unknown bounds metric $other")
-    }
-
-  /**
-   * ndcg[@k] / map[@k] over qid groups (the xgboost ranking metrics the
-   * reference forwards; ranking conformance test
-   * tests/test_end_to_end.py:374-425 checks rank quality).
+   * ndcg[@k] / map[@k] / auc over qid groups (the xgboost ranking
+   * metrics the reference forwards; ranking conformance test
+   * tests/test_end_to_end.py:374-425 checks rank quality) — [[computeAll]]'s
+   * group term over rows of (score, label, weight, qid).
    *
-   * Rows are (score, label, weight, qid) and must be qid-CONTIGUOUS
-   * within partitions — the layout the trainer guarantees for rank
-   * objectives (Sharding.sortByQid, groups never straddle partitions) —
-   * so one mapPartitions pass scores every group with ZERO shuffle and
-   * memory bounded by the largest single group; the reduce carries one
-   * (weighted sum, weight) pair per partition.
+   * Rows must be qid-CONTIGUOUS within partitions — the layout the
+   * trainer guarantees for rank objectives (Sharding.sortByQid, groups
+   * never straddle partitions) — so the pass scores every group with
+   * ZERO shuffle and memory bounded by the largest single group.
    *
    * Conventions (documented divergences where xgboost is ambiguous):
    * group weight = the group's first row weight (xgboost's per-group
    * ranking weight); groups with no positive label score 1.0 (they
    * cannot be mis-ranked); score ties keep row order (stable sort);
-   * ndcg gain is exponential (2^rel − 1), the xgboost default.
+   * ndcg gain is exponential (2^rel − 1), the xgboost default; auc
+   * leaves out groups that are all-positive or all-negative (no
+   * rankable pairs — xgboost likewise skips groups whose AUC is
+   * undefined).
    */
   def computeGroup(name: String,
       rows: RDD[(Float, Float, Float, Long)]): Double = {
+    require(isGroupMetric(name) || name == "auc",
+      s"unknown group metric $name")
+    // under a rank objective `auc` is a group term too
+    computeAll(Seq(name), new Objectives.PairwiseRank, rows.map {
+      case (score, rel, wt, q) => new EvalRow(0, Array(score), rel, wt, rel, q)
+    }, 1, Map.empty)(0)(0)
+  }
+
+  /** The group term of `name`: ndcg[@k], map[@k] or auc. */
+  private def groupTerm(name: String): Term = {
     val (base, kOpt) = name.split('@') match {
       case Array(b, kk) => (b, Some(kk.toInt))
       case _ => (name, None)
     }
     require(base == "ndcg" || base == "map" || name == "auc",
       s"unknown group metric $name")
-    val (s, w) = rows.mapPartitions { it =>
-      var sum = 0.0
-      var wsum = 0.0
-      val buf = scala.collection.mutable.ArrayBuffer[(Float, Float)]()
-      var qid = 0L
-      var open = false
-      var gw = 1.0f
-      def flush(): Unit = if (buf.nonEmpty) {
-        val arr = buf.toArray
-        val k = kOpt.getOrElse(arr.length)
-        if (base == "auc") {
-          // groups that are all-positive or all-negative have no
-          // rankable pairs — excluded from the mean (xgboost likewise
-          // skips groups whose AUC is undefined)
-          val v = aucOf(arr)
-          if (v >= 0) { sum += v * gw; wsum += gw }
-        } else {
-          val v = if (base == "ndcg") ndcgOf(arr, k) else apOf(arr, k)
-          sum += v * gw
-          wsum += gw
+    new Term(grouped = true) {
+      override def group(rows: Array[(Float, Float)], gw: Float,
+          acc: Array[Double], at: Int): Unit = {
+        val k = kOpt.getOrElse(rows.length)
+        val v =
+          if (base == "auc") aucOf(rows)
+          else if (base == "ndcg") ndcgOf(rows, k)
+          else apOf(rows, k)
+        if (base != "auc" || v >= 0) { acc(at) += v * gw; acc(at + 1) += gw }
+      }
+      def finish(sums: Array[Double], at: Int): Double =
+        if (sums(at + 1) == 0) 0.0 else sums(at) / sums(at + 1)
+    }
+  }
+
+  /** One model's open qid group in a partition of the metric pass:
+    * rows add to it until the qid changes; [[flush]] scores it with
+    * every group term. */
+  private[learner] final class OpenGroup {
+    private val rows = scala.collection.mutable.ArrayBuffer[(Float, Float)]()
+    private var qid = 0L
+    private var gw = 1.0f
+
+    /** Adds `r`, first scoring the open group when `r` starts a new one. */
+    def add(r: EvalRow, terms: Array[Term], acc: Array[Double],
+        at: Array[Int]): Unit = {
+      if (rows.isEmpty || r.qid != qid) {
+        flush(terms, acc, at); qid = r.qid; gw = r.wt
+      }
+      rows += ((r.m(0), r.y))
+    }
+
+    /** Scores the open group, if any, into `acc` (`at`: each term's
+      * first slot) and closes it. */
+    def flush(terms: Array[Term], acc: Array[Double], at: Array[Int]): Unit =
+      if (rows.nonEmpty) {
+        val arr = rows.toArray
+        var j = 0
+        while (j < terms.length) {
+          if (terms(j).grouped) terms(j).group(arr, gw, acc, at(j))
+          j += 1
         }
-        buf.clear()
+        rows.clear()
       }
-      it.foreach { case (score, rel, wt, q) =>
-        if (!open || q != qid) { flush(); qid = q; gw = wt; open = true }
-        buf += ((score, rel))
-      }
-      flush()
-      Iterator((sum, wsum))
-    }.detSum2
-    if (w == 0) 0.0 else s / w
   }
 
   /** Exact one-group Mann-Whitney AUC with midrank tie handling over
@@ -541,7 +569,6 @@ object Metrics {
 
   private val Buckets = 4096
 
-  /** Bucketed rank-sum AUC: one treeAggregate over (score, label, w). */
   /** True when `obj.transform`'s positive-class score is ALREADY a
     * probability in [0,1]. The score→bucket mapping must be a single
     * MONOTONE function decided per OBJECTIVE, not per row — a per-row
@@ -553,60 +580,55 @@ object Metrics {
   private def probOutput(obj: Objective): Boolean =
     obj.name == "binary:logistic" || obj.name == "multi:softprob"
 
-  /** One-pass bucketed (positive, negative) score histogram shared by
-    * [[auc]] and [[aucpr]]. */
-  private def scoreHistogram(rows: RDD[(Array[Float], Float, Float)],
-      obj: Objective): (Array[Double], Array[Double]) = {
-    val isProb = probOutput(obj)
-    rows.treeAggregate(
-      (new Array[Double](Buckets), new Array[Double](Buckets)))(
-      seqOp = { case ((pos, neg), (m, y, wt)) =>
-        val t = obj.transform(m)
-        val s = if (t.length > 1) t(t.length - 1) else t(0)
-        val p = if (isProb) math.min(math.max(s.toDouble, 0.0), 1.0)
-          else 1.0 / (1.0 + math.exp(-s))
-        val b = math.min((p * Buckets).toInt, Buckets - 1)
-        if (y > 0.5f) pos(b) += wt else neg(b) += wt
-        (pos, neg)
-      },
-      combOp = { case ((p1, n1), (p2, n2)) =>
-        var i = 0
-        while (i < Buckets) { p1(i) += p2(i); n1(i) += n2(i); i += 1 }
-        (p1, n1)
-      })
+  /** The bucketed (positive, negative) score histogram of [[auc]] and
+    * [[aucpr]]: positives' weights at slots [0, Buckets), negatives' at
+    * [Buckets, 2 × Buckets); `value` reads the summed histogram. */
+  private final class ScoreHistogram(isProb: Boolean,
+      value: (Array[Double], Int) => Double)
+      extends Term(2 * Buckets, readsPred = true) {
+    override def add(r: EvalRow, t: Array[Float], acc: Array[Double],
+        at: Int): Unit = {
+      val s = if (t.length > 1) t(t.length - 1) else t(0)
+      val p = if (isProb) math.min(math.max(s.toDouble, 0.0), 1.0)
+        else 1.0 / (1.0 + math.exp(-s))
+      val b = math.min((p * Buckets).toInt, Buckets - 1)
+      acc(at + (if (r.y > 0.5f) b else Buckets + b)) += r.wt
+    }
+    def finish(sums: Array[Double], at: Int): Double = value(sums, at)
   }
 
-  private def auc(rows: RDD[(Array[Float], Float, Float)],
-      obj: Objective): Double = {
-    val (pos, neg) = scoreHistogram(rows, obj)
+  /** Rank-sum AUC over the histogram at `h(at …)`. */
+  private def auc(h: Array[Double], at: Int): Double = {
     var negBelow = 0.0; var rankSum = 0.0; var p = 0.0; var n = 0.0
     var i = 0
     while (i < Buckets) {
-      rankSum += pos(i) * (negBelow + 0.5 * neg(i))
-      negBelow += neg(i); p += pos(i); n += neg(i)
+      val pos = h(at + i); val neg = h(at + Buckets + i)
+      rankSum += pos * (negBelow + 0.5 * neg)
+      negBelow += neg; p += pos; n += neg
       i += 1
     }
     if (p == 0 || n == 0) 0.5 else rankSum / (p * n)
   }
 
   /** Area under the precision-recall curve (xgboost `aucpr`), on the
-    * SAME one-pass bucketed score histogram as [[auc]]: scan buckets
-    * from the highest score down, trapezoid between successive
-    * (recall, precision) points, starting at (0, 1) by the usual
-    * convention. Histogram resolution (Buckets) bounds the
-    * interpolation error identically to auc's tie handling. */
-  private def aucpr(rows: RDD[(Array[Float], Float, Float)],
-      obj: Objective): Double = {
-    val (pos, neg) = scoreHistogram(rows, obj)
-    val totalPos = pos.sum
+    * SAME bucketed score histogram as [[auc]]: scan buckets from the
+    * highest score down, trapezoid between successive (recall,
+    * precision) points, starting at (0, 1) by the usual convention.
+    * Histogram resolution (Buckets) bounds the interpolation error
+    * identically to auc's tie handling. */
+  private def aucpr(h: Array[Double], at: Int): Double = {
+    var totalPos = 0.0
+    var i = 0
+    while (i < Buckets) { totalPos += h(at + i); i += 1 }
     if (totalPos == 0) return 0.0
     var tp = 0.0; var fp = 0.0
     var prevRecall = 0.0; var prevPrec = 1.0
     var area = 0.0
     var b = Buckets - 1
     while (b >= 0) {
-      if (pos(b) != 0 || neg(b) != 0) {
-        tp += pos(b); fp += neg(b)
+      val pos = h(at + b); val neg = h(at + Buckets + b)
+      if (pos != 0 || neg != 0) {
+        tp += pos; fp += neg
         val recall = tp / totalPos
         val prec = tp / (tp + fp)
         area += (recall - prevRecall) * 0.5 * (prec + prevPrec)

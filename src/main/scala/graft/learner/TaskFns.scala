@@ -6,7 +6,7 @@ import org.apache.spark.broadcast.Broadcast
 /**
  * The task-side functions of a boosting round: the histogram `seqOp`
  * and merge, the refresh's path sums, the gradient map, the margin
- * advance, the eval row view and the one-pass metric accumulation.
+ * advance, the eval row view and the metric pass.
  *
  * They live here, not in [[Trainer]] or [[Metrics]], for a fixed cost:
  * on every RDD call Spark's ClosureCleaner parses the class file that
@@ -336,35 +336,60 @@ private[learner] object TaskFns {
     }
   }
 
-  /** Per-row (margins, label, weight) view of one target: its `c`
-    * margins from slot `from` on and its label `label` of the row's
-    * `stride` labels. */
-  def rowView(c: Int, from: Int, stride: Int, label: Int)
-      : Iterator[TrainBlock] => Iterator[(Array[Float], Float, Float)] =
+  /** The eval rows of the models `targets` (model j reads target
+    * `targets(j)`): per row, in row order, one [[Metrics.EvalRow]] per
+    * model with the target's `c` margins and its label of the row's
+    * `stride` labels (also its upper bound when a block holds several
+    * labels per row, which carry no bounds). */
+  def rowView(c: Int, stride: Int, labels: Array[Int], targets: Array[Int])
+      : Iterator[TrainBlock] => Iterator[Metrics.EvalRow] =
     _.flatMap { b =>
-      Iterator.tabulate(b.n)(i => (
-        java.util.Arrays.copyOfRange(b.margins, i * b.k + from,
-          i * b.k + from + c),
-        b.labels(i * stride + label), b.weights(i)))
+      val nm = targets.length
+      Iterator.tabulate(b.n * nm) { x =>
+        val i = x / nm; val j = x % nm; val t = targets(j)
+        val from = i * b.k + t * c
+        val y = b.labels(i * stride + labels(t))
+        new Metrics.EvalRow(j,
+          java.util.Arrays.copyOfRange(b.margins, from, from + c), y,
+          b.weights(i), if (stride == 1) b.upper(i) else y, b.qid(i))
+      }
     }
 
-  /** One partition's (Σ loss, Σ weight) of every metric term, summed in
-    * row order: term `j` at (2j, 2j+1). `transform` computes each row's
-    * prediction once for the terms that read it. */
-  def metricPass(obj: Objective, terms: Array[Metrics.RowTerm],
-      transform: Boolean)
-      : (TaskContext, Iterator[(Array[Float], Float, Float)]) => Array[Double] =
+  /** Model `g`'s (margins, label, weight) rows — the shape global-pass
+    * objectives and `cox-nloglik` read. */
+  def modelRows(g: Int)
+      : Iterator[Metrics.EvalRow] => Iterator[(Array[Float], Float, Float)] =
+    _.collect { case r if r.model == g => (r.m, r.y, r.wt) }
+
+  /** One partition's accumulator of the metric pass, summed in row
+    * order: model g's term j at g × width + (the slots of the terms
+    * before j), width the slots of all terms. `obj.transform` computes
+    * each row's prediction once for the terms that read it; group terms
+    * score each model's qid group when it ends ([[Metrics.OpenGroup]]). */
+  def metricPass(obj: Objective, terms: Array[Metrics.Term], models: Int)
+      : (TaskContext, Iterator[Metrics.EvalRow]) => Array[Double] =
     (_, it) => {
-      val acc = new Array[Double](terms.length * 2)
+      val at = terms.scanLeft(0)(_ + _.slots)
+      // model g's first slot of each term
+      val offs = Array.tabulate(models)(g => at.init.map(_ + g * at.last))
+      val acc = new Array[Double](models * at.last)
+      val transform = terms.exists(_.readsPred)
+      val groups =
+        if (terms.exists(_.grouped)) Array.fill(models)(new Metrics.OpenGroup)
+        else null
       while (it.hasNext) {
-        val (m, y, wt) = it.next()
-        val p = if (transform) obj.transform(m) else null
+        val r = it.next()
+        val o = offs(r.model)
+        if (groups != null) groups(r.model).add(r, terms, acc, o)
+        val p = if (transform) obj.transform(r.m) else null
         var j = 0
         while (j < terms.length) {
-          terms(j).add(m, p, y, wt, acc, 2 * j)
+          terms(j).add(r, p, acc, o(j))
           j += 1
         }
       }
+      if (groups != null)
+        groups.indices.foreach(g => groups(g).flush(terms, acc, offs(g)))
       acc
     }
 }

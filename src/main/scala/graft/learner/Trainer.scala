@@ -286,7 +286,8 @@ private[graft] object Targets {
  * machinery (main.py:1606-1713).
  *
  * A round is a handful of jobs: one histogram job per level and one
- * metric job per eval set for all its (loss, weight) metrics; the
+ * metric job per eval set for every metric of every model (only
+ * `cox-nloglik` adds jobs of its own, [[Metrics.computeAll]]); the
  * training blocks' margin advance runs inside the next round's first
  * histogram job, and an eval set other than the training frame adds
  * its own advance job. Each job pays a fixed cost besides its rows, and
@@ -314,8 +315,9 @@ private[graft] object Targets {
  *  - the closures cleaned every round (histogram `seqOp` and merge,
  *    gradient map, margin advance, eval row view, metric pass) are built
  *    in [[TaskFns]], a small class, never in this object;
- *  - one job per level and one metric job per eval set: a new per-round
- *    job must earn its fixed cost;
+ *  - one job per level and one metric job per eval set, whatever the
+ *    metrics and however many models: a new per-round job must earn its
+ *    fixed cost;
  *  - a histogram buffer is allocated in the task on first use, so no
  *    zero buffer rides the task binary, and subtraction below halves
  *    the bytes a level returns.
@@ -540,41 +542,15 @@ object Trainer {
     keyed.sortBy(-_._1).take(n).map(_._2).sorted
   }
 
-  /** Per-row (margins, label, weight) view of target `t` of blocked
-    * data — the shape [[Metrics.compute]] and global-pass objectives
-    * consume. Lazy row tuples exist only inside the consuming job; the
-    * cache keeps blocks. */
-  private def rowsOf(data: RDD[TrainBlock], tg: Targets, c: Int, t: Int)
-      : RDD[(Array[Float], Float, Float)] =
-    data.mapPartitions(TaskFns.rowView(c, t * c, tg.stride, tg.labels(t)),
+  /** The eval rows of the models `live` (model j reads target
+    * `live(j)`) of blocked data — what [[Metrics.computeAll]] reads.
+    * Row objects exist only inside the consuming job; the cache keeps
+    * blocks. */
+  private def rowsOf(data: RDD[TrainBlock], tg: Targets, c: Int,
+      live: Array[Int]): RDD[Metrics.EvalRow] =
+    data.mapPartitions(
+      TaskFns.rowView(c, tg.stride, tg.labels.toArray, live),
       preservesPartitioning = true)
-
-  /** Per-row (score, label, weight, qid) view — the shape the ranking
-    * group metrics consume (k = 1 for rank objectives, so margin slot
-    * 0 IS the score; ranking trains one label per run). */
-  private def groupRowsOf(data: RDD[TrainBlock])
-      : RDD[(Float, Float, Float, Long)] =
-    data.mapPartitions(_.flatMap { b =>
-      Iterator.tabulate(b.n)(i =>
-        (b.margins(i * b.k), b.labels(i), b.weights(i), b.qid(i)))
-    }, preservesPartitioning = true)
-
-  /** Per-row (margins, lower, upper, weight) view of target `t` — the
-    * survival-metric shape (label doubles as the lower bound; a block
-    * with several labels per row carries no bounds, so there the upper
-    * bound is the label too). */
-  private def boundsRowsOf(data: RDD[TrainBlock], tg: Targets, c: Int,
-      t: Int): RDD[(Array[Float], Float, Float, Float)] = {
-    val stride = tg.stride; val l = tg.labels(t)
-    data.mapPartitions(_.flatMap { b =>
-      Iterator.tabulate(b.n) { i =>
-        val y = b.labels(i * stride + l)
-        (java.util.Arrays.copyOfRange(b.margins, i * b.k + t * c,
-          i * b.k + t * c + c), y, if (stride == 1) b.upper(i) else y,
-          b.weights(i))
-      }
-    }, preservesPartitioning = true)
-  }
 
   /** Exact row count of blocked data (block `n` sums — no per-row work). */
   private def countRows(data: RDD[TrainBlock]): Long =
@@ -608,7 +584,8 @@ object Trainer {
       // it)
       val aux: Array[Serializable] =
         if (obj.needsGlobalPass) Array.tabulate(tg.labels.length)(t =>
-          obj.globalPass(rowsOf(data, tg, c, t)))
+          obj.globalPass(rowsOf(data, tg, c, Array(t))
+            .mapPartitions(TaskFns.modelRows(0))))
         else null
       data.mapPartitionsWithIndex(
         TaskFns.pointwiseGradients(obj, c, tg.stride, tg.labels.toArray,
@@ -1659,15 +1636,7 @@ object Trainer {
       }
 
       val customByName = p.customMetrics.map(m => m.name -> m).toMap
-      // rank:* objectives evaluate auc PER QID GROUP (weighted mean of
-      // per-group Mann-Whitney, xgboost's ranking-auc semantics); binary
-      // objectives keep the global histogram auc
-      def groupish(mn: String) = !customByName.contains(mn) &&
-        (Metrics.isGroupMetric(mn) || (mn == "auc" && obj.needsGroups))
-      // survival metrics read (lower, upper) off the block (label doubles
-      // as the lower bound)
-      def bounds(mn: String) =
-        !customByName.contains(mn) && Metrics.isBoundsMetric(mn)
+      val metricJobs = Metrics.jobs(metricNames, customByName)
       var round = 0
       // margin-update RDD of the previous round, unpersisted lazily once
       // the current round's gradient pass has materialized on top of it
@@ -1839,39 +1808,31 @@ object Trainer {
 
           // DART: eval margins are also rebuilt fresh over the full
           // (post-rescale) ensemble — the carried eval RDDs stay at their
-          // init margins. Persisted only for this round's metric jobs.
+          // init margins. Persisted only when this round's metrics take
+          // more than one job (cox-nloglik).
           val bcAll =
             if (!dart || trees.isEmpty || evalData.isEmpty) None
             else Some(life.broadcast(byClass(trees.toArray, c)))
           val evalView = bcAll.fold(evalData) { bc =>
-            evalData.map { case (n, r) => (n, life.persist(applyTrees(r, bc))) }
+            evalData.map { case (n, r) =>
+              val v = applyTrees(r, bc)
+              (n, if (metricJobs > 1) life.persist(v) else v)
+            }
           }
 
-          // eval-metric aggregation (A2 analog), then early stop,
-          // checkpoint and callbacks, per model still training
-          live.foreach { g =>
+          // eval-metric aggregation (A2 analog): one pass per eval set
+          // sums every metric of every model still training
+          val values = evalView.map { case (n, r) =>
+            (n, Metrics.computeAll(metricNames, obj,
+              rowsOf(r, targets, c, live), live.length, customByName))
+          }
+          // then early stop, checkpoint and callbacks, per model
+          live.zipWithIndex.foreach { case (g, j) =>
             val run = models(g)
             val roundMetrics =
               scala.collection.mutable.LinkedHashMap[String, Double]()
-            evalView.foreach { case (n, r) =>
-              // every (loss, weight) metric reads the model's row view:
-              // one job for all of them
-              val rowNames =
-                metricNames.filterNot(mn => groupish(mn) || bounds(mn))
-              val rowValues = rowNames.zip(Metrics.computeAll(rowNames, obj,
-                rowsOf(r, targets, c, g), customByName)).toMap
-              metricNames.foreach { mn =>
-                val v =
-                  if (groupish(mn)) {
-                    // ndcg/map/auc walk qid groups — the rank layout keeps
-                    // groups partition-contiguous: one shuffle-free pass
-                    require(obj.needsGroups, s"$mn needs a rank:* " +
-                      "objective (qid-contiguous evaluation partitions)")
-                    Metrics.computeGroup(mn, groupRowsOf(r))
-                  } else if (bounds(mn))
-                    Metrics.computeBounds(mn, obj,
-                      boundsRowsOf(r, targets, c, g))
-                  else rowValues(mn)
+            values.foreach { case (n, vs) =>
+              metricNames.zip(vs(j)).foreach { case (mn, v) =>
                 run.evalsResult(n)(mn) += v
                 roundMetrics(s"$n-$mn") = v
               }

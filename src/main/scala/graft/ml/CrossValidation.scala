@@ -60,15 +60,8 @@ object GraftCV {
     // the fold column must not leak into the feature set
     val cvSpec = spec.copy(ignore = spec.ignore :+ foldCol)
     try {
-      val metricNames = {
-        val base =
-          if (params.evalMetric.nonEmpty) params.evalMetric
-          else if (params.customMetrics.nonEmpty) Nil
-          else Seq(Metrics.defaultMetric(
-            Objectives.resolve(params).name, params))
-        base ++ params.customMetrics.map(_.name)
-          .filterNot(base.contains)
-      }
+      val metricNames =
+        Metrics.resolveNames(params, Objectives.resolve(params).name)
       val folds = (0 until nfold).map { k =>
         val train = withFold.filter(col(foldCol) =!= k)
         val test = withFold.filter(col(foldCol) === k)

@@ -23,11 +23,10 @@ object GraftGridSearch {
     def bestScore: Double = bestTrial.score
   }
 
-  /** Metric used for ranking: last of evalMetric ++ customMetrics, else
-    * the objective's default (the xgboost early-stopping rule). */
+  /** Metric used for ranking: the last metric the booster evaluates,
+    * the one early stopping watches ([[Metrics.EarlyStop]]). */
   private def rankingMetric(p: TrainParams): String =
-    (p.evalMetric ++ p.customMetrics.map(_.name)).lastOption
-      .getOrElse(Metrics.defaultMetric(Objectives.resolve(p).name, p))
+    Metrics.resolveNames(p, Objectives.resolve(p).name).last
 
   /** Cartesian expansion helper over the most-tuned knobs; any other
     * knob can be varied by passing explicit `TrainParams` copies. */

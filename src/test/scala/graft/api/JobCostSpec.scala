@@ -10,14 +10,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import graft.SparkTestBase
 import graft.data.DMatrixSpec
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, exp}
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.learner.{Binner, TrainParams}
 
 /**
  * The fixed cost of the boosting jobs:
- *  - a round runs one histogram job per level plus ONE metric job for
- *    all (loss, weight) metrics of its eval set;
+ *  - a round runs one histogram job per level plus ONE metric job per
+ *    eval set for every metric of every model;
  *  - the materialized blocks reach the bin cuts only through a
  *    broadcast, so no task binary carries a [[Binner.Bins]];
  *  - a level task returns its histogram packed: the (g, h) pairs its
@@ -64,20 +64,39 @@ class JobCostSpec extends SparkTestBase {
     val df = parquetFrame(4000, 7)
     val depth = 3
     val rounds = 3
-    val log = new GroupLog
-    spark.sparkContext.addSparkListener(log)
-    val res = try {
-      GraftBoost.train(df, DMatrixSpec("y"),
-        TrainParams(objective = "binary:logistic", numRounds = rounds,
-          maxDepth = depth, minChildWeight = 0.0,
-          evalMetric = Seq("logloss", "error"), seed = 3),
-        evals = Seq(("train", df)))
-    } finally spark.sparkContext.removeSparkListener(log)
-    assert(res.roundsCompleted === rounds)
-    // every level of every round splits: no level job is skipped
-    res.model.trees.foreach(t =>
-      assert(t.numNodes === (1 << (depth + 1)) - 1, "a level stopped early"))
-    assert(log.trainJobs() === rounds * (depth + 1))
+    val base = TrainParams(numRounds = rounds, maxDepth = depth,
+      minChildWeight = 0.0, seed = 3)
+    // every metric of an eval set, histogram AUCs, qid-group and
+    // survival-bound metrics too, sums in the one metric job a round
+    val ranked = df.withColumn("qid", (col("f") * 100).cast("long"))
+    val timed = df.withColumn("lo", exp(col("a") + col("b") * 2))
+      .withColumn("hi", col("lo") * 1.5)
+    val inputs = Seq(
+      (df, DMatrixSpec("y"), base.copy(objective = "binary:logistic",
+        evalMetric = Seq("logloss", "error"))),
+      (df, DMatrixSpec("y"), base.copy(objective = "binary:logistic",
+        evalMetric = Seq("auc", "aucpr", "logloss"))),
+      (ranked, DMatrixSpec(labelCol = Seq("y"), qidCol = Some("qid")),
+        base.copy(objective = "rank:ndcg",
+          evalMetric = Seq("ndcg@5", "map", "auc"))),
+      (timed, DMatrixSpec(labelLowerCol = Some("lo"),
+          labelUpperCol = Some("hi"), ignore = Seq("y")),
+        base.copy(objective = "survival:aft",
+          evalMetric = Seq("aft-nloglik", "interval-regression-accuracy"))))
+    inputs.foreach { case (frame, spec, params) =>
+      val log = new GroupLog
+      spark.sparkContext.addSparkListener(log)
+      val res = try {
+        GraftBoost.train(frame, spec, params, evals = Seq(("train", frame)))
+      } finally spark.sparkContext.removeSparkListener(log)
+      val what = s"${params.objective} ${params.evalMetric.mkString(",")}"
+      assert(res.roundsCompleted === rounds, what)
+      // every level of every round splits: no level job is skipped
+      res.model.trees.foreach(t => assert(
+        t.numNodes === (1 << (depth + 1)) - 1, s"$what: a level stopped early"))
+      assert(res.evalsResult("train").values.forall(_.size == rounds), what)
+      assert(log.trainJobs() === rounds * (depth + 1), what)
+    }
   }
 
   test("a depth-3 multi-output round runs depth jobs: the margin " +
@@ -108,22 +127,31 @@ class JobCostSpec extends SparkTestBase {
       .withColumn("y3", col("c") * col("d"))
     val depth = 3
     val rounds = 3
-    val log = new GroupLog
-    spark.sparkContext.addSparkListener(log)
-    val res = try {
-      GraftBoost.trainMultiLabel(df,
-        DMatrixSpec(labelCol = Seq("y", "y2", "y3")),
-        TrainParams(numRounds = rounds, maxDepth = depth,
-          minChildWeight = 0.0, seed = 4))
-    } finally spark.sparkContext.removeSparkListener(log)
-    assert(res.results.map(_._1) === Seq("y", "y2", "y3"))
-    res.results.foreach { case (l, r) =>
-      assert(r.roundsCompleted === rounds && r.model.trees.length === rounds)
-      r.model.trees.foreach(t => assert(t.numNodes === (1 << (depth + 1)) - 1,
-        s"label $l: a level stopped early"))
+    // an eval set adds ONE metric job a round for all three labels
+    Seq(Nil -> rounds * depth,
+        Seq(("train", df)) -> rounds * (depth + 1)).foreach {
+      case (evals, jobs) =>
+        val log = new GroupLog
+        spark.sparkContext.addSparkListener(log)
+        val res = try {
+          GraftBoost.trainMultiLabel(df,
+            DMatrixSpec(labelCol = Seq("y", "y2", "y3")),
+            TrainParams(numRounds = rounds, maxDepth = depth,
+              minChildWeight = 0.0, seed = 4), evals = evals)
+        } finally spark.sparkContext.removeSparkListener(log)
+        assert(res.results.map(_._1) === Seq("y", "y2", "y3"))
+        res.results.foreach { case (l, r) =>
+          assert(r.roundsCompleted === rounds &&
+            r.model.trees.length === rounds)
+          r.model.trees.foreach(t => assert(
+            t.numNodes === (1 << (depth + 1)) - 1,
+            s"label $l: a level stopped early"))
+          evals.foreach(e =>
+            assert(r.evalsResult(e._1)("rmse").size === rounds))
+        }
+        assert(log.trainJobs() === jobs)
+        assert(log.trainGroups() === 1)
     }
-    assert(log.trainJobs() === rounds * depth)
-    assert(log.trainGroups() === 1)
   }
 
   /** Tasks and `taskMetrics.resultSize` of every histogram level job (call

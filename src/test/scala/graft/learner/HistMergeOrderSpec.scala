@@ -12,7 +12,8 @@ import graft.SparkTestBase
 /**
  * `Trainer.aggregateHist` sums the per-partition histograms in
  * partition-index order, whatever order the tasks finish in — the
- * tree levels' and the `process_type=update` refresh's alike. Each
+ * tree levels' and the `process_type=update` refresh's alike — and so
+ * does the metric pass, the bucketed `auc`/`aucpr` histogram too. Each
  * partition holds one row whose gradient is chosen so that the float
  * additions do not commute: 1e17 + 1 rounds back to 1e17, so summing
  * (1e17, 1, −1e17, 1) front to back gives 1 and back to front gives 0.
@@ -63,6 +64,34 @@ class HistMergeOrderSpec extends SparkTestBase {
     assert(java.lang.Float.floatToIntBits(reverse._1) ===
       java.lang.Float.floatToIntBits(inOrder._1))
     assert(reverse._2 === inOrder._2)
+  }
+
+  /** A bucketed metric over one partition per `rows` entry, finishing
+    * in `finishOrder`. */
+  private def metricOf(name: String, finishOrder: Seq[Int],
+      rows: IndexedSeq[Seq[(Array[Float], Float, Float)]]): Double =
+    Metrics.compute(name, Objectives.resolve(
+        TrainParams(objective = "binary:logistic")),
+      gated(spark.sparkContext, finishOrder)(rows(_)).flatMap(identity))
+
+  test("auc and aucpr over partitions finishing in reverse index order " +
+      "match the in-order run, bit for bit") {
+    // one low-score bucket holds a 2^53 negative in partition 0 and a
+    // 1.0 negative in each other partition: summed front to back each
+    // 1.0 rounds away (2^53), back to front they count (2^53 + 4)
+    val big = math.pow(2, 53).toFloat
+    val low = Array(-3f); val mid = Array(0f); val high = Array(3f)
+    val rows = IndexedSeq.tabulate(Parts) {
+      case 0 => Seq((low, 0f, big), (low, 1f, 1f), (mid, 1f, 1f),
+        (high, 0f, big))
+      case _ => Seq((low, 0f, 1f))
+    }
+    for (name <- Seq("auc", "aucpr")) {
+      val inOrder = metricOf(name, 0 until Parts, rows)
+      val reverse = metricOf(name, (0 until Parts).reverse, rows)
+      assert(java.lang.Double.doubleToLongBits(reverse) ===
+        java.lang.Double.doubleToLongBits(inOrder), name)
+    }
   }
 
   /** `aggregateHist` over `parts` (partition i holds `parts(i)`) next to

@@ -175,6 +175,27 @@ class EstimatorSpec extends SparkTestBase {
       bestTrialRes.evalsResult("val")("rmse").last + 1e-12)
   }
 
+  test("GraftGridSearch ranks trials by the metric early stopping " +
+      "watches: the last evaluated metric, a custom one listed first") {
+    import graft.data.DMatrixSpec
+    import graft.learner.{CustomMetric, TrainParams}
+    val df = binaryDf.withColumn("y", $"a" * 3 + $"b").drop("label")
+    val Array(tr, va) = df.randomSplit(Array(0.7, 0.3), seed = 11)
+    // cm is larger-is-better squared error: it would pick the worse eta
+    val cm = CustomMetric("cm", (m, y, wt) => {
+      val d = (m(0) - y).toDouble; (d * d * wt, wt.toDouble)
+    }, isMaximize = true)
+    val grid = GraftGridSearch.expand(
+      TrainParams(objective = "reg:squarederror", numRounds = 10,
+        maxDepth = 3, seed = 1, evalMetric = Seq("cm", "rmse"),
+        customMetrics = Seq(cm)),
+      eta = Seq(0.01, 0.3))
+    val res = GraftGridSearch.fit(tr, DMatrixSpec("y"), grid, va)
+    assert(res.trials.map(_.metric).distinct === Seq("rmse"))
+    assert(res.bestParams.eta === 0.3)
+    assert(res.bestScore === res.bestResult.evalsResult("val")("rmse").last)
+  }
+
   test("GraftGridSearch.sample draws deterministic Tune-style spaces " +
       "(loguniform eta, uniform subsample, randint maxDepth)") {
     import graft.learner.TrainParams

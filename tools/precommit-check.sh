@@ -5,9 +5,10 @@
 #
 #   tools/precommit-check.sh          # one-grower, one-lifetime,
 #                                     # one-loop, one-packer,
-#                                     # run-owned-broadcast and
-#                                     # one-scorer checks, then
-#                                     # compile main + tests (~20 s warm)
+#                                     # run-owned-broadcast,
+#                                     # one-scorer and one-metric-pass
+#                                     # checks, then compile main +
+#                                     # tests (~20 s warm)
 #   tools/precommit-check.sh --test   # additionally run the full suite
 #                                     # and the benchmark's unit tests
 #   tools/precommit-check.sh --bench  # additionally run one short
@@ -123,6 +124,20 @@ scorers="$(grep -c 'case class' src/main/scala/graft/functions/EnsembleScore.sca
 if [[ "$scorers" -ne 1 ]]; then
   echo "[precommit] NOT ONE SCORING EXPRESSION: EnsembleScore.scala holds" \
     "$scorers case classes — add an EnsembleScore.Output mode instead"
+  exit 1
+fi
+
+# One metric pass: every eval metric but cox-nloglik sums in the one
+# partition-ordered job of Metrics.computeAll, so Metrics.scala holds a
+# single runJob( and no completion-order or second summing path.
+metrics=src/main/scala/graft/learner/Metrics.scala
+sumpaths="$(grep -nE 'treeAggregate|treeReduce|detSum2' "$metrics" || true)"
+passes="$(grep -c 'runJob(' "$metrics" || true)"
+if [[ -n "$sumpaths" || "$passes" -gt 1 ]]; then
+  echo "[precommit] NOT ONE METRIC PASS: Metrics.scala must sum every" \
+    "metric in computeAll's one runJob( (found $passes) — add a Term" \
+    "instead of a treeAggregate, treeReduce or detSum2 path:"
+  echo "${sumpaths:-(no second summing path)}"
   exit 1
 fi
 
